@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: executes every operator query at
   * SPARK_GRAFT_SF_DIR (sf0.1 per round) and prints ONE JSON line.
   *
@@ -14,23 +12,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus)
-      // The fixture tables are ONE parquet file each (lineitem sf0.1 ≈
-      // 11 MB), and the default 4 MB open-cost floor yields ~3 input
-      // splits — scan-bound aggregations then run near-serial. A real
-      // table at cluster scale is thousands of files; these two knobs
-      // emulate that split count locally so the bench measures the
-      // operator, not a single-file artifact. (Production keeps the
-      // 128 MB default — more splits there would mean millions of tasks.)
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.sql.files.openCostInBytes", "131072")
-      // default codegen cache is 100 compiled classes — the 84-query suite
-      // needs several hundred, so the warmup pass's classes would be
-      // evicted before the timed pass reuses them (re-paying janino
-      // compilation inside timed queries).
-      .config("spark.sql.codegenCacheMaxEntries", "5000")
-      .getOrCreate()
+    val spark = GraftSession.benchBuilder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // Optional subset filter for local iteration: comma-separated names.

@@ -39,8 +39,7 @@ object GraftSession {
     // index per map task). At cluster scale (partitions ≫ 200) the
     // bypass never engages, so this also makes local plans exercise the
     // same writer a production shuffle uses.
-    "spark.shuffle.sort.bypassMergeThreshold" ->
-      sys.env.getOrElse("SPARK_GRAFT_BYPASS", "1")
+    "spark.shuffle.sort.bypassMergeThreshold" -> "1"
   )
 
   def builder(master: String, shufflePartitions: String): SparkSession.Builder = {
@@ -50,5 +49,28 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
     requiredConfigs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+  }
+
+  /** The bench profile Bench and the dev mains (JobTally, Scratch,
+    * StreamProfile) share, so their timings predict one another:
+    * `local[SPARK_GRAFT_CPUS]` (default 32) with as many shuffle
+    * partitions, plus the split and codegen-cache settings below. */
+  def benchBuilder(): SparkSession.Builder = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    builder(s"local[$cpus]", cpus)
+      // The fixture tables are ONE parquet file each (lineitem sf0.1 ≈
+      // 11 MB), and the default 4 MB open-cost floor yields ~3 input
+      // splits — scan-bound aggregations then run near-serial. A real
+      // table at cluster scale is thousands of files; these two knobs
+      // emulate that split count locally so the bench measures the
+      // operator, not a single-file artifact. (Production keeps the
+      // 128 MB default — more splits there would mean millions of tasks.)
+      .config("spark.sql.files.maxPartitionBytes", "1m")
+      .config("spark.sql.files.openCostInBytes", "131072")
+      // default codegen cache is 100 compiled classes — the 84-query suite
+      // needs several hundred, so the warmup pass's classes would be
+      // evicted before the timed pass reuses them (re-paying janino
+      // compilation inside timed queries).
+      .config("spark.sql.codegenCacheMaxEntries", "5000")
   }
 }

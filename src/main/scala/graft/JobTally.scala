@@ -43,12 +43,7 @@ object JobTally {
     val names = sys.env.getOrElse("SPARK_GRAFT_ONLY", "")
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus)
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.sql.files.openCostInBytes", "131072")
-      .config("spark.sql.codegenCacheMaxEntries", "5000")
-      .getOrCreate()
+    val spark = GraftSession.benchBuilder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val qs = SparkEntry.queries
     val targets = if (names.nonEmpty) names else SparkEntry.defs.map(_.name)

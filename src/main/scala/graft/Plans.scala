@@ -723,45 +723,6 @@ object Plans {
       p.contains("BroadcastHashJoin") && !p.contains("CartesianProduct") &&
         "SortMergeJoin".r.findAllIn(p).length <= 1
     }
-    // mlprep_logit: the whole IRLS fit is the logit_fit4 typed
-    // aggregate over ONE scan — no per-step joins or windows at all
-    // (round 9's fusion; before that, β-frame broadcasts per step)
-    check("mlprep_logit: one scan into the logit_fit4 aggregate") {
-      val p = planOf("mlprep_logit")
-      p.contains("logit_fit4") &&
-        "Scan parquet".r.findAllIn(p).length == 1 &&
-        !p.contains("Window") && !p.contains("Join")
-    }
-    // mlprep_gbt: all four boosting rounds inside gbt_fit4 — same shape
-    check("mlprep_gbt: one scan into the gbt_fit4 aggregate") {
-      val p = planOf("mlprep_gbt")
-      p.contains("gbt_fit4") &&
-        "Scan parquet".r.findAllIn(p).length == 1 &&
-        !p.contains("Window") && !p.contains("Join")
-    }
-    // mlprep_tree: the whole depth-3 search is the tree_fit3 typed
-    // aggregate over ONE scan — no window stages, no level joins, no
-    // cache (round 9's fusion; the old shape was ~a dozen tiny stages)
-    check("mlprep_tree: one scan into the tree_fit3 aggregate, no joins") {
-      val p = planOf("mlprep_tree")
-      p.contains("tree_fit3") &&
-        "Scan parquet".r.findAllIn(p).length == 1 &&
-        !p.contains("Window") && !p.contains("Join")
-    }
-    // mlprep_importance: same aggregate; the normalizer join reads the
-    // cached groups-sized imps frame, so the corpus aggregation chain
-    // (partial_tree_fit3) appears exactly once — raw scan-string counts
-    // are unreliable here because the IMTS description re-prints the
-    // shared cached subtree
-    // (plan.toString re-prints the shared cached subtree under every
-    // IMTS reference, so exact chain counts are not assertable here —
-    // the cache's existence + the absence of window/SMJ stages is the
-    // robust textual form of "one corpus aggregation")
-    check("mlprep_importance: tree_fit3 into a cached normalizer") {
-      val p = planOf("mlprep_importance")
-      p.contains("tree_fit3") && p.contains("InMemoryTableScan") &&
-        !p.contains("Window") && !p.contains("SortMergeJoin")
-    }
     // mlprep_sweep: the λ-grid cross join is STATS-sized (broadcast
     // nested loop over the cached moment table); every branch reads the
     // cache, so no raw scan appears outside an IMTS description
@@ -770,15 +731,6 @@ object Plans {
       val imts = "InMemoryTableScan".r.findAllIn(p).length
       imts > 0 && "Scan parquet".r.findAllIn(p).length == imts &&
         !p.contains("CartesianProduct") && !p.contains("SortMergeJoin")
-    }
-    // mlprep_forest: the 8-tree fan-out stays map-side (Generate over
-    // the one scan into the grid), and everything after the grid is the
-    // forest_fit8 aggregate — no joins, no windows, no cache
-    check("mlprep_forest: one fan-out scan into forest_fit8, no joins") {
-      val p = planOf("mlprep_forest")
-      p.contains("forest_fit8") && p.contains("Generate") &&
-        "Scan parquet".r.findAllIn(p).length == 1 &&
-        !p.contains("Window") && !p.contains("Join")
     }
     // sql4: the parser-tier ASOF sugar must lower to the union+ffill
     // window plan — a Window over one hash exchange — and NEVER a range

@@ -1,11 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time named queries end-to-end N times in one JVM (exposes
   * first-run codegen/JIT cost vs steady state, separate from Bench's
   * warmed medians). Usage:
-  *   SPARK_GRAFT_ONLY=q1,q2 SPARK_GRAFT_REPS=3 runMain graft.Scratch
+  *   SPARK_GRAFT_ONLY=q1,q2 SPARK_GRAFT_REPS=3 [SPARK_GRAFT_CPUS=32]
+  *     runMain graft.Scratch
   */
 object Scratch {
   def main(args: Array[String]): Unit = {
@@ -13,13 +12,8 @@ object Scratch {
     val names = sys.env.getOrElse("SPARK_GRAFT_ONLY", "dd3_minhash_lsh")
       .split(",").map(_.trim)
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val spark = GraftSession.builder("local[32]", "32")
-      .config("spark.sql.codegenCacheMaxEntries", "5000")
-      // mirror Bench's split emulation (see Bench.scala) so Scratch
-      // timings predict Bench timings
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.sql.files.openCostInBytes", "131072")
-      .getOrCreate()
+    // Bench's session profile, so Scratch timings predict Bench timings
+    val spark = GraftSession.benchBuilder().getOrCreate()
     // optional ad-hoc conf overrides: SPARK_GRAFT_CONF="k=v;k2=v2"
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
       val Array(k, v) = kv.split("=", 2)

@@ -11,7 +11,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * board #1 without one.
   *
   * Usage: SPARK_GRAFT_ONLY=st8_stream_gold [SPARK_GRAFT_REPS=2]
-  *          runMain graft.StreamProfile
+  *          [SPARK_GRAFT_CPUS=32] runMain graft.StreamProfile
   */
 object StreamProfile {
   def main(args: Array[String]): Unit = {
@@ -19,12 +19,8 @@ object StreamProfile {
     val names = sys.env.getOrElse("SPARK_GRAFT_ONLY", "st8_stream_gold")
       .split(",").map(_.trim)
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
-    val spark = GraftSession.builder("local[32]", "32")
-      // mirror Bench's split emulation so phase shares predict Bench rows
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.sql.files.openCostInBytes", "131072")
-      .config("spark.sql.codegenCacheMaxEntries", "5000")
-      .getOrCreate()
+    // Bench's session profile, so phase shares predict Bench rows
+    val spark = GraftSession.benchBuilder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val progress = scala.collection.mutable.ArrayBuffer[
       org.apache.spark.sql.streaming.StreamingQueryProgress]()

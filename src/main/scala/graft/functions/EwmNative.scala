@@ -97,14 +97,11 @@ class GraftExtensions
       TrainerNative.sigmoidInfo, TrainerNative.sigmoidBuilder))
     ext.injectFunction((TrainerNative.powerIdent,
       TrainerNative.powerInfo, TrainerNative.powerBuilder))
-    ext.injectFunction((TreeFitNative.ident, TreeFitNative.info,
-      TreeFitNative.builder))
-    ext.injectFunction((GbtFitNative.ident, GbtFitNative.info,
-      GbtFitNative.builder))
-    ext.injectFunction((LogitFitNative.ident, LogitFitNative.info,
-      LogitFitNative.builder))
-    ext.injectFunction((ForestFitNative.ident, ForestFitNative.info,
-      ForestFitNative.builder))
+    // the fused trainer aggregates over the shared cell buffer
+    ext.injectFunction(CellAggregate.function("tree_fit3", TreeFit3(_)))
+    ext.injectFunction(CellAggregate.function("gbt_fit4", GbtFit4(_)))
+    ext.injectFunction(CellAggregate.function("logit_fit4", LogitFit4(_)))
+    ext.injectFunction(CellAggregate.function("forest_fit8", ForestFit8(_)))
     // native HLL register aggregate (TypedImperativeAggregate tier)
     ext.injectFunction((
       FunctionIdentifier("hll_sketch_agg"),
@@ -123,7 +120,7 @@ class GraftExtensions
     // marker-shape rewrite to the custom logical node + the strategy that
     // plans it as partial/final bounded-heap execs — inert unless a plan
     // carries the reserved rank-column marker
-    ext.injectOptimizerRule(s => new graft.plans.GroupTopKRewrite(s))
+    ext.injectOptimizerRule(_ => graft.plans.GroupTopKRewrite)
     ext.injectPlannerStrategy(_ => graft.plans.GroupTopKStrategy)
     // parser tier: ASOF LEFT JOIN sugar lowering onto the AsOfJoin
     // operator — delegates every non-ASOF statement untouched

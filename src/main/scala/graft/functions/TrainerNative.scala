@@ -23,6 +23,12 @@ import org.apache.spark.sql.types._
   *
   * The DuckDB oracles keep their unrolled CTE chains: the parity
   * contract is unchanged arithmetic, proven by unchanged hashes.
+  *
+  * The whole-fit trainers (tree_fit3 / gbt_fit4 / logit_fit4 /
+  * forest_fit8, in FitAggregates.scala) apply the same doctrine to an
+  * entire fit: each is a typed aggregate on the one [[CellAggregate]]
+  * base, which owns the cell-multiset buffer, its codec, the null-row
+  * drop and the argument check; a trainer keeps only its `eval`.
   */
 
 /** `sigmoid_r16(z)` — the engine's deterministic rational sigmoid:

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute,
   Expression, IntegerLiteral, LessThanOrEqual, RowNumber, SortOrder,
@@ -91,7 +91,7 @@ case class GroupTopKPlan(
   * insurance — today user rules run earlier), the WindowGroupLimit it
   * inserted below the Window is discarded along with the Window.
   */
-class GroupTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
+object GroupTopKRewrite extends Rule[LogicalPlan] {
 
   // This rule runs inside the fixed-point operator-optimization batch of
   // EVERY query in the session, so it must be near-free when it cannot
@@ -99,23 +99,23 @@ class GroupTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
   // one cached bitmask test (the same pruning discipline Spark's own
   // rules use), and transformUpWithPruning skips every subtree without
   // one.
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    // opt-in widening: with the session flag set, the rewrite fires on
-    // ANY dropped row_number rank column, not just the topK() helper's
-    // marker. Safe because row_number admits exactly k rows per group
-    // under any total order — when the ordering carries ties, the stock
-    // Window plan's survivor set is equally tie-dependent, so the
-    // rewrite never changes a deterministic query's result (negative
-    // and positive space pinned in GroupTopKSpec).
-    val generic = spark.conf.get(GroupTopKRewrite.GenericKey, "false")
-      .toBoolean
+  //
+  // Only the reserved marker opts in. Firing on ANY dropped row_number
+  // rank would also be exact, but the round-9 soak
+  // (`BENCH_r09_grouptopk_soak.json`) ran the 13 affected rows ~1.23×
+  // SLOWER at fixture scale: the partial/final heap pair breaks
+  // whole-stage codegen, and a codegen'd sort-based window wins while
+  // the per-group data fits memory. The heap's O(groups×k) bound pays
+  // off when it does not (huge groups × small k), which is when a caller
+  // opts in via `topK()`.
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformUpWithPruning(
       _.containsPattern(org.apache.spark.sql.catalyst.trees.TreePattern.WINDOW)) {
     case Project(projectList,
         Filter(LessThanOrEqual(rn: Attribute, IntegerLiteral(k)),
           w @ Window(Seq(Alias(WindowExpression(_: RowNumber, _), name)), _,
             _, _, _)))
-        if (name == GroupTopK.Marker || generic) && k >= 1 &&
+        if name == GroupTopK.Marker && k >= 1 &&
           w.windowOutputSet.contains(rn) &&
           projectList.forall(ne => !ne.references.contains(rn)) =>
       val input = w.child match {
@@ -127,26 +127,6 @@ class GroupTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       Project(projectList,
         GroupTopKPlan(w.partitionSpec, w.orderSpec, k, input))
     }
-  }
-}
-
-object GroupTopKRewrite {
-  /** Session conf flag: when `true`, the rewrite fires on the GENERIC
-    * drop-a-row_number-rank shape (`filter rn <= k` over a single
-    * row_number window, rank column absent from the output), not just
-    * the reserved [[GroupTopK.Marker]] — turning the showcase operator
-    * into engine behavior for any user query of that shape.
-    *
-    * Default OFF after a full soak (round 9,
-    * `BENCH_r09_grouptopk_soak.json`): with the flag on the whole board
-    * verifies clean (280/280) and every plan pin holds, but the 13
-    * affected rows ran a systematic ~1.23× SLOWER at fixture scale —
-    * the partial/final heap exec pair breaks whole-stage codegen, and a
-    * codegen'd sort-based window wins whenever the per-group data fits
-    * memory. The heap's O(groups×k) memory bound pays off exactly when
-    * that stops being true (huge groups × small k, where the sort
-    * spills), which is when a user opts in via the `topK()` marker. */
-  val GenericKey = "spark.graft.groupTopK.rewriteGeneric"
 }
 
 /** Injected strategy: plans [[GroupTopKPlan]] as partial (map-side,

@@ -2199,7 +2199,7 @@ object MlPrepQueries {
       },
       (s, d) => {
         // all four IRLS steps + the tie-correct train AUC run inside
-        // ONE typed aggregate (functions/LogitFitNative.LogitFit4) over
+        // ONE typed aggregate (functions/FitAggregates.LogitFit4) over
         // the cell grid — identical IEEE step arithmetic to the
         // original per-step moment/Cramer projection formulation (the
         // oracle still runs it as unrolled CTEs; unchanged hashes prove
@@ -2335,7 +2335,7 @@ object MlPrepQueries {
       },
       (s, d) => {
         // the whole depth-3 search is ONE typed aggregate over the cell
-        // grid (functions/TreeFitNative.TreeFit3) — identical IEEE
+        // grid (functions/FitAggregates.TreeFit3) — identical IEEE
         // split arithmetic to the original three-level window/broadcast
         // formulation (which the oracle still runs as unrolled CTEs;
         // unchanged hashes prove the identity), but two exec stages
@@ -2945,7 +2945,7 @@ object MlPrepQueries {
       },
       (s, d) => {
         // all four boosting rounds run inside ONE typed aggregate
-        // (functions/GbtFitNative.GbtFit4) over the cell grid —
+        // (functions/FitAggregates.GbtFit4) over the cell grid —
         // identical IEEE round arithmetic to the original per-round
         // projection/window/persist formulation (which the oracle still
         // runs as unrolled CTEs; unchanged hashes prove the identity),
@@ -3131,7 +3131,7 @@ object MlPrepQueries {
         // stay data-sized work in the grid build (one map-side-combined
         // scan); everything after the grid — per-tree stump search, OOB
         // AUC, ensemble AUC — runs inside ONE typed aggregate
-        // (functions/ForestFitNative.ForestFit8) replaying the identical
+        // (functions/FitAggregates.ForestFit8) replaying the identical
         // IEEE arithmetic of the original window/join formulation (the
         // oracle still runs it as unrolled CTEs; unchanged hashes prove
         // the identity)

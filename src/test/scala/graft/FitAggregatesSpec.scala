@@ -1,16 +1,18 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The fused trainer aggregates (tree_fit3 / gbt_fit4 / logit_fit4 /
-  * forest_fit8) claim determinism by construction: their state is a cell
-  * multiset and every eval iteration runs over sorted maps, so
-  * partial-buffer ARRIVAL ORDER must not matter. This spec drives each
-  * aggregate through radically different physical layouts (1 partition
-  * vs 13 partitions vs reversed input order) and asserts bit-identical
-  * results — the property that makes the fused rows replayable at any
-  * cluster parallelism.
+  * forest_fit8) share one buffer, graft.functions.CellAggregate: a cell
+  * multiset that drops any row with a null argument, and every eval
+  * iteration runs over sorted maps, so partial-buffer ARRIVAL ORDER must
+  * not matter. This spec drives each aggregate through radically
+  * different physical layouts (1 partition vs 13 partitions vs reversed
+  * input order, plus the frame with extra null-argument rows) and asserts
+  * bit-identical results — the property that makes the fused rows
+  * replayable at any cluster parallelism. It also pins the base's
+  * argument check: a wrong arity or type fails analysis by name.
   */
 class FitAggregatesSpec extends SparkSpec {
 
@@ -36,17 +38,25 @@ class FitAggregatesSpec extends SparkSpec {
         case other => String.valueOf(other)
       }).sortBy(_.mkString("|")).map(_.asInstanceOf[Seq[Any]]).toSeq
 
+  // the frame plus, per argument column, a copy of every row with a null
+  // in that column: each such row must be dropped
+  private def withNullRows(df: DataFrame): DataFrame =
+    df.columns.filter(_ != "g").foldLeft(df) { (acc, c) =>
+      acc.unionByName(df.withColumn(c, lit(null).cast("long")))
+    }
+
   private def layouts(df: DataFrame): Seq[DataFrame] = Seq(
     df.coalesce(1),
     df.repartition(13, col("x1")),
-    df.orderBy(col("x2").desc, col("x1").desc).coalesce(2))
+    df.orderBy(col("x2").desc, col("x1").desc).coalesce(2),
+    withNullRows(df).repartition(5))
 
   test("tree_fit3 / gbt_fit4 / logit_fit4 are layout-invariant") {
     for (agg <- Seq("tree_fit3(x1, x2, n, yc)", "gbt_fit4(x1, x2, n, yc)",
                     "logit_fit4(x1, x2, n, yc)")) {
       val results = layouts(cells).map(run(agg, _))
       assert(results.distinct.size == 1,
-        s"$agg: results differ across physical layouts")
+        s"$agg: results differ across layouts or with null-argument rows")
       assert(results.head.nonEmpty)
     }
   }
@@ -63,7 +73,31 @@ class FitAggregatesSpec extends SparkSpec {
     val agg = "forest_fit8(tree, feat, x1, x2, wn, wy, c0, p0, cnt, cy)"
     val results = layouts(f).map(run(agg, _))
     assert(results.distinct.size == 1,
-      "forest_fit8: results differ across physical layouts")
+      "forest_fit8: results differ across layouts or with null-argument rows")
     assert(results.head.nonEmpty)
+  }
+
+  test("a wrong-arity or non-bigint trainer call fails analysis by name") {
+    val cellArgs = Seq("x1", "x2", "n", "yc")
+    val f = cells.withColumn("tree", lit(0L)).withColumn("feat", lit(1L))
+    // (name, the columns its error must list, bigint arguments to call with)
+    for ((name, sig, args) <- Seq(
+        ("tree_fit3", cellArgs, cellArgs),
+        ("gbt_fit4", cellArgs, cellArgs),
+        ("logit_fit4", cellArgs, cellArgs),
+        ("forest_fit8",
+          Seq("tree", "feat", "x1", "x2", "wn", "wy", "c0", "p0", "cnt", "cy"),
+          Seq("tree", "feat", "x1", "x2", "n", "yc", "n", "yc", "n", "yc")))) {
+      val expected =
+        s"$name expects ${sig.length} bigint columns (${sig.mkString(", ")})"
+      val calls = Seq(
+        s"$name(${args.init.mkString(", ")})",
+        s"$name(cast(${args.head} as int), ${args.tail.mkString(", ")})")
+      for (call <- calls) {
+        val e = intercept[AnalysisException](
+          f.groupBy("g").agg(expr(call).as("t")))
+        assert(e.getMessage.contains(expected), s"$call: ${e.getMessage}")
+      }
+    }
   }
 }

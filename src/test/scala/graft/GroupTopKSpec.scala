@@ -122,35 +122,4 @@ class GroupTopKSpec extends SparkSpec {
       .collect { case g: GroupTopKPlan => g }.isEmpty,
       "rewrite must not fire without the reserved marker name")
   }
-
-  test("generic-rewrite flag: plain row_number()<=k plans become the operator") {
-    val key = graft.plans.GroupTopKRewrite.GenericKey
-    val w = Window.partitionBy(col("grp"))
-      .orderBy(col("v").desc_nulls_last, col("id"))
-    def plain = frame.withColumn("my_rank", row_number().over(w))
-      .filter(col("my_rank") <= 3).drop("my_rank")
-    spark.conf.set(key, "true")
-    try {
-      assert(plain.queryExecution.optimizedPlan
-        .collect { case g: GroupTopKPlan => g }.nonEmpty,
-        "generic flag on: a dropped row_number rank must rewrite")
-      // results identical to the stock path (full deterministic tiebreak)
-      val expected = sortedRows(declarative(frame, 3))
-      assert(sortedRows(plain) == expected)
-      // guardrails survive the flag: kept rank / rank() still stock
-      val kept = frame.withColumn("my_rank", row_number().over(w))
-        .filter(col("my_rank") <= 3)
-      assert(kept.queryExecution.optimizedPlan
-        .collect { case g: GroupTopKPlan => g }.isEmpty,
-        "kept rank column must stay on the stock path even when generic")
-      val ranked = frame.withColumn("my_rank", rank().over(w))
-        .filter(col("my_rank") <= 3).drop("my_rank")
-      assert(ranked.queryExecution.optimizedPlan
-        .collect { case g: GroupTopKPlan => g }.isEmpty,
-        "rank() must stay on the stock path even when generic")
-    } finally spark.conf.unset(key)
-    // flag back off: plain shape is stock again
-    assert(plain.queryExecution.optimizedPlan
-      .collect { case g: GroupTopKPlan => g }.isEmpty)
-  }
 }
