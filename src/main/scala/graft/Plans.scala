@@ -127,24 +127,6 @@ object Plans {
       val p = planOf("mlprep_prepare")
       !p.contains("CartesianProduct") && !p.contains("SortMergeJoin")
     }
-    // pl13's merge primitive: the anti-join's target side scans ONLY the
-    // key columns (keys-not-rows build side at 100 TB)
-    check("pl13: keys-only target scan in insertIfAbsent") {
-      val tmp = Sinks.dir(spark, "plans_merge_target")
-      Tables.events(spark, "/root/testdata/sf0.001")
-        .write.mode("overwrite").parquet(tmp)
-      val src = Tables.events(spark, "/root/testdata/sf0.001").limit(10)
-      val plan = graft.operators.MergeUpsert
-        .newRows(spark, src, tmp, Seq("user_id", "ts"), "event_id")
-        .queryExecution.executedPlan.toString
-      val targetScans = plan.linesIterator
-        .filter(l => l.contains(tmp) && l.contains("ReadSchema")).toSeq
-      targetScans.nonEmpty && targetScans.forall { l =>
-        val schema = l.substring(l.indexOf("ReadSchema"))
-        schema.contains("user_id") && !schema.contains("value") &&
-          !schema.contains("event_type") && !schema.contains("props")
-      }
-    }
     // dd8: decontamination reads the staged gram hashes (no re-shingle of
     // raw text — no string split/explode of `text` in the plan) and the
     // benchmark dim rides a broadcast join, never a shuffle join of the

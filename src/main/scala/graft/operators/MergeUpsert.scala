@@ -3,7 +3,12 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField,
+  StructType}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ColumnPath
+import org.apache.parquet.hadoop.util.HadoopInputFile
 
 /** Keyed MERGE over parquet tables — the reference's `ON CONFLICT DO
   * NOTHING` upsert (`bars.py:196-198`,
@@ -22,6 +27,33 @@ import org.apache.hadoop.fs.Path
   *    anti-join projects ONLY the key columns (column-pruned scan), so at
   *    100 TB the join's build side is keys-not-rows and broadcastable per
   *    partition.
+  *
+  *    It also reads only the target files that can hold a source key
+  *    (Shark's map pruning, on per-file key ranges). One small aggregate
+  *    takes the source's min/max of each integral (`LongType` /
+  *    `IntegerType`) key column; each data file's min/max comes from its
+  *    parquet footer; a file is skipped when any such range is disjoint
+  *    from the source's, or the column is null throughout the file (a
+  *    null key never matches). A file is kept whenever its stats can't
+  *    decide: non-integral keys (timestamps, INT96, strings), partition
+  *    columns (not in the footer), missing statistics. With no integral
+  *    key every file is kept — the same path, nothing skipped. The
+  *    aggregate is a second pass over the source (for a streaming batch
+  *    it re-runs the batch's stateful plan), so it runs only when some
+  *    key's file ranges lie apart; when they all share a point, a batch
+  *    covering it would keep every file anyway, and every file is kept
+  *    without it. When no file survives there is no target scan and no
+  *    join. The kept files
+  *    are read with the source's key schema through [[ListedParquet]]: no
+  *    schema inference, no listing job. An append-only sink whose keys
+  *    arrive roughly in order (ids, event times as longs) therefore reads
+  *    O(batch) target files per merge, not the whole history.
+  *
+  *    Footer ranges are cached on the driver per table, keyed by path,
+  *    length and mtime, and trimmed to the current listing on every
+  *    merge: a batch reads only the footers of files appended since the
+  *    last one, and the cache never holds more than one entry per live
+  *    data file of each sink this JVM has merged into.
   *
   *  - [[upsertPartitioned]] — WHEN MATCHED UPDATE needs copy-on-write.
   *    File-level COW needs a table format; the Spark-native equivalent is
@@ -76,8 +108,9 @@ object MergeUpsert {
   }
 
   /** The WHEN-NOT-MATCHED row set [[insertIfAbsent]] appends. Public so
-    * plan audits (graft.Plans) can assert the scale-critical property:
-    * the target side of the anti-join scans ONLY the key columns.
+    * plan audits (`MergePlanSpec`) can assert the scale-critical
+    * properties: the target side of the anti-join scans ONLY the key
+    * columns, and ONLY the files whose key range can hold a source key.
     *
     * `sourceKeyUnique = true` (r13): the caller asserts the source is
     * already key-unique — a windowed-aggregate or joined-pair
@@ -91,14 +124,141 @@ object MergeUpsert {
     val deduped =
       if (sourceKeyUnique) source
       else dedupSource(source, keyCols, orderCol)
-    if (!tableExists(spark, tablePath)) deduped
+    val keys = source.select(keyCols.map(col): _*).schema
+    val kept = targetFiles(spark, source, new Path(tablePath), keys)
+    if (kept.isEmpty) deduped
     else {
-      // keys-only target scan: the anti-join build side carries the key
-      // columns, never full rows.
-      val targetKeys = spark.read.parquet(tablePath)
-        .select(keyCols.map(col): _*).distinct()
+      // keys-only target scan over the kept files: the anti-join build
+      // side carries the key columns, never full rows. No `distinct`: a
+      // left-anti result does not depend on duplicate build keys (and
+      // this merge keeps the sink's keys unique anyway).
+      val targetKeys = ListedParquet.read(spark, kept, Some(keys),
+        basePath = Some(new Path(tablePath))).select(keyCols.map(col): _*)
       deduped.join(targetKeys, keyCols, "left_anti")
     }
+  }
+
+  /** A data file's key range per integral column, read from its footer:
+    * `Some((min, max))`, or `None` when the column holds only nulls (no
+    * key can match it). A column missing from the map can't be decided —
+    * not integral, not in the file, or a row group without statistics. */
+  private type Ranges = Map[String, Option[(Long, Long)]]
+
+  /** Footer ranges of each merge sink's data files, keyed by table root
+    * and then by (path, length, mtime). Every call replaces its table's
+    * entry with the files of the current listing, so the cache holds one
+    * small entry per live data file of each sink merged in this JVM, and
+    * a batch reads the footers of newly appended files only. */
+  private val footerCache =
+    new java.util.concurrent.ConcurrentHashMap[String,
+      Map[(String, Long, Long), Ranges]]()
+
+  /** The target's data files that can hold a key of `source`: a file is
+    * skipped when, on some integral key column, its footer range is
+    * disjoint from the source's [min, max] (one small aggregate), or the
+    * column is null throughout the file. Files whose stats can't decide
+    * are kept; with no integral key column, or no key whose file ranges
+    * lie apart, every file is kept. A source whose integral key is null
+    * in every row (or an empty source) can't match any file. Empty when
+    * the table doesn't exist. */
+  private def targetFiles(spark: SparkSession, source: DataFrame,
+                          root: Path, keys: StructType): Seq[FileStatus] = {
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val listed = if (fs.exists(root)) dataFiles(fs, root) else Nil
+    val integral = keys.fields.collect {
+      case StructField(n, LongType | IntegerType, _, _) => n
+    }
+    lazy val ranges = footerRanges(spark, root, listed)
+    // the files' ranges on a key share a point when the largest min is
+    // at most the smallest max: a batch covering that point keeps every
+    // file, so unless some key's ranges are apart the bounds aggregate (a
+    // second pass over the source, which re-runs a streaming batch's
+    // stateful plan) would buy nothing
+    def apart(k: String) = {
+      val rs = ranges.flatMap(_.get(k)).flatten
+      rs.nonEmpty && rs.map(_._1).max > rs.map(_._2).min
+    }
+    if (listed.isEmpty) { footerCache.remove(root.toString); Nil }
+    else if (!integral.exists(apart)) listed
+    else {
+      val aggs = integral.flatMap(k => Seq(min(col(k)), max(col(k))))
+      val b = source.agg(aggs.head, aggs.tail: _*).head()
+      val bounds = integral.indices.map { i =>
+        if (b.isNullAt(2 * i)) None
+        else Some((b.getAs[Number](2 * i).longValue,
+          b.getAs[Number](2 * i + 1).longValue))
+      }
+      if (bounds.contains(None)) Nil
+      else listed.zip(ranges).collect {
+        case (f, ranges) if integral.zip(bounds.flatten).forall {
+          case (k, (lo, hi)) => ranges.get(k) match {
+            case None => true
+            case Some(None) => false
+            case Some(Some((mn, mx))) => mx >= lo && mn <= hi
+          }
+        } => f
+      }
+    }
+  }
+
+  /** Every data file under `dir`, partition directories included; hidden
+    * and metadata entries (`.crc`, `_SUCCESS`) skipped as Spark does. */
+  private def dataFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    fs.listStatus(dir).toSeq.flatMap { s =>
+      val n = s.getPath.getName
+      if ((n.startsWith("_") && !n.contains("=")) || n.startsWith(".")) Nil
+      else if (s.isDirectory) dataFiles(fs, s.getPath)
+      else Seq(s)
+    }
+
+  private def footerRanges(spark: SparkSession, root: Path,
+                           files: Seq[FileStatus]): Seq[Ranges] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val before = Option(footerCache.get(root.toString)).getOrElse(Map.empty)
+    val now = files.map { f =>
+      val k = (f.getPath.toString, f.getLen, f.getModificationTime)
+      k -> before.getOrElse(k, readRanges(conf, f))
+    }
+    footerCache.put(root.toString, now.toMap)
+    now.map(_._2)
+  }
+
+  /** The min/max of every top-level signed INT32/INT64 column over the
+    * file's row groups. INT96 timestamps, dates and unsigned or
+    * non-integral types get no range. */
+  private def readRanges(conf: org.apache.hadoop.conf.Configuration,
+                         f: FileStatus): Ranges = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.schema.LogicalTypeAnnotation.IntLogicalTypeAnnotation
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{INT32, INT64}
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+    val footer = try reader.getFooter finally reader.close()
+    val blocks = footer.getBlocks.asScala.toSeq
+    footer.getFileMetaData.getSchema.getFields.asScala.toSeq.collect {
+      case t if t.isPrimitive &&
+          Set(INT32, INT64)(t.asPrimitiveType.getPrimitiveTypeName) &&
+          (t.getLogicalTypeAnnotation match {
+            case null => true
+            case i: IntLogicalTypeAnnotation => i.isSigned
+            case _ => false
+          }) => t.getName
+    }.flatMap { name =>
+      val chunks = blocks.map(_.getColumns.asScala
+        .find(_.getPath == ColumnPath.get(name)))
+      val stats = chunks.flatten.map(c => (c, c.getStatistics))
+      val decided = chunks.forall(_.isDefined) && stats.forall {
+        case (c, st) => st != null && (st.hasNonNullValue ||
+          st.isNumNullsSet && st.getNumNulls == c.getValueCount)
+      }
+      Option.when(decided) {
+        val set = stats.collect { case (_, st) if st.hasNonNullValue =>
+          (st.genericGetMin.asInstanceOf[Number].longValue,
+            st.genericGetMax.asInstanceOf[Number].longValue)
+        }
+        name -> Option.when(set.nonEmpty)(
+          (set.map(_._1).min, set.map(_._2).max))
+      }
+    }.toMap
   }
 
   /** MERGE ... WHEN MATCHED THEN UPDATE (source-wins) WHEN NOT MATCHED

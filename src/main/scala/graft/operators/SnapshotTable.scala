@@ -479,13 +479,23 @@ object SnapshotTable {
       require(vs.nonEmpty, s"no committed snapshots at $tablePath")
       vs.last
     }
-    val files = readManifest(spark, tablePath, v)
-      .map(rel => new Path(tablePath, rel).toString)
-    // apply the version's RECORDED schema (schema evolution: files
-    // predating an added column read it as null; no footer merging)
-    tableSchema(spark, tablePath, Some(v))
-      .fold(spark.read)(spark.read.schema)
-      .parquet(files: _*)
+    readFiles(spark, tablePath, v, readManifest(spark, tablePath, v))
+  }
+
+  /** The manifest-relative data files `rels` of version `v`, read under
+    * the version's RECORDED schema (schema evolution: files predating an
+    * added column read it as null; no footer merging) through
+    * [[ListedParquet]]: the manifest already is the listing, so the read
+    * launches no listing job however many files the version holds. */
+  private def readFiles(spark: SparkSession, tablePath: String, v: Int,
+                        rels: Seq[String]): DataFrame = {
+    val root = new Path(tablePath)
+    val f = fs(spark, root)
+    // a clone's manifest names its source's files by absolute path, so
+    // the table root is no base path for them (and holds no partitions)
+    ListedParquet.read(spark,
+      rels.map(rel => f.getFileStatus(new Path(root, rel))),
+      tableSchema(spark, tablePath, Some(v)), basePath = None)
   }
 
   /** Manifest-stats file pruning: read only the files whose recorded
@@ -516,11 +526,7 @@ object SnapshotTable {
       // every file pruned: preserve the schema via an empty frame over
       // the full file set
       read(spark, tablePath, Some(v)).limit(0)
-    } else {
-      tableSchema(spark, tablePath, Some(v))
-        .fold(spark.read)(spark.read.schema)
-        .parquet(kept.map(e => new Path(tablePath, e.path).toString): _*)
-    }
+    } else readFiles(spark, tablePath, v, kept.map(_.path))
   }
 
   /** Compaction as a COMMIT: rewrite the head's rows into
@@ -789,9 +795,7 @@ object SnapshotTable {
         "file-level incremental read is undefined — use a snapshot diff")
     val added = newFiles.filterNot(oldFiles.contains)
     if (added.isEmpty) read(spark, tablePath, Some(to)).limit(0)
-    else tableSchema(spark, tablePath, Some(to))
-      .fold(spark.read)(spark.read.schema)
-      .parquet(added.map(rel => new Path(tablePath, rel).toString): _*)
+    else readFiles(spark, tablePath, to, added)
   }
 
   /** Orphan GC (Iceberg `remove_orphan_files`): delete data files under
@@ -1014,13 +1018,10 @@ object SnapshotTable {
       if (affected.isEmpty) Seq.empty
       else {
         val priorDvs = allDvs.filter(_.version <= toVersion)
-        val reader = tableSchema(spark, tablePath, Some(toVersion))
-          .fold(spark.read)(spark.read.schema)
         val df = affected.groupBy(rel =>
             priorDvs.filter(_.appliesTo.contains(rel)).map(_.version))
           .map { case (dvVersions, group) =>
-            val base = reader.parquet(
-              group.map(rel => new Path(tablePath, rel).toString).toSeq: _*)
+            val base = readFiles(spark, tablePath, toVersion, group.toSeq)
             priorDvs.filter(dv => dvVersions.contains(dv.version))
               .groupBy(_.keyCol).toSeq.sortBy(_._1)
               .foldLeft(base) { case (acc, (kc, ds)) =>
@@ -1089,13 +1090,10 @@ object SnapshotTable {
     val dvs = deleteVectors(spark, tablePath).filter(_.version <= v)
     if (dvs.isEmpty) return read(spark, tablePath, Some(v))
     val files = readManifest(spark, tablePath, v)
-    val reader = tableSchema(spark, tablePath, Some(v))
-      .fold(spark.read)(spark.read.schema)
     files.groupBy(rel => dvs.filter(_.appliesTo.contains(rel))
         .map(_.version))
       .map { case (dvVersions, group) =>
-        val df = reader.parquet(
-          group.map(rel => new Path(tablePath, rel).toString): _*)
+        val df = readFiles(spark, tablePath, v, group)
         dvs.filter(dv => dvVersions.contains(dv.version))
           .groupBy(_.keyCol).toSeq.sortBy(_._1)
           .foldLeft(df) { case (acc, (kc, ds)) =>

@@ -108,7 +108,7 @@ object StreamingQueries {
     * ORDER inside a chunk file is shuffle-nondeterministic, which is
     * immaterial: every downstream stateful operator re-shuffles by key
     * before ordering, so within-batch arrival order was never data. */
-  private def writeChunkFiles(s: SparkSession,
+  private[graft] def writeChunkFiles(s: SparkSession,
                               chunks: Seq[(DataFrame, String, Long)]): Unit = {
     require(chunks.nonEmpty)
     val tagged = chunks.zipWithIndex.map { case ((df, _, _), k) =>
@@ -120,13 +120,15 @@ object StreamingQueries {
     val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
     chunks.zipWithIndex.foreach { case ((_, target, mtime), k) =>
       val dir = new Path(tmpRoot, s"__k=$k")
-      val part = fs.listStatus(dir).map(_.getPath)
+      // an empty chunk writes no partition directory at all
+      val part = (if (fs.exists(dir)) fs.listStatus(dir).map(_.getPath)
+        else Array.empty[Path])
         .find(_.getName.startsWith("part-"))
         .getOrElse(throw new IllegalStateException(
           s"no part file under $dir — empty chunk $k?"))
       val tgt = new Path(target)
       fs.mkdirs(tgt.getParent)
-      fs.rename(part, tgt)
+      require(fs.rename(part, tgt), s"could not move chunk $k to $tgt")
       fs.setTimes(tgt, mtime, -1)
     }
     fs.delete(root, true)

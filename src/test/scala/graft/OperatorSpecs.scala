@@ -517,6 +517,177 @@ class MergeUpsertSpec extends SparkSpec {
     assert(partFiles("2024-01-02") == untouchedBefore,
       "untouched partition was rewritten")
   }
+
+  // --- the pruned target scan of insertIfAbsent --------------------------
+
+  private def tmpTable(): String =
+    java.nio.file.Files.createTempDirectory("graft_merge").toString + "/t"
+
+  /** Target data files the anti-join of `newRows` reads (0: no scan). */
+  private def filesRead(path: String, src: org.apache.spark.sql.DataFrame,
+                        keys: Seq[String]): Int =
+    MergeUpsert.newRows(spark, src, path, keys, keys.head,
+      sourceKeyUnique = true).queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec
+          if s.relation.location.rootPaths.forall(_.toString.contains(path)) =>
+        s.relation.location.inputFiles.length
+    }.sum
+
+  /** One single-file batch of ids `ks`. */
+  private def ids(ks: Seq[Long]): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    ks.map(k => (k, k * 0.5)).toDF("id", "value").coalesce(1)
+  }
+
+  private def insert(path: String, src: org.apache.spark.sql.DataFrame,
+                     keys: Seq[String] = Seq("id")): Long =
+    MergeUpsert.insertIfAbsent(spark, src, path, keys, keys.head)
+
+  test("insertIfAbsent: target files read per batch stay flat as the sink grows") {
+    val path = tmpTable()
+    // batch i re-offers the last key of batch i-1 and adds ten new ones:
+    // only the previous batch's file can hold a batch key
+    val read = (0 until 20).map { i =>
+      val batch = ids((if (i == 0) 0L else i * 10L - 1) until (i + 1) * 10L)
+      val n = filesRead(path, batch, Seq("id"))
+      assert(insert(path, batch) == 10, s"batch $i")
+      n
+    }
+    assert(read == 0 +: Seq.fill(19)(1), read)
+    val out = spark.read.parquet(path)
+    assert(out.count() == 200 && out.select("id").distinct().count() == 200)
+  }
+
+  test("insertIfAbsent: keys repeated from the oldest file insert nothing") {
+    val path = tmpTable()
+    Seq(0L until 10L, 10L until 20L, 20L until 30L)
+      .foreach(r => insert(path, ids(r)))
+    assert(filesRead(path, ids(0L until 10L), Seq("id")) == 1)
+    assert(insert(path, ids(0L until 10L)) == 0)
+    // range edges: a batch whose max is a file's min, and one whose min is
+    // a file's max, must still see that file
+    assert(filesRead(path, ids(-5L to 0L), Seq("id")) == 1)
+    assert(insert(path, ids(-5L to 0L)) == 5)
+    assert(filesRead(path, ids(29L to 35L), Seq("id")) == 1)
+    assert(insert(path, ids(29L to 35L)) == 6)
+    val out = spark.read.parquet(path)
+    assert(out.count() == 41 && out.select("id").distinct().count() == 41)
+  }
+
+  test("insertIfAbsent: null batch keys are still inserted") {
+    import spark.implicits._
+    val path = tmpTable()
+    insert(path, ids(0L until 10L))
+    insert(path, ids(20L until 30L))
+    val mixed = Seq((Some(5L), 1.0), (None, 2.0)).toDF("id", "value")
+    assert(insert(path, mixed) == 1)
+    // an all-null key column can't match any file: no target scan at all
+    val nulls = Seq((Option.empty[Long], 3.0)).toDF("id", "value")
+    assert(filesRead(path, nulls, Seq("id")) == 0)
+    assert(insert(path, nulls) == 1)
+    assert(spark.read.parquet(path).filter($"id".isNull).count() == 2)
+  }
+
+  test("insertIfAbsent: a file whose key column is all null is skipped") {
+    import spark.implicits._
+    val path = tmpTable()
+    insert(path, Seq((Option.empty[Long], 1.0)).toDF("id", "value"))
+    insert(path, ids(0L until 10L))
+    insert(path, ids(20L until 30L))
+    // only the [0, 9] file can hold a key of [5, 15]
+    assert(filesRead(path, ids(5L to 15L), Seq("id")) == 1)
+    assert(insert(path, ids(5L to 15L)) == 6)
+    val out = spark.read.parquet(path)
+    assert(out.count() == 27 && out.filter($"id".isNotNull)
+      .select("id").distinct().count() == 26)
+  }
+
+  test("insertIfAbsent: timestamp and string keys keep every file") {
+    import spark.implicits._
+    val tsPath = tmpTable()
+    def tsBatch(hs: Seq[Int]) = hs.map(h =>
+      (ts(f"2024-01-01 $h%02d:00:00"), h.toDouble)).toDF("t", "value")
+        .coalesce(1)
+    insert(tsPath, tsBatch(0 until 5), Seq("t"))
+    insert(tsPath, tsBatch(5 until 10), Seq("t"))
+    assert(filesRead(tsPath, tsBatch(12 until 15), Seq("t")) == 2)
+    assert(insert(tsPath, tsBatch(3 until 15), Seq("t")) == 5)
+    assert(spark.read.parquet(tsPath).count() == 15)
+
+    val strPath = tmpTable()
+    def strBatch(ks: Seq[String]) = ks.map(k => (k, 1.0)).toDF("k", "value")
+      .coalesce(1)
+    insert(strPath, strBatch(Seq("a", "b")), Seq("k"))
+    insert(strPath, strBatch(Seq("c", "d")), Seq("k"))
+    assert(filesRead(strPath, strBatch(Seq("x")), Seq("k")) == 2)
+    assert(insert(strPath, strBatch(Seq("a", "d", "e")), Seq("k")) == 1)
+    assert(spark.read.parquet(strPath).count() == 5)
+  }
+
+  // no schema inference and no listing job, however many files the sink
+  // holds: the only job is the batch's own key bounds, and it runs only
+  // when the files' key ranges are apart — not for a key with no integral
+  // column, nor when every file's range overlaps every other's
+  test("newRows: planning over a 40-file sink runs only the bounds job") {
+    import spark.implicits._
+    val path = tmpTable()
+    spark.range(0, 400, 1, 40).selectExpr("id", "cast(id as string) k")
+      .write.parquet(path)
+    assert(jobsDuring(MergeUpsert.newRows(spark, ids(Seq(5L, 500L)), path,
+      Seq("id"), "id", sourceKeyUnique = true)) == 1)
+    val spread = tmpTable()
+    spark.range(0, 400, 1, 40).selectExpr("id", "id % 10 AS b")
+      .repartition(40, $"b").write.parquet(spread)
+    var fromSpread: org.apache.spark.sql.DataFrame = null
+    assert(jobsDuring {
+      fromSpread = MergeUpsert.newRows(spark, ids(Seq(5L, 500L)), spread,
+        Seq("id"), "id", sourceKeyUnique = true)
+    } == 0)
+    assert(fromSpread.select("id").as[Long].collect().toSeq == Seq(500L))
+    val strs = Seq(("5", 1.0), ("x", 2.0)).toDF("k", "value")
+    var fresh: org.apache.spark.sql.DataFrame = null
+    assert(jobsDuring {
+      fresh = MergeUpsert.newRows(spark, strs, path, Seq("k"), "k",
+        sourceKeyUnique = true)
+    } == 0)
+    assert(fresh.select("k").as[String].collect().toSeq == Seq("x"))
+  }
+
+  test("newRows: a partitioned target keeps every file and stays correct") {
+    import spark.implicits._
+    val path = tmpTable()
+    Seq((1, "a", 1.0), (2, "b", 2.0)).toDF("bucket", "name", "v")
+      .write.partitionBy("bucket").parquet(path)
+    val src = Seq((1, "a", 9.0), (1, "c", 9.0), (3, "d", 9.0))
+      .toDF("bucket", "name", "v")
+    // the partition column is in no footer and `name` is a string
+    assert(filesRead(path, src, Seq("bucket", "name")) == 2)
+    val out = MergeUpsert.newRows(spark, src, path, Seq("bucket", "name"),
+      "v").orderBy("name").collect()
+      .map(r => (r.getAs[Int]("bucket"), r.getAs[String]("name"))).toSeq
+    assert(out == Seq((1, "c"), (3, "d")))
+  }
+}
+
+class WriteChunkFilesSpec extends SparkSpec {
+  test("writeChunkFiles: moves each chunk to its target, names an empty one") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_chunks").toString
+    val full = Seq((1L, 1.0), (2L, 2.0)).toDF("id", "value")
+    graft.queries.StreamingQueries.writeChunkFiles(spark,
+      Seq((full, s"$root/a/c0.parquet", 1000L),
+        (full.filter($"id" === 2L), s"$root/a/c1.parquet", 2000L)))
+    assert(spark.read.parquet(s"$root/a/c0.parquet").count() == 2)
+    assert(new java.io.File(s"$root/a/c1.parquet").lastModified() == 2000L)
+    // the empty chunk writes no partition directory: the error must say
+    // which chunk was empty, not surface a raw FileNotFoundException
+    val e = intercept[IllegalStateException] {
+      graft.queries.StreamingQueries.writeChunkFiles(spark,
+        Seq((full, s"$root/b/c0.parquet", 1000L),
+          (full.limit(0), s"$root/b/c1.parquet", 2000L)))
+    }
+    assert(e.getMessage.contains("empty chunk 1"), e.getMessage)
+  }
 }
 
 class StreamingSpec extends SparkSpec {

@@ -24,6 +24,26 @@ class SnapshotTableSpec extends SparkSpec {
     assert(read(spark, t, Some(2)).select("id").head().getLong(0) == 3L)
   }
 
+  // above 32 paths a `spark.read.parquet(files: _*)` lists them with a
+  // Spark job; the manifest already is the listing
+  test("reads of a 40-file version launch no listing job") {
+    val t = tbl()
+    commit(spark, spark.range(0, 40, 1, 40).toDF("id"), t,
+      statsCols = Seq("id"))
+    commit(spark, spark.range(40, 80, 1, 40).toDF("id"), t,
+      replace = false, statsCols = Seq("id"))
+    var head, pruned, appended: org.apache.spark.sql.DataFrame = null
+    assert(jobsDuring {
+      head = read(spark, t)
+      pruned = readPruned(spark, t, "id", Some(BigDecimal(10)), None)
+      appended = readAppendsSince(spark, t, 1)
+    } == 0)
+    assert(head.count() == 80 && head.inputFiles.length == 80)
+    // one id per file: exactly the ten files below id 10 are skipped
+    assert(pruned.inputFiles.length == 70 && pruned.count() == 70)
+    assert(appended.agg(min("id"), max("id")).head().toSeq == Seq(40L, 79L))
+  }
+
   test("pinned readers are isolated from later commits") {
     val s = spark
     import s.implicits._
