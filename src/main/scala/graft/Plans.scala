@@ -705,15 +705,6 @@ object Plans {
       p.contains("BroadcastHashJoin") && !p.contains("CartesianProduct") &&
         "SortMergeJoin".r.findAllIn(p).length <= 1
     }
-    // mlprep_sweep: the λ-grid cross join is STATS-sized (broadcast
-    // nested loop over the cached moment table); every branch reads the
-    // cache, so no raw scan appears outside an IMTS description
-    check("mlprep_sweep: branches read cached moments; stats-sized BNLJ") {
-      val p = planOf("mlprep_sweep")
-      val imts = "InMemoryTableScan".r.findAllIn(p).length
-      imts > 0 && "Scan parquet".r.findAllIn(p).length == imts &&
-        !p.contains("CartesianProduct") && !p.contains("SortMergeJoin")
-    }
     // sql4: the parser-tier ASOF sugar must lower to the union+ffill
     // window plan — a Window over one hash exchange — and NEVER a range
     // join (BroadcastNestedLoopJoin/CartesianProduct would mean the
@@ -723,25 +714,6 @@ object Plans {
       (p.contains("RunningWindowFunction") || p.contains("Window")) &&
         !p.contains("CartesianProduct") &&
         !p.contains("BroadcastNestedLoopJoin")
-    }
-    // mlprep_naive_bayes: the model rollups derive from the cached grid
-    // and join back BROADCAST — a shuffle join would re-exchange the
-    // grid per model table; nothing data-sized appears twice
-    check("mlprep_naive_bayes: cached grid, broadcast model joins") {
-      val p = planOf("mlprep_naive_bayes")
-      val imts = "InMemoryTableScan".r.findAllIn(p).length
-      imts > 0 && "Scan parquet".r.findAllIn(p).length == imts &&
-        p.contains("BroadcastHashJoin") && !p.contains("SortMergeJoin") &&
-        !p.contains("CartesianProduct")
-    }
-    // mlprep_pca: the whole 48-step factorization is ONE corpus scan
-    // into one hash aggregate — no join, no second scan, no window; 48
-    // iterations must stay pure projection work on the stats frame
-    check("mlprep_pca: one scan, one aggregate, join-free iteration") {
-      val p = planOf("mlprep_pca")
-      "Scan parquet".r.findAllIn(p).length == 1 &&
-        !p.contains("Join") && !p.contains("CartesianProduct") &&
-        "Exchange hashpartitioning".r.findAllIn(p).length == 1
     }
     // mlprep_learning_curve: prefixes come from the CACHED cumulative
     // frame (one corpus scan feeds it); every boundary/holdout join is

@@ -183,7 +183,8 @@ object EmbedStage {
     //    storage instead of the flat array that would dominate the table).
     //    Queries probe through IvfIndex.probeCells, which expands parent
     //    ranks into exact child cells; recall vs flat on the same corpus
-    //    is pinned by IvfSpec and measured at scale by graft.HierProbe.
+    //    is pinned by IvfSpec (the measured scale numbers are in
+    //    PROBE_r1[12]_hier*.json).
     val indexed =
       if (!IvfIndex.isHier(nc))
         emb.select(col("vec_id"), col("qv"), normSq(col("qv")).as("nsq"),

@@ -215,11 +215,11 @@ object IvfIndex {
     (block * b + local).cast("int")
   }
 
-  /** TEST/PROBE knob: force the two-level regime below
-    * [[HierarchyThreshold]] so flat and hier can be compared head-to-head
-    * on the SAME corpus (HierProbe's seam point; IvfSpec's recall
-    * comparison). Private — every consumer scopes it through
-    * [[withForceHier]], which restores the prior value on EVERY exit
+  /** TEST knob: force the two-level regime below [[HierarchyThreshold]]
+    * so flat and hier can be compared head-to-head on the SAME corpus
+    * (IvfSpec's recall comparison; the measured scale answers are in
+    * `PROBE_r1[12]_hier*.json`). Private — every consumer scopes it
+    * through [[withForceHier]], which restores the prior value on EVERY exit
     * path, so a stage build and its query-side probe/effCentroid reads
     * can never observe different regimes for the same corpus (the r11
     * ADVICE desync hazard of a bare global toggle). */

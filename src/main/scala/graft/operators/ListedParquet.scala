@@ -1,6 +1,14 @@
 package graft.operators
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ColumnPath
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation.{
+  DateLogicalTypeAnnotation, IntLogicalTypeAnnotation}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{INT32,
+  INT64}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{FileStatusCache,
   HadoopFsRelation, InMemoryFileIndex}
@@ -21,6 +29,10 @@ import org.apache.spark.sql.types.StructType
   *
   * `schema = None` infers it from the footers (one Spark job), the
   * behavior of a schema-less `spark.read.parquet`.
+  *
+  * [[footerRanges]] reads a data file's per-column value ranges from the
+  * same footers, on the driver and without a Spark job: the merge sink's
+  * key pruning and the snapshot manifest's file stats both use it.
   */
 object ListedParquet {
 
@@ -47,5 +59,45 @@ object ListedParquet {
       parts.fieldNames.contains(f.name)).map(_.copy(nullable = true)))
     spark.baseRelationToDataFrame(
       HadoopFsRelation(index, parts, data, None, format, Map.empty)(spark))
+  }
+
+  /** The min/max of every top-level signed INT32/INT64 column (a DATE as
+    * epoch days) over the file's row groups, read from its footer:
+    * `Some((min, max))`, or `None` when the column holds only nulls. A
+    * column missing from the map can't be decided: unsigned or
+    * non-integral (timestamps, INT96, doubles, decimals, strings), or a
+    * row group without statistics. */
+  def footerRanges(conf: Configuration,
+                   f: FileStatus): Map[String, Option[(Long, Long)]] = {
+    import scala.jdk.CollectionConverters._
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+    val footer = try reader.getFooter finally reader.close()
+    val blocks = footer.getBlocks.asScala.toSeq
+    footer.getFileMetaData.getSchema.getFields.asScala.toSeq.collect {
+      case t if t.isPrimitive &&
+          Set(INT32, INT64)(t.asPrimitiveType.getPrimitiveTypeName) &&
+          (t.getLogicalTypeAnnotation match {
+            case null => true
+            case i: IntLogicalTypeAnnotation => i.isSigned
+            case _: DateLogicalTypeAnnotation => true
+            case _ => false
+          }) => t.getName
+    }.flatMap { name =>
+      val chunks = blocks.map(_.getColumns.asScala
+        .find(_.getPath == ColumnPath.get(name)))
+      val stats = chunks.flatten.map(c => (c, c.getStatistics))
+      val decided = chunks.forall(_.isDefined) && stats.forall {
+        case (c, st) => st != null && (st.hasNonNullValue ||
+          st.isNumNullsSet && st.getNumNulls == c.getValueCount)
+      }
+      Option.when(decided) {
+        val set = stats.collect { case (_, st) if st.hasNonNullValue =>
+          (st.genericGetMin.asInstanceOf[Number].longValue,
+            st.genericGetMax.asInstanceOf[Number].longValue)
+        }
+        name -> Option.when(set.nonEmpty)(
+          (set.map(_._1).min, set.map(_._2).max))
+      }
+    }.toMap
   }
 }

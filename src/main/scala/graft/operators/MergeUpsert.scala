@@ -6,9 +6,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField,
   StructType}
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.metadata.ColumnPath
-import org.apache.parquet.hadoop.util.HadoopInputFile
 
 /** Keyed MERGE over parquet tables — the reference's `ON CONFLICT DO
   * NOTHING` upsert (`bars.py:196-198`,
@@ -138,10 +135,7 @@ object MergeUpsert {
     }
   }
 
-  /** A data file's key range per integral column, read from its footer:
-    * `Some((min, max))`, or `None` when the column holds only nulls (no
-    * key can match it). A column missing from the map can't be decided —
-    * not integral, not in the file, or a row group without statistics. */
+  /** A data file's key ranges ([[ListedParquet.footerRanges]]). */
   private type Ranges = Map[String, Option[(Long, Long)]]
 
   /** Footer ranges of each merge sink's data files, keyed by table root
@@ -217,48 +211,10 @@ object MergeUpsert {
     val before = Option(footerCache.get(root.toString)).getOrElse(Map.empty)
     val now = files.map { f =>
       val k = (f.getPath.toString, f.getLen, f.getModificationTime)
-      k -> before.getOrElse(k, readRanges(conf, f))
+      k -> before.getOrElse(k, ListedParquet.footerRanges(conf, f))
     }
     footerCache.put(root.toString, now.toMap)
     now.map(_._2)
-  }
-
-  /** The min/max of every top-level signed INT32/INT64 column over the
-    * file's row groups. INT96 timestamps, dates and unsigned or
-    * non-integral types get no range. */
-  private def readRanges(conf: org.apache.hadoop.conf.Configuration,
-                         f: FileStatus): Ranges = {
-    import scala.jdk.CollectionConverters._
-    import org.apache.parquet.schema.LogicalTypeAnnotation.IntLogicalTypeAnnotation
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{INT32, INT64}
-    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
-    val footer = try reader.getFooter finally reader.close()
-    val blocks = footer.getBlocks.asScala.toSeq
-    footer.getFileMetaData.getSchema.getFields.asScala.toSeq.collect {
-      case t if t.isPrimitive &&
-          Set(INT32, INT64)(t.asPrimitiveType.getPrimitiveTypeName) &&
-          (t.getLogicalTypeAnnotation match {
-            case null => true
-            case i: IntLogicalTypeAnnotation => i.isSigned
-            case _ => false
-          }) => t.getName
-    }.flatMap { name =>
-      val chunks = blocks.map(_.getColumns.asScala
-        .find(_.getPath == ColumnPath.get(name)))
-      val stats = chunks.flatten.map(c => (c, c.getStatistics))
-      val decided = chunks.forall(_.isDefined) && stats.forall {
-        case (c, st) => st != null && (st.hasNonNullValue ||
-          st.isNumNullsSet && st.getNumNulls == c.getValueCount)
-      }
-      Option.when(decided) {
-        val set = stats.collect { case (_, st) if st.hasNonNullValue =>
-          (st.genericGetMin.asInstanceOf[Number].longValue,
-            st.genericGetMax.asInstanceOf[Number].longValue)
-        }
-        name -> Option.when(set.nonEmpty)(
-          (set.map(_._1).min, set.map(_._2).max))
-      }
-    }.toMap
   }
 
   /** MERGE ... WHEN MATCHED THEN UPDATE (source-wins) WHEN NOT MATCHED

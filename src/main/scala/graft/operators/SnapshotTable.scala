@@ -259,55 +259,28 @@ object SnapshotTable {
         tablePath)
   }
 
-  /** Render one stats value as an exact decimal for the manifest.
-    * Numerics keep full precision; dates become epoch days, timestamps
-    * epoch millis. Unsupported types contribute no stats (never pruned —
-    * conservative). */
-  private def toBig(x: Any): Option[BigDecimal] = x match {
-    case null => None
-    case b: Byte => Some(BigDecimal(b.toInt))
-    case s: Short => Some(BigDecimal(s.toInt))
-    case i: Int => Some(BigDecimal(i))
-    case l: Long => Some(BigDecimal(l))
-    case f: Float => Some(BigDecimal(f.toDouble))
-    case d: Double => Some(BigDecimal(d))
-    case d: java.math.BigDecimal => Some(BigDecimal(d))
-    case d: java.sql.Date => Some(BigDecimal(d.toLocalDate.toEpochDay))
-    case d: java.time.LocalDate => Some(BigDecimal(d.toEpochDay))
-    case t: java.sql.Timestamp => Some(BigDecimal(t.getTime))
-    case t: java.time.Instant => Some(BigDecimal(t.toEpochMilli))
-    case _ => None
-  }
-
-  /** Per-file min/max stats for `statsCols`, computed with ONE read-back
-    * scan of the just-written commit directory grouped by
-    * `input_file_name` (a real table format lifts these from the parquet
-    * footers the writer already produced; the footer API isn't public in
-    * this env, and the read-back touches only THIS commit's files, never
-    * the table). Result is metadata-sized: one row per data file. */
-  private def fileStats(spark: SparkSession, dataDir: Path,
-                        statsCols: Seq[String])
-      : Map[String, Map[String, (BigDecimal, BigDecimal)]] = {
-    if (statsCols.isEmpty) return Map.empty
-    import org.apache.spark.sql.functions.{col, input_file_name, max, min}
-    val aggs = statsCols.flatMap(c =>
-      Seq(min(col(c)).as(s"__mn_$c"), max(col(c)).as(s"__mx_$c")))
-    val rows = spark.read.parquet(dataDir.toString)
-      .groupBy(input_file_name().as("__file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .toLocalIterator()
-    val out = Map.newBuilder[String, Map[String, (BigDecimal, BigDecimal)]]
-    rows.forEachRemaining { r =>
-      val name = new Path(r.getString(0)).getName
-      val stats = statsCols.zipWithIndex.flatMap { case (c, i) =>
-        for {
-          mn <- toBig(r.get(1 + 2 * i))
-          mx <- toBig(r.get(2 + 2 * i))
-        } yield c -> (mn, mx)
-      }.toMap
-      out += name -> stats
-    }
-    out.result()
+  /** The manifest entries of the data files staged under `dataDir`,
+    * each with its footer's min/max of every `statsCols` column
+    * ([[ListedParquet.footerRanges]]: integers as-is, dates as epoch
+    * days). A column the footer can't decide (other types, all nulls,
+    * missing statistics) records no stats, and such files are never
+    * pruned. */
+  private def stagedEntries(spark: SparkSession, dataDir: Path,
+                            commitId: String,
+                            statsCols: Seq[String]): Seq[String] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    fs(spark, dataDir).listStatus(dataDir).toSeq
+      .filter(_.getPath.getName.endsWith(".parquet"))
+      .map { st =>
+        val stats =
+          if (statsCols.isEmpty) Map.empty[String, (BigDecimal, BigDecimal)]
+          else ListedParquet.footerRanges(conf, st).collect {
+            case (c, Some((mn, mx))) if statsCols.contains(c) =>
+              c -> (BigDecimal(mn), BigDecimal(mx))
+          }
+        renderEntry(FileEntry(s"data/$commitId/${st.getPath.getName}",
+          stats))
+      }
   }
 
   /** Commit `df` as the next version. `replace = true` makes the new
@@ -357,12 +330,7 @@ object SnapshotTable {
     }
     val dataDir = new Path(new Path(tablePath, "data"), commitId)
     df.write.parquet(dataDir.toString)
-    val f = fs(spark, dataDir)
-    val stats = fileStats(spark, dataDir, statsCols)
-    val newFiles = f.listStatus(dataDir).toSeq.map(_.getPath)
-      .filter(_.getName.endsWith(".parquet"))
-      .map(p => renderEntry(FileEntry(s"data/$commitId/${p.getName}",
-        stats.getOrElse(p.getName, Map.empty))))
+    val newFiles = stagedEntries(spark, dataDir, commitId, statsCols)
     withCommitLock(spark, tablePath) { f =>
       val head = versions(spark, tablePath).lastOption
       expectedHead.foreach { e =>
@@ -506,7 +474,7 @@ object SnapshotTable {
     * `colName` are always kept (conservative), so the pruned read +
     * the caller's row-level filter is ALWAYS equivalent to the full
     * read + filter. `None` bounds are open. Date columns compare as
-    * epoch days, timestamps as epoch millis (the [[toBig]] encoding). */
+    * epoch days (the [[stagedEntries]] encoding). */
   def readPruned(spark: SparkSession, tablePath: String, colName: String,
                  lower: Option[BigDecimal], upper: Option[BigDecimal],
                  version: Option[Int] = None): DataFrame = {
@@ -946,11 +914,7 @@ object SnapshotTable {
         f.delete(dataDir, true)
         Left(err)
       case None =>
-        val stats = fileStats(spark, dataDir, statsCols)
-        val newFiles = f.listStatus(dataDir).toSeq.map(_.getPath)
-          .filter(_.getName.endsWith(".parquet"))
-          .map(p => renderEntry(FileEntry(s"data/$commitId/${p.getName}",
-            stats.getOrElse(p.getName, Map.empty))))
+        val newFiles = stagedEntries(spark, dataDir, commitId, statsCols)
         Right(withCommitLock(spark, tablePath) { ff =>
           val head = versions(spark, tablePath).lastOption
           val v = head.getOrElse(0) + 1
@@ -1034,10 +998,7 @@ object SnapshotTable {
           .reduce(_ unionByName _)
         val dataDir = new Path(new Path(tablePath, "data"), commitId)
         df.write.parquet(dataDir.toString)
-        f.listStatus(dataDir).toSeq.map(_.getPath)
-          .filter(_.getName.endsWith(".parquet"))
-          .map(p => renderEntry(FileEntry(s"data/$commitId/${p.getName}",
-            Map.empty)))
+        stagedEntries(spark, dataDir, commitId, Nil)
       }
     // DATA restores to the as-of state, but per-writer txn watermarks do
     // NOT rewind: Delta RESTORE preserves current SetTransaction state so

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
+import graft.LinearFit._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -57,6 +58,28 @@ object MlPrepQueries {
     * legitimate input and always fires on a mistaken high-cardinality
     * double column. */
   private[graft] val MaxMedianDomain = 100000L
+
+  /** mlprep_permutation_importance's moments: [[OlsYy]] plus the cross
+    * terms with x1 or x2 replaced by its permuted copy (x1p, x2p), and
+    * the [[sse]] term names that swap them in for feature 1 or 2. */
+  private val PermMoments: Seq[Moment] = OlsYy ++ Seq(
+    "l1py" -> Seq("x1p", "yq"), "l1p2" -> Seq("x1p", "x2"),
+    "l2py" -> Seq("x2p", "yq"), "l12p" -> Seq("x1", "x2p"))
+  private val Perm1 = Map("1y" -> "s1py", "12" -> "s1p2").withDefault("s" + _)
+  private val Perm2 = Map("2y" -> "s2py", "12" -> "s12p").withDefault("s" + _)
+
+  /** mlprep_pca's moments: the second moments of (x1, x2, x3). */
+  private val PcaMoments = normal(Seq(1, 2, 3), target = false)
+
+  /** mlprep_forward_select's moments over (x1, x2, x3), and the [[sse]]
+    * term names of its pair fit on features (a, b). */
+  private val FwdMoments = normal(Seq(1, 2, 3), yy = true)
+  private def pairNames(a: Int, b: Int): String => String =
+    k => "s" + k.map {
+      case '1' => ('0' + a).toChar
+      case '2' => ('0' + b).toChar
+      case c => c
+    }
 
   /** (median) 1-row frame of the exact median of an integral column,
     * via value histogram + two middle order statistics. */
@@ -615,167 +638,79 @@ object MlPrepQueries {
     QueryDef(
       "mlprep_shap_linear",
       Some {
-        def oDet3(a1: String, a2: String, a3: String,
-                  b1: String, b2: String, b3: String,
-                  c1: String, c2: String, c3: String): String =
-          s"($a1 * ($b2 * $c3 - $b3 * $c2) - " +
-          s"$a2 * ($b1 * $c3 - $b3 * $c1) + " +
-          s"$a3 * ($b1 * $c2 - $b2 * $c1))"
-        val det = oDet3("nn", "s1", "s2", "s1", "s11", "s12",
-          "s2", "s12", "s22")
-        val db0 = oDet3("sy", "s1", "s2", "s1y", "s11", "s12",
-          "s2y", "s12", "s22")
-        val db1 = oDet3("nn", "sy", "s2", "s1", "s1y", "s12",
-          "s2", "s2y", "s22")
-        val db2 = oDet3("nn", "s1", "sy", "s1", "s11", "s1y",
-          "s2", "s12", "s2y")
+        val Seq(b0, b1, b2) = oOls()
+        def hist(j: Int): String =
+          s"""h$j AS (
+             |  SELECT f.event_type,
+             |    CAST(sum(${oQ(s"abs(b.b$j * (CAST(f.x$j AS DOUBLE) - " +
+                    s"b.mu$j))", 6)} * cnt$j) AS BIGINT) AS t$j
+             |  FROM (SELECT event_type, x$j, CAST(count(*) AS BIGINT)
+             |        AS cnt$j FROM f GROUP BY 1, 2) f
+             |  JOIN bm b ON f.event_type = b.event_type GROUP BY 1)"""
+            .stripMargin
         s"""WITH f AS (
-           |  SELECT event_id, event_type,
-           |    CAST(hour(ts) AS BIGINT) AS x1,
-           |    CAST(extract(dow FROM ts) + 1 AS BIGINT) AS x2,
-           |    ${graft.Parity.oLq("value")} AS yq
-           |  FROM events),
+           |  ${oFeatures("event_id", "event_type")}),
            |m AS (
-           |  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-           |    CAST(sum(x1) AS BIGINT) AS l1,
-           |    CAST(sum(x2) AS BIGINT) AS l2,
-           |    CAST(sum(x1 * x1) AS BIGINT) AS l11,
-           |    CAST(sum(x1 * x2) AS BIGINT) AS l12,
-           |    CAST(sum(x2 * x2) AS BIGINT) AS l22,
-           |    CAST(sum(yq) AS BIGINT) AS ly,
-           |    CAST(sum(x1 * yq) AS BIGINT) AS l1y,
-           |    CAST(sum(x2 * yq) AS BIGINT) AS l2y
-           |  FROM f GROUP BY 1),
+           |  ${oMomentsBy("f", "event_type")(Ols)}),
            |d AS (
-           |  SELECT event_type, n, CAST(n AS DOUBLE) AS nn,
-           |    CAST(l1 AS DOUBLE) AS s1, CAST(l2 AS DOUBLE) AS s2,
-           |    CAST(l11 AS DOUBLE) AS s11, CAST(l12 AS DOUBLE) AS s12,
-           |    CAST(l22 AS DOUBLE) AS s22,
-           |    CAST(ly AS DOUBLE) / 100.0 AS sy,
-           |    CAST(l1y AS DOUBLE) / 100.0 AS s1y,
-           |    CAST(l2y AS DOUBLE) / 100.0 AS s2y
+           |  SELECT event_type, n,
+           |    ${oDescale(Ols)}
            |  FROM m),
            |bm AS (
-           |  SELECT event_type, nn,
-           |    $db0 / $det AS b0, $db1 / $det AS b1, $db2 / $det AS b2,
-           |    s1 / nn AS mu1, s2 / nn AS mu2
+           |  SELECT event_type, sn,
+           |    $b0 AS b0, $b1 AS b1, $b2 AS b2,
+           |    s1 / sn AS mu1, s2 / sn AS mu2
            |  FROM d),
-           |h1 AS (
-           |  SELECT f.event_type,
-           |    CAST(sum(CAST(floor(abs(b.b1 * (CAST(f.x1 AS DOUBLE)
-           |      - b.mu1)) * 1.0e6 + 0.5e0) AS BIGINT)
-           |      * cnt1) AS BIGINT) AS t1
-           |  FROM (SELECT event_type, x1, CAST(count(*) AS BIGINT)
-           |        AS cnt1 FROM f GROUP BY 1, 2) f
-           |  JOIN bm b ON f.event_type = b.event_type GROUP BY 1),
-           |h2 AS (
-           |  SELECT f.event_type,
-           |    CAST(sum(CAST(floor(abs(b.b2 * (CAST(f.x2 AS DOUBLE)
-           |      - b.mu2)) * 1.0e6 + 0.5e0) AS BIGINT)
-           |      * cnt2) AS BIGINT) AS t2
-           |  FROM (SELECT event_type, x2, CAST(count(*) AS BIGINT)
-           |        AS cnt2 FROM f GROUP BY 1, 2) f
-           |  JOIN bm b ON f.event_type = b.event_type GROUP BY 1)
+           |${hist(1)},
+           |${hist(2)}
            |SELECT f.event_id, f.event_type, f.x1, f.x2,
-           |  CAST(floor((b.b0 + b.b1 * b.mu1 + b.b2 * b.mu2) * 1.0e6
-           |    + 0.5e0) AS BIGINT) AS base_q,
-           |  CAST(floor(b.b1 * (CAST(f.x1 AS DOUBLE) - b.mu1) * 1.0e6
-           |    + 0.5e0) AS BIGINT) AS phi1_q,
-           |  CAST(floor(b.b2 * (CAST(f.x2 AS DOUBLE) - b.mu2) * 1.0e6
-           |    + 0.5e0) AS BIGINT) AS phi2_q,
-           |  CAST(floor((b.b0 + b.b1 * CAST(f.x1 AS DOUBLE)
-           |    + b.b2 * CAST(f.x2 AS DOUBLE)) * 1.0e6 + 0.5e0)
-           |    AS BIGINT) AS pred_q,
-           |  CAST(floor(CAST(h1.t1 AS DOUBLE) / b.nn + 0.5e0) AS BIGINT)
-           |    AS mphi1_q,
-           |  CAST(floor(CAST(h2.t2 AS DOUBLE) / b.nn + 0.5e0) AS BIGINT)
-           |    AS mphi2_q
+           |  ${oQ("b.b0 + b.b1 * b.mu1 + b.b2 * b.mu2", 6)} AS base_q,
+           |  ${oQ("b.b1 * (CAST(f.x1 AS DOUBLE) - b.mu1)", 6)} AS phi1_q,
+           |  ${oQ("b.b2 * (CAST(f.x2 AS DOUBLE) - b.mu2)", 6)} AS phi2_q,
+           |  ${oQ("b.b0 + b.b1 * CAST(f.x1 AS DOUBLE) + " +
+                  "b.b2 * CAST(f.x2 AS DOUBLE)", 6)} AS pred_q,
+           |  ${oQ("CAST(h1.t1 AS DOUBLE) / b.sn", 0)} AS mphi1_q,
+           |  ${oQ("CAST(h2.t2 AS DOUBLE) / b.sn", 0)} AS mphi2_q
            |FROM f JOIN bm b ON f.event_type = b.event_type
            |JOIN h1 ON f.event_type = h1.event_type
            |JOIN h2 ON f.event_type = h2.event_type
            |WHERE f.event_id % 97 = 0""".stripMargin
       },
       (s, d) => {
-        def det3(a1: Column, a2: Column, a3: Column,
-                 b1: Column, b2: Column, b3: Column,
-                 c1: Column, c2: Column, c3: Column): Column =
-          a1 * (b2 * c3 - b3 * c2) -
-          a2 * (b1 * c3 - b3 * c1) +
-          a3 * (b1 * c2 - b2 * c1)
-        val f = Tables.events(s, d).select(col("event_id"),
-            col("event_type"),
-            hour(col("ts")).cast("long").as("x1"),
-            dayofweek(col("ts")).cast("long").as("x2"),
-            graft.Parity.lq(col("value")).as("yq"))
+        val f = features(Tables.events(s, d),
+            col("event_id"), col("event_type"))
           .persist() // moments + two feature histograms + the sample
-        val m = f.groupBy("event_type").agg(
-          count(lit(1)).as("n"),
-          sum("x1").as("l1"), sum("x2").as("l2"),
-          sum(col("x1") * col("x1")).as("l11"),
-          sum(col("x1") * col("x2")).as("l12"),
-          sum(col("x2") * col("x2")).as("l22"),
-          sum("yq").as("ly"),
-          sum(col("x1") * col("yq")).as("l1y"),
-          sum(col("x2") * col("yq")).as("l2y"))
-        val dd = m.select(col("event_type"), col("n"),
-          col("n").cast("double").as("nn"),
-          col("l1").cast("double").as("s1"),
-          col("l2").cast("double").as("s2"),
-          col("l11").cast("double").as("s11"),
-          col("l12").cast("double").as("s12"),
-          col("l22").cast("double").as("s22"),
-          (col("ly").cast("double") / 100.0).as("sy"),
-          (col("l1y").cast("double") / 100.0).as("s1y"),
-          (col("l2y").cast("double") / 100.0).as("s2y"))
-        val det = det3(col("nn"), col("s1"), col("s2"),
-          col("s1"), col("s11"), col("s12"),
-          col("s2"), col("s12"), col("s22"))
-        val db0 = det3(col("sy"), col("s1"), col("s2"),
-          col("s1y"), col("s11"), col("s12"),
-          col("s2y"), col("s12"), col("s22"))
-        val db1 = det3(col("nn"), col("sy"), col("s2"),
-          col("s1"), col("s1y"), col("s12"),
-          col("s2"), col("s2y"), col("s22"))
-        val db2 = det3(col("nn"), col("s1"), col("sy"),
-          col("s1"), col("s11"), col("s1y"),
-          col("s2"), col("s12"), col("s2y"))
-        val bm = dd.select(col("event_type"), col("nn"),
-          (db0 / det).as("b0"), (db1 / det).as("b1"),
-          (db2 / det).as("b2"),
-          (col("s1") / col("nn")).as("mu1"),
-          (col("s2") / col("nn")).as("mu2"))
-        def hist(x: String, b: String, mu: String): DataFrame = f
-          .groupBy("event_type", x)
+        val Seq(b0, b1, b2) = ols()
+        val bm = momentsBy(f, "event_type")(Ols)
+          .select(col("event_type") +: col("n") +: descale(Ols): _*)
+          .select(col("event_type"), col("sn"),
+            b0.as("b0"), b1.as("b1"), b2.as("b2"),
+            (col("s1") / col("sn")).as("mu1"),
+            (col("s2") / col("sn")).as("mu2"))
+        def hist(j: Int): DataFrame = f
+          .groupBy("event_type", s"x$j")
           .agg(count(lit(1)).as("cnt"))
           .join(broadcast(bm), Seq("event_type"))
           .groupBy("event_type")
-          .agg(sum(
-            floor(abs(col(b) * (col(x).cast("double") - col(mu)))
-              * lit(1e6) + lit(0.5)).cast("long") * col("cnt"))
-            .as(s"t$b"))
-        val h1 = hist("x1", "b1", "mu1")
-          .withColumnRenamed("tb1", "t1")
-        val h2 = hist("x2", "b2", "mu2")
-          .withColumnRenamed("tb2", "t2")
-        def q6(c: Column) = floor(c * lit(1e6) + lit(0.5)).cast("long")
+          .agg(sum(q(abs(col(s"b$j") *
+              (col(s"x$j").cast("double") - col(s"mu$j"))), 6) * col("cnt"))
+            .as(s"t$j"))
         f.filter(col("event_id") % 97 === 0)
           .join(broadcast(bm), Seq("event_type"))
-          .join(broadcast(h1), Seq("event_type"))
-          .join(broadcast(h2), Seq("event_type"))
+          .join(broadcast(hist(1)), Seq("event_type"))
+          .join(broadcast(hist(2)), Seq("event_type"))
           .select(col("event_id"), col("event_type"), col("x1"),
             col("x2"),
-            q6(col("b0") + col("b1") * col("mu1")
-              + col("b2") * col("mu2")).as("base_q"),
-            q6(col("b1") * (col("x1").cast("double") - col("mu1")))
+            q(col("b0") + col("b1") * col("mu1")
+              + col("b2") * col("mu2"), 6).as("base_q"),
+            q(col("b1") * (col("x1").cast("double") - col("mu1")), 6)
               .as("phi1_q"),
-            q6(col("b2") * (col("x2").cast("double") - col("mu2")))
+            q(col("b2") * (col("x2").cast("double") - col("mu2")), 6)
               .as("phi2_q"),
-            q6(col("b0") + col("b1") * col("x1").cast("double")
-              + col("b2") * col("x2").cast("double")).as("pred_q"),
-            floor(col("t1").cast("double") / col("nn") + lit(0.5))
-              .cast("long").as("mphi1_q"),
-            floor(col("t2").cast("double") / col("nn") + lit(0.5))
-              .cast("long").as("mphi2_q"))
+            q(col("b0") + col("b1") * col("x1").cast("double")
+              + col("b2") * col("x2").cast("double"), 6).as("pred_q"),
+            q(col("t1").cast("double") / col("sn"), 0).as("mphi1_q"),
+            q(col("t2").cast("double") / col("sn"), 0).as("mphi2_q"))
       }),
 
     // ELASTIC NET — the L1 half of sklearn's linear zoo (Lasso /
@@ -808,113 +743,65 @@ object MlPrepQueries {
              |    CASE WHEN z > t THEN (z - t) / d$j
              |         WHEN z < -t THEN (z + t) / d$j
              |         ELSE 0.0e0 END AS b$j)
-             |  FROM (SELECT *, ($cjy - $cjk * $bk) / nn AS z
+             |  FROM (SELECT *, ($cjy - $cjk * $bk) / sn AS z
              |        FROM ${if (j == 1) s"en${k - 1}_2" else s"en${k}_1"}))"""
             .stripMargin
         }
         val sweeps = (1 to 20).map(k => upd(k, 1) + ",\n" + upd(k, 2))
           .mkString(",\n")
         s"""WITH f AS (
-           |  SELECT event_type,
-           |    CAST(hour(ts) AS BIGINT) AS x1,
-           |    CAST(extract(dow FROM ts) + 1 AS BIGINT) AS x2,
-           |    ${graft.Parity.oLq("value")} AS yq
-           |  FROM events),
+           |  ${oFeatures("event_type")}),
            |m AS (
-           |  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-           |    CAST(sum(x1) AS BIGINT) AS l1,
-           |    CAST(sum(x2) AS BIGINT) AS l2,
-           |    CAST(sum(x1 * x1) AS BIGINT) AS l11,
-           |    CAST(sum(x1 * x2) AS BIGINT) AS l12,
-           |    CAST(sum(x2 * x2) AS BIGINT) AS l22,
-           |    CAST(sum(yq) AS BIGINT) AS ly,
-           |    CAST(sum(x1 * yq) AS BIGINT) AS l1y,
-           |    CAST(sum(x2 * yq) AS BIGINT) AS l2y,
-           |    CAST(sum(yq * yq) AS BIGINT) AS lyy
-           |  FROM f GROUP BY 1),
+           |  ${oMomentsBy("f", "event_type")(OlsYy)}),
            |d AS (
-           |  SELECT event_type, n, CAST(n AS DOUBLE) AS nn,
-           |    CAST(l1 AS DOUBLE) AS s1, CAST(l2 AS DOUBLE) AS s2,
-           |    CAST(l11 AS DOUBLE) AS s11, CAST(l12 AS DOUBLE) AS s12,
-           |    CAST(l22 AS DOUBLE) AS s22,
-           |    CAST(ly AS DOUBLE) / 100.0 AS sy,
-           |    CAST(l1y AS DOUBLE) / 100.0 AS s1y,
-           |    CAST(l2y AS DOUBLE) / 100.0 AS s2y,
-           |    CAST(lyy AS DOUBLE) / 10000.0 AS syy
+           |  SELECT event_type, n,
+           |    ${oDescale(OlsYy)}
            |  FROM m),
            |cen AS (
            |  SELECT *,
-           |    s11 - s1 * s1 / nn AS c11,
-           |    s22 - s2 * s2 / nn AS c22,
-           |    s12 - s1 * s2 / nn AS c12,
-           |    s1y - s1 * sy / nn AS c1y,
-           |    s2y - s2 * sy / nn AS c2y
+           |    s11 - s1 * s1 / sn AS c11,
+           |    s22 - s2 * s2 / sn AS c22,
+           |    s12 - s1 * s2 / sn AS c12,
+           |    s1y - s1 * sy / sn AS c1y,
+           |    s2y - s2 * sy / sn AS c2y
            |  FROM d),
            |en0_2 AS (
            |  SELECT c.*, g.lam,
            |    g.lam * 0.5e0 AS t,
-           |    c11 / nn + g.lam * 0.5e0 AS d1,
-           |    c22 / nn + g.lam * 0.5e0 AS d2,
+           |    c11 / sn + g.lam * 0.5e0 AS d1,
+           |    c22 / sn + g.lam * 0.5e0 AS d2,
            |    0.0e0 AS b1, 0.0e0 AS b2
            |  FROM cen c, (SELECT unnest([0.0e0, 0.5e0, 1000000.0e0])
            |    AS lam) g),
            |$sweeps,
            |fin AS (
-           |  SELECT *, sy / nn - b1 * s1 / nn - b2 * s2 / nn AS b0
+           |  SELECT *, sy / sn - b1 * s1 / sn - b2 * s2 / sn AS b0
            |  FROM en20_2)
            |SELECT event_type, lam, n,
-           |  CAST(floor(b0 * 1.0e9 + 0.5e0) AS BIGINT) AS b0_q,
-           |  CAST(floor(b1 * 1.0e9 + 0.5e0) AS BIGINT) AS b1_q,
-           |  CAST(floor(b2 * 1.0e9 + 0.5e0) AS BIGINT) AS b2_q,
+           |  ${oQ("b0", 9)} AS b0_q,
+           |  ${oQ("b1", 9)} AS b1_q,
+           |  ${oQ("b2", 9)} AS b2_q,
            |  CAST(CASE WHEN b1 <> 0.0e0 THEN 1 ELSE 0 END
            |    + CASE WHEN b2 <> 0.0e0 THEN 1 ELSE 0 END AS BIGINT)
            |    AS nnz,
-           |  CAST(floor(
-           |    ((syy - 2.0e0 * (b0 * sy + b1 * s1y + b2 * s2y)
-           |      + (b0 * b0 * nn + b1 * b1 * s11 + b2 * b2 * s22
-           |        + 2.0e0 * (b0 * b1 * s1 + b0 * b2 * s2
-           |          + b1 * b2 * s12))) / nn) * 1.0e6 + 0.5e0)
-           |    AS BIGINT) AS mse_q
+           |  ${oQ(s"${oSse()} / sn", 6)} AS mse_q
            |FROM fin""".stripMargin
       },
       (s, d) => {
-        val f = Tables.events(s, d).select(col("event_type"),
-          hour(col("ts")).cast("long").as("x1"),
-          dayofweek(col("ts")).cast("long").as("x2"),
-          graft.Parity.lq(col("value")).as("yq"))
-        val m = f.groupBy("event_type").agg(
-          count(lit(1)).as("n"),
-          sum("x1").as("l1"), sum("x2").as("l2"),
-          sum(col("x1") * col("x1")).as("l11"),
-          sum(col("x1") * col("x2")).as("l12"),
-          sum(col("x2") * col("x2")).as("l22"),
-          sum("yq").as("ly"),
-          sum(col("x1") * col("yq")).as("l1y"),
-          sum(col("x2") * col("yq")).as("l2y"),
-          sum(col("yq") * col("yq")).as("lyy"))
-        val dd = m.select(col("event_type"), col("n"),
-          col("n").cast("double").as("nn"),
-          col("l1").cast("double").as("s1"),
-          col("l2").cast("double").as("s2"),
-          col("l11").cast("double").as("s11"),
-          col("l12").cast("double").as("s12"),
-          col("l22").cast("double").as("s22"),
-          (col("ly").cast("double") / 100.0).as("sy"),
-          (col("l1y").cast("double") / 100.0).as("s1y"),
-          (col("l2y").cast("double") / 100.0).as("s2y"),
-          (col("lyy").cast("double") / 10000.0).as("syy"))
-        val cen = dd
-          .withColumn("c11", col("s11") - col("s1") * col("s1") / col("nn"))
-          .withColumn("c22", col("s22") - col("s2") * col("s2") / col("nn"))
-          .withColumn("c12", col("s12") - col("s1") * col("s2") / col("nn"))
-          .withColumn("c1y", col("s1y") - col("s1") * col("sy") / col("nn"))
-          .withColumn("c2y", col("s2y") - col("s2") * col("sy") / col("nn"))
+        val f = features(Tables.events(s, d), col("event_type"))
+        val cen = momentsBy(f, "event_type")(OlsYy)
+          .select(col("event_type") +: col("n") +: descale(OlsYy): _*)
+          .withColumn("c11", col("s11") - col("s1") * col("s1") / col("sn"))
+          .withColumn("c22", col("s22") - col("s2") * col("s2") / col("sn"))
+          .withColumn("c12", col("s12") - col("s1") * col("s2") / col("sn"))
+          .withColumn("c1y", col("s1y") - col("s1") * col("sy") / col("sn"))
+          .withColumn("c2y", col("s2y") - col("s2") * col("sy") / col("sn"))
         var en = cen
           .withColumn("lam",
             explode(array(lit(0.0), lit(0.5), lit(1000000.0))))
           .withColumn("t", col("lam") * 0.5)
-          .withColumn("d1", col("c11") / col("nn") + col("lam") * 0.5)
-          .withColumn("d2", col("c22") / col("nn") + col("lam") * 0.5)
+          .withColumn("d1", col("c11") / col("sn") + col("lam") * 0.5)
+          .withColumn("d2", col("c22") / col("sn") + col("lam") * 0.5)
           .withColumn("b1", lit(0.0)).withColumn("b2", lit(0.0))
         def soft(dj: String): Column =
           when(col("z") > col("t"), (col("z") - col("t")) / col(dj))
@@ -922,30 +809,21 @@ object MlPrepQueries {
             .otherwise(0.0)
         for (_ <- 1 to 20) {
           en = en.withColumn("z",
-              (col("c1y") - col("c12") * col("b2")) / col("nn"))
+              (col("c1y") - col("c12") * col("b2")) / col("sn"))
             .withColumn("b1", soft("d1")).drop("z")
           en = en.withColumn("z",
-              (col("c2y") - col("c12") * col("b1")) / col("nn"))
+              (col("c2y") - col("c12") * col("b1")) / col("sn"))
             .withColumn("b2", soft("d2")).drop("z")
         }
         val fin = en.withColumn("b0",
-          col("sy") / col("nn") - col("b1") * col("s1") / col("nn")
-            - col("b2") * col("s2") / col("nn"))
-        def q9(c: Column) = floor(c * lit(1e9) + lit(0.5)).cast("long")
+          col("sy") / col("sn") - col("b1") * col("s1") / col("sn")
+            - col("b2") * col("s2") / col("sn"))
         fin.select(col("event_type"), col("lam"), col("n"),
-          q9(col("b0")).as("b0_q"), q9(col("b1")).as("b1_q"),
-          q9(col("b2")).as("b2_q"),
+          q(col("b0"), 9).as("b0_q"), q(col("b1"), 9).as("b1_q"),
+          q(col("b2"), 9).as("b2_q"),
           (when(col("b1") =!= 0.0, 1L).otherwise(0L)
             + when(col("b2") =!= 0.0, 1L).otherwise(0L)).as("nnz"),
-          floor(((col("syy") - lit(2.0) * (col("b0") * col("sy")
-              + col("b1") * col("s1y") + col("b2") * col("s2y"))
-            + (col("b0") * col("b0") * col("nn")
-              + col("b1") * col("b1") * col("s11")
-              + col("b2") * col("b2") * col("s22")
-              + lit(2.0) * (col("b0") * col("b1") * col("s1")
-                + col("b0") * col("b2") * col("s2")
-                + col("b1") * col("b2") * col("s12")))) / col("nn"))
-            * lit(1e6) + lit(0.5)).cast("long").as("mse_q"))
+          q(sse() / col("sn"), 6).as("mse_q"))
       }),
 
     // LIFT / CUMULATIVE-GAIN CURVE — the campaign-targeting twin of the
@@ -1056,33 +934,9 @@ object MlPrepQueries {
     QueryDef(
       "mlprep_permutation_importance",
       Some {
-        def oDet3(a1: String, a2: String, a3: String,
-                  b1: String, b2: String, b3: String,
-                  c1: String, c2: String, c3: String): String =
-          s"($a1 * ($b2 * $c3 - $b3 * $c2) - " +
-          s"$a2 * ($b1 * $c3 - $b3 * $c1) + " +
-          s"$a3 * ($b1 * $c2 - $b2 * $c1))"
-        val det = oDet3("nn", "s1", "s2", "s1", "s11", "s12",
-          "s2", "s12", "s22")
-        val db0 = oDet3("sy", "s1", "s2", "s1y", "s11", "s12",
-          "s2y", "s12", "s22")
-        val db1 = oDet3("nn", "sy", "s2", "s1", "s1y", "s12",
-          "s2", "s2y", "s22")
-        val db2 = oDet3("nn", "s1", "sy", "s1", "s11", "s1y",
-          "s2", "s12", "s2y")
-        // SSE/n with the cross terms (x1·y, x1·x2) parametrized so the
-        // same tree serves baseline and both permutations
-        def mse(t1y: String, t2y: String, t12: String): String =
-          s"""((syy - 2.0e0 * (b0 * sy + b1 * $t1y + b2 * $t2y)
-             |    + (b0 * b0 * nn + b1 * b1 * s11 + b2 * b2 * s22
-             |      + 2.0e0 * (b0 * b1 * s1 + b0 * b2 * s2
-             |        + b1 * b2 * $t12))) / nn)""".stripMargin
+        val Seq(b0, b1, b2) = oOls()
         s"""WITH f AS (
-           |  SELECT event_type, event_id,
-           |    CAST(hour(ts) AS BIGINT) AS x1,
-           |    CAST(extract(dow FROM ts) + 1 AS BIGINT) AS x2,
-           |    ${graft.Parity.oLq("value")} AS yq
-           |  FROM events),
+           |  ${oFeatures("event_type", "event_id")}),
            |p AS (
            |  SELECT *,
            |    COALESCE(lag(x1) OVER w, last_value(x1) OVER wf) AS x1p,
@@ -1093,65 +947,31 @@ object MlPrepQueries {
            |      ROWS BETWEEN UNBOUNDED PRECEDING
            |      AND UNBOUNDED FOLLOWING)),
            |m AS (
-           |  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-           |    CAST(sum(x1) AS BIGINT) AS l1,
-           |    CAST(sum(x2) AS BIGINT) AS l2,
-           |    CAST(sum(x1 * x1) AS BIGINT) AS l11,
-           |    CAST(sum(x1 * x2) AS BIGINT) AS l12,
-           |    CAST(sum(x2 * x2) AS BIGINT) AS l22,
-           |    CAST(sum(yq) AS BIGINT) AS ly,
-           |    CAST(sum(x1 * yq) AS BIGINT) AS l1y,
-           |    CAST(sum(x2 * yq) AS BIGINT) AS l2y,
-           |    CAST(sum(yq * yq) AS BIGINT) AS lyy,
-           |    CAST(sum(x1p * yq) AS BIGINT) AS l1py,
-           |    CAST(sum(x1p * x2) AS BIGINT) AS l1p2,
-           |    CAST(sum(x2p * yq) AS BIGINT) AS l2py,
-           |    CAST(sum(x1 * x2p) AS BIGINT) AS l12p
-           |  FROM p GROUP BY 1),
+           |  ${oMomentsBy("p", "event_type")(PermMoments)}),
            |d AS (
-           |  SELECT event_type, n, CAST(n AS DOUBLE) AS nn,
-           |    CAST(l1 AS DOUBLE) AS s1, CAST(l2 AS DOUBLE) AS s2,
-           |    CAST(l11 AS DOUBLE) AS s11, CAST(l12 AS DOUBLE) AS s12,
-           |    CAST(l22 AS DOUBLE) AS s22,
-           |    CAST(ly AS DOUBLE) / 100.0 AS sy,
-           |    CAST(l1y AS DOUBLE) / 100.0 AS s1y,
-           |    CAST(l2y AS DOUBLE) / 100.0 AS s2y,
-           |    CAST(lyy AS DOUBLE) / 10000.0 AS syy,
-           |    CAST(l1py AS DOUBLE) / 100.0 AS s1py,
-           |    CAST(l1p2 AS DOUBLE) AS s1p2,
-           |    CAST(l2py AS DOUBLE) / 100.0 AS s2py,
-           |    CAST(l12p AS DOUBLE) AS s12p
+           |  SELECT event_type, n,
+           |    ${oDescale(PermMoments)}
            |  FROM m),
            |b AS (
-           |  SELECT *, $db0 / $det AS b0, $db1 / $det AS b1,
-           |    $db2 / $det AS b2
+           |  SELECT *, $b0 AS b0, $b1 AS b1, $b2 AS b2
            |  FROM d),
            |sc AS (
            |  SELECT event_type, n,
-           |    ${mse("s1y", "s2y", "s12")} AS mse0,
-           |    ${mse("s1py", "s2y", "s1p2")} AS mse1,
-           |    ${mse("s1y", "s2py", "s12p")} AS mse2
+           |    ${oSse()} / sn AS mse0,
+           |    ${oSse(m = Perm1)} / sn AS mse1,
+           |    ${oSse(m = Perm2)} / sn AS mse2
            |  FROM b)
            |SELECT event_type, n, CAST(feat AS BIGINT) AS feature,
-           |  CAST(floor(mse0 * 1.0e6 + 0.5e0) AS BIGINT) AS mse_base_q,
-           |  CAST(floor(CASE WHEN feat = 1 THEN mse1 ELSE mse2 END
-           |    * 1.0e6 + 0.5e0) AS BIGINT) AS mse_perm_q,
-           |  CAST(floor((CASE WHEN feat = 1 THEN mse1 ELSE mse2 END
-           |    - mse0) * 1.0e6 + 0.5e0) AS BIGINT) AS delta_q
+           |  ${oQ("mse0", 6)} AS mse_base_q,
+           |  ${oQ("CASE WHEN feat = 1 THEN mse1 ELSE mse2 END", 6)}
+           |    AS mse_perm_q,
+           |  ${oQ("CASE WHEN feat = 1 THEN mse1 ELSE mse2 END - mse0", 6)}
+           |    AS delta_q
            |FROM sc, (SELECT unnest([1, 2]) AS feat)""".stripMargin
       },
       (s, d) => {
-        def det3(a1: Column, a2: Column, a3: Column,
-                 b1: Column, b2: Column, b3: Column,
-                 c1: Column, c2: Column, c3: Column): Column =
-          a1 * (b2 * c3 - b3 * c2) -
-          a2 * (b1 * c3 - b3 * c1) +
-          a3 * (b1 * c2 - b2 * c1)
-        val f = Tables.events(s, d).select(col("event_type"),
-          col("event_id"),
-          hour(col("ts")).cast("long").as("x1"),
-          dayofweek(col("ts")).cast("long").as("x2"),
-          graft.Parity.lq(col("value")).as("yq"))
+        val f = features(Tables.events(s, d),
+          col("event_type"), col("event_id"))
         val w = Window.partitionBy("event_type").orderBy("event_id")
         val wf = w.rowsBetween(Window.unboundedPreceding,
           Window.unboundedFollowing)
@@ -1160,72 +980,23 @@ object MlPrepQueries {
             last("x1").over(wf)))
           .withColumn("x2p", coalesce(lag("x2", 1).over(w),
             last("x2").over(wf)))
-        val m = p.groupBy("event_type").agg(
-          count(lit(1)).as("n"),
-          sum("x1").as("l1"), sum("x2").as("l2"),
-          sum(col("x1") * col("x1")).as("l11"),
-          sum(col("x1") * col("x2")).as("l12"),
-          sum(col("x2") * col("x2")).as("l22"),
-          sum("yq").as("ly"),
-          sum(col("x1") * col("yq")).as("l1y"),
-          sum(col("x2") * col("yq")).as("l2y"),
-          sum(col("yq") * col("yq")).as("lyy"),
-          sum(col("x1p") * col("yq")).as("l1py"),
-          sum(col("x1p") * col("x2")).as("l1p2"),
-          sum(col("x2p") * col("yq")).as("l2py"),
-          sum(col("x1") * col("x2p")).as("l12p"))
-        val dd = m.select(col("event_type"), col("n"),
-          col("n").cast("double").as("nn"),
-          col("l1").cast("double").as("s1"),
-          col("l2").cast("double").as("s2"),
-          col("l11").cast("double").as("s11"),
-          col("l12").cast("double").as("s12"),
-          col("l22").cast("double").as("s22"),
-          (col("ly").cast("double") / 100.0).as("sy"),
-          (col("l1y").cast("double") / 100.0).as("s1y"),
-          (col("l2y").cast("double") / 100.0).as("s2y"),
-          (col("lyy").cast("double") / 10000.0).as("syy"),
-          (col("l1py").cast("double") / 100.0).as("s1py"),
-          col("l1p2").cast("double").as("s1p2"),
-          (col("l2py").cast("double") / 100.0).as("s2py"),
-          col("l12p").cast("double").as("s12p"))
-        val det = det3(col("nn"), col("s1"), col("s2"),
-          col("s1"), col("s11"), col("s12"),
-          col("s2"), col("s12"), col("s22"))
-        val db0 = det3(col("sy"), col("s1"), col("s2"),
-          col("s1y"), col("s11"), col("s12"),
-          col("s2y"), col("s12"), col("s22"))
-        val db1 = det3(col("nn"), col("sy"), col("s2"),
-          col("s1"), col("s1y"), col("s12"),
-          col("s2"), col("s2y"), col("s22"))
-        val db2 = det3(col("nn"), col("s1"), col("sy"),
-          col("s1"), col("s11"), col("s1y"),
-          col("s2"), col("s12"), col("s2y"))
-        val b = dd.withColumn("b0", db0 / det)
-          .withColumn("b1", db1 / det).withColumn("b2", db2 / det)
-        def mseOf(t1y: String, t2y: String, t12: String): Column =
-          (col("syy") - lit(2.0) * (col("b0") * col("sy")
-              + col("b1") * col(t1y) + col("b2") * col(t2y))
-            + (col("b0") * col("b0") * col("nn")
-              + col("b1") * col("b1") * col("s11")
-              + col("b2") * col("b2") * col("s22")
-              + lit(2.0) * (col("b0") * col("b1") * col("s1")
-                + col("b0") * col("b2") * col("s2")
-                + col("b1") * col("b2") * col(t12)))) / col("nn")
+        val Seq(b0, b1, b2) = ols()
+        val b = momentsBy(p, "event_type")(PermMoments)
+          .select(col("event_type") +: col("n") +: descale(PermMoments): _*)
+          .withColumn("b0", b0).withColumn("b1", b1).withColumn("b2", b2)
         val sc = b.select(col("event_type"), col("n"),
-          mseOf("s1y", "s2y", "s12").as("mse0"),
-          mseOf("s1py", "s2y", "s1p2").as("mse1"),
-          mseOf("s1y", "s2py", "s12p").as("mse2"))
-        def q6(c: Column) = floor(c * lit(1e6) + lit(0.5)).cast("long")
+          (sse() / col("sn")).as("mse0"),
+          (sse(m = Perm1) / col("sn")).as("mse1"),
+          (sse(m = Perm2) / col("sn")).as("mse2"))
+        val perm = when(col("feature") === 1L, col("mse1"))
+          .otherwise(col("mse2"))
         sc.select(col("event_type"), col("n"),
             explode(array(lit(1L), lit(2L))).as("feature"),
             col("mse0"), col("mse1"), col("mse2"))
           .select(col("event_type"), col("n"), col("feature"),
-            q6(col("mse0")).as("mse_base_q"),
-            q6(when(col("feature") === 1L, col("mse1"))
-              .otherwise(col("mse2"))).as("mse_perm_q"),
-            q6(when(col("feature") === 1L, col("mse1"))
-              .otherwise(col("mse2")) - col("mse0")).as("delta_q"))
+            q(col("mse0"), 6).as("mse_base_q"),
+            q(perm, 6).as("mse_perm_q"),
+            q(perm - col("mse0"), 6).as("delta_q"))
       }),
 
     // Leakage-safe K-fold TARGET ENCODING: each row's category is encoded
@@ -1548,8 +1319,6 @@ object MlPrepQueries {
         def ratio(num: Column, den: Column): Column =
           when(den === 0, 0.0).otherwise(num.cast("double") /
             den.cast("double"))
-        def q9(c: Column): Column =
-          floor(c * 1e9 + 0.5).cast("long")
         val p1 = ratio(col("tp"), col("tp") + col("fp"))
         val r1 = ratio(col("tp"), col("tp") + col("fn"))
         val p0 = ratio(col("tn"), col("tn") + col("fn"))
@@ -1564,9 +1333,11 @@ object MlPrepQueries {
             (lit(2.0) * col("np").cast("double") * col("nn").cast("double")))
         agg.select(col("period"), col("n"), col("tp"), col("fp"),
           col("fn"), col("tn"),
-          q9(p1).as("p1_q"), q9(r1).as("r1_q"), q9(f1(p1, r1)).as("f1_1_q"),
-          q9(p0).as("p0_q"), q9(r0).as("r0_q"), q9(f1(p0, r0)).as("f1_0_q"),
-          q9(auc).as("auc_q"))
+          q(p1, 9).as("p1_q"), q(r1, 9).as("r1_q"),
+          q(f1(p1, r1), 9).as("f1_1_q"),
+          q(p0, 9).as("p0_q"), q(r0, 9).as("r0_q"),
+          q(f1(p0, r0), 9).as("f1_0_q"),
+          q(auc, 9).as("auc_q"))
       }),
 
     // CALIBRATION: the reliability diagram next to eval_report's
@@ -1626,24 +1397,23 @@ object MlPrepQueries {
           ((col("event_id") % 20).cast("double") / 20.0 +
             when(col("value") >= 100.0 && col("event_id") % 3 === 0,
               0.35).otherwise(0.0)).as("s"))
-        val q = base.select(col("y"),
-          floor(col("s") * 100.0 + 0.5).cast("long").as("sq"),
-          least(floor(col("s") * 10.0).cast("long"), lit(9L)).as("bin"))
-        val b = q.groupBy("bin").agg(
-          count(lit(1)).as("n"), sum("sq").as("ssq"),
-          sum("y").as("pos"),
-          sum((col("sq") - lit(100L) * col("y")) *
-            (col("sq") - lit(100L) * col("y"))).as("sse"))
+        val b = base.select(col("y"),
+            floor(col("s") * 100.0 + 0.5).cast("long").as("sq"),
+            least(floor(col("s") * 10.0).cast("long"), lit(9L)).as("bin"))
+          .groupBy("bin").agg(
+            count(lit(1)).as("n"), sum("sq").as("ssq"),
+            sum("y").as("pos"),
+            sum((col("sq") - lit(100L) * col("y")) *
+              (col("sq") - lit(100L) * col("y"))).as("sse"))
         val meanPred = col("ssq").cast("double") /
           col("n").cast("double") / 100.0
         val fracPos = col("pos").cast("double") / col("n").cast("double")
         val brier = col("sse").cast("double") /
           col("n").cast("double") / 10000.0
-        def q9(c: org.apache.spark.sql.Column) =
-          floor(c * 1e9 + 0.5).cast("long")
         b.select(col("bin"), col("n"),
-          q9(meanPred).as("mean_pred_q"), q9(fracPos).as("frac_pos_q"),
-          q9(abs(meanPred - fracPos)).as("gap_q"), q9(brier).as("brier_q"))
+          q(meanPred, 9).as("mean_pred_q"), q(fracPos, 9).as("frac_pos_q"),
+          q(abs(meanPred - fracPos), 9).as("gap_q"),
+          q(brier, 9).as("brier_q"))
       }),
 
     // PSI feature-drift audit: Population Stability Index of `value`
@@ -1773,110 +1543,24 @@ object MlPrepQueries {
     // Parity: features are small exact ints (hour 0-23, dow 1-7), the
     // target rides the lq hundredths grid, so every moment sum is an
     // exact long; the 3×3 determinants are ONE identical IEEE tree on
-    // both engines (det3 helper mirrored term for term), and the
+    // both engines (LinearFit.cramer3 and its oracle twin), and the
     // coefficients are floor-quantized at 1e9.
     QueryDef(
       "mlprep_ols_normal",
-      Some {
-        def oDet3(a1: String, a2: String, a3: String,
-                  b1: String, b2: String, b3: String,
-                  c1: String, c2: String, c3: String): String =
-          s"($a1 * ($b2 * $c3 - $b3 * $c2) - " +
-          s"$a2 * ($b1 * $c3 - $b3 * $c1) + " +
-          s"$a3 * ($b1 * $c2 - $b2 * $c1))"
-        val det = oDet3("nn", "s1", "s2", "s1", "s11", "s12",
-          "s2", "s12", "s22")
-        val da = oDet3("sy", "s1", "s2", "s1y", "s11", "s12",
-          "s2y", "s12", "s22")
-        val db1 = oDet3("nn", "sy", "s2", "s1", "s1y", "s12",
-          "s2", "s2y", "s22")
-        val db2 = oDet3("nn", "s1", "sy", "s1", "s11", "s1y",
-          "s2", "s12", "s2y")
-        s"""WITH f AS (
-           |  SELECT event_type,
-           |    CAST(hour(ts) AS BIGINT) AS x1,
-           |    CAST(extract(dow FROM ts) + 1 AS BIGINT) AS x2,
-           |    ${graft.Parity.oLq("value")} AS yq
-           |  FROM events),
-           |m AS (
-           |  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-           |    CAST(sum(x1) AS BIGINT) AS l1,
-           |    CAST(sum(x2) AS BIGINT) AS l2,
-           |    CAST(sum(x1 * x1) AS BIGINT) AS l11,
-           |    CAST(sum(x1 * x2) AS BIGINT) AS l12,
-           |    CAST(sum(x2 * x2) AS BIGINT) AS l22,
-           |    CAST(sum(yq) AS BIGINT) AS lyq,
-           |    CAST(sum(x1 * yq) AS BIGINT) AS l1yq,
-           |    CAST(sum(x2 * yq) AS BIGINT) AS l2yq
-           |  FROM f GROUP BY 1),
-           |d AS (
-           |  SELECT event_type, n,
-           |    CAST(n AS DOUBLE) AS nn,
-           |    CAST(l1 AS DOUBLE) AS s1, CAST(l2 AS DOUBLE) AS s2,
-           |    CAST(l11 AS DOUBLE) AS s11, CAST(l12 AS DOUBLE) AS s12,
-           |    CAST(l22 AS DOUBLE) AS s22,
-           |    CAST(lyq AS DOUBLE) / 100.0 AS sy,
-           |    CAST(l1yq AS DOUBLE) / 100.0 AS s1y,
-           |    CAST(l2yq AS DOUBLE) / 100.0 AS s2y
-           |  FROM m)
-           |SELECT event_type, n,
-           |  CAST(floor($da / $det * 1.0e9 + 0.5e0) AS BIGINT)
-           |    AS intercept_q,
-           |  CAST(floor($db1 / $det * 1.0e9 + 0.5e0) AS BIGINT)
-           |    AS b_hour_q,
-           |  CAST(floor($db2 / $det * 1.0e9 + 0.5e0) AS BIGINT)
-           |    AS b_dow_q
-           |FROM d""".stripMargin
-      },
-      (s, d) => {
-        def det3(a1: Column, a2: Column, a3: Column,
-                 b1: Column, b2: Column, b3: Column,
-                 c1: Column, c2: Column, c3: Column): Column =
-          a1 * (b2 * c3 - b3 * c2) -
-          a2 * (b1 * c3 - b3 * c1) +
-          a3 * (b1 * c2 - b2 * c1)
-        val yq = graft.Parity.lq(col("value"))
-        val f = Tables.events(s, d).select(col("event_type"),
-          hour(col("ts")).cast("long").as("x1"),
-          dayofweek(col("ts")).cast("long").as("x2"),
-          yq.as("yq"))
-        val m = f.groupBy("event_type").agg(
-          count(lit(1)).as("n"),
-          sum("x1").as("l1"), sum("x2").as("l2"),
-          sum(col("x1") * col("x1")).as("l11"),
-          sum(col("x1") * col("x2")).as("l12"),
-          sum(col("x2") * col("x2")).as("l22"),
-          sum("yq").as("lyq"),
-          sum(col("x1") * col("yq")).as("l1yq"),
-          sum(col("x2") * col("yq")).as("l2yq"))
-        val dd = m.select(col("event_type"), col("n"),
-          col("n").cast("double").as("nn"),
-          col("l1").cast("double").as("s1"),
-          col("l2").cast("double").as("s2"),
-          col("l11").cast("double").as("s11"),
-          col("l12").cast("double").as("s12"),
-          col("l22").cast("double").as("s22"),
-          (col("lyq").cast("double") / 100.0).as("sy"),
-          (col("l1yq").cast("double") / 100.0).as("s1y"),
-          (col("l2yq").cast("double") / 100.0).as("s2y"))
-        val det = det3(col("nn"), col("s1"), col("s2"),
-          col("s1"), col("s11"), col("s12"),
-          col("s2"), col("s12"), col("s22"))
-        val da = det3(col("sy"), col("s1"), col("s2"),
-          col("s1y"), col("s11"), col("s12"),
-          col("s2y"), col("s12"), col("s22"))
-        val db1 = det3(col("nn"), col("sy"), col("s2"),
-          col("s1"), col("s1y"), col("s12"),
-          col("s2"), col("s2y"), col("s22"))
-        val db2 = det3(col("nn"), col("s1"), col("sy"),
-          col("s1"), col("s11"), col("s1y"),
-          col("s2"), col("s12"), col("s2y"))
-        def q9(c: Column) = floor(c * lit(1e9) + lit(0.5)).cast("long")
-        dd.select(col("event_type"), col("n"),
-          q9(da / det).as("intercept_q"),
-          q9(db1 / det).as("b_hour_q"),
-          q9(db2 / det).as("b_dow_q"))
-      }),
+      Some(s"""WITH f AS (
+              |  ${oFeatures("event_type")}),
+              |${oFitOls("f", 1)}
+              |SELECT event_type, n_train AS n,
+              |  ${oQ("b0", 9)} AS intercept_q,
+              |  ${oQ("b1", 9)} AS b_hour_q,
+              |  ${oQ("b2", 9)} AS b_dow_q
+              |FROM bb1""".stripMargin),
+      (s, d) =>
+        fitOls(Tables.events(s, d))
+          .select(col("event_type"), col("n_train").as("n"),
+            q(col("b0"), 9).as("intercept_q"),
+            q(col("b1"), 9).as("b_hour_q"),
+            q(col("b2"), 9).as("b_dow_q"))),
 
     // RIDGE REGRESSION from the same sufficient statistics — the
     // regularized twin of mlprep_ols_normal: (XᵀX + λI)β = Xᵀy with the
@@ -1892,56 +1576,19 @@ object MlPrepQueries {
     QueryDef(
       "mlprep_ridge",
       Some {
-        def oDet3(a1: String, a2: String, a3: String,
-                  b1: String, b2: String, b3: String,
-                  c1: String, c2: String, c3: String): String =
-          s"($a1 * ($b2 * $c3 - $b3 * $c2) - " +
-          s"$a2 * ($b1 * $c3 - $b3 * $c1) + " +
-          s"$a3 * ($b1 * $c2 - $b2 * $c1))"
         def coefs(lam: String, suffix: String): String = {
-          val s11 = s"(s11 + $lam)"
-          val s22 = s"(s22 + $lam)"
-          val det = oDet3("nn", "s1", "s2", "s1", s11, "s12",
-            "s2", "s12", s22)
-          val da = oDet3("sy", "s1", "s2", "s1y", s11, "s12",
-            "s2y", "s12", s22)
-          val db1 = oDet3("nn", "sy", "s2", "s1", "s1y", "s12",
-            "s2", "s2y", s22)
-          val db2 = oDet3("nn", "s1", "sy", "s1", s11, "s1y",
-            "s2", "s12", "s2y")
-          s"""CAST(floor($da / $det * 1.0e9 + 0.5e0) AS BIGINT)
-             |    AS intercept_q$suffix,
-             |  CAST(floor($db1 / $det * 1.0e9 + 0.5e0) AS BIGINT)
-             |    AS b_hour_q$suffix,
-             |  CAST(floor($db2 / $det * 1.0e9 + 0.5e0) AS BIGINT)
-             |    AS b_dow_q$suffix""".stripMargin
+          val Seq(b0, b1, b2) = oOls(Some(lam))
+          s"""${oQ(b0, 9)} AS intercept_q$suffix,
+             |  ${oQ(b1, 9)} AS b_hour_q$suffix,
+             |  ${oQ(b2, 9)} AS b_dow_q$suffix""".stripMargin
         }
         s"""WITH f AS (
-           |  SELECT event_type,
-           |    CAST(hour(ts) AS BIGINT) AS x1,
-           |    CAST(extract(dow FROM ts) + 1 AS BIGINT) AS x2,
-           |    ${graft.Parity.oLq("value")} AS yq
-           |  FROM events),
+           |  ${oFeatures("event_type")}),
            |m AS (
-           |  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-           |    CAST(sum(x1) AS BIGINT) AS l1,
-           |    CAST(sum(x2) AS BIGINT) AS l2,
-           |    CAST(sum(x1 * x1) AS BIGINT) AS l11,
-           |    CAST(sum(x1 * x2) AS BIGINT) AS l12,
-           |    CAST(sum(x2 * x2) AS BIGINT) AS l22,
-           |    CAST(sum(yq) AS BIGINT) AS lyq,
-           |    CAST(sum(x1 * yq) AS BIGINT) AS l1yq,
-           |    CAST(sum(x2 * yq) AS BIGINT) AS l2yq
-           |  FROM f GROUP BY 1),
+           |  ${oMomentsBy("f", "event_type")(Ols)}),
            |d AS (
            |  SELECT event_type, n,
-           |    CAST(n AS DOUBLE) AS nn,
-           |    CAST(l1 AS DOUBLE) AS s1, CAST(l2 AS DOUBLE) AS s2,
-           |    CAST(l11 AS DOUBLE) AS s11, CAST(l12 AS DOUBLE) AS s12,
-           |    CAST(l22 AS DOUBLE) AS s22,
-           |    CAST(lyq AS DOUBLE) / 100.0 AS sy,
-           |    CAST(l1yq AS DOUBLE) / 100.0 AS s1y,
-           |    CAST(l2yq AS DOUBLE) / 100.0 AS s2y
+           |    ${oDescale(Ols)}
            |  FROM m)
            |SELECT event_type, n,
            |  ${coefs("0.0", "_ols")},
@@ -1950,59 +1597,18 @@ object MlPrepQueries {
            |FROM d""".stripMargin
       },
       (s, d) => {
-        def det3(a1: Column, a2: Column, a3: Column,
-                 b1: Column, b2: Column, b3: Column,
-                 c1: Column, c2: Column, c3: Column): Column =
-          a1 * (b2 * c3 - b3 * c2) -
-          a2 * (b1 * c3 - b3 * c1) +
-          a3 * (b1 * c2 - b2 * c1)
-        val yq = graft.Parity.lq(col("value"))
-        val f = Tables.events(s, d).select(col("event_type"),
-          hour(col("ts")).cast("long").as("x1"),
-          dayofweek(col("ts")).cast("long").as("x2"),
-          yq.as("yq"))
-        val m = f.groupBy("event_type").agg(
-          count(lit(1)).as("n"),
-          sum("x1").as("l1"), sum("x2").as("l2"),
-          sum(col("x1") * col("x1")).as("l11"),
-          sum(col("x1") * col("x2")).as("l12"),
-          sum(col("x2") * col("x2")).as("l22"),
-          sum("yq").as("lyq"),
-          sum(col("x1") * col("yq")).as("l1yq"),
-          sum(col("x2") * col("yq")).as("l2yq"))
-        val dd = m.select(col("event_type"), col("n"),
-          col("n").cast("double").as("nn"),
-          col("l1").cast("double").as("s1"),
-          col("l2").cast("double").as("s2"),
-          col("l11").cast("double").as("s11"),
-          col("l12").cast("double").as("s12"),
-          col("l22").cast("double").as("s22"),
-          (col("lyq").cast("double") / 100.0).as("sy"),
-          (col("l1yq").cast("double") / 100.0).as("s1y"),
-          (col("l2yq").cast("double") / 100.0).as("s2y"))
-        def q9(c: Column) = floor(c * lit(1e9) + lit(0.5)).cast("long")
         def coefs(lam: Double, suffix: String): Seq[Column] = {
-          val s11 = col("s11") + lit(lam)
-          val s22 = col("s22") + lit(lam)
-          val det = det3(col("nn"), col("s1"), col("s2"),
-            col("s1"), s11, col("s12"),
-            col("s2"), col("s12"), s22)
-          val da = det3(col("sy"), col("s1"), col("s2"),
-            col("s1y"), s11, col("s12"),
-            col("s2y"), col("s12"), s22)
-          val db1 = det3(col("nn"), col("sy"), col("s2"),
-            col("s1"), col("s1y"), col("s12"),
-            col("s2"), col("s2y"), s22)
-          val db2 = det3(col("nn"), col("s1"), col("sy"),
-            col("s1"), s11, col("s1y"),
-            col("s2"), col("s12"), col("s2y"))
-          Seq(q9(da / det).as(s"intercept_q$suffix"),
-            q9(db1 / det).as(s"b_hour_q$suffix"),
-            q9(db2 / det).as(s"b_dow_q$suffix"))
+          val Seq(b0, b1, b2) = ols(Some(lit(lam)))
+          Seq(q(b0, 9).as(s"intercept_q$suffix"),
+            q(b1, 9).as(s"b_hour_q$suffix"),
+            q(b2, 9).as(s"b_dow_q$suffix"))
         }
-        dd.select(Seq(col("event_type"), col("n")) ++
-          coefs(0.0, "_ols") ++ coefs(1000.0, "_r3") ++
-          coefs(100000.0, "_r5"): _*)
+        momentsBy(features(Tables.events(s, d), col("event_type")),
+            "event_type")(Ols)
+          .select(col("event_type") +: col("n") +: descale(Ols): _*)
+          .select(Seq(col("event_type"), col("n")) ++
+            coefs(0.0, "_ols") ++ coefs(1000.0, "_r3") ++
+            coefs(100000.0, "_r5"): _*)
       }),
 
     // K-FOLD CROSS-VALIDATION ASSIGNMENT — the random-split counterpart
@@ -2065,7 +1671,7 @@ object MlPrepQueries {
     // current coefficients BROADCAST back (a |groups|-row frame — the
     // k-means-fold pattern): per step one grid-sized agg builds the
     // gradient XᵀWz and Hessian XᵀWX moments and a 3×3 Cramer solve
-    // (mlprep_ols_normal's det3) updates β. 4 iterations = 4 tiny-frame
+    // (LinearFit.cramer3) updates β. 4 iterations = 4 tiny-frame
     // stages; the corpus is scanned exactly once, at any data size.
     //
     // Parity doctrine (why this is hash-exact cross-engine with a
@@ -2086,20 +1692,8 @@ object MlPrepQueries {
     QueryDef(
       "mlprep_logit",
       Some {
-        def oDet3(a1: String, a2: String, a3: String,
-                  b1: String, b2: String, b3: String,
-                  c1: String, c2: String, c3: String): String =
-          s"($a1 * ($b2 * $c3 - $b3 * $c2) - " +
-          s"$a2 * ($b1 * $c3 - $b3 * $c1) + " +
-          s"$a3 * ($b1 * $c2 - $b2 * $c1))"
-        val det = oDet3("h00", "h01", "h02", "h01", "h11", "h12",
-          "h02", "h12", "h22")
-        val d0 = oDet3("g0", "h01", "h02", "g1", "h11", "h12",
-          "g2", "h12", "h22")
-        val d1 = oDet3("h00", "g0", "h02", "h01", "g1", "h12",
-          "h02", "g2", "h22")
-        val d2 = oDet3("h00", "h01", "g0", "h01", "h11", "g1",
-          "h02", "h12", "g2")
+        val Seq(d0, d1, d2) = oCramer3("h00", "h01", "h02", "h11", "h12",
+          "h22", "g0", "g1", "g2")
         def iter(k: Int): String = {
           val sq = (1 to 16).map(i =>
             s"e${k}_$i AS (SELECT * REPLACE (e * e AS e) FROM e${k}_${i - 1})")
@@ -2145,19 +1739,13 @@ object MlPrepQueries {
              |  FROM s$k),
              |b${k + 1} AS (
              |  SELECT event_type,
-             |    c0 + $d0 / $det AS c0,
-             |    c1 + $d1 / $det AS c1,
-             |    c2 + $d2 / $det AS c2
+             |    c0 + $d0 AS c0,
+             |    c1 + $d1 AS c1,
+             |    c2 + $d2 AS c2
              |  FROM d$k)""".stripMargin
         }
         s"""WITH grid AS (
-           |  SELECT event_type,
-           |    CAST(hour(ts) AS BIGINT) AS x1,
-           |    CAST(extract(dow FROM ts) + 1 AS BIGINT) AS x2,
-           |    CAST(count(*) AS BIGINT) AS n,
-           |    CAST(SUM(CASE WHEN value >= 100.0e0 THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS yc
-           |  FROM events GROUP BY 1, 2, 3),
+           |  $oCellGrid),
            |b0 AS (
            |  SELECT DISTINCT event_type, 0.0e0 AS c0, 0.0e0 AS c1,
            |    0.0e0 AS c2
@@ -2190,9 +1778,9 @@ object MlPrepQueries {
            |    CAST(SUM(pos * (2 * cumneg + neg)) AS BIGINT) AS num2
            |  FROM r GROUP BY 1)
            |SELECT a.event_type, a.n,
-           |  CAST(floor(b.c0 * 1.0e9 + 0.5e0) AS BIGINT) AS b0_q,
-           |  CAST(floor(b.c1 * 1.0e9 + 0.5e0) AS BIGINT) AS b1_q,
-           |  CAST(floor(b.c2 * 1.0e9 + 0.5e0) AS BIGINT) AS b2_q,
+           |  ${oQ("b.c0", 9)} AS b0_q,
+           |  ${oQ("b.c1", 9)} AS b1_q,
+           |  ${oQ("b.c2", 9)} AS b2_q,
            |  CAST(num2 AS DOUBLE) / CAST(NULLIF(2 * np * nn, 0) AS DOUBLE)
            |    AS auc_train
            |FROM a JOIN b4 b ON a.event_type = b.event_type""".stripMargin
@@ -2204,12 +1792,7 @@ object MlPrepQueries {
         // original per-step moment/Cramer projection formulation (the
         // oracle still runs it as unrolled CTEs; unchanged hashes prove
         // the identity), two exec stages total
-        val grid = Tables.events(s, d).select(col("event_type"),
-            hour(col("ts")).cast("long").as("x1"),
-            dayofweek(col("ts")).cast("long").as("x2"),
-            when(col("value") >= 100.0, 1L).otherwise(0L).as("y"))
-          .groupBy("event_type", "x1", "x2")
-          .agg(count(lit(1)).as("n"), sum("y").as("yc"))
+        val grid = cellGrid(Tables.events(s, d))
         grid.groupBy("event_type")
           .agg(expr("logit_fit4(x1, x2, n, yc)").as("r"))
           .select(col("event_type"), col("r.n").as("n"),
@@ -2301,13 +1884,7 @@ object MlPrepQueries {
              |    ON a.event_type = b.event_type AND a.node = b.node)"""
             .stripMargin
         s"""WITH grid AS (
-           |  SELECT event_type,
-           |    CAST(hour(ts) AS BIGINT) AS x1,
-           |    CAST(extract(dow FROM ts) + 1 AS BIGINT) AS x2,
-           |    CAST(count(*) AS BIGINT) AS n,
-           |    CAST(SUM(CASE WHEN value >= 100.0e0 THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS yc
-           |  FROM events GROUP BY 1, 2, 3),
+           |  $oCellGrid),
            |asg0 AS (SELECT *, CAST(0 AS BIGINT) AS node FROM grid),
            |${level(0)},
            |${level(1)},
@@ -2340,12 +1917,7 @@ object MlPrepQueries {
         // formulation (which the oracle still runs as unrolled CTEs;
         // unchanged hashes prove the identity), but two exec stages
         // instead of ~a dozen tiny window/join stages per invocation
-        val grid = Tables.events(s, d).select(col("event_type"),
-            hour(col("ts")).cast("long").as("x1"),
-            dayofweek(col("ts")).cast("long").as("x2"),
-            when(col("value") >= 100.0, 1L).otherwise(0L).as("y"))
-          .groupBy("event_type", "x1", "x2")
-          .agg(count(lit(1)).as("n"), sum("y").as("yc"))
+        val grid = cellGrid(Tables.events(s, d))
         grid.groupBy("event_type")
           .agg(expr("tree_fit3(x1, x2, n, yc)").as("t"))
           .select(col("event_type"), explode(col("t")).as("r"))
@@ -2381,91 +1953,39 @@ object MlPrepQueries {
     QueryDef(
       "mlprep_sweep",
       Some {
-        def oDet3(a1: String, a2: String, a3: String,
-                  b1: String, b2: String, b3: String,
-                  c1: String, c2: String, c3: String): String =
-          s"($a1 * ($b2 * $c3 - $b3 * $c2) - " +
-          s"$a2 * ($b1 * $c3 - $b3 * $c1) + " +
-          s"$a3 * ($b1 * $c2 - $b2 * $c1))"
-        val s11l = "(s11 + lam)"
-        val s22l = "(s22 + lam)"
-        val det = oDet3("nn", "s1", "s2", "s1", s11l, "s12",
-          "s2", "s12", s22l)
-        val db0 = oDet3("sy", "s1", "s2", "s1y", s11l, "s12",
-          "s2y", "s12", s22l)
-        val db1 = oDet3("nn", "sy", "s2", "s1", "s1y", "s12",
-          "s2", "s2y", s22l)
-        val db2 = oDet3("nn", "s1", "sy", "s1", s11l, "s1y",
-          "s2", "s12", "s2y")
+        val Seq(b0, b1, b2) = oOls(Some("lam"))
         val h = graft.operators.TextOps
           .oHash32("'cv:' || CAST(event_id AS VARCHAR)")
         s"""WITH f AS (
-           |  SELECT event_type, $h % 5 AS fold,
-           |    CAST(hour(ts) AS BIGINT) AS x1,
-           |    CAST(extract(dow FROM ts) + 1 AS BIGINT) AS x2,
-           |    ${graft.Parity.oLq("value")} AS yq
-           |  FROM events),
+           |  ${oFeatures("event_type", s"$h % 5 AS fold")}),
            |m AS (
-           |  SELECT event_type, fold, CAST(count(*) AS BIGINT) AS n,
-           |    CAST(sum(x1) AS BIGINT) AS l1,
-           |    CAST(sum(x2) AS BIGINT) AS l2,
-           |    CAST(sum(x1 * x1) AS BIGINT) AS l11,
-           |    CAST(sum(x1 * x2) AS BIGINT) AS l12,
-           |    CAST(sum(x2 * x2) AS BIGINT) AS l22,
-           |    CAST(sum(yq) AS BIGINT) AS ly,
-           |    CAST(sum(x1 * yq) AS BIGINT) AS l1y,
-           |    CAST(sum(x2 * yq) AS BIGINT) AS l2y,
-           |    CAST(sum(yq * yq) AS BIGINT) AS lyy
-           |  FROM f GROUP BY 1, 2),
+           |  ${oMomentsBy("f", "event_type", "fold")(OlsYy)}),
            |t AS (
-           |  SELECT event_type, CAST(SUM(n) AS BIGINT) AS tn,
-           |    CAST(SUM(l1) AS BIGINT) AS t1, CAST(SUM(l2) AS BIGINT) AS t2,
-           |    CAST(SUM(l11) AS BIGINT) AS t11,
-           |    CAST(SUM(l12) AS BIGINT) AS t12,
-           |    CAST(SUM(l22) AS BIGINT) AS t22,
-           |    CAST(SUM(ly) AS BIGINT) AS ty,
-           |    CAST(SUM(l1y) AS BIGINT) AS t1y,
-           |    CAST(SUM(l2y) AS BIGINT) AS t2y
+           |  SELECT event_type,
+           |    ${Ols.map { case (k, _) =>
+                  s"CAST(SUM($k) AS BIGINT) AS ${named("t")(k)}" }
+                  .mkString(",\n    ")}
            |  FROM m GROUP BY 1),
            |lamgrid AS (SELECT * FROM (VALUES (0.0e0), (1.0e3), (1.0e5),
            |  (1.0e7)) l(lam)),
            |tr AS (
            |  SELECT m.event_type, m.fold, l.lam,
            |    t.tn - m.n AS n_train, m.n AS n_test,
-           |    CAST(t.tn - m.n AS DOUBLE) AS nn,
-           |    CAST(t.t1 - m.l1 AS DOUBLE) AS s1,
-           |    CAST(t.t2 - m.l2 AS DOUBLE) AS s2,
-           |    CAST(t.t11 - m.l11 AS DOUBLE) AS s11,
-           |    CAST(t.t12 - m.l12 AS DOUBLE) AS s12,
-           |    CAST(t.t22 - m.l22 AS DOUBLE) AS s22,
-           |    CAST(t.ty - m.ly AS DOUBLE) AS sy,
-           |    CAST(t.t1y - m.l1y AS DOUBLE) AS s1y,
-           |    CAST(t.t2y - m.l2y AS DOUBLE) AS s2y,
-           |    CAST(m.n AS DOUBLE) AS qn,
-           |    CAST(m.l1 AS DOUBLE) AS q1, CAST(m.l2 AS DOUBLE) AS q2,
-           |    CAST(m.l11 AS DOUBLE) AS q11,
-           |    CAST(m.l12 AS DOUBLE) AS q12,
-           |    CAST(m.l22 AS DOUBLE) AS q22,
-           |    CAST(m.ly AS DOUBLE) AS qy,
-           |    CAST(m.l1y AS DOUBLE) AS q1y,
-           |    CAST(m.l2y AS DOUBLE) AS q2y,
-           |    CAST(m.lyy AS DOUBLE) AS qyy
+           |    ${oDescale(Ols, cents = false,
+                  from = k => s"t.${named("t")(k)} - m.$k")},
+           |    ${oDescale(OlsYy, "q", cents = false, from = "m." + _)}
            |  FROM m JOIN t ON m.event_type = t.event_type
            |  CROSS JOIN lamgrid l),
            |sol AS (
-           |  SELECT *, $db0 / $det AS b0, $db1 / $det AS b1,
-           |    $db2 / $det AS b2
+           |  SELECT *, $b0 AS b0, $b1 AS b1, $b2 AS b2
            |  FROM tr),
            |ev AS (
            |  SELECT event_type, fold, lam, n_train, n_test,
-           |    CAST(floor(b0 * 1.0e7 + 0.5e0) AS BIGINT) AS b0_q,
-           |    CAST(floor(b1 * 1.0e7 + 0.5e0) AS BIGINT) AS b1_q,
-           |    CAST(floor(b2 * 1.0e7 + 0.5e0) AS BIGINT) AS b2_q,
-           |    CAST(floor((qyy - 2.0e0 * (b0 * qy + b1 * q1y + b2 * q2y)
-           |      + (b0 * b0 * qn + b1 * b1 * q11 + b2 * b2 * q22
-           |        + 2.0e0 * (b0 * b1 * q1 + b0 * b2 * q2 + b1 * b2 * q12)))
-           |      / CAST(NULLIF(n_test, 0) AS DOUBLE) + 0.5e0) AS BIGINT)
-           |      AS mse_q
+           |    ${oQ("b0", 7)} AS b0_q,
+           |    ${oQ("b1", 7)} AS b1_q,
+           |    ${oQ("b2", 7)} AS b2_q,
+           |    ${oQ(oSse(m = "q" + _) +
+                  " / CAST(NULLIF(n_test, 0) AS DOUBLE)", 0)} AS mse_q
            |  FROM sol),
            |win AS (
            |  SELECT event_type, lam, CAST(SUM(mse_q) AS BIGINT) AS cv_q
@@ -2482,90 +2002,36 @@ object MlPrepQueries {
       },
       (s, d) => {
         import graft.operators.TextOps.hash32
-        def det3(a1: Column, a2: Column, a3: Column,
-                 b1: Column, b2: Column, b3: Column,
-                 c1: Column, c2: Column, c3: Column): Column =
-          a1 * (b2 * c3 - b3 * c2) -
-          a2 * (b1 * c3 - b3 * c1) +
-          a3 * (b1 * c2 - b2 * c1)
-        val f = Tables.events(s, d).select(col("event_type"),
+        val f = features(Tables.events(s, d), col("event_type"),
           (hash32(concat(lit("cv:"), col("event_id").cast("string")))
-            % 5).as("fold"),
-          hour(col("ts")).cast("long").as("x1"),
-          dayofweek(col("ts")).cast("long").as("x2"),
-          graft.Parity.lq(col("value")).as("yq"))
-        val m = f.groupBy("event_type", "fold").agg(
-          count(lit(1)).as("n"),
-          sum("x1").as("l1"), sum("x2").as("l2"),
-          sum(col("x1") * col("x1")).as("l11"),
-          sum(col("x1") * col("x2")).as("l12"),
-          sum(col("x2") * col("x2")).as("l22"),
-          sum("yq").as("ly"),
-          sum(col("x1") * col("yq")).as("l1y"),
-          sum(col("x2") * col("yq")).as("l2y"),
-          sum(col("yq") * col("yq")).as("lyy"))
+            % 5).as("fold"))
+        val m = momentsBy(f, "event_type", "fold")(OlsYy)
           .persist() // the |groups|·|folds|-row moment table is the ONLY
                      // thing derived from the corpus — total, train-side,
                      // and winner branches all re-read it, so without the
                      // cache each branch would re-scan the data
-        val t = m.groupBy("event_type").agg(
-          sum("n").as("tn"), sum("l1").as("t1"), sum("l2").as("t2"),
-          sum("l11").as("t11"), sum("l12").as("t12"), sum("l22").as("t22"),
-          sum("ly").as("ty"), sum("l1y").as("t1y"), sum("l2y").as("t2y"))
+        val totals = Ols.map { case (k, _) => sum(k).as(named("t")(k)) }
+        val t = m.groupBy("event_type").agg(totals.head, totals.tail: _*)
         import s.implicits._
         val lamgrid = Seq(0.0, 1.0e3, 1.0e5, 1.0e7).toDF("lam")
         // stats-sized cross join: |groups|·|folds| moment rows × |λ| —
         // never the data
         val tr = m.join(broadcast(t), "event_type")
           .crossJoin(broadcast(lamgrid))
+          .select(Seq(col("event_type"), col("fold"), col("lam"),
+            (col("tn") - col("n")).as("n_train"), col("n").as("n_test")) ++
+            descale(Ols, cents = false,
+              from = k => col(named("t")(k)) - col(k)) ++
+            descale(OlsYy, "q", cents = false): _*)
+        val Seq(b0, b1, b2) = ols(Some(col("lam")))
+        val ev = tr.withColumn("b0", b0)
+          .withColumn("b1", b1).withColumn("b2", b2)
           .select(col("event_type"), col("fold"), col("lam"),
-            (col("tn") - col("n")).as("n_train"), col("n").as("n_test"),
-            (col("tn") - col("n")).cast("double").as("nn"),
-            (col("t1") - col("l1")).cast("double").as("s1"),
-            (col("t2") - col("l2")).cast("double").as("s2"),
-            (col("t11") - col("l11")).cast("double").as("s11"),
-            (col("t12") - col("l12")).cast("double").as("s12"),
-            (col("t22") - col("l22")).cast("double").as("s22"),
-            (col("ty") - col("ly")).cast("double").as("sy"),
-            (col("t1y") - col("l1y")).cast("double").as("s1y"),
-            (col("t2y") - col("l2y")).cast("double").as("s2y"),
-            col("n").cast("double").as("qn"),
-            col("l1").cast("double").as("q1"),
-            col("l2").cast("double").as("q2"),
-            col("l11").cast("double").as("q11"),
-            col("l12").cast("double").as("q12"),
-            col("l22").cast("double").as("q22"),
-            col("ly").cast("double").as("qy"),
-            col("l1y").cast("double").as("q1y"),
-            col("l2y").cast("double").as("q2y"),
-            col("lyy").cast("double").as("qyy"))
-        val s11l = col("s11") + col("lam")
-        val s22l = col("s22") + col("lam")
-        val det = det3(col("nn"), col("s1"), col("s2"),
-          col("s1"), s11l, col("s12"), col("s2"), col("s12"), s22l)
-        val db0 = det3(col("sy"), col("s1"), col("s2"),
-          col("s1y"), s11l, col("s12"), col("s2y"), col("s12"), s22l)
-        val db1 = det3(col("nn"), col("sy"), col("s2"),
-          col("s1"), col("s1y"), col("s12"), col("s2"), col("s2y"), s22l)
-        val db2 = det3(col("nn"), col("s1"), col("sy"),
-          col("s1"), s11l, col("s1y"), col("s2"), col("s12"), col("s2y"))
-        val sol = tr.withColumn("b0", db0 / det)
-          .withColumn("b1", db1 / det).withColumn("b2", db2 / det)
-        def q7(c: Column) = floor(c * lit(1e7) + lit(0.5)).cast("long")
-        val sse = col("qyy") - lit(2.0) * (col("b0") * col("qy")
-            + col("b1") * col("q1y") + col("b2") * col("q2y")) +
-          (col("b0") * col("b0") * col("qn")
-            + col("b1") * col("b1") * col("q11")
-            + col("b2") * col("b2") * col("q22")
-            + lit(2.0) * (col("b0") * col("b1") * col("q1")
-              + col("b0") * col("b2") * col("q2")
-              + col("b1") * col("b2") * col("q12")))
-        val ev = sol.select(col("event_type"), col("fold"), col("lam"),
-          col("n_train"), col("n_test"),
-          q7(col("b0")).as("b0_q"), q7(col("b1")).as("b1_q"),
-          q7(col("b2")).as("b2_q"),
-          floor(sse / nullif(col("n_test"), lit(0L)).cast("double")
-            + lit(0.5)).cast("long").as("mse_q"))
+            col("n_train"), col("n_test"),
+            q(col("b0"), 7).as("b0_q"), q(col("b1"), 7).as("b1_q"),
+            q(col("b2"), 7).as("b2_q"),
+            q(sse(m = "q" + _) /
+              nullif(col("n_test"), lit(0L)).cast("double"), 0).as("mse_q"))
         val win = ev.groupBy("event_type", "lam")
           .agg(sum("mse_q").as("cv_q"))
         val rk = win.withColumn("rn", row_number().over(
@@ -2604,45 +2070,13 @@ object MlPrepQueries {
     QueryDef(
       "mlprep_walk_forward",
       Some {
-        def oDet3(a1: String, a2: String, a3: String,
-                  b1: String, b2: String, b3: String,
-                  c1: String, c2: String, c3: String): String =
-          s"($a1 * ($b2 * $c3 - $b3 * $c2) - " +
-          s"$a2 * ($b1 * $c3 - $b3 * $c1) + " +
-          s"$a3 * ($b1 * $c2 - $b2 * $c1))"
-        val det = oDet3("nn", "s1", "s2", "s1", "s11", "s12",
-          "s2", "s12", "s22")
-        val db0 = oDet3("sy", "s1", "s2", "s1y", "s11", "s12",
-          "s2y", "s12", "s22")
-        val db1 = oDet3("nn", "sy", "s2", "s1", "s1y", "s12",
-          "s2", "s2y", "s22")
-        val db2 = oDet3("nn", "s1", "sy", "s1", "s11", "s1y",
-          "s2", "s12", "s2y")
-        def mse(p: String): String =
-          s"""(${p}yy - 2.0e0 * (b0 * ${p}y + b1 * ${p}1y + b2 * ${p}2y)
-             |    + (b0 * b0 * ${p}n + b1 * b1 * ${p}11
-             |      + b2 * b2 * ${p}22
-             |      + 2.0e0 * (b0 * b1 * ${p}1 + b0 * b2 * ${p}2
-             |        + b1 * b2 * ${p}12)))
-             |    / CAST(NULLIF(${p}cnt, 0) AS DOUBLE)""".stripMargin
+        val Seq(b0, b1, b2) = oOls()
+        def mse(p: String): String = oQ(oSse(m = p + _) +
+          s" / CAST(NULLIF(${p}n, 0) AS DOUBLE)", 0)
         s"""WITH f AS (
-           |  SELECT event_type, CAST(ts AS DATE) AS day,
-           |    CAST(hour(ts) AS BIGINT) AS x1,
-           |    CAST(extract(dow FROM ts) + 1 AS BIGINT) AS x2,
-           |    ${graft.Parity.oLq("value")} AS yq
-           |  FROM events),
+           |  ${oFeatures("event_type", "CAST(ts AS DATE) AS day")}),
            |md AS (
-           |  SELECT event_type, day, CAST(count(*) AS BIGINT) AS n,
-           |    CAST(sum(x1) AS BIGINT) AS l1,
-           |    CAST(sum(x2) AS BIGINT) AS l2,
-           |    CAST(sum(x1 * x1) AS BIGINT) AS l11,
-           |    CAST(sum(x1 * x2) AS BIGINT) AS l12,
-           |    CAST(sum(x2 * x2) AS BIGINT) AS l22,
-           |    CAST(sum(yq) AS BIGINT) AS ly,
-           |    CAST(sum(x1 * yq) AS BIGINT) AS l1y,
-           |    CAST(sum(x2 * yq) AS BIGINT) AS l2y,
-           |    CAST(sum(yq * yq) AS BIGINT) AS lyy
-           |  FROM f GROUP BY 1, 2),
+           |  ${oMomentsBy("f", "event_type", "day")(OlsYy)}),
            |bounds AS (SELECT min(day) AS lo, max(day) AS hi FROM md),
            |splits AS (
            |  SELECT k AS split_id,
@@ -2656,74 +2090,39 @@ object MlPrepQueries {
            |    s.test_end,
            |    CASE WHEN m.day < s.train_end THEN 'train' ELSE 'test' END
            |      AS role,
-           |    CAST(SUM(n) AS BIGINT) AS n,
-           |    CAST(SUM(l1) AS BIGINT) AS l1, CAST(SUM(l2) AS BIGINT) AS l2,
-           |    CAST(SUM(l11) AS BIGINT) AS l11,
-           |    CAST(SUM(l12) AS BIGINT) AS l12,
-           |    CAST(SUM(l22) AS BIGINT) AS l22,
-           |    CAST(SUM(ly) AS BIGINT) AS ly,
-           |    CAST(SUM(l1y) AS BIGINT) AS l1y,
-           |    CAST(SUM(l2y) AS BIGINT) AS l2y,
-           |    CAST(SUM(lyy) AS BIGINT) AS lyy
+           |    ${OlsYy.map { case (k, _) => s"CAST(SUM($k) AS BIGINT) AS $k" }
+                  .mkString(",\n    ")}
            |  FROM md m JOIN splits s
            |    ON m.day >= s.train_start AND m.day < s.test_end
            |  GROUP BY 1, 2, 3, 4, 5, 6),
            |tr AS (
            |  SELECT event_type, split_id, train_start, train_end, test_end,
-           |    n AS n_train, CAST(n AS DOUBLE) AS nn,
-           |    CAST(n AS DOUBLE) AS sn, CAST(n AS DOUBLE) AS scnt,
-           |    CAST(l1 AS DOUBLE) AS s1, CAST(l2 AS DOUBLE) AS s2,
-           |    CAST(l11 AS DOUBLE) AS s11, CAST(l12 AS DOUBLE) AS s12,
-           |    CAST(l22 AS DOUBLE) AS s22,
-           |    CAST(ly AS DOUBLE) AS sy, CAST(l1y AS DOUBLE) AS s1y,
-           |    CAST(l2y AS DOUBLE) AS s2y, CAST(lyy AS DOUBLE) AS syy
+           |    n AS n_train,
+           |    ${oDescale(OlsYy, cents = false)}
            |  FROM ag WHERE role = 'train'),
            |te AS (
            |  SELECT event_type, split_id, n AS n_test,
-           |    CAST(n AS DOUBLE) AS qn, CAST(n AS DOUBLE) AS qcnt,
-           |    CAST(l1 AS DOUBLE) AS q1, CAST(l2 AS DOUBLE) AS q2,
-           |    CAST(l11 AS DOUBLE) AS q11, CAST(l12 AS DOUBLE) AS q12,
-           |    CAST(l22 AS DOUBLE) AS q22,
-           |    CAST(ly AS DOUBLE) AS qy, CAST(l1y AS DOUBLE) AS q1y,
-           |    CAST(l2y AS DOUBLE) AS q2y, CAST(lyy AS DOUBLE) AS qyy
+           |    ${oDescale(OlsYy, "q", cents = false)}
            |  FROM ag WHERE role = 'test'),
            |sol AS (
-           |  SELECT tr.*, te.n_test, te.qn, te.qcnt, te.q1, te.q2, te.q11,
-           |    te.q12, te.q22, te.qy, te.q1y, te.q2y, te.qyy,
-           |    $db0 / $det AS b0, $db1 / $det AS b1, $db2 / $det AS b2
+           |  SELECT tr.*, te.n_test,
+           |    ${OlsYy.map(k => "te." + named("q")(k._1)).mkString(", ")},
+           |    $b0 AS b0, $b1 AS b1, $b2 AS b2
            |  FROM tr JOIN te ON tr.event_type = te.event_type
            |    AND tr.split_id = te.split_id)
            |SELECT event_type, split_id, train_start, train_end, test_end,
            |  n_train, n_test,
-           |  CAST(floor(b0 * 1.0e7 + 0.5e0) AS BIGINT) AS b0_q,
-           |  CAST(floor(b1 * 1.0e7 + 0.5e0) AS BIGINT) AS b1_q,
-           |  CAST(floor(b2 * 1.0e7 + 0.5e0) AS BIGINT) AS b2_q,
-           |  CAST(floor(${mse("s")} + 0.5e0) AS BIGINT) AS train_mse_q,
-           |  CAST(floor(${mse("q")} + 0.5e0) AS BIGINT) AS test_mse_q
+           |  ${oQ("b0", 7)} AS b0_q,
+           |  ${oQ("b1", 7)} AS b1_q,
+           |  ${oQ("b2", 7)} AS b2_q,
+           |  ${mse("s")} AS train_mse_q,
+           |  ${mse("q")} AS test_mse_q
            |FROM sol""".stripMargin
       },
       (s, d) => {
-        def det3(a1: Column, a2: Column, a3: Column,
-                 b1: Column, b2: Column, b3: Column,
-                 c1: Column, c2: Column, c3: Column): Column =
-          a1 * (b2 * c3 - b3 * c2) -
-          a2 * (b1 * c3 - b3 * c1) +
-          a3 * (b1 * c2 - b2 * c1)
-        val f = Tables.events(s, d).select(col("event_type"),
-          to_date(col("ts")).as("day"),
-          hour(col("ts")).cast("long").as("x1"),
-          dayofweek(col("ts")).cast("long").as("x2"),
-          graft.Parity.lq(col("value")).as("yq"))
-        val md = f.groupBy("event_type", "day").agg(
-          count(lit(1)).as("n"),
-          sum("x1").as("l1"), sum("x2").as("l2"),
-          sum(col("x1") * col("x1")).as("l11"),
-          sum(col("x1") * col("x2")).as("l12"),
-          sum(col("x2") * col("x2")).as("l22"),
-          sum("yq").as("ly"),
-          sum(col("x1") * col("yq")).as("l1y"),
-          sum(col("x2") * col("yq")).as("l2y"),
-          sum(col("yq") * col("yq")).as("lyy"))
+        val f = features(Tables.events(s, d), col("event_type"),
+          to_date(col("ts")).as("day"))
+        val md = momentsBy(f, "event_type", "day")(OlsYy)
         val bounds = md.agg(min("day").as("lo"), max("day").as("hi"))
         val splits = bounds
           .select(explode(sequence(lit(0), lit(50))).as("k"),
@@ -2735,83 +2134,32 @@ object MlPrepQueries {
             col("hi"))
           .filter(col("test_end") <= col("hi"))
           .drop("hi")
+        val sums = OlsYy.map { case (k, _) => sum(k).as(k) }
         val ag = md.join(broadcast(splits),
             col("day") >= col("train_start") && col("day") < col("test_end"))
           .groupBy(col("event_type"), col("split_id"), col("train_start"),
             col("train_end"), col("test_end"),
             when(col("day") < col("train_end"), "train").otherwise("test")
               .as("role"))
-          .agg(sum("n").as("n"),
-            sum("l1").as("l1"), sum("l2").as("l2"),
-            sum("l11").as("l11"), sum("l12").as("l12"),
-            sum("l22").as("l22"),
-            sum("ly").as("ly"), sum("l1y").as("l1y"),
-            sum("l2y").as("l2y"), sum("lyy").as("lyy"))
-        val tr = ag.filter(col("role") === "train").select(
+          .agg(sums.head, sums.tail: _*)
+        val tr = ag.filter(col("role") === "train").select(Seq(
           col("event_type"), col("split_id"), col("train_start"),
-          col("train_end"), col("test_end"), col("n").as("n_train"),
-          col("n").cast("double").as("nn"),
-          col("n").cast("double").as("scnt"),
-          col("l1").cast("double").as("s1"),
-          col("l2").cast("double").as("s2"),
-          col("l11").cast("double").as("s11"),
-          col("l12").cast("double").as("s12"),
-          col("l22").cast("double").as("s22"),
-          col("ly").cast("double").as("sy"),
-          col("l1y").cast("double").as("s1y"),
-          col("l2y").cast("double").as("s2y"),
-          col("lyy").cast("double").as("syy"))
-        val te = ag.filter(col("role") === "test").select(
-          col("event_type"), col("split_id"), col("n").as("n_test"),
-          col("n").cast("double").as("qn"),
-          col("n").cast("double").as("qcnt"),
-          col("l1").cast("double").as("q1"),
-          col("l2").cast("double").as("q2"),
-          col("l11").cast("double").as("q11"),
-          col("l12").cast("double").as("q12"),
-          col("l22").cast("double").as("q22"),
-          col("ly").cast("double").as("qy"),
-          col("l1y").cast("double").as("q1y"),
-          col("l2y").cast("double").as("q2y"),
-          col("lyy").cast("double").as("qyy"))
-        val det = det3(col("nn"), col("s1"), col("s2"),
-          col("s1"), col("s11"), col("s12"),
-          col("s2"), col("s12"), col("s22"))
-        val db0 = det3(col("sy"), col("s1"), col("s2"),
-          col("s1y"), col("s11"), col("s12"),
-          col("s2y"), col("s12"), col("s22"))
-        val db1 = det3(col("nn"), col("sy"), col("s2"),
-          col("s1"), col("s1y"), col("s12"),
-          col("s2"), col("s2y"), col("s22"))
-        val db2 = det3(col("nn"), col("s1"), col("sy"),
-          col("s1"), col("s11"), col("s1y"),
-          col("s2"), col("s12"), col("s2y"))
-        val sol = tr.join(te, Seq("event_type", "split_id"))
-          .withColumn("b0", db0 / det)
-          .withColumn("b1", db1 / det)
-          .withColumn("b2", db2 / det)
-        def mseOf(yy: String, y: String, x1y: String, x2y: String,
-                  n0: String, x11: String, x22: String, x1: String,
-                  x2: String, x12: String, cnt: String): Column =
-          (col(yy) - lit(2.0) * (col("b0") * col(y)
-              + col("b1") * col(x1y) + col("b2") * col(x2y)) +
-            (col("b0") * col("b0") * col(n0)
-              + col("b1") * col("b1") * col(x11)
-              + col("b2") * col("b2") * col(x22)
-              + lit(2.0) * (col("b0") * col("b1") * col(x1)
-                + col("b0") * col("b2") * col(x2)
-                + col("b1") * col("b2") * col(x12)))) /
-            nullif(col(cnt), lit(0.0))
-        def q0(c: Column) = floor(c + lit(0.5)).cast("long")
-        def q7(c: Column) = floor(c * lit(1e7) + lit(0.5)).cast("long")
-        sol.select(col("event_type"), col("split_id"), col("train_start"),
-          col("train_end"), col("test_end"), col("n_train"), col("n_test"),
-          q7(col("b0")).as("b0_q"), q7(col("b1")).as("b1_q"),
-          q7(col("b2")).as("b2_q"),
-          q0(mseOf("syy", "sy", "s1y", "s2y", "nn", "s11", "s22",
-            "s1", "s2", "s12", "scnt")).as("train_mse_q"),
-          q0(mseOf("qyy", "qy", "q1y", "q2y", "qn", "q11", "q22",
-            "q1", "q2", "q12", "qcnt")).as("test_mse_q"))
+          col("train_end"), col("test_end"), col("n").as("n_train")) ++
+          descale(OlsYy, cents = false): _*)
+        val te = ag.filter(col("role") === "test").select(Seq(
+          col("event_type"), col("split_id"), col("n").as("n_test")) ++
+          descale(OlsYy, "q", cents = false): _*)
+        val Seq(b0, b1, b2) = ols()
+        def mse(p: String): Column =
+          q(sse(m = p + _) / nullif(col(p + "n"), lit(0.0)), 0)
+        tr.join(te, Seq("event_type", "split_id"))
+          .withColumn("b0", b0).withColumn("b1", b1).withColumn("b2", b2)
+          .select(col("event_type"), col("split_id"), col("train_start"),
+            col("train_end"), col("test_end"), col("n_train"),
+            col("n_test"),
+            q(col("b0"), 7).as("b0_q"), q(col("b1"), 7).as("b1_q"),
+            q(col("b2"), 7).as("b2_q"),
+            mse("s").as("train_mse_q"), mse("q").as("test_mse_q"))
       }),
 
     // DISTRIBUTED GRADIENT BOOSTING — the reference's boosting family
@@ -2927,13 +2275,7 @@ object MlPrepQueries {
             .stripMargin
         }
         s"""WITH grid AS (
-           |  SELECT event_type,
-           |    CAST(hour(ts) AS BIGINT) AS x1,
-           |    CAST(extract(dow FROM ts) + 1 AS BIGINT) AS x2,
-           |    CAST(count(*) AS BIGINT) AS n,
-           |    CAST(SUM(CASE WHEN value >= 100.0e0 THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS yc
-           |  FROM events GROUP BY 1, 2, 3),
+           |  $oCellGrid),
            |fc0 AS (SELECT *, 0.0e0 AS f FROM grid),
            |${round(0)},
            |${round(1)},
@@ -2950,12 +2292,7 @@ object MlPrepQueries {
         // projection/window/persist formulation (which the oracle still
         // runs as unrolled CTEs; unchanged hashes prove the identity),
         // but two exec stages instead of 4x a multi-stage chain
-        val grid = Tables.events(s, d).select(col("event_type"),
-            hour(col("ts")).cast("long").as("x1"),
-            dayofweek(col("ts")).cast("long").as("x2"),
-            when(col("value") >= 100.0, 1L).otherwise(0L).as("y"))
-          .groupBy("event_type", "x1", "x2")
-          .agg(count(lit(1)).as("n"), sum("y").as("yc"))
+        val grid = cellGrid(Tables.events(s, d))
         grid.groupBy("event_type")
           .agg(expr("gbt_fit4(x1, x2, n, yc)").as("t"))
           .select(col("event_type"), explode(col("t")).as("r"))
@@ -3002,10 +2339,7 @@ object MlPrepQueries {
         val hf = graft.operators.TextOps.oHash32(
           "'rf:f:' || CAST(tree AS VARCHAR)")
         s"""WITH f AS (
-           |  SELECT e.event_type, t.tree,
-           |    CAST(hour(e.ts) AS BIGINT) AS x1,
-           |    CAST(extract(dow FROM e.ts) + 1 AS BIGINT) AS x2,
-           |    CASE WHEN e.value >= 100.0e0 THEN 1 ELSE 0 END AS y,
+           |  SELECT event_type, t.tree, $oX1, $oX2, $oY,
            |    CASE WHEN $hw % 1000 < 368 THEN 0
            |         WHEN $hw % 1000 < 736 THEN 1
            |         WHEN $hw % 1000 < 920 THEN 2 ELSE 3 END AS w
@@ -3139,10 +2473,7 @@ object MlPrepQueries {
           .select(col("event_type"), col("event_id"), col("ts"),
             col("value"))
           .withColumn("tree", explode(sequence(lit(0L), lit(7L))))
-          .select(col("event_type"), col("tree"),
-            hour(col("ts")).cast("long").as("x1"),
-            dayofweek(col("ts")).cast("long").as("x2"),
-            when(col("value") >= 100.0, 1L).otherwise(0L).as("y"),
+          .select(col("event_type"), col("tree"), x1, x2, y,
             {
               val h = hash32(concat(lit("rf:w:"),
                 col("tree").cast("string"), lit(":"),
@@ -3192,91 +2523,46 @@ object MlPrepQueries {
     QueryDef(
       "mlprep_forward_select",
       Some {
-        def oDet3(a1: String, a2: String, a3: String,
-                  b1: String, b2: String, b3: String,
-                  c1: String, c2: String, c3: String): String =
-          s"($a1 * ($b2 * $c3 - $b3 * $c2) - " +
-          s"$a2 * ($b1 * $c3 - $b3 * $c1) + " +
-          s"$a3 * ($b1 * $c2 - $b2 * $c1))"
         // single-feature fit on (sj, sjj, sjy): SSE via the 2×2 solve
         def sse1(j: Int): String = {
           val (sj, sjj, sjy) = (s"s$j", s"s$j$j", s"s${j}y")
           s"""SELECT event_type, CAST($j AS BIGINT) AS feat,
-             |  syy - 2.0e0 * (((sy - (nn * ${sjy} - $sj * sy)
-             |        / (nn * $sjj - $sj * $sj) * $sj) / nn) * sy
-             |      + (nn * $sjy - $sj * sy) / (nn * $sjj - $sj * $sj)
+             |  syy - 2.0e0 * (((sy - (sn * ${sjy} - $sj * sy)
+             |        / (sn * $sjj - $sj * $sj) * $sj) / sn) * sy
+             |      + (sn * $sjy - $sj * sy) / (sn * $sjj - $sj * $sj)
              |        * $sjy)
-             |    + (((sy - (nn * $sjy - $sj * sy)
-             |        / (nn * $sjj - $sj * $sj) * $sj) / nn)
-             |      * ((sy - (nn * $sjy - $sj * sy)
-             |        / (nn * $sjj - $sj * $sj) * $sj) / nn) * nn
-             |      + (nn * $sjy - $sj * sy) / (nn * $sjj - $sj * $sj)
-             |        * ((nn * $sjy - $sj * sy) / (nn * $sjj - $sj * $sj))
+             |    + (((sy - (sn * $sjy - $sj * sy)
+             |        / (sn * $sjj - $sj * $sj) * $sj) / sn)
+             |      * ((sy - (sn * $sjy - $sj * sy)
+             |        / (sn * $sjj - $sj * $sj) * $sj) / sn) * sn
+             |      + (sn * $sjy - $sj * sy) / (sn * $sjj - $sj * $sj)
+             |        * ((sn * $sjy - $sj * sy) / (sn * $sjj - $sj * $sj))
              |        * $sjj
-             |      + 2.0e0 * ((sy - (nn * $sjy - $sj * sy)
-             |        / (nn * $sjj - $sj * $sj) * $sj) / nn)
-             |        * ((nn * $sjy - $sj * sy) / (nn * $sjj - $sj * $sj))
+             |      + 2.0e0 * ((sy - (sn * $sjy - $sj * sy)
+             |        / (sn * $sjj - $sj * $sj) * $sj) / sn)
+             |        * ((sn * $sjy - $sj * sy) / (sn * $sjj - $sj * $sj))
              |        * $sj) AS sse
              |FROM d""".stripMargin
         }
-        // pair fit (a,b) via 3×3 Cramer on the shared det3
+        // pair fit (a,b) via the shared 3×3 Cramer solve
         def sse2(a: Int, b: Int): String = {
-          val (sa, sb) = (s"s$a", s"s$b")
-          val (saa, sbb) = (s"s$a$a", s"s$b$b")
-          val sab = s"s$a$b"
-          val (say, sby) = (s"s${a}y", s"s${b}y")
-          val det = oDet3("nn", sa, sb, sa, saa, sab, sb, sab, sbb)
-          val d0 = oDet3("sy", sa, sb, say, saa, sab, sby, sab, sbb)
-          val da = oDet3("nn", "sy", sb, sa, say, sab, sb, sby, sbb)
-          val db = oDet3("nn", sa, "sy", sa, saa, say, sb, sab, sby)
+          val m = pairNames(a, b)
+          val bs = oCramer3("sn", m("1"), m("2"), m("11"), m("12"), m("22"),
+            "sy", m("1y"), m("2y"))
           s"""SELECT event_type, CAST($a AS BIGINT) AS fa,
-             |  CAST($b AS BIGINT) AS fb,
-             |  syy - 2.0e0 * (($d0 / $det) * sy + ($da / $det) * $say
-             |      + ($db / $det) * $sby)
-             |    + (($d0 / $det) * ($d0 / $det) * nn
-             |      + ($da / $det) * ($da / $det) * $saa
-             |      + ($db / $det) * ($db / $det) * $sbb
-             |      + 2.0e0 * (($d0 / $det) * ($da / $det) * $sa
-             |        + ($d0 / $det) * ($db / $det) * $sb
-             |        + ($da / $det) * ($db / $det) * $sab)) AS sse
+             |  CAST($b AS BIGINT) AS fb, ${oSse(bs, m)} AS sse
              |FROM d""".stripMargin
         }
         s"""WITH f AS (
-           |  SELECT event_type,
-           |    CAST(hour(ts) AS BIGINT) AS x1,
-           |    CAST(extract(dow FROM ts) + 1 AS BIGINT) AS x2,
-           |    CAST(day(ts) AS BIGINT) AS x3,
-           |    ${graft.Parity.oLq("value")} AS yq
-           |  FROM events),
+           |  ${oFeatures("event_type", oX3)}),
            |m AS (
-           |  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-           |    CAST(sum(x1) AS BIGINT) AS l1, CAST(sum(x2) AS BIGINT) AS l2,
-           |    CAST(sum(x3) AS BIGINT) AS l3,
-           |    CAST(sum(x1 * x1) AS BIGINT) AS l11,
-           |    CAST(sum(x1 * x2) AS BIGINT) AS l12,
-           |    CAST(sum(x1 * x3) AS BIGINT) AS l13,
-           |    CAST(sum(x2 * x2) AS BIGINT) AS l22,
-           |    CAST(sum(x2 * x3) AS BIGINT) AS l23,
-           |    CAST(sum(x3 * x3) AS BIGINT) AS l33,
-           |    CAST(sum(yq) AS BIGINT) AS ly,
-           |    CAST(sum(x1 * yq) AS BIGINT) AS l1y,
-           |    CAST(sum(x2 * yq) AS BIGINT) AS l2y,
-           |    CAST(sum(x3 * yq) AS BIGINT) AS l3y,
-           |    CAST(sum(yq * yq) AS BIGINT) AS lyy
-           |  FROM f GROUP BY 1),
+           |  ${oMomentsBy("f", "event_type")(FwdMoments)}),
            |d AS (
-           |  SELECT event_type, n, CAST(n AS DOUBLE) AS nn,
-           |    CAST(l1 AS DOUBLE) AS s1, CAST(l2 AS DOUBLE) AS s2,
-           |    CAST(l3 AS DOUBLE) AS s3,
-           |    CAST(l11 AS DOUBLE) AS s11, CAST(l12 AS DOUBLE) AS s12,
-           |    CAST(l13 AS DOUBLE) AS s13, CAST(l22 AS DOUBLE) AS s22,
-           |    CAST(l23 AS DOUBLE) AS s23, CAST(l33 AS DOUBLE) AS s33,
-           |    CAST(ly AS DOUBLE) AS sy, CAST(l1y AS DOUBLE) AS s1y,
-           |    CAST(l2y AS DOUBLE) AS s2y, CAST(l3y AS DOUBLE) AS s3y,
-           |    CAST(lyy AS DOUBLE) AS syy
+           |  SELECT event_type, n,
+           |    ${oDescale(FwdMoments, cents = false)}
            |  FROM m),
            |base AS (
-           |  SELECT event_type, syy - sy * sy / nn AS sse FROM d),
+           |  SELECT event_type, syy - sy * sy / sn AS sse FROM d),
            |c1 AS (${sse1(1)} UNION ALL ${sse1(2)} UNION ALL ${sse1(3)}),
            |b1 AS (
            |  SELECT * FROM (SELECT *, row_number() OVER (
@@ -3307,88 +2593,37 @@ object MlPrepQueries {
            |    b1.sse
            |  FROM b2 JOIN b1 ON b2.event_type = b1.event_type)
            |SELECT event_type, step, feature,
-           |  CAST(floor(sse + 0.5e0) AS BIGINT) AS sse_q,
-           |  CAST(floor((prev - sse) + 0.5e0) AS BIGINT) AS gain_q
+           |  ${oQ("sse", 0)} AS sse_q,
+           |  ${oQ("prev - sse", 0)} AS gain_q
            |FROM steps""".stripMargin
       },
       (s, d) => {
-        def det3(a1: Column, a2: Column, a3: Column,
-                 b1: Column, b2: Column, b3: Column,
-                 c1: Column, c2: Column, c3: Column): Column =
-          a1 * (b2 * c3 - b3 * c2) -
-          a2 * (b1 * c3 - b3 * c1) +
-          a3 * (b1 * c2 - b2 * c1)
-        val f = Tables.events(s, d).select(col("event_type"),
-          hour(col("ts")).cast("long").as("x1"),
-          dayofweek(col("ts")).cast("long").as("x2"),
-          dayofmonth(col("ts")).cast("long").as("x3"),
-          graft.Parity.lq(col("value")).as("yq"))
-        val m = f.groupBy("event_type").agg(
-          count(lit(1)).as("n"),
-          sum("x1").as("l1"), sum("x2").as("l2"), sum("x3").as("l3"),
-          sum(col("x1") * col("x1")).as("l11"),
-          sum(col("x1") * col("x2")).as("l12"),
-          sum(col("x1") * col("x3")).as("l13"),
-          sum(col("x2") * col("x2")).as("l22"),
-          sum(col("x2") * col("x3")).as("l23"),
-          sum(col("x3") * col("x3")).as("l33"),
-          sum("yq").as("ly"),
-          sum(col("x1") * col("yq")).as("l1y"),
-          sum(col("x2") * col("yq")).as("l2y"),
-          sum(col("x3") * col("yq")).as("l3y"),
-          sum(col("yq") * col("yq")).as("lyy"))
+        val f = features(Tables.events(s, d), col("event_type"), x3)
+        val dd = momentsBy(f, "event_type")(FwdMoments)
           .persist() // the 15-moment table is the only corpus artifact;
                      // base, all candidate fits, and the step rows
                      // re-read it
-        val dd = m.select(col("event_type"), col("n"),
-          col("n").cast("double").as("nn"),
-          col("l1").cast("double").as("s1"),
-          col("l2").cast("double").as("s2"),
-          col("l3").cast("double").as("s3"),
-          col("l11").cast("double").as("s11"),
-          col("l12").cast("double").as("s12"),
-          col("l13").cast("double").as("s13"),
-          col("l22").cast("double").as("s22"),
-          col("l23").cast("double").as("s23"),
-          col("l33").cast("double").as("s33"),
-          col("ly").cast("double").as("sy"),
-          col("l1y").cast("double").as("s1y"),
-          col("l2y").cast("double").as("s2y"),
-          col("l3y").cast("double").as("s3y"),
-          col("lyy").cast("double").as("syy"))
+          .select(col("event_type") +: col("n") +:
+            descale(FwdMoments, cents = false): _*)
         val base = dd.select(col("event_type"),
-          (col("syy") - col("sy") * col("sy") / col("nn")).as("sse"))
+          (col("syy") - col("sy") * col("sy") / col("sn")).as("sse"))
         def sse1(j: Int): DataFrame = {
           val (sj, sjj, sjy) = (col(s"s$j"), col(s"s$j$j"), col(s"s${j}y"))
-          val b = (col("nn") * sjy - sj * col("sy")) /
-            (col("nn") * sjj - sj * sj)
-          val a = (col("sy") - b * sj) / col("nn")
+          val b = (col("sn") * sjy - sj * col("sy")) /
+            (col("sn") * sjj - sj * sj)
+          val a = (col("sy") - b * sj) / col("sn")
           dd.select(col("event_type"), lit(j.toLong).as("feat"),
             (col("syy") - lit(2.0) * (a * col("sy") + b * sjy)
-              + (a * a * col("nn") + b * b * sjj
+              + (a * a * col("sn") + b * b * sjj
                 + lit(2.0) * a * b * sj)).as("sse"))
         }
         def sse2(a: Int, b: Int): DataFrame = {
-          val (sa, sb) = (col(s"s$a"), col(s"s$b"))
-          val (saa, sbb) = (col(s"s$a$a"), col(s"s$b$b"))
-          val sab = col(s"s$a$b")
-          val (say, sby) = (col(s"s${a}y"), col(s"s${b}y"))
-          val det = det3(col("nn"), sa, sb, sa, saa, sab, sb, sab, sbb)
-          val d0 = det3(col("sy"), sa, sb, say, saa, sab, sby, sab, sbb)
-          val da = det3(col("nn"), col("sy"), sb, sa, say, sab,
-            sb, sby, sbb)
-          val db = det3(col("nn"), sa, col("sy"), sa, saa, say,
-            sb, sab, sby)
+          val m = pairNames(a, b)
+          val bs = cramer3(col("sn"), col(m("1")), col(m("2")),
+            col(m("11")), col(m("12")), col(m("22")),
+            col("sy"), col(m("1y")), col(m("2y")))
           dd.select(col("event_type"), lit(a.toLong).as("fa"),
-            lit(b.toLong).as("fb"),
-            (col("syy") - lit(2.0) * ((d0 / det) * col("sy")
-                + (da / det) * say + (db / det) * sby)
-              + ((d0 / det) * (d0 / det) * col("nn")
-                + (da / det) * (da / det) * saa
-                + (db / det) * (db / det) * sbb
-                + lit(2.0) * ((d0 / det) * (da / det) * sa
-                  + (d0 / det) * (db / det) * sb
-                  + (da / det) * (db / det) * sab))).as("sse"))
+            lit(b.toLong).as("fb"), sse(bs, m).as("sse"))
         }
         val c1 = sse1(1).unionByName(sse1(2)).unionByName(sse1(3))
         val b1 = c1.withColumn("rn", row_number().over(
@@ -3419,9 +2654,8 @@ object MlPrepQueries {
             .select(col("event_type"), lit(2L).as("step"),
               col("feat").as("feature"), col("sse"), col("prev")))
         steps.select(col("event_type"), col("step"), col("feature"),
-          floor(col("sse") + lit(0.5)).cast("long").as("sse_q"),
-          floor((col("prev") - col("sse")) + lit(0.5)).cast("long")
-            .as("gain_q"))
+          q(col("sse"), 0).as("sse_q"),
+          q(col("prev") - col("sse"), 0).as("gain_q"))
       }),
 
     // FEATURE IMPORTANCE — sklearn's `feature_importances_`
@@ -3496,13 +2730,7 @@ object MlPrepQueries {
             |        + CAST((ntot - postot) * (ntot - postot) AS DOUBLE))
             |        / CAST(ntot AS DOUBLE))""".stripMargin
         s"""WITH grid AS (
-           |  SELECT event_type,
-           |    CAST(hour(ts) AS BIGINT) AS x1,
-           |    CAST(extract(dow FROM ts) + 1 AS BIGINT) AS x2,
-           |    CAST(count(*) AS BIGINT) AS n,
-           |    CAST(SUM(CASE WHEN value >= 100.0e0 THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS yc
-           |  FROM events GROUP BY 1, 2, 3),
+           |  $oCellGrid),
            |asg0 AS (SELECT *, CAST(0 AS BIGINT) AS node FROM grid),
            |${level(0)},
            |${level(1)},
@@ -3531,12 +2759,7 @@ object MlPrepQueries {
         // node totals and the winning candidate's score, so the MDI
         // numerator parent_gini − score derives from the struct fields
         // through the identical IEEE tree the windowed formulation used
-        val grid = Tables.events(s, d).select(col("event_type"),
-            hour(col("ts")).cast("long").as("x1"),
-            dayofweek(col("ts")).cast("long").as("x2"),
-            when(col("value") >= 100.0, 1L).otherwise(0L).as("y"))
-          .groupBy("event_type", "x1", "x2")
-          .agg(count(lit(1)).as("n"), sum("y").as("yc"))
+        val grid = cellGrid(Tables.events(s, d))
         def halfP(n: Column, p: Column): Column =
           n.cast("double") -
             ((p * p).cast("double") + ((n - p) * (n - p)).cast("double")) /
@@ -3582,16 +2805,8 @@ object MlPrepQueries {
     QueryDef(
       "mlprep_naive_bayes",
       Some {
-        s"""WITH f AS (
-           |  SELECT event_type,
-           |    CAST(hour(ts) AS BIGINT) AS x1,
-           |    CAST(extract(dow FROM ts) + 1 AS BIGINT) AS x2,
-           |    CASE WHEN value >= 100.0e0 THEN 1 ELSE 0 END AS y
-           |  FROM events),
-           |grid AS (
-           |  SELECT event_type, x1, x2, CAST(count(*) AS BIGINT) AS n,
-           |    CAST(sum(y) AS BIGINT) AS yc
-           |  FROM f GROUP BY 1, 2, 3),
+        s"""WITH grid AS (
+           |  $oCellGrid),
            |hx1 AS (
            |  SELECT event_type, x1, CAST(sum(yc) AS BIGINT) AS cp1,
            |    CAST(sum(n) AS BIGINT) AS ct1
@@ -3643,12 +2858,7 @@ object MlPrepQueries {
            |FROM scored GROUP BY 1""".stripMargin
       },
       (s, d) => {
-        val f = Tables.events(s, d).select(col("event_type"),
-          hour(col("ts")).cast("long").as("x1"),
-          dayofweek(col("ts")).cast("long").as("x2"),
-          when(col("value") >= 100.0, 1L).otherwise(0L).as("y"))
-        val grid = f.groupBy("event_type", "x1", "x2")
-          .agg(count(lit(1)).as("n"), sum("y").as("yc"))
+        val grid = cellGrid(Tables.events(s, d))
           .persist() // ≤24×7 cells per group: the three model rollups
                      // and the scoring pass all re-read it
         val hx1 = grid.groupBy("event_type", "x1")
@@ -3727,23 +2937,9 @@ object MlPrepQueries {
              |      FROM it${k - 1})))""".stripMargin
         val steps = (1 to 48).map(step).mkString(",\n")
         s"""WITH f AS (
-           |  SELECT event_type,
-           |    CAST(hour(ts) AS BIGINT) AS x1,
-           |    CAST(extract(dow FROM ts) + 1 AS BIGINT) AS x2,
-           |    CAST(day(ts) AS BIGINT) AS x3
-           |  FROM events),
+           |  SELECT event_type, $oX1, $oX2, $oX3 FROM events),
            |m AS (
-           |  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-           |    CAST(sum(x1) AS BIGINT) AS l1,
-           |    CAST(sum(x2) AS BIGINT) AS l2,
-           |    CAST(sum(x3) AS BIGINT) AS l3,
-           |    CAST(sum(x1 * x1) AS BIGINT) AS l11,
-           |    CAST(sum(x1 * x2) AS BIGINT) AS l12,
-           |    CAST(sum(x1 * x3) AS BIGINT) AS l13,
-           |    CAST(sum(x2 * x2) AS BIGINT) AS l22,
-           |    CAST(sum(x2 * x3) AS BIGINT) AS l23,
-           |    CAST(sum(x3 * x3) AS BIGINT) AS l33
-           |  FROM f GROUP BY 1),
+           |  ${oMomentsBy("f", "event_type")(PcaMoments)}),
            |cov AS (
            |  SELECT event_type, n,
            |    CAST(n * l11 - l1 * l1 AS DOUBLE)
@@ -3778,28 +2974,16 @@ object MlPrepQueries {
            |      / (v1 * v1 + v2 * v2 + v3 * v3) AS eig
            |  FROM fin)
            |SELECT event_type, n,
-           |  CAST(floor(eig * 1.0e9 + 0.5e0) AS BIGINT) AS eig_q,
-           |  CAST(floor(eig / (c11 + c22 + c33) * 1.0e9 + 0.5e0)
-           |    AS BIGINT) AS evr_q,
-           |  CAST(floor(v1 / nrm * sg * 1.0e9 + 0.5e0) AS BIGINT) AS v1_q,
-           |  CAST(floor(v2 / nrm * sg * 1.0e9 + 0.5e0) AS BIGINT) AS v2_q,
-           |  CAST(floor(v3 / nrm * sg * 1.0e9 + 0.5e0) AS BIGINT) AS v3_q
+           |  ${oQ("eig", 9)} AS eig_q,
+           |  ${oQ("eig / (c11 + c22 + c33)", 9)} AS evr_q,
+           |  ${oQ("v1 / nrm * sg", 9)} AS v1_q,
+           |  ${oQ("v2 / nrm * sg", 9)} AS v2_q,
+           |  ${oQ("v3 / nrm * sg", 9)} AS v3_q
            |FROM ray""".stripMargin
       },
       (s, d) => {
-        val f = Tables.events(s, d).select(col("event_type"),
-          hour(col("ts")).cast("long").as("x1"),
-          dayofweek(col("ts")).cast("long").as("x2"),
-          dayofmonth(col("ts")).cast("long").as("x3"))
-        val m = f.groupBy("event_type").agg(
-          count(lit(1)).as("n"),
-          sum("x1").as("l1"), sum("x2").as("l2"), sum("x3").as("l3"),
-          sum(col("x1") * col("x1")).as("l11"),
-          sum(col("x1") * col("x2")).as("l12"),
-          sum(col("x1") * col("x3")).as("l13"),
-          sum(col("x2") * col("x2")).as("l22"),
-          sum(col("x2") * col("x3")).as("l23"),
-          sum(col("x3") * col("x3")).as("l33"))
+        val m = momentsBy(Tables.events(s, d)
+          .select(col("event_type"), x1, x2, x3), "event_type")(PcaMoments)
         def cv(ij: String, i: String, j: String): Column =
           (col("n") * col(ij) - col(i) * col(j)).cast("double") /
             col("n").cast("double") / col("n").cast("double")
@@ -3835,14 +3019,13 @@ object MlPrepQueries {
               + col("v3") * col("w3")) /
             (col("v1") * col("v1") + col("v2") * col("v2")
               + col("v3") * col("v3")))
-        def q9(c: Column) = floor(c * lit(1e9) + lit(0.5)).cast("long")
         fin.select(col("event_type"), col("n"),
-          q9(col("eig")).as("eig_q"),
-          q9(col("eig") / (col("c11") + col("c22") + col("c33")))
+          q(col("eig"), 9).as("eig_q"),
+          q(col("eig") / (col("c11") + col("c22") + col("c33")), 9)
             .as("evr_q"),
-          q9(col("v1") / col("nrm") * col("sg")).as("v1_q"),
-          q9(col("v2") / col("nrm") * col("sg")).as("v2_q"),
-          q9(col("v3") / col("nrm") * col("sg")).as("v3_q"))
+          q(col("v1") / col("nrm") * col("sg"), 9).as("v1_q"),
+          q(col("v2") / col("nrm") * col("sg"), 9).as("v2_q"),
+          q(col("v3") / col("nrm") * col("sg"), 9).as("v3_q"))
       }),
 
     // LEARNING CURVE — sklearn's `learning_curve` (the train-size
@@ -3863,8 +3046,7 @@ object MlPrepQueries {
       Some {
         s"""WITH f AS (
            |  SELECT event_type, CAST(ts AS DATE) AS day,
-           |    CAST(hour(ts) AS BIGINT) AS x,
-           |    ${graft.Parity.oLq("value")} AS yq
+           |    CAST(hour(ts) AS BIGINT) AS x, $oYq
            |  FROM events),
            |md AS (
            |  SELECT event_type, day, CAST(count(*) AS BIGINT) AS n,
@@ -3951,8 +3133,7 @@ object MlPrepQueries {
       (s, d) => {
         val f = Tables.events(s, d).select(col("event_type"),
           to_date(col("ts")).as("day"),
-          hour(col("ts")).cast("long").as("x"),
-          graft.Parity.lq(col("value")).as("yq"))
+          hour(col("ts")).cast("long").as("x"), yq)
         val md = f.groupBy("event_type", "day").agg(
           count(lit(1)).as("n"),
           sum("x").as("lx"), sum(col("x") * col("x")).as("lxx"),
@@ -4022,10 +3203,9 @@ object MlPrepQueries {
           (col("sn") * col("sxx") - col("sx") * col("sx"))
         val fit = pick.withColumn("b", b)
           .withColumn("a", (col("sy") - col("b") * col("sx")) / col("sn"))
-        def q9(c: Column) = floor(c * lit(1e9) + lit(0.5)).cast("long")
         fit.select(col("event_type"), col("frac"), col("train_days"),
           col("test_days"), col("n_train"), col("n_test"),
-          q9(col("b")).as("slope_q"), q9(col("a")).as("intercept_q"),
+          q(col("b"), 9).as("slope_q"), q(col("a"), 9).as("intercept_q"),
           floor((col("qyy") - lit(2.0) * (col("a") * col("qy")
               + col("b") * col("qxy"))
             + (col("a") * col("a") * col("qn")
@@ -4125,13 +3305,13 @@ object MlPrepQueries {
             sum((lit(1L) - col("tr")) * col("y")).as("pos_test"))
         val st = k.withColumn("strategy", explode(array(
           lit("most_frequent"), lit("stratified"), lit("uniform"))))
-        val q = when(col("strategy") === "most_frequent",
+        val prior = when(col("strategy") === "most_frequent",
             when(lit(2L) * col("pos_train") > col("n_train"), lit(1.0))
               .otherwise(lit(0.0)))
           .when(col("strategy") === "stratified",
             col("pos_train").cast("double") / col("n_train").cast("double"))
           .otherwise(lit(0.5))
-        val m = st.withColumn("q", q)
+        val m = st.withColumn("q", prior)
           .select(col("event_type"), col("strategy"), col("n_train"),
             col("pos_train"), col("n_test"), col("pos_test"),
             (col("q") * col("pos_test").cast("double")).as("tp"),
@@ -4148,14 +3328,13 @@ object MlPrepQueries {
             .otherwise(col("tp") / (col("tp") + col("fp"))))
           .withColumn("r1", when(col("tp") + col("fnn") === 0.0, lit(0.0))
             .otherwise(col("tp") / (col("tp") + col("fnn"))))
-        def q9(c: Column) = floor(c * lit(1e9) + lit(0.5)).cast("long")
         f.select(col("event_type"), col("strategy"), col("n_train"),
           col("pos_train"), col("n_test"), col("pos_test"),
-          q9(col("acc")).as("acc_q"), q9(col("p1")).as("p1_q"),
-          q9(col("r1")).as("r1_q"),
-          q9(when(col("p1") + col("r1") === 0.0, lit(0.0))
+          q(col("acc"), 9).as("acc_q"), q(col("p1"), 9).as("p1_q"),
+          q(col("r1"), 9).as("r1_q"),
+          q(when(col("p1") + col("r1") === 0.0, lit(0.0))
             .otherwise(lit(2.0) * col("p1") * col("r1")
-              / (col("p1") + col("r1")))).as("f1_q"))
+              / (col("p1") + col("r1"))), 9).as("f1_q"))
       }),
 
     // MODEL REGISTRY AS A QUERYABLE TABLE — the reference's model-export
@@ -4179,87 +3358,36 @@ object MlPrepQueries {
     // floor-quantized at 1e-6 then summed as exact longs.
     QueryDef(
       "mlprep_registry",
-      Some {
-        def oDet3(a1: String, a2: String, a3: String,
-                  b1: String, b2: String, b3: String,
-                  c1: String, c2: String, c3: String): String =
-          s"($a1 * ($b2 * $c3 - $b3 * $c2) - " +
-          s"$a2 * ($b1 * $c3 - $b3 * $c1) + " +
-          s"$a3 * ($b1 * $c2 - $b2 * $c1))"
-        val det = oDet3("nn", "s1", "s2", "s1", "s11", "s12",
-          "s2", "s12", "s22")
-        val db0 = oDet3("sy", "s1", "s2", "s1y", "s11", "s12",
-          "s2y", "s12", "s22")
-        val db1 = oDet3("nn", "sy", "s2", "s1", "s1y", "s12",
-          "s2", "s2y", "s22")
-        val db2 = oDet3("nn", "s1", "sy", "s1", "s11", "s1y",
-          "s2", "s12", "s2y")
-        def fit(src: String, ver: Int): String =
-          s"""m$ver AS (
-             |  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-             |    CAST(sum(x1) AS BIGINT) AS l1,
-             |    CAST(sum(x2) AS BIGINT) AS l2,
-             |    CAST(sum(x1 * x1) AS BIGINT) AS l11,
-             |    CAST(sum(x1 * x2) AS BIGINT) AS l12,
-             |    CAST(sum(x2 * x2) AS BIGINT) AS l22,
-             |    CAST(sum(yq) AS BIGINT) AS lyq,
-             |    CAST(sum(x1 * yq) AS BIGINT) AS l1yq,
-             |    CAST(sum(x2 * yq) AS BIGINT) AS l2yq
-             |  FROM $src GROUP BY 1),
-             |d$ver AS (
-             |  SELECT event_type, n AS n_train, CAST(n AS DOUBLE) AS nn,
-             |    CAST(l1 AS DOUBLE) AS s1, CAST(l2 AS DOUBLE) AS s2,
-             |    CAST(l11 AS DOUBLE) AS s11, CAST(l12 AS DOUBLE) AS s12,
-             |    CAST(l22 AS DOUBLE) AS s22,
-             |    CAST(lyq AS DOUBLE) / 100.0 AS sy,
-             |    CAST(l1yq AS DOUBLE) / 100.0 AS s1y,
-             |    CAST(l2yq AS DOUBLE) / 100.0 AS s2y
-             |  FROM m$ver),
-             |bb$ver AS (
-             |  SELECT event_type, CAST($ver AS BIGINT) AS version,
-             |    n_train,
-             |    $db0 / $det AS b0, $db1 / $det AS b1, $db2 / $det AS b2
-             |  FROM d$ver)""".stripMargin
-        s"""WITH b AS (SELECT min(ts) AS t0, max(ts) AS t1 FROM events),
-           |k AS (SELECT (epoch_ms(t0) +
-           |  (epoch_ms(t1) - epoch_ms(t0) + 1) // 2) AS mid FROM b),
-           |c AS (SELECT mid - mid % 86400000 + 43200000 AS cut FROM k),
-           |f AS (
-           |  SELECT event_id, event_type, epoch_ms(ts) AS tms,
-           |    CAST(hour(ts) AS BIGINT) AS x1,
-           |    CAST(extract(dow FROM ts) + 1 AS BIGINT) AS x2,
-           |    value, ${graft.Parity.oLq("value")} AS yq
-           |  FROM events),
-           |f1 AS (SELECT f.* FROM f, c WHERE tms < cut),
-           |${fit("f1", 1)},
-           |${fit("f", 2)},
-           |reg AS (SELECT * FROM bb1 UNION ALL SELECT * FROM bb2),
-           |sc AS (
-           |  SELECT f.event_type,
-           |    CAST(count(*) AS BIGINT) AS n_scored,
-           |    CAST(SUM(CAST(floor((bb.b0 + bb.b1 * CAST(f.x1 AS DOUBLE)
-           |      + bb.b2 * CAST(f.x2 AS DOUBLE)) * 1.0e6 + 0.5e0)
-           |      AS BIGINT)) AS BIGINT) AS pred_sum_q
-           |  FROM f JOIN bb2 bb ON f.event_type = bb.event_type
-           |  GROUP BY 1)
-           |SELECT 'ols' AS model_name, r.version, r.event_type, r.n_train,
-           |  CAST(floor(r.b0 * 1.0e9 + 0.5e0) AS BIGINT) AS b0_q,
-           |  CAST(floor(r.b1 * 1.0e9 + 0.5e0) AS BIGINT) AS b1_q,
-           |  CAST(floor(r.b2 * 1.0e9 + 0.5e0) AS BIGINT) AS b2_q,
-           |  CAST(CASE WHEN r.version = 2 THEN 1 ELSE 0 END AS BIGINT)
-           |    AS is_latest,
-           |  CASE WHEN r.version = 2 THEN sc.n_scored END AS n_scored,
-           |  CASE WHEN r.version = 2 THEN sc.pred_sum_q END AS pred_sum_q
-           |FROM reg r LEFT JOIN sc ON r.event_type = sc.event_type"""
-          .stripMargin
-      },
+      Some(s"""WITH b AS (SELECT min(ts) AS t0, max(ts) AS t1 FROM events),
+              |k AS (SELECT (epoch_ms(t0) +
+              |  (epoch_ms(t1) - epoch_ms(t0) + 1) // 2) AS mid FROM b),
+              |c AS (SELECT mid - mid % 86400000 + 43200000 AS cut FROM k),
+              |f AS (
+              |  ${oFeatures("event_id", "event_type", "epoch_ms(ts) AS tms",
+                     "value")}),
+              |f1 AS (SELECT f.* FROM f, c WHERE tms < cut),
+              |${oFitOls("f1", 1)},
+              |${oFitOls("f", 2)},
+              |reg AS (SELECT * FROM bb1 UNION ALL SELECT * FROM bb2),
+              |sc AS (
+              |  SELECT f.event_type,
+              |    CAST(count(*) AS BIGINT) AS n_scored,
+              |    CAST(SUM(${oQ("bb.b0 + bb.b1 * CAST(f.x1 AS DOUBLE) + " +
+                     "bb.b2 * CAST(f.x2 AS DOUBLE)", 6)}) AS BIGINT)
+              |      AS pred_sum_q
+              |  FROM f JOIN bb2 bb ON f.event_type = bb.event_type
+              |  GROUP BY 1)
+              |SELECT 'ols' AS model_name, r.version, r.event_type, r.n_train,
+              |  ${oQ("r.b0", 9)} AS b0_q,
+              |  ${oQ("r.b1", 9)} AS b1_q,
+              |  ${oQ("r.b2", 9)} AS b2_q,
+              |  CAST(CASE WHEN r.version = 2 THEN 1 ELSE 0 END AS BIGINT)
+              |    AS is_latest,
+              |  CASE WHEN r.version = 2 THEN sc.n_scored END AS n_scored,
+              |  CASE WHEN r.version = 2 THEN sc.pred_sum_q END AS pred_sum_q
+              |FROM reg r LEFT JOIN sc ON r.event_type = sc.event_type"""
+        .stripMargin),
       (s, d) => {
-        def det3(a1: Column, a2: Column, a3: Column,
-                 b1: Column, b2: Column, b3: Column,
-                 c1: Column, c2: Column, c3: Column): Column =
-          a1 * (b2 * c3 - b3 * c2) -
-          a2 * (b1 * c3 - b3 * c1) +
-          a3 * (b1 * c2 - b2 * c1)
         val base = graft.Sinks.dir(s, "mlprep_registry", d)
         // fresh registry per invocation — re-runs must re-derive v1/v2,
         // not stack v3/v4 onto a previous run's table
@@ -4274,50 +3402,10 @@ object MlPrepQueries {
         val t1 = bounds.getTimestamp(1).getTime
         val mid = t0 + (t1 - t0 + 1) / 2
         val cut = mid - math.floorMod(mid, 86400000L) + 43200000L
-        def fit(df: DataFrame): DataFrame = {
-          val f = df.select(col("event_type"),
-            hour(col("ts")).cast("long").as("x1"),
-            dayofweek(col("ts")).cast("long").as("x2"),
-            graft.Parity.lq(col("value")).as("yq"))
-          val m = f.groupBy("event_type").agg(
-            count(lit(1)).as("n"),
-            sum("x1").as("l1"), sum("x2").as("l2"),
-            sum(col("x1") * col("x1")).as("l11"),
-            sum(col("x1") * col("x2")).as("l12"),
-            sum(col("x2") * col("x2")).as("l22"),
-            sum("yq").as("lyq"),
-            sum(col("x1") * col("yq")).as("l1yq"),
-            sum(col("x2") * col("yq")).as("l2yq"))
-          val dd = m.select(col("event_type"), col("n").as("n_train"),
-            col("n").cast("double").as("nn"),
-            col("l1").cast("double").as("s1"),
-            col("l2").cast("double").as("s2"),
-            col("l11").cast("double").as("s11"),
-            col("l12").cast("double").as("s12"),
-            col("l22").cast("double").as("s22"),
-            (col("lyq").cast("double") / 100.0).as("sy"),
-            (col("l1yq").cast("double") / 100.0).as("s1y"),
-            (col("l2yq").cast("double") / 100.0).as("s2y"))
-          val det = det3(col("nn"), col("s1"), col("s2"),
-            col("s1"), col("s11"), col("s12"),
-            col("s2"), col("s12"), col("s22"))
-          val db0 = det3(col("sy"), col("s1"), col("s2"),
-            col("s1y"), col("s11"), col("s12"),
-            col("s2y"), col("s12"), col("s22"))
-          val db1 = det3(col("nn"), col("sy"), col("s2"),
-            col("s1"), col("s1y"), col("s12"),
-            col("s2"), col("s2y"), col("s22"))
-          val db2 = det3(col("nn"), col("s1"), col("sy"),
-            col("s1"), col("s11"), col("s1y"),
-            col("s2"), col("s12"), col("s2y"))
-          dd.select(col("event_type"), col("n_train"),
-            (db0 / det).as("b0"), (db1 / det).as("b1"),
-            (db2 / det).as("b2"))
-        }
         import graft.operators.ModelRegistry
         val era1 = ev.filter(col("ts") < timestamp_millis(lit(cut)))
-        val v1 = ModelRegistry.register(s, regPath, "ols", fit(era1))
-        val v2 = ModelRegistry.register(s, regPath, "ols", fit(ev))
+        val v1 = ModelRegistry.register(s, regPath, "ols", fitOls(era1))
+        val v2 = ModelRegistry.register(s, regPath, "ols", fitOls(ev))
         require(v1 == 1L && v2 == 2L,
           s"mlprep_registry: version assignment broke ($v1, $v2)")
         val listing = ModelRegistry.list(s, regPath)
@@ -4326,19 +3414,17 @@ object MlPrepQueries {
         val pred = col("b0") + col("b1") * col("x1").cast("double") +
           col("b2") * col("x2").cast("double")
         val scored = ev
-          .withColumn("x1", hour(col("ts")).cast("long"))
-          .withColumn("x2", dayofweek(col("ts")).cast("long"))
+          .withColumn("x1", x1)
+          .withColumn("x2", x2)
           .join(latest, Seq("event_type"))
-          .select(col("event_type"),
-            floor(pred * lit(1e6) + lit(0.5)).cast("long").as("pq"))
+          .select(col("event_type"), q(pred, 6).as("pq"))
           .groupBy("event_type")
           .agg(count(lit(1)).as("n_scored"), sum("pq").as("pred_sum_q"))
-        def q9(c: Column) = floor(c * lit(1e9) + lit(0.5)).cast("long")
         listing.join(broadcast(scored), Seq("event_type"), "left")
           .select(col("model_name"), col("version"), col("event_type"),
             col("n_train"),
-            q9(col("b0")).as("b0_q"), q9(col("b1")).as("b1_q"),
-            q9(col("b2")).as("b2_q"), col("is_latest"),
+            q(col("b0"), 9).as("b0_q"), q(col("b1"), 9).as("b1_q"),
+            q(col("b2"), 9).as("b2_q"), col("is_latest"),
             when(col("is_latest") === 1L, col("n_scored")).as("n_scored"),
             when(col("is_latest") === 1L, col("pred_sum_q"))
               .as("pred_sum_q"))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Sinks, Tables}
+import graft.{LinearFit, QueryDef, Sinks, Tables}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -1426,82 +1426,31 @@ object StreamingQueries {
     // a dropped restart all break the hash.
     QueryDef(
       "st15_stream_score",
-      Some {
-        def oDet3(a1: String, a2: String, a3: String,
-                  b1: String, b2: String, b3: String,
-                  c1: String, c2: String, c3: String): String =
-          s"($a1 * ($b2 * $c3 - $b3 * $c2) - " +
-          s"$a2 * ($b1 * $c3 - $b3 * $c1) + " +
-          s"$a3 * ($b1 * $c2 - $b2 * $c1))"
-        val det = oDet3("nn", "s1", "s2", "s1", "s11", "s12",
-          "s2", "s12", "s22")
-        val db0 = oDet3("sy", "s1", "s2", "s1y", "s11", "s12",
-          "s2y", "s12", "s22")
-        val db1 = oDet3("nn", "sy", "s2", "s1", "s1y", "s12",
-          "s2", "s2y", "s22")
-        val db2 = oDet3("nn", "s1", "sy", "s1", "s11", "s1y",
-          "s2", "s12", "s2y")
-        def fit(src: String, ver: Int): String =
-          s"""m$ver AS (
-             |  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-             |    CAST(sum(x1) AS BIGINT) AS l1,
-             |    CAST(sum(x2) AS BIGINT) AS l2,
-             |    CAST(sum(x1 * x1) AS BIGINT) AS l11,
-             |    CAST(sum(x1 * x2) AS BIGINT) AS l12,
-             |    CAST(sum(x2 * x2) AS BIGINT) AS l22,
-             |    CAST(sum(yq) AS BIGINT) AS lyq,
-             |    CAST(sum(x1 * yq) AS BIGINT) AS l1yq,
-             |    CAST(sum(x2 * yq) AS BIGINT) AS l2yq
-             |  FROM $src GROUP BY 1),
-             |d$ver AS (
-             |  SELECT event_type, CAST(n AS DOUBLE) AS nn,
-             |    CAST(l1 AS DOUBLE) AS s1, CAST(l2 AS DOUBLE) AS s2,
-             |    CAST(l11 AS DOUBLE) AS s11, CAST(l12 AS DOUBLE) AS s12,
-             |    CAST(l22 AS DOUBLE) AS s22,
-             |    CAST(lyq AS DOUBLE) / 100.0 AS sy,
-             |    CAST(l1yq AS DOUBLE) / 100.0 AS s1y,
-             |    CAST(l2yq AS DOUBLE) / 100.0 AS s2y
-             |  FROM m$ver),
-             |bb$ver AS (
-             |  SELECT event_type, CAST($ver AS BIGINT) AS model_version,
-             |    $db0 / $det AS b0, $db1 / $det AS b1, $db2 / $det AS b2
-             |  FROM d$ver)""".stripMargin
-        s"""WITH b AS (SELECT min(ts) AS t0, max(ts) AS t1 FROM events),
-           |k AS (SELECT (epoch_ms(t0) +
-           |  (epoch_ms(t1) - epoch_ms(t0) + 1) // 2) AS mid FROM b),
-           |c AS (SELECT mid - mid % 86400000 + 43200000 AS cut FROM k),
-           |f AS (
-           |  SELECT event_id, event_type, epoch_ms(ts) AS tms,
-           |    CAST(hour(ts) AS BIGINT) AS x1,
-           |    CAST(extract(dow FROM ts) + 1 AS BIGINT) AS x2,
-           |    value, ${graft.Parity.oLq("value")} AS yq
-           |  FROM events),
-           |f1 AS (SELECT f.* FROM f, c WHERE tms < cut),
-           |${fit("f1", 1)},
-           |${fit("f", 2)},
-           |bb AS (SELECT * FROM bb1 UNION ALL SELECT * FROM bb2),
-           |scored AS (
-           |  SELECT f.event_id, f.event_type,
-           |    CASE WHEN f.tms < c.cut THEN 1 ELSE 2 END AS era,
-           |    f.x1, f.x2, f.value
-           |  FROM f, c)
-           |SELECT s.event_id, s.event_type, bb.model_version,
-           |  CAST(floor((bb.b0 + bb.b1 * CAST(s.x1 AS DOUBLE)
-           |    + bb.b2 * CAST(s.x2 AS DOUBLE)) * 1.0e6 + 0.5e0)
-           |    AS BIGINT) AS pred_q,
-           |  CAST(floor((s.value - (bb.b0 + bb.b1 * CAST(s.x1 AS DOUBLE)
-           |    + bb.b2 * CAST(s.x2 AS DOUBLE))) * 1.0e6 + 0.5e0)
-           |    AS BIGINT) AS resid_q
-           |FROM scored s JOIN bb ON s.event_type = bb.event_type
-           |  AND s.era = bb.model_version""".stripMargin
-      },
+      Some(s"""WITH b AS (SELECT min(ts) AS t0, max(ts) AS t1 FROM events),
+              |k AS (SELECT (epoch_ms(t0) +
+              |  (epoch_ms(t1) - epoch_ms(t0) + 1) // 2) AS mid FROM b),
+              |c AS (SELECT mid - mid % 86400000 + 43200000 AS cut FROM k),
+              |f AS (
+              |  ${LinearFit.oFeatures("event_id", "event_type",
+                     "epoch_ms(ts) AS tms", "value")}),
+              |f1 AS (SELECT f.* FROM f, c WHERE tms < cut),
+              |${LinearFit.oFitOls("f1", 1)},
+              |${LinearFit.oFitOls("f", 2)},
+              |bb AS (SELECT * FROM bb1 UNION ALL SELECT * FROM bb2),
+              |scored AS (
+              |  SELECT f.event_id, f.event_type,
+              |    CASE WHEN f.tms < c.cut THEN 1 ELSE 2 END AS era,
+              |    f.x1, f.x2, f.value
+              |  FROM f, c)
+              |SELECT s.event_id, s.event_type, bb.version AS model_version,
+              |  ${LinearFit.oQ("bb.b0 + bb.b1 * CAST(s.x1 AS DOUBLE) + " +
+                     "bb.b2 * CAST(s.x2 AS DOUBLE)", 6)} AS pred_q,
+              |  ${LinearFit.oQ("s.value - (bb.b0 + bb.b1 * " +
+                     "CAST(s.x1 AS DOUBLE) + bb.b2 * CAST(s.x2 AS DOUBLE))",
+                     6)} AS resid_q
+              |FROM scored s JOIN bb ON s.event_type = bb.event_type
+              |  AND s.era = bb.version""".stripMargin),
       (s, d) => {
-        def det3(a1: Column, a2: Column, a3: Column,
-                 b1: Column, b2: Column, b3: Column,
-                 c1: Column, c2: Column, c3: Column): Column =
-          a1 * (b2 * c3 - b3 * c2) -
-          a2 * (b1 * c3 - b3 * c1) +
-          a3 * (b1 * c2 - b2 * c1)
         val base = Sinks.dir(s, "stream_score", d)
         reset(s, base)
         val srcDir = s"$base/src"
@@ -1519,63 +1468,24 @@ object StreamingQueries {
           col("ts") >= timestamp_millis(lit(cuts(k))) &&
             col("ts") < timestamp_millis(lit(cuts(k + 1))))
         // the mlprep_ols_normal fit as a publishable model table
-        def fit(df: DataFrame, ver: Int): DataFrame = {
-          val f = df.select(col("event_type"),
-            hour(col("ts")).cast("long").as("x1"),
-            dayofweek(col("ts")).cast("long").as("x2"),
-            graft.Parity.lq(col("value")).as("yq"))
-          val m = f.groupBy("event_type").agg(
-            count(lit(1)).as("n"),
-            sum("x1").as("l1"), sum("x2").as("l2"),
-            sum(col("x1") * col("x1")).as("l11"),
-            sum(col("x1") * col("x2")).as("l12"),
-            sum(col("x2") * col("x2")).as("l22"),
-            sum("yq").as("lyq"),
-            sum(col("x1") * col("yq")).as("l1yq"),
-            sum(col("x2") * col("yq")).as("l2yq"))
-          val dd = m.select(col("event_type"),
-            col("n").cast("double").as("nn"),
-            col("l1").cast("double").as("s1"),
-            col("l2").cast("double").as("s2"),
-            col("l11").cast("double").as("s11"),
-            col("l12").cast("double").as("s12"),
-            col("l22").cast("double").as("s22"),
-            (col("lyq").cast("double") / 100.0).as("sy"),
-            (col("l1yq").cast("double") / 100.0).as("s1y"),
-            (col("l2yq").cast("double") / 100.0).as("s2y"))
-          val det = det3(col("nn"), col("s1"), col("s2"),
-            col("s1"), col("s11"), col("s12"),
-            col("s2"), col("s12"), col("s22"))
-          val db0 = det3(col("sy"), col("s1"), col("s2"),
-            col("s1y"), col("s11"), col("s12"),
-            col("s2y"), col("s12"), col("s22"))
-          val db1 = det3(col("nn"), col("sy"), col("s2"),
-            col("s1"), col("s1y"), col("s12"),
-            col("s2"), col("s2y"), col("s22"))
-          val db2 = det3(col("nn"), col("s1"), col("sy"),
-            col("s1"), col("s11"), col("s1y"),
-            col("s2"), col("s12"), col("s2y"))
-          dd.select(col("event_type"),
-            lit(ver.toLong).as("model_version"),
-            (db0 / det).as("b0"), (db1 / det).as("b1"),
-            (db2 / det).as("b2"))
-        }
+        def fit(df: DataFrame, ver: Int): DataFrame = LinearFit.fitOls(df)
+          .select(col("event_type"), lit(ver.toLong).as("model_version"),
+            col("b0"), col("b1"), col("b2"))
         def runOnce(): Unit = withStreamPartitions(s, 8) {
           val model = broadcast(s.read.parquet(modelDir))
           val pred = col("b0") + col("b1") * col("x1").cast("double") +
             col("b2") * col("x2").cast("double")
-          val q = s.readStream
+          val query = s.readStream
             .schema(ev.schema)
             .option("maxFilesPerTrigger", "1")
             .parquet(srcDir)
-            .withColumn("x1", hour(col("ts")).cast("long"))
-            .withColumn("x2", dayofweek(col("ts")).cast("long"))
+            .withColumn("x1", LinearFit.x1)
+            .withColumn("x2", LinearFit.x2)
             .join(model, Seq("event_type"))
             .select(col("event_id"), col("event_type"),
               col("model_version"),
-              floor(pred * lit(1e6) + lit(0.5)).cast("long").as("pred_q"),
-              floor((col("value") - pred) * lit(1e6) + lit(0.5))
-                .cast("long").as("resid_q"))
+              LinearFit.q(pred, 6).as("pred_q"),
+              LinearFit.q(col("value") - pred, 6).as("resid_q"))
             .writeStream
             .format("parquet")
             .option("path", s"$base/sink")
@@ -1583,7 +1493,7 @@ object StreamingQueries {
             .outputMode("append")
             .trigger(Trigger.AvailableNow())
             .start()
-          q.awaitTermination()
+          query.awaitTermination()
         }
         // serve v1 (trained on the pre-cut slice) over era 1
         fit(chunk(0), 1).write.mode("overwrite").parquet(modelDir)

@@ -297,34 +297,48 @@ object StreamingOps {
     * key's rows in THIS micro-batch only. */
   def streamingTrend(points: Dataset[graft.operators.TrendEvents.PricePoint])
       : Dataset[graft.operators.TrendEvents.TrendEvent] = {
-    import graft.operators.TrendEvents.{PricePoint, TrendEvent, crossingFrom,
-      pctFrom}
+    import graft.operators.TrendEvents.{PricePoint, TrendEvent}
     import points.sparkSession.implicits._
     points.groupByKey(_.key)
       .flatMapGroupsWithState[TrendSegState, TrendEvent](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (key: Long, it: Iterator[PricePoint], state: GroupState[TrendSegState]) =>
-          val rows = it.toIndexedSeq.sortBy(p => (p.ts.getTime, p.ts.getNanos))
-          val out = scala.collection.mutable.ArrayBuffer.empty[TrendEvent]
-          var st = state.getOption.orNull
-          rows.foreach { p =>
-            if (st == null) {
-              st = TrendSegState(p.ts, p.price, p.price, p.price, 1)
-            } else {
-              val hi2 = math.max(st.hi, p.price)
-              val lo2 = math.min(st.lo, p.price)
-              if (crossingFrom(st.ref, p.price)) {
-                out += TrendEvent(key, st.refTs, p.ts, st.ref, hi2, lo2,
-                  p.price, pctFrom(st.ref, p.price), st.n + 1, closed = true)
-                st = TrendSegState(p.ts, p.price, p.price, p.price, 1)
-              } else {
-                st = TrendSegState(st.refTs, st.ref, hi2, lo2, st.n + 1)
-              }
-            }
-          }
-          if (st != null) state.update(st)
-          out.iterator
+          val (out, st) = trendStep(key, it, state.getOption)
+          st.foreach(state.update)
+          out
       }
+  }
+
+  /** One micro-batch of the trend state machine for `key`, shared by
+    * [[streamingTrend]] and [[TrendProcessor]]: the batch's rows sorted
+    * at full timestamp precision, run from the carried segment `prior`.
+    * Returns the segments the batch closed and the open segment to carry
+    * (None only when there was none and the batch was empty). */
+  private def trendStep(key: Long,
+      it: Iterator[graft.operators.TrendEvents.PricePoint],
+      prior: Option[TrendSegState])
+      : (Iterator[graft.operators.TrendEvents.TrendEvent],
+        Option[TrendSegState]) = {
+    import graft.operators.TrendEvents.{TrendEvent, crossingFrom, pctFrom}
+    val rows = it.toIndexedSeq.sortBy(p => (p.ts.getTime, p.ts.getNanos))
+    val out = scala.collection.mutable.ArrayBuffer.empty[TrendEvent]
+    var st = prior.orNull
+    rows.foreach { p =>
+      if (st == null) {
+        st = TrendSegState(p.ts, p.price, p.price, p.price, 1)
+      } else {
+        val hi2 = math.max(st.hi, p.price)
+        val lo2 = math.min(st.lo, p.price)
+        if (crossingFrom(st.ref, p.price)) {
+          out += TrendEvent(key, st.refTs, p.ts, st.ref, hi2, lo2,
+            p.price, pctFrom(st.ref, p.price), st.n + 1, closed = true)
+          st = TrendSegState(p.ts, p.price, p.price, p.price, 1)
+        } else {
+          st = TrendSegState(st.refTs, st.ref, hi2, lo2, st.n + 1)
+        }
+      }
+    }
+    (out.iterator, Option(st))
   }
 
   /** EXACTLY-ONCE streaming append into a [[graft.operators.SnapshotTable]]
@@ -371,8 +385,7 @@ object StreamingOps {
       extends org.apache.spark.sql.streaming.StatefulProcessor[
         Long, graft.operators.TrendEvents.PricePoint,
         graft.operators.TrendEvents.TrendEvent] {
-    import graft.operators.TrendEvents.{PricePoint, TrendEvent,
-      crossingFrom, pctFrom}
+    import graft.operators.TrendEvents.{PricePoint, TrendEvent}
     @transient private var seg:
         org.apache.spark.sql.streaming.ValueState[TrendSegState] = _
 
@@ -386,26 +399,10 @@ object StreamingOps {
     override def handleInputRows(key: Long, it: Iterator[PricePoint],
         tv: org.apache.spark.sql.streaming.TimerValues)
         : Iterator[TrendEvent] = {
-      val rows = it.toIndexedSeq.sortBy(p => (p.ts.getTime, p.ts.getNanos))
-      val out = scala.collection.mutable.ArrayBuffer.empty[TrendEvent]
-      var st = if (seg.exists()) seg.get() else null
-      rows.foreach { p =>
-        if (st == null) {
-          st = TrendSegState(p.ts, p.price, p.price, p.price, 1)
-        } else {
-          val hi2 = math.max(st.hi, p.price)
-          val lo2 = math.min(st.lo, p.price)
-          if (crossingFrom(st.ref, p.price)) {
-            out += TrendEvent(key, st.refTs, p.ts, st.ref, hi2, lo2,
-              p.price, pctFrom(st.ref, p.price), st.n + 1, closed = true)
-            st = TrendSegState(p.ts, p.price, p.price, p.price, 1)
-          } else {
-            st = TrendSegState(st.refTs, st.ref, hi2, lo2, st.n + 1)
-          }
-        }
-      }
-      if (st != null) seg.update(st)
-      out.iterator
+      val (out, st) = trendStep(key, it,
+        if (seg.exists()) Some(seg.get()) else None)
+      st.foreach(seg.update)
+      out
     }
   }
 

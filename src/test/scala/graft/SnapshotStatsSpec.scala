@@ -10,7 +10,10 @@ import org.apache.spark.sql.functions._
   *     pruned read + row filter ≡ full read + row filter (never loses
   *     rows);
   *   - files without stats are always kept (conservative);
-  *   - append commits preserve existing entries' stats verbatim. */
+  *   - append commits preserve existing entries' stats verbatim;
+  *   - stats come from the written files' parquet footers: recording them
+  *     launches no Spark job, dates record epoch days, and a column the
+  *     footer can't decide records nothing. */
 class SnapshotStatsSpec extends SparkSpec {
   import SnapshotTable._
 
@@ -96,5 +99,32 @@ class SnapshotStatsSpec extends SparkSpec {
       .inputFiles.length == 1)
     // pruned union still sees every row
     assert(readPruned(spark, t, "v", None, None).count() == 41)
+  }
+
+  test("recording stats launches no extra Spark job") {
+    val plain = jobsDuring(commit(spark, rangedDf, tbl()))
+    val withStats = jobsDuring(
+      commit(spark, rangedDf, tbl(), statsCols = Seq("id", "v")))
+    assert(withStats <= plain,
+      s"$withStats jobs with statsCols vs $plain without")
+  }
+
+  test("date stats are epoch days; undecidable columns record none") {
+    val s = spark
+    import s.implicits._
+    val t = tbl()
+    val df = Seq(("2024-01-02", 1.5), ("2024-01-09", 2.5)).toDF("d", "x")
+      .select(to_date(col("d")).as("day"), col("x")).coalesce(1)
+    commit(spark, df, t, statsCols = Seq("day", "x"))
+    val es = entries(spark, t)
+    assert(es.size == 1)
+    val day = java.time.LocalDate.parse(_: String).toEpochDay
+    assert(es.head.stats == Map("day" ->
+      (BigDecimal(day("2024-01-02")), BigDecimal(day("2024-01-09")))))
+    assert(readPruned(spark, t, "day", Some(BigDecimal(day("2024-01-10"))),
+      None).inputFiles.isEmpty)
+    // no stats for x: the file survives any range on it
+    assert(readPruned(spark, t, "x", Some(BigDecimal(100)), None)
+      .inputFiles.length == 1)
   }
 }
