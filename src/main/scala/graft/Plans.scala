@@ -416,15 +416,6 @@ object Plans {
       p.contains("BroadcastNestedLoopJoin") &&
         !p.contains("CartesianProduct") && !p.contains("SortMergeJoin")
     }
-    // pl20: manifest-stats pruning must actually skip files — the 5-day
-    // range over the 6-file range layout schedules ≤ 2 data files (file
-    // skipping happens at manifest-resolution time, before the plan, so
-    // the proof is the scheduled file list, not a plan string)
-    check("pl20: pruned scan schedules ≤ 2 of the 6 committed files") {
-      val files = qs("pl20_stats_pruned_scan")(spark, "/root/testdata/sf0.01")
-        .inputFiles.filter(_.contains("graft_snapstats"))
-      files.nonEmpty && files.length <= 2
-    }
     // mm2: the per-kind manifest rollup is ONE hash aggregate — the only
     // exchange is the |kinds|-row partial-agg shuffle (plus fanOut-free
     // scan), never a sort or join
@@ -539,23 +530,6 @@ object Plans {
       val p = planOf("sim11_kmeans_refine")
       !p.contains("CartesianProduct") && !p.contains("SortMergeJoin") &&
         !p.contains("hashpartitioning(vec_id")
-    }
-    // readMor's delete-vector subtraction: the key file is small by
-    // construction (matched keys, not data), so the anti-join must
-    // BROADCAST it onto the data scan — a shuffle anti-join would re-key
-    // the whole table to subtract a handful of keys
-    check("readMor: delete vectors subtract via broadcast anti-join") {
-      import graft.operators.SnapshotTable
-      import org.apache.spark.sql.functions.col
-      val t = java.nio.file.Files
-        .createTempDirectory("graft_plans_mor").toString + "/t"
-      SnapshotTable.commit(spark,
-        spark.range(0, 1000).toDF("id"), t)
-      SnapshotTable.deleteWhere(spark, t, "id", col("id") % 7 === 0)
-      val p = SnapshotTable.readMor(spark, t)
-        .queryExecution.executedPlan.toString
-      p.contains("BroadcastHashJoin") && p.contains("LeftAnti") &&
-        !p.contains("SortMergeJoin")
     }
     // sim12 holds sim11's invariant across every training round
     check("sim12: no corpus shuffle in any training round") {

@@ -8,7 +8,8 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * `durationMs` phases (triggerExecution, addBatch, getBatch/latestOffset,
   * walCommit, commitOffsets) plus state-store rows — the breakdown the
   * round-9 verdict asked for on st8_stream_gold, which had three rounds as
-  * board #1 without one.
+  * board #1 without one. `addBatch` is reported whole: a foreachBatch
+  * sink's body (st8's bronze write, gold refresh and merge) is one phase.
   *
   * Usage: SPARK_GRAFT_ONLY=st8_stream_gold [SPARK_GRAFT_REPS=2]
   *          [SPARK_GRAFT_CPUS=32] runMain graft.StreamProfile

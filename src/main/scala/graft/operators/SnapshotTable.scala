@@ -9,8 +9,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * MANIFEST (the exact data-file set of one committed version), so
   *
   *  - a reader holding version N is isolated from every later commit,
-  *    compaction, or overwrite (no torn reads mid-rewrite — the failure
-  *    mode `Compaction`'s directory swap documents);
+  *    compaction, or overwrite (no torn reads mid-rewrite, the failure
+  *    mode of a directory swap);
   *  - time travel is "read an older manifest";
   *  - concurrent writers serialize on an exclusive-create COMMIT LOCK
   *    (`java.nio` O_CREAT|O_EXCL on local filesystems — Hadoop's local
@@ -49,17 +49,18 @@ object SnapshotTable {
   private def manifestDir(tablePath: String) =
     new Path(tablePath, "_manifests")
 
-  private def manifestPath(tablePath: String, v: Int) =
-    new Path(manifestDir(tablePath), s"v$v.manifest")
+  /** Version `v`'s metadata file of one `kind`: `manifest`, `schema.json`,
+    * `deletes` or `time`. */
+  private def versionFile(tablePath: String, v: Int, kind: String) =
+    new Path(manifestDir(tablePath), s"v$v.$kind")
 
-  private def schemaPath(tablePath: String, v: Int) =
-    new Path(manifestDir(tablePath), s"v$v.schema.json")
-
-  private def dvPath(tablePath: String, v: Int) =
-    new Path(manifestDir(tablePath), s"v$v.deletes")
-
-  private def timePath(tablePath: String, v: Int) =
-    new Path(manifestDir(tablePath), s"v$v.time")
+  /** `version`, or the head when `None`; fails loudly on an empty table. */
+  private def resolve(spark: SparkSession, tablePath: String,
+                      version: Option[Int]): Int = version.getOrElse {
+    val vs = versions(spark, tablePath)
+    require(vs.nonEmpty, s"no committed snapshots at $tablePath")
+    vs.last
+  }
 
   /** The TABLE schema recorded at commit time for `version` (head when
     * `None`) — the Delta/Iceberg design: schema lives in table metadata,
@@ -70,12 +71,8 @@ object SnapshotTable {
   def tableSchema(spark: SparkSession, tablePath: String,
                   version: Option[Int] = None)
       : Option[org.apache.spark.sql.types.StructType] = {
-    val v = version.getOrElse {
-      val vs = versions(spark, tablePath)
-      require(vs.nonEmpty, s"no committed snapshots at $tablePath")
-      vs.last
-    }
-    val p = schemaPath(tablePath, v)
+    val p = versionFile(tablePath, resolve(spark, tablePath, version),
+      "schema.json")
     val f = fs(spark, p)
     if (!f.exists(p)) None
     else {
@@ -147,59 +144,51 @@ object SnapshotTable {
     }.toMap)
   }
 
-  private def readLines(spark: SparkSession, tablePath: String,
-                        v: Int): Seq[String] = {
-    val p = manifestPath(tablePath, v)
+  /** One version's manifest: the per-application transaction watermarks
+    * (Delta `txnAppId`/`txnVersion` semantics) and the data-file entry
+    * lines. On disk the watermarks are `#txn\tapp\tid` header lines, sorted
+    * by app and written before the entries (data paths never start with
+    * `#`); they ride IN the manifest, so every later version, maintenance
+    * commits included, carries them forward. */
+  private final case class Manifest(txns: Map[String, Long],
+                                    files: Seq[String]) {
+    def paths: Seq[String] = files.map(l => parseEntry(l).path)
+    def render: String =
+      (txns.toSeq.sortBy(_._1).map { case (a, i) => s"#txn\t$a\t$i" } ++
+        files).mkString("\n")
+  }
+
+  private def manifest(spark: SparkSession, tablePath: String,
+                       v: Int): Manifest = {
+    val p = versionFile(tablePath, v, "manifest")
     val f = fs(spark, p)
     require(f.exists(p), s"snapshot v$v does not exist (vacuumed or never " +
       s"committed) at $tablePath")
     val in = f.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8")
-      .getLines().filter(_.nonEmpty).toList
-    finally in.close()
-  }
-
-  /** Manifest lines can carry `#`-prefixed metadata headers (today:
-    * `#txn\tapp\tid` — the per-writer transaction watermark); data-file
-    * entries never start with `#` (paths are `data/...`). Parsers of
-    * FILE entries must go through this filter; verbatim manifest copies
-    * (deleteWhere, restore) keep the headers so the txn map carries
-    * forward through maintenance commits. */
-  private def dataLines(lines: Seq[String]): Seq[String] =
-    lines.filterNot(_.startsWith("#"))
-
-  /** The per-application transaction watermarks recorded in version
-    * `v`'s manifest (Delta `txnAppId`/`txnVersion` semantics). */
-  private def readTxns(spark: SparkSession, tablePath: String,
-                       v: Int): Map[String, Long] =
-    readLines(spark, tablePath, v).collect {
-      case l if l.startsWith("#txn\t") =>
+    val lines =
+      try scala.io.Source.fromInputStream(in, "UTF-8")
+        .getLines().filter(_.nonEmpty).toList
+      finally in.close()
+    Manifest(lines.collect { case l if l.startsWith("#txn\t") =>
         val Array(_, app, id) = l.split("\t", 3)
         app -> id.toLong
-    }.toMap
+      }.toMap,
+      lines.filterNot(_.startsWith("#")))
+  }
 
   /** The latest transaction id committed by writer `app`, if any — the
     * streaming sink's restart question ("has this batch landed?"). */
   def txnVersion(spark: SparkSession, tablePath: String,
                  app: String): Option[Long] =
     versions(spark, tablePath).lastOption
-      .flatMap(v => readTxns(spark, tablePath, v).get(app))
-
-  private def readManifest(spark: SparkSession, tablePath: String,
-                           v: Int): Seq[String] =
-    dataLines(readLines(spark, tablePath, v)).map(l => parseEntry(l).path)
+      .flatMap(v => manifest(spark, tablePath, v).txns.get(app))
 
   /** The version's file entries with their stats (`version = None` →
     * head). */
   def entries(spark: SparkSession, tablePath: String,
-              version: Option[Int] = None): Seq[FileEntry] = {
-    val v = version.getOrElse {
-      val vs = versions(spark, tablePath)
-      require(vs.nonEmpty, s"no committed snapshots at $tablePath")
-      vs.last
-    }
-    dataLines(readLines(spark, tablePath, v)).map(parseEntry)
-  }
+              version: Option[Int] = None): Seq[FileEntry] =
+    manifest(spark, tablePath, resolve(spark, tablePath, version)).files
+      .map(parseEntry)
 
   /** How long a commit lock may sit before another writer may presume
     * its holder dead and steal it. Lock holders only do manifest-sized
@@ -231,15 +220,17 @@ object SnapshotTable {
   /** Run `body` under the table's commit lock (atomic-create file lock
     * with stale-holder recovery) — the serialization point every commit
     * flavor shares. `body` receives the filesystem and must itself read
-    * the CURRENT head (versions may have advanced while waiting). */
+    * the CURRENT head (versions may have advanced while waiting). A writer
+    * waits up to twice the staleness horizon: long enough to see a
+    * crashed holder's lock go stale and steal it, after which a lock that
+    * is still held means a live writer storm, reported loudly. */
   private def withCommitLock[T](spark: SparkSession, tablePath: String)(
       body: org.apache.hadoop.fs.FileSystem => T): T = {
     val f = fs(spark, manifestDir(tablePath))
     f.mkdirs(manifestDir(tablePath))
     val lock = new Path(manifestDir(tablePath), "_commit.lock")
-    var attempts = 0
-    while (attempts < 500) {
-      attempts += 1
+    val start = System.currentTimeMillis()
+    while (System.currentTimeMillis() - start < 2 * LockStaleMs) {
       if (tryLock(f, lock)) {
         try return body(f) finally f.delete(lock, false)
       } else {
@@ -255,21 +246,31 @@ object SnapshotTable {
       }
     }
     throw new IllegalStateException(
-      s"commit contention: lock not acquired after 500 attempts at " +
-        tablePath)
+      s"commit contention at $tablePath: lock not acquired after waiting " +
+        s"${System.currentTimeMillis() - start} ms")
   }
 
-  /** The manifest entries of the data files staged under `dataDir`,
-    * each with its footer's min/max of every `statsCols` column
+  /** The data files one commit wrote: its id, their directory and their
+    * manifest entry lines. */
+  private final case class Staged(commitId: String, dir: Path,
+                                  files: Seq[String])
+
+  /** The stage step of every data-writing commit: write `df` ONCE, outside
+    * the lock, under `data/<commitId>/`, then render each file's manifest
+    * entry with its footer's min/max of every `statsCols` column
     * ([[ListedParquet.footerRanges]]: integers as-is, dates as epoch
     * days). A column the footer can't decide (other types, all nulls,
     * missing statistics) records no stats, and such files are never
     * pruned. */
-  private def stagedEntries(spark: SparkSession, dataDir: Path,
-                            commitId: String,
-                            statsCols: Seq[String]): Seq[String] = {
+  private def stage(spark: SparkSession, df: DataFrame, tablePath: String,
+                    statsCols: Seq[String]): Staged = {
+    require(statsCols.forall(c => !c.contains("\t") && !c.contains("=")),
+      "stats column names must not contain tab or '='")
+    val commitId = java.util.UUID.randomUUID().toString
+    val dir = new Path(new Path(tablePath, "data"), commitId)
+    df.write.parquet(dir.toString)
     val conf = spark.sparkContext.hadoopConfiguration
-    fs(spark, dataDir).listStatus(dataDir).toSeq
+    Staged(commitId, dir, fs(spark, dir).listStatus(dir).toSeq
       .filter(_.getPath.getName.endsWith(".parquet"))
       .map { st =>
         val stats =
@@ -280,118 +281,144 @@ object SnapshotTable {
           }
         renderEntry(FileEntry(s"data/$commitId/${st.getPath.getName}",
           stats))
-      }
+      })
   }
 
-  /** Commit `df` as the next version. `replace = true` makes the new
-    * manifest exactly this commit's files (overwrite semantics);
-    * `replace = false` appends them to the current head's file set
-    * (existing entries keep their stats verbatim). `statsCols` names
-    * columns whose per-file min/max land in the manifest for
-    * [[readPruned]] file skipping. Returns the committed version. Data
-    * files are written ONCE, outside the lock; only the version
-    * assignment and manifest publish — pure metadata — are serialized. */
-  /** `txn = Some((app, id))` makes the commit IDEMPOTENT per writer
-    * (Delta's `txnAppId`/`txnVersion`): if the head manifest already
-    * records a transaction ≥ `id` for `app`, the commit is a no-op that
-    * returns the head version and reclaims its staged files — the
-    * exactly-once contract a restarted streaming foreachBatch needs
-    * (the replayed batch must not append twice). The watermark rides IN
-    * the manifest line set, so "txn recorded" and "data visible" are
-    * one atomic rename — there is no crash window where one exists
-    * without the other — and verbatim manifest copies (deleteWhere,
-    * restore) carry it through maintenance commits. */
-  /** `expectedHead = Some(v)` makes the commit CONDITIONAL (the
-    * compare-and-swap every table format's REPLACE/OVERWRITE needs):
-    * under the commit lock, if the head version is not exactly `v`
-    * (0 = empty table), the staged files are reclaimed and
-    * [[java.util.ConcurrentModificationException]] is thrown instead of
-    * publishing — a maintenance rewrite derived from a snapshot read can
-    * then never erase a commit that landed after that read; the caller
-    * re-reads and retries. */
+  /** What a publish writes as the next version: its manifest, its schema
+    * sidecar and at most one more sidecar, `(kind, text)` (`time` or
+    * `deletes`). */
+  private final case class NextVersion(
+      manifest: Manifest,
+      schema: Option[org.apache.spark.sql.types.StructType],
+      sidecar: Option[(String, String)] = None)
+
+  /** The one publish step every version goes through (commit,
+    * commitAudited, deleteWhere, restoreSnapshot, cloneSnapshot). Under
+    * the commit lock it reads the head (its version and its manifest,
+    * once) and asks `next` for the new version; `None` publishes nothing
+    * and returns the head (a replayed transaction). Version v = head + 1
+    * is then written in this order:
+    *  1. the schema sidecar — a manifest must never be visible without
+    *     its schema (readers discover versions by manifest);
+    *  2. the time or delete-vector sidecar, if any — a reader that can
+    *     see v must also see v's place on the time axis and v's deletes;
+    *  3. the manifest (`#txn` lines, then data lines) to
+    *     `.tmp-<commitId>-<v>`;
+    *  4. its rename to `v<v>.manifest`: under the lock the destination
+    *     cannot exist, and the rename gives readers atomic visibility.
+    *     Data and watermarks land in that one rename, so there is no crash
+    *     window where one is visible without the other. */
+  private def publish(spark: SparkSession, tablePath: String,
+                      commitId: String)(
+      next: (Option[Int], Manifest) => Option[NextVersion]): Int =
+    withCommitLock(spark, tablePath) { f =>
+      val head = versions(spark, tablePath).lastOption
+      next(head, head.fold(Manifest(Map.empty, Nil))(
+          manifest(spark, tablePath, _))) match {
+        case None => head.get
+        case Some(nv) =>
+          val v = head.getOrElse(0) + 1
+          def put(p: Path, text: String, overwrite: Boolean): Unit = {
+            val out = f.create(p, overwrite)
+            try out.write(text.getBytes("UTF-8")) finally out.close()
+          }
+          nv.schema.foreach(sch =>
+            put(versionFile(tablePath, v, "schema.json"), sch.json, true))
+          nv.sidecar.foreach { case (kind, text) =>
+            put(versionFile(tablePath, v, kind), text, true) }
+          val tmp = new Path(manifestDir(tablePath), s".tmp-$commitId-$v")
+          put(tmp, nv.manifest.render, false)
+          require(f.rename(tmp, versionFile(tablePath, v, "manifest")),
+            s"manifest publish failed for v$v at $tablePath")
+          v
+      }
+    }
+
+  /** Commit `df` as the next version and return that version. Data files
+    * are written ONCE, outside the lock; only the version assignment and
+    * manifest publish — pure metadata — are serialized.
+    *
+    *  - `replace = true` makes the new manifest exactly this commit's
+    *    files (overwrite semantics); `replace = false` appends them to the
+    *    current head's file set (existing entries keep their stats
+    *    verbatim).
+    *  - `statsCols` names columns whose per-file min/max land in the
+    *    manifest for [[readPruned]] file skipping.
+    *  - `txn = Some((app, id))` makes the commit IDEMPOTENT per writer
+    *    (Delta's `txnAppId`/`txnVersion`): if the head manifest already
+    *    records a transaction ≥ `id` for `app`, the commit is a no-op
+    *    that returns the head version and reclaims its staged files — the
+    *    exactly-once contract a restarted streaming foreachBatch needs
+    *    (the replayed batch must not append twice).
+    *  - `expectedHead = Some(v)` makes the commit CONDITIONAL (the
+    *    compare-and-swap every table format's REPLACE/OVERWRITE needs):
+    *    under the commit lock, if the head version is not exactly `v`
+    *    (0 = empty table), the staged files are reclaimed and
+    *    [[java.util.ConcurrentModificationException]] is thrown instead
+    *    of publishing — a maintenance rewrite derived from a snapshot read
+    *    can then never erase a commit that landed after that read; the
+    *    caller re-reads and retries. */
   def commit(spark: SparkSession, df: DataFrame, tablePath: String,
              replace: Boolean = true,
              statsCols: Seq[String] = Seq.empty,
              commitTime: Option[Long] = None,
              txn: Option[(String, Long)] = None,
              expectedHead: Option[Int] = None): Int = {
-    require(statsCols.forall(c => !c.contains("\t") && !c.contains("=")),
-      "stats column names must not contain tab or '='")
     require(txn.forall { case (app, _) =>
       !app.contains("\t") && !app.contains("\n") },
       "txn app id must not contain tab or newline")
-    val commitId = java.util.UUID.randomUUID().toString
     // pre-flight the evolution check BEFORE writing data files so an
     // incompatible append fails without leaving an orphan data dir (the
-    // authoritative check re-runs under the commit lock below)
+    // authoritative check re-runs under the commit lock)
     if (!replace) versions(spark, tablePath).lastOption.foreach { h =>
       tableSchema(spark, tablePath, Some(h))
         .foreach(old => evolve(old, asNullable(df.schema)))
     }
-    val dataDir = new Path(new Path(tablePath, "data"), commitId)
-    df.write.parquet(dataDir.toString)
-    val newFiles = stagedEntries(spark, dataDir, commitId, statsCols)
-    withCommitLock(spark, tablePath) { f =>
-      val head = versions(spark, tablePath).lastOption
+    publishStaged(spark, df.schema, tablePath,
+      stage(spark, df, tablePath, statsCols), replace, commitTime, txn,
+      expectedHead)
+  }
+
+  /** The publish half of [[commit]] for files already staged from a frame
+    * of schema `dfSchema`. */
+  private def publishStaged(spark: SparkSession,
+                            dfSchema: org.apache.spark.sql.types.StructType,
+                            tablePath: String, staged: Staged,
+                            replace: Boolean,
+                            commitTime: Option[Long] = None,
+                            txn: Option[(String, Long)] = None,
+                            expectedHead: Option[Int] = None): Int = {
+    def reclaim(): Unit = fs(spark, staged.dir).delete(staged.dir, true)
+    publish(spark, tablePath, staged.commitId) { (head, m) =>
       expectedHead.foreach { e =>
         if (head.getOrElse(0) != e) {
-          f.delete(dataDir, true) // reclaim staged files before failing
+          reclaim() // reclaim staged files before failing
           throw new java.util.ConcurrentModificationException(
             s"conditional commit at $tablePath expected head v$e but " +
               s"found v${head.getOrElse(0)} — a commit landed after the " +
               "caller's snapshot read; re-read and retry")
         }
       }
-      val headTxns = head.map(readTxns(spark, tablePath, _))
-        .getOrElse(Map.empty[String, Long])
-      val replayed = txn.exists { case (app, id) =>
-        headTxns.get(app).exists(_ >= id) }
-      if (replayed) {
+      if (txn.exists { case (app, id) => m.txns.get(app).exists(_ >= id) }) {
         // already applied (a restarted writer re-offering an old batch):
         // reclaim the staged files, leave the table untouched
-        f.delete(dataDir, true)
-        head.get
+        reclaim()
+        None
       } else {
-      val base =
-        if (replace) Seq.empty
-        else head.map(l => dataLines(readLines(spark, tablePath, l)))
-          .getOrElse(Seq.empty)
-      val txnLines = (headTxns ++ txn).toSeq.sortBy(_._1)
-        .map { case (a, i) => s"#txn\t$a\t$i" }
-      val v = head.getOrElse(0) + 1
-      // version schema: replace takes the frame's schema; append
-      // evolves the prior version's recorded schema (falling back to
-      // one footer-inferred read for pre-tracking tables)
-      val schema =
-        if (replace || base.isEmpty) asNullable(df.schema)
-        else {
-          val old = tableSchema(spark, tablePath, head)
-            .getOrElse(asNullable(spark.read.parquet(
-              base.map(l => new Path(tablePath,
-                parseEntry(l).path).toString): _*).schema))
-          evolve(old, asNullable(df.schema))
-        }
-      // schema sidecar FIRST: a manifest must never be visible
-      // without its schema (readers discover versions by manifest)
-      val so = f.create(schemaPath(tablePath, v), true)
-      try so.write(schema.json.getBytes("UTF-8")) finally so.close()
-      val tmp = new Path(manifestDir(tablePath), s".tmp-$commitId-$v")
-      val out = f.create(tmp, false)
-      try out.write((txnLines ++ base ++ newFiles)
-        .mkString("\n").getBytes("UTF-8"))
-      finally out.close()
-      // commit-time sidecar BEFORE the manifest publish: a version must
-      // never be visible without its place on the time axis (mirrors the
-      // schema-sidecar-first rule above)
-      commitTime.foreach { t =>
-        val to = f.create(timePath(tablePath, v), true)
-        try to.write(t.toString.getBytes("UTF-8")) finally to.close()
-      }
-      // under the lock the destination cannot exist; rename gives
-      // readers atomic manifest visibility
-      require(f.rename(tmp, manifestPath(tablePath, v)),
-        s"manifest publish failed for v$v at $tablePath")
-      v
+        val base = if (replace) Nil else m.files
+        // version schema: replace takes the frame's schema; append
+        // evolves the prior version's recorded schema (falling back to
+        // one footer-inferred read for pre-tracking tables)
+        val schema =
+          if (base.isEmpty) asNullable(dfSchema)
+          else {
+            val old = tableSchema(spark, tablePath, head)
+              .getOrElse(asNullable(spark.read.parquet(
+                m.paths.map(new Path(tablePath, _).toString): _*).schema))
+            evolve(old, asNullable(dfSchema))
+          }
+        Some(NextVersion(Manifest(m.txns ++ txn, base ++ staged.files),
+          Some(schema), commitTime.map(t => "time" -> t.toString)))
       }
     }
   }
@@ -399,7 +426,7 @@ object SnapshotTable {
   /** The logical commit time recorded for `version`, if any. */
   def commitTimeOf(spark: SparkSession, tablePath: String,
                    version: Int): Option[Long] = {
-    val p = timePath(tablePath, version)
+    val p = versionFile(tablePath, version, "time")
     val f = fs(spark, p)
     if (!f.exists(p)) None
     else {
@@ -442,12 +469,8 @@ object SnapshotTable {
     * compactions, or vacuums of OTHER versions cannot change or tear it. */
   def read(spark: SparkSession, tablePath: String,
            version: Option[Int] = None): DataFrame = {
-    val v = version.getOrElse {
-      val vs = versions(spark, tablePath)
-      require(vs.nonEmpty, s"no committed snapshots at $tablePath")
-      vs.last
-    }
-    readFiles(spark, tablePath, v, readManifest(spark, tablePath, v))
+    val v = resolve(spark, tablePath, version)
+    readFiles(spark, tablePath, v, manifest(spark, tablePath, v).paths)
   }
 
   /** The manifest-relative data files `rels` of version `v`, read under
@@ -474,15 +497,11 @@ object SnapshotTable {
     * `colName` are always kept (conservative), so the pruned read +
     * the caller's row-level filter is ALWAYS equivalent to the full
     * read + filter. `None` bounds are open. Date columns compare as
-    * epoch days (the [[stagedEntries]] encoding). */
+    * epoch days (the [[stage]] encoding). */
   def readPruned(spark: SparkSession, tablePath: String, colName: String,
                  lower: Option[BigDecimal], upper: Option[BigDecimal],
                  version: Option[Int] = None): DataFrame = {
-    val v = version.getOrElse {
-      val vs = versions(spark, tablePath)
-      require(vs.nonEmpty, s"no committed snapshots at $tablePath")
-      vs.last
-    }
+    val v = resolve(spark, tablePath, version)
     val kept = entries(spark, tablePath, Some(v)).filter { e =>
       e.stats.get(colName) match {
         case None => true
@@ -497,15 +516,6 @@ object SnapshotTable {
     } else readFiles(spark, tablePath, v, kept.map(_.path))
   }
 
-  /** Compaction as a COMMIT: rewrite the head's rows into
-    * ~`targetBytes`-sized files and publish them as the next version.
-    * Because readers pin manifests, there is NO swap window at all — the
-    * structural fix for the rename-pair hazard the directory-based
-    * [[Compaction]] has to roll back from: old readers keep the old
-    * manifest's files (still on disk until vacuum), new readers get the
-    * compacted set, and a crash mid-rewrite leaves an orphan data dir
-    * that no manifest references (vacuum-able garbage, never a broken
-    * table). Returns the committed version. */
   /** Bounded retry around a conditional (expectedHead) commit: every
     * read-modify-write maintenance writer publishes through this so a
     * commit landing between its snapshot read and its publish is NEVER
@@ -531,9 +541,20 @@ object SnapshotTable {
     throw new IllegalStateException("unreachable")
   }
 
+  /** Compact the head as a COMMIT: rewrite its rows into
+    * ceil(bytes / `targetBytes`) files (sized by bytes, never a guessed
+    * constant; the round-robin repartition evens the file sizes) and
+    * publish them as the next version. Because readers pin manifests,
+    * there is NO swap window at all — the structural fix for the
+    * rename-pair hazard of a directory-swap compaction: old readers keep
+    * the old manifest's files (still on disk until vacuum), new readers
+    * get the compacted set, and a crash mid-rewrite leaves an orphan data
+    * dir that no manifest references (vacuum-able garbage, never a broken
+    * table). Returns the committed version. */
   def compactSnapshot(spark: SparkSession, tablePath: String,
                       targetBytes: Long = 128L * 1024 * 1024,
-                      onBeforePublish: () => Unit = () => ()): Int =
+                      onBeforePublish: () => Unit = () => ()): Int = {
+    require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
     // CAS, like every writer whose output is DERIVED from a snapshot
     // read: a replace commit published unconditionally would erase any
     // commit that landed between this compaction's read and its publish.
@@ -541,11 +562,9 @@ object SnapshotTable {
     // idempotent maintenance — repeating it is safe and cheap relative
     // to losing a data commit).
     retryCas() {
-      val head = versions(spark, tablePath).lastOption
-        .getOrElse(throw new IllegalArgumentException(
-          s"no committed snapshots at $tablePath"))
+      val head = resolve(spark, tablePath, None)
       val f = fs(spark, new Path(tablePath))
-      val totalBytes = readManifest(spark, tablePath, head)
+      val totalBytes = manifest(spark, tablePath, head).paths
         .map(rel => f.getFileStatus(new Path(tablePath, rel)).getLen).sum
       val nFiles = math.max(1, math.ceil(
         totalBytes.toDouble / targetBytes).toInt)
@@ -559,19 +578,34 @@ object SnapshotTable {
       commit(spark, rewritten, tablePath, replace = true,
         expectedHead = Some(head))
     }
+  }
 
-  /** Source-wins MERGE as a commit (the SCD-1 upsert of
+  /** Source-wins MERGE as a commit (Delta `WHEN MATCHED UPDATE / WHEN NOT
+    * MATCHED INSERT`, the SCD-1 upsert of
     * [[MergeUpsert.upsertPartitioned]], snapshot flavor): target rows
-    * losing a key conflict are replaced by source rows, everything else
-    * survives, and the result is the next version — readers see the old
-    * or the new table, never a mix. Duplicate source keys collapse to the
-    * first row by `orderCol` (deterministic, like the partitioned path).
+    * losing a key conflict are replaced by source rows, new keys insert,
+    * and the result is the next version — readers see the old or the new
+    * table, never a mix. Duplicate source keys collapse to the first row
+    * by `orderCol` (deterministic, like the partitioned path).
+    *
+    * `scope` adds the third clause, `WHEN NOT MATCHED BY SOURCE DELETE`:
+    * the source declares itself the complete truth for the target rows
+    * satisfying `scope`, so in-scope rows it no longer carries are
+    * DELETED. The default `lit(false)` deletes nothing (Catalyst folds the
+    * keep-filter away). The clause is bounded the way every production
+    * full-sync bounds it (Delta's `notMatchedBySource.delete(condition)`):
+    * an UNSCOPED delete turns every incremental sync into a full-table
+    * truncate-load — any row the batch didn't mention would vanish.
+    *
     * At scale the rewrite would keep manifest entries for files whose
     * min/max key stats prove them untouched (file-level COW); here every
-    * file is rewritten — the manifest mechanics are identical. */
+    * file is rewritten in one scan of the current snapshot — the manifest
+    * mechanics are identical. */
   def upsertSnapshot(spark: SparkSession, source: DataFrame,
                      tablePath: String, keyCols: Seq[String],
                      orderCol: String,
+                     scope: org.apache.spark.sql.Column =
+                       org.apache.spark.sql.functions.lit(false),
                      onBeforePublish: () => Unit = () => ()): Int = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
@@ -590,52 +624,9 @@ object SnapshotTable {
         case None => deduped
         case Some(v) =>
           // readMor: the merge base must honor delete vectors, or the
-          // rewrite would resurrect deleted rows (see compactSnapshot)
-          readMor(spark, tablePath, Some(v))
-            .join(deduped.select(keyCols.map(col): _*), keyCols,
-              "left_anti")
-            .unionByName(deduped)
-      }
-      onBeforePublish()
-      commit(spark, merged, tablePath, replace = true,
-        expectedHead = Some(head.getOrElse(0)))
-    }
-  }
-
-  /** The three-clause MERGE (Delta `WHEN MATCHED UPDATE / WHEN NOT
-    * MATCHED INSERT / WHEN NOT MATCHED BY SOURCE DELETE`): the source
-    * declares itself the complete truth for the rows satisfying `scope`,
-    * so target rows IN scope that the source no longer carries are
-    * DELETED, matched keys take the source row (anywhere), and new keys
-    * insert — one atomic commit.
-    *
-    * `scope` bounds the delete clause the way every production
-    * full-sync does (Delta's `notMatchedBySource.delete(condition)`):
-    * an UNSCOPED not-matched-by-source delete turns every incremental
-    * sync into a full-table truncate-load — any row the batch didn't
-    * mention would vanish. At 100 TB the `!scope` keep-filter and the
-    * key anti-join are one scan of the current snapshot; untouched
-    * rows are rewritten only at file granularity (the same
-    * copy-on-write cost upsertSnapshot pays).
-    */
-  def fullSync(spark: SparkSession, source: DataFrame, tablePath: String,
-               keyCols: Seq[String], orderCol: String,
-               scope: org.apache.spark.sql.Column,
-               onBeforePublish: () => Unit = () => ()): Int = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col(orderCol))
-    val deduped = source.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-    // same CAS discipline as upsertSnapshot: the merge base is a
-    // snapshot read, so publish conditionally and re-merge on contention
-    retryCas() {
-      val head = versions(spark, tablePath).lastOption
-      val merged = head match {
-        case None => deduped
-        case Some(v) =>
-          // in-scope survivors must come from the source alone; out-of-
-          // scope rows survive unless the source updates their key
+          // rewrite would resurrect deleted rows (see compactSnapshot).
+          // In-scope survivors come from the source alone; out-of-scope
+          // rows survive unless the source updates their key.
           readMor(spark, tablePath, Some(v))
             .filter(!scope)
             .join(deduped.select(keyCols.map(col): _*), keyCols,
@@ -662,7 +653,7 @@ object SnapshotTable {
       v < keepFrom && !pinned.contains(v))
     require(kept.nonEmpty, s"vacuum would delete every snapshot " +
       s"(keepFrom=$keepFrom, versions=${all.mkString(",")})")
-    val keepFiles = kept.flatMap(readManifest(spark, tablePath, _)).toSet
+    val keepFiles = kept.flatMap(manifest(spark, tablePath, _).paths).toSet
     val f = fs(spark, new Path(tablePath))
     // ownership guard: a manifest entry may reference a file OUTSIDE
     // this table (a shallow clone borrows the source's files by
@@ -673,13 +664,13 @@ object SnapshotTable {
       f.makeQualified(p).toString.startsWith(root + "/")
     var deleted = 0
     expired.foreach { v =>
-      readManifest(spark, tablePath, v).foreach { rel =>
+      manifest(spark, tablePath, v).paths.foreach { rel =>
         val p = new Path(tablePath, rel)
         if (!keepFiles.contains(rel) && owned(p) &&
             f.delete(p, false)) deleted += 1
       }
-      f.delete(manifestPath(tablePath, v), false)
-      f.delete(schemaPath(tablePath, v), false)
+      f.delete(versionFile(tablePath, v, "manifest"), false)
+      f.delete(versionFile(tablePath, v, "schema.json"), false)
     }
     deleted
   }
@@ -749,13 +740,9 @@ object SnapshotTable {
   def readAppendsSince(spark: SparkSession, tablePath: String,
                        sinceVersion: Int,
                        toVersion: Option[Int] = None): DataFrame = {
-    val to = toVersion.getOrElse {
-      val vs = versions(spark, tablePath)
-      require(vs.nonEmpty, s"no committed snapshots at $tablePath")
-      vs.last
-    }
-    val oldFiles = readManifest(spark, tablePath, sinceVersion).toSet
-    val newFiles = readManifest(spark, tablePath, to)
+    val to = resolve(spark, tablePath, toVersion)
+    val oldFiles = manifest(spark, tablePath, sinceVersion).paths.toSet
+    val newFiles = manifest(spark, tablePath, to).paths
     val missing = oldFiles -- newFiles.toSet
     require(missing.isEmpty,
       s"not an append-only chain: v$sinceVersion file(s) " +
@@ -780,7 +767,7 @@ object SnapshotTable {
     val dataRoot = new Path(tablePath, "data")
     if (!f.exists(dataRoot)) return 0
     val referenced = versions(spark, tablePath)
-      .flatMap(readManifest(spark, tablePath, _)).toSet
+      .flatMap(manifest(spark, tablePath, _).paths).toSet
     val horizon = System.currentTimeMillis() - olderThanMs
     var deleted = 0
     // commit-dir granularity: a writer produces exactly one dir per
@@ -823,7 +810,7 @@ object SnapshotTable {
         n.stripPrefix("v").stripSuffix(".deletes").toInt }
       .sorted
       .map { v =>
-        val p = dvPath(tablePath, v)
+        val p = versionFile(tablePath, v, "deletes")
         val in = f.open(p)
         val lines =
           try scala.io.Source.fromInputStream(in, "UTF-8")
@@ -856,35 +843,14 @@ object SnapshotTable {
     * harmless, and GC-able with the expired manifests. */
   def deleteWhere(spark: SparkSession, tablePath: String, keyCol: String,
                   predicate: org.apache.spark.sql.Column): Int = {
-    val vs = versions(spark, tablePath)
-    require(vs.nonEmpty, s"no committed snapshots at $tablePath")
     val commitId = java.util.UUID.randomUUID().toString
     val dvDir = new Path(new Path(tablePath, "deletes"), commitId)
-    readMor(spark, tablePath, Some(vs.last)).filter(predicate)
+    readMor(spark, tablePath).filter(predicate)
       .select(keyCol).distinct().write.parquet(dvDir.toString)
-    withCommitLock(spark, tablePath) { f =>
-      val head = versions(spark, tablePath).last
-      val base = readLines(spark, tablePath, head)
-      val v = head + 1
-      tableSchema(spark, tablePath, Some(head)).foreach { sch =>
-        val so = f.create(schemaPath(tablePath, v), true)
-        try so.write(sch.json.getBytes("UTF-8")) finally so.close()
-      }
-      // DV sidecar BEFORE the manifest: a reader that can see v's
-      // manifest must be able to see v's deletes
-      val dp = f.create(dvPath(tablePath, v), true)
-      try dp.write(
-        (s"$keyCol\tdeletes/$commitId" +:
-          dataLines(base).map(l => parseEntry(l).path))
-          .mkString("\n").getBytes("UTF-8"))
-      finally dp.close()
-      val tmp = new Path(manifestDir(tablePath), s".tmp-$commitId-$v")
-      val out = f.create(tmp, false)
-      try out.write(base.mkString("\n").getBytes("UTF-8"))
-      finally out.close()
-      require(f.rename(tmp, manifestPath(tablePath, v)),
-        s"manifest publish failed for v$v at $tablePath")
-      v
+    publish(spark, tablePath, commitId) { (head, base) =>
+      Some(NextVersion(base, tableSchema(spark, tablePath, head),
+        Some("deletes" -> (s"$keyCol\tdeletes/$commitId" +: base.paths)
+          .mkString("\n"))))
     }
   }
 
@@ -901,43 +867,17 @@ object SnapshotTable {
                     audit: DataFrame => Option[String],
                     statsCols: Seq[String] = Seq.empty)
       : Either[String, Int] = {
-    require(statsCols.forall(c => !c.contains("\t") && !c.contains("=")),
-      "stats column names must not contain tab or '='")
-    val commitId = java.util.UUID.randomUUID().toString
-    val dataDir = new Path(new Path(tablePath, "data"), commitId)
-    df.write.parquet(dataDir.toString)
-    val f = fs(spark, dataDir)
-    val staged = spark.read.schema(asNullable(df.schema))
-      .parquet(dataDir.toString)
-    audit(staged) match {
+    val staged = stage(spark, df, tablePath, statsCols)
+    audit(spark.read.schema(asNullable(df.schema))
+        .parquet(staged.dir.toString)) match {
       case Some(err) =>
-        f.delete(dataDir, true)
+        fs(spark, staged.dir).delete(staged.dir, true)
         Left(err)
+      // the publish carries the head's per-writer txn watermarks: a WAP
+      // publish replaces the DATA, not the writers' exactly-once history
       case None =>
-        val newFiles = stagedEntries(spark, dataDir, commitId, statsCols)
-        Right(withCommitLock(spark, tablePath) { ff =>
-          val head = versions(spark, tablePath).lastOption
-          val v = head.getOrElse(0) + 1
-          // carry the head's per-writer txn watermarks: a WAP publish
-          // replaces the DATA, not the writers' exactly-once history —
-          // dropping the #txn lines here would let a replayed streaming
-          // batch re-apply after any audited publish (commit() and
-          // deleteWhere already carry them; this path must too)
-          val txnLines = head.map(readTxns(spark, tablePath, _))
-            .getOrElse(Map.empty[String, Long]).toSeq.sortBy(_._1)
-            .map { case (a, i) => s"#txn\t$a\t$i" }
-          val so = ff.create(schemaPath(tablePath, v), true)
-          try so.write(asNullable(df.schema).json.getBytes("UTF-8"))
-          finally so.close()
-          val tmp = new Path(manifestDir(tablePath), s".tmp-$commitId-$v")
-          val out = ff.create(tmp, false)
-          try out.write((txnLines ++ newFiles).mkString("\n")
-            .getBytes("UTF-8"))
-          finally out.close()
-          require(ff.rename(tmp, manifestPath(tablePath, v)),
-            s"manifest publish failed for v$v at $tablePath")
-          v
-        })
+        Right(publishStaged(spark, df.schema, tablePath, staged,
+          replace = true))
     }
   }
 
@@ -960,7 +900,7 @@ object SnapshotTable {
     * table.
     *
     * Deliberately NOT a conditional (CAS) commit, unlike the derived
-    * maintenance writers (upsertSnapshot/fullSync/compactSnapshot):
+    * maintenance writers (upsertSnapshot/compactSnapshot):
     * restore's contract is "make the head equal v`toVersion`" — a commit
     * that lands mid-restore is post-dated data the operator asked to
     * roll past, and it stays time-travel readable like everything else
@@ -968,104 +908,70 @@ object SnapshotTable {
     * the TRUE head (under the lock) so idempotent writers never rewind. */
   def restoreSnapshot(spark: SparkSession, tablePath: String,
                       toVersion: Int): Int = {
-    val vs = versions(spark, tablePath)
-    require(vs.contains(toVersion),
+    require(versions(spark, tablePath).contains(toVersion),
       s"restore target v$toVersion not committed at $tablePath")
-    val tLines = readLines(spark, tablePath, toVersion)
+    val target = manifest(spark, tablePath, toVersion)
     val allDvs = deleteVectors(spark, tablePath)
     val postDvs = allDvs.filter(_.version > toVersion)
-    val affected = dataLines(tLines).map(l => parseEntry(l).path)
+    val affected = target.paths
       .filter(rel => postDvs.exists(_.appliesTo.contains(rel))).toSet
-    val commitId = java.util.UUID.randomUUID().toString
-    val f = fs(spark, new Path(tablePath))
-    val newFileLines: Seq[String] =
-      if (affected.isEmpty) Seq.empty
-      else {
-        val priorDvs = allDvs.filter(_.version <= toVersion)
-        val df = affected.groupBy(rel =>
-            priorDvs.filter(_.appliesTo.contains(rel)).map(_.version))
-          .map { case (dvVersions, group) =>
-            val base = readFiles(spark, tablePath, toVersion, group.toSeq)
-            priorDvs.filter(dv => dvVersions.contains(dv.version))
-              .groupBy(_.keyCol).toSeq.sortBy(_._1)
-              .foldLeft(base) { case (acc, (kc, ds)) =>
-                val keys = ds.map(dd => spark.read.parquet(
-                    new Path(tablePath, dd.dir).toString))
-                  .reduce(_ unionByName _).distinct()
-                acc.join(keys, Seq(kc), "left_anti")
-              }
-          }
-          .reduce(_ unionByName _)
-        val dataDir = new Path(new Path(tablePath, "data"), commitId)
-        df.write.parquet(dataDir.toString)
-        stagedEntries(spark, dataDir, commitId, Nil)
-      }
-    // DATA restores to the as-of state, but per-writer txn watermarks do
-    // NOT rewind: Delta RESTORE preserves current SetTransaction state so
-    // an in-flight idempotent streaming writer is not double-applied —
-    // carrying the as-of values verbatim would let a replayed batch whose
-    // id exceeds the rewound watermark re-append. Merge = max(head, as-of)
-    // per app, computed under the commit lock against the true head.
-    val carriedData = tLines.filter(l =>
-      (l.startsWith("#") && !l.startsWith("#txn\t")) ||
-      (!l.startsWith("#") && !affected.contains(parseEntry(l).path)))
-    val asOfTxns = readTxns(spark, tablePath, toVersion)
-    withCommitLock(spark, tablePath) { f =>
-      val head = versions(spark, tablePath).last
-      val headTxns = readTxns(spark, tablePath, head)
-      val mergedTxns = (asOfTxns.keySet ++ headTxns.keySet).toSeq.sorted
-        .map(a => s"#txn\t$a\t${math.max(asOfTxns.getOrElse(a, Long.MinValue),
-          headTxns.getOrElse(a, Long.MinValue))}")
-      val carried = mergedTxns ++ carriedData
-      val v = head + 1
-      tableSchema(spark, tablePath, Some(toVersion)).foreach { sch =>
-        val so = f.create(schemaPath(tablePath, v), true)
-        try so.write(sch.json.getBytes("UTF-8")) finally so.close()
-      }
-      val tmp = new Path(manifestDir(tablePath), s".tmp-$commitId-$v")
-      val out = f.create(tmp, false)
-      try out.write((carried ++ newFileLines).mkString("\n")
-        .getBytes("UTF-8"))
-      finally out.close()
-      require(f.rename(tmp, manifestPath(tablePath, v)),
-        s"manifest publish failed for v$v at $tablePath")
-      v
+    val rewritten =
+      if (affected.isEmpty) None
+      else Some(stage(spark, withoutDeletes(spark, tablePath, toVersion,
+        affected.toSeq, allDvs.filter(_.version <= toVersion)), tablePath,
+        Nil))
+    val schema = tableSchema(spark, tablePath, Some(toVersion))
+    publish(spark, tablePath, rewritten.fold(
+        java.util.UUID.randomUUID().toString)(_.commitId)) { (_, head) =>
+      // DATA restores to the as-of state, but per-writer txn watermarks
+      // do NOT rewind: Delta RESTORE preserves current SetTransaction
+      // state so an in-flight idempotent streaming writer is not
+      // double-applied — carrying the as-of values verbatim would let a
+      // replayed batch whose id exceeds the rewound watermark re-append.
+      // Merge = max(head, as-of) per app, against the true head.
+      val txns = head.txns ++ target.txns.map { case (a, i) =>
+        a -> math.max(i, head.txns.getOrElse(a, i)) }
+      Some(NextVersion(Manifest(txns,
+        target.files.filterNot(l => affected.contains(parseEntry(l).path)) ++
+          rewritten.fold(Seq.empty[String])(_.files)), schema))
     }
   }
 
   /** Merge-on-read snapshot read: the pinned file set of `version` minus
-    * every applicable delete vector. Files are grouped by WHICH deletes
-    * apply to them (group count is bounded by the distinct append/delete
-    * interleavings, not by data size), each group anti-joins its keys on
-    * the key column, and the groups union back — so the subtraction is
-    * one broadcast-able anti-join per key column over each group, never
-    * a rewrite. A table with no delete vectors reads identically to
-    * [[read]]. */
+    * every applicable delete vector ([[withoutDeletes]]). A table with no
+    * delete vectors reads identically to [[read]]. */
   def readMor(spark: SparkSession, tablePath: String,
               version: Option[Int] = None): DataFrame = {
-    val v = version.getOrElse {
-      val vs = versions(spark, tablePath)
-      require(vs.nonEmpty, s"no committed snapshots at $tablePath")
-      vs.last
-    }
+    val v = resolve(spark, tablePath, version)
     val dvs = deleteVectors(spark, tablePath).filter(_.version <= v)
-    if (dvs.isEmpty) return read(spark, tablePath, Some(v))
-    val files = readManifest(spark, tablePath, v)
-    files.groupBy(rel => dvs.filter(_.appliesTo.contains(rel))
-        .map(_.version))
+    if (dvs.isEmpty) read(spark, tablePath, Some(v))
+    else withoutDeletes(spark, tablePath, v,
+      manifest(spark, tablePath, v).paths, dvs)
+  }
+
+  /** The data files `rels` of version `v` minus the vectors of `dvs` that
+    * apply to each. Files are grouped by WHICH vectors apply to them (the
+    * group count is bounded by the distinct append/delete interleavings,
+    * not by data size), each group anti-joins its keys on the key column,
+    * and the groups union back — so the subtraction is one
+    * broadcast-able anti-join per key column over each group, never a
+    * rewrite. */
+  private def withoutDeletes(spark: SparkSession, tablePath: String, v: Int,
+                             rels: Seq[String],
+                             dvs: Seq[DeleteVector]): DataFrame =
+    rels.groupBy(rel => dvs.filter(_.appliesTo.contains(rel)).map(_.version))
       .map { case (dvVersions, group) =>
-        val df = readFiles(spark, tablePath, v, group)
         dvs.filter(dv => dvVersions.contains(dv.version))
           .groupBy(_.keyCol).toSeq.sortBy(_._1)
-          .foldLeft(df) { case (acc, (kc, ds)) =>
-            val keys = ds.map(dd => spark.read.parquet(
-                new Path(tablePath, dd.dir).toString))
-              .reduce(_ unionByName _).distinct()
-            acc.join(keys, Seq(kc), "left_anti")
+          .foldLeft(readFiles(spark, tablePath, v, group)) {
+            case (acc, (kc, ds)) =>
+              val keys = ds.map(dd => spark.read.parquet(
+                  new Path(tablePath, dd.dir).toString))
+                .reduce(_ unionByName _).distinct()
+              acc.join(keys, Seq(kc), "left_anti")
           }
       }
       .reduce(_ unionByName _)
-  }
 
   /** The `table$history` metadata table (Iceberg/Delta introspection
     * surface): one row per committed version — version, data-file
@@ -1121,12 +1027,11 @@ object SnapshotTable {
     * Requires a head free of outstanding delete vectors (run
     * [[compactSnapshot]] first to fold them) — a DV sidecar is keyed to
     * one version's file set and cannot be renumbered into the clone's
-    * history safely. */
+    * history safely. The clone's v1 goes through the destination's commit
+    * lock, and a destination that already holds a version is refused. */
   def cloneSnapshot(spark: SparkSession, srcPath: String,
                     dstPath: String): Int = {
-    val head = versions(spark, srcPath).lastOption.getOrElse(
-      throw new IllegalArgumentException(
-        s"no committed snapshots at $srcPath"))
+    val head = resolve(spark, srcPath, None)
     val es = entries(spark, srcPath, Some(head))
     val rels = es.map(_.path).toSet
     require(!deleteVectors(spark, srcPath).exists(dv =>
@@ -1134,16 +1039,13 @@ object SnapshotTable {
       s"cloneSnapshot: $srcPath head carries merge-on-read deletes — " +
         "compactSnapshot first")
     val abs = es.map(e =>
-      e.copy(path = new Path(srcPath, e.path).toString))
-    val f = fs(spark, new Path(dstPath))
-    f.mkdirs(manifestDir(dstPath))
-    tableSchema(spark, srcPath, Some(head)).foreach { sch =>
-      val so = f.create(schemaPath(dstPath, 1), true)
-      try so.write(sch.json.getBytes("UTF-8")) finally so.close()
+      renderEntry(e.copy(path = new Path(srcPath, e.path).toString)))
+    val schema = tableSchema(spark, srcPath, Some(head))
+    publish(spark, dstPath, java.util.UUID.randomUUID().toString) {
+      (dstHead, _) =>
+        require(dstHead.isEmpty,
+          s"cloneSnapshot: $dstPath already holds v${dstHead.get}")
+        Some(NextVersion(Manifest(Map.empty, abs), schema))
     }
-    val out = f.create(manifestPath(dstPath, 1), false)
-    try out.write(abs.map(renderEntry).mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    1
   }
 }

@@ -890,7 +890,7 @@ object PipelineQueries {
         // partition-aligned shuffle before the partitioned write: without
         // it every one of the 32 tasks writes a sliver into every day
         // directory (days × tasks small files); with it each day is one
-        // file — the layout Compaction exists to restore
+        // file — the layout a compaction exists to restore
         daily.filter(col("day") < cutHi).repartition(col("day"))
           .write.mode("overwrite").partitionBy("day").parquet(out)
         val source = daily.filter(col("day") >= cutLo)
@@ -1605,7 +1605,7 @@ object PipelineQueries {
           col("ts") >= lit("2024-01-10").cast("timestamp")
         val src = target.filter(scope && col("event_id") % 3 =!= 0)
           .withColumn("value", col("value") + 1000.0)
-        SnapshotTable.fullSync(s, src, t,
+        SnapshotTable.upsertSnapshot(s, src, t,
           Seq("event_id"), "ts", scope)
         val out = SnapshotTable.read(s, t)
         // the delete clause fired: the rows the feed dropped (event_id

@@ -94,23 +94,9 @@ object StreamingOps {
                        goldPath: String, batchId: Long): Unit =
     if (!batch.isEmpty) {
       val s = batch.sparkSession
-      // phase profiling seam (SPARK_GRAFT_STPROF=1): splits addBatch into
-      // bronze-write / refresh-compute / merge so StreamProfile's
-      // per-batch durationMs can be attributed — off, it adds nothing
-      val prof = sys.env.contains("SPARK_GRAFT_STPROF")
-      def timed[A](label: String)(f: => A): A = {
-        val t0 = System.nanoTime()
-        val r = f
-        if (prof) System.err.println(
-          f"[stprof] goldBatch $batchId $label " +
-            f"${(System.nanoTime() - t0) / 1e9}%.2fs")
-        r
-      }
       batch.persist() // three readers: bronze write, refresh, unpersist
-      timed("bronzeWrite") {
-        batch.write.mode("overwrite")
-          .parquet(s"$bronzePath/batch_id=$batchId")
-      }
+      batch.write.mode("overwrite")
+        .parquet(s"$bronzePath/batch_id=$batchId")
       // drop the partition-discovery column: bronze consumers see the bar
       // schema, not the sink's layout detail
       val bronze = s.read.parquet(bronzePath).drop("batch_id")
@@ -118,21 +104,13 @@ object StreamingOps {
       // (gold = the battery over all bronze, so its key set is bronze's
       // distinct (user, day) — see IncrementalGold.refresh). Absent on
       // the very first batch → refresh falls back to the bronze scan.
-      val goldKeys = scala.util.Try(
-        s.read.parquet(goldPath).select("user_id", "day")).toOption
-      var refreshed = graft.operators.IncrementalGold.refresh(
-        s, bronze, batch, goldKeys)
-      if (prof) { // materialize compute separately from the sink merge
-        refreshed = refreshed.persist()
-        timed("refreshCompute")(refreshed.count())
-      }
-      timed("merge") {
-        graft.operators.MergeUpsert.upsertPartitioned(
-          s, refreshed, goldPath,
-          keyCols = Seq("user_id", "day"), partitionCol = "day",
-          orderCol = "day")
-      }
-      if (prof) refreshed.unpersist()
+      val goldKeys =
+        Option.when(graft.operators.MergeUpsert.tableExists(s, goldPath))(
+          s.read.parquet(goldPath).select("user_id", "day"))
+      graft.operators.MergeUpsert.upsertPartitioned(s,
+        graft.operators.IncrementalGold.refresh(s, bronze, batch, goldKeys),
+        goldPath, keyCols = Seq("user_id", "day"), partitionCol = "day",
+        orderCol = "day")
       batch.unpersist()
       ()
     }

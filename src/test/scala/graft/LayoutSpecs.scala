@@ -1,45 +1,14 @@
 package graft
 
-import graft.operators.{Compaction, ZOrder}
+import graft.operators.ZOrder
 import org.apache.spark.sql.functions._
 
-/** Data-layout maintenance operators: small-file compaction and Z-order
-  * clustering — both side-effecting (no SQL oracle), so the contracts are
-  * spec-proven: content preservation, file accounting, and the measured
-  * two-dimensional locality that is Z-order's entire point.
+/** Data-layout operators: Z-order clustering is side-effecting (no SQL
+  * oracle), so the contracts are spec-proven: content preservation and
+  * the measured two-dimensional locality that is Z-order's entire point.
+  * (Small-file compaction is `SnapshotTable.compactSnapshot`, proven in
+  * `SnapshotTableSpec`.)
   */
-class CompactionSpec extends SparkSpec {
-  import spark.implicits._
-
-  test("compaction bin-packs small files and preserves content exactly") {
-    val path = "/tmp/graft_compaction_spec"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
-    val df = (1L to 20000L).map(i => (i, s"row_$i", i * 1.5))
-      .toDF("id", "name", "v")
-    df.repartition(50).write.mode("overwrite").parquet(path)
-    val before = spark.read.parquet(path)
-    assert(before.inputFiles.length == 50)
-
-    val bytes = new java.io.File(path).listFiles()
-      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-      .map(_.length()).sum
-    val target = bytes / 4 // expect ~4-5 output files
-    val report = Compaction.compact(spark, path, target)
-
-    assert(report.filesBefore == 50)
-    assert(report.filesAfter < 10 && report.filesAfter >= 4)
-    val after = spark.read.parquet(path)
-    assert(after.inputFiles.length == report.filesAfter)
-    assert(after.exceptAll(df).isEmpty && df.exceptAll(after).isEmpty)
-  }
-
-  test("compaction refuses a nonsensical target") {
-    intercept[IllegalArgumentException] {
-      Compaction.compact(spark, "/tmp/does_not_matter", 0)
-    }
-  }
-}
-
 class ZOrderSpec extends SparkSpec {
   import spark.implicits._
 

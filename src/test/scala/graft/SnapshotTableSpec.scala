@@ -95,6 +95,56 @@ class SnapshotTableSpec extends SparkSpec {
     assert(before.inputFiles.length == beforeFiles)
   }
 
+  test("compaction sizes its output by bytes and preserves content exactly") {
+    val s = spark
+    import s.implicits._
+    val t = tbl()
+    val df = (1L to 20000L).map(i => (i, s"row_$i", i * 1.5))
+      .toDF("id", "name", "v")
+    commit(spark, df.filter($"id" <= 10000).repartition(25), t)
+    commit(spark, df.filter($"id" > 10000).repartition(25), t,
+      replace = false)
+    val files = read(spark, t).inputFiles
+    assert(files.length == 50)
+    val bytes = files.map(f => new java.io.File(new java.net.URI(f)).length)
+      .sum
+    val v = compactSnapshot(spark, t, targetBytes = bytes / 4)
+    val after = read(spark, t, Some(v))
+    assert(after.inputFiles.length >= 4 && after.inputFiles.length < 10,
+      after.inputFiles.length)
+    assert(after.exceptAll(df).isEmpty && df.exceptAll(after).isEmpty)
+  }
+
+  test("compaction refuses a nonsensical target") {
+    val t = tbl()
+    commit(spark, spark.range(0, 100).toDF("id"), t)
+    intercept[IllegalArgumentException] {
+      compactSnapshot(spark, t, targetBytes = 0)
+    }
+    assert(versions(spark, t) == Seq(1))
+  }
+
+  // a holder that died mid-commit leaves its lock behind; the lock goes
+  // stale 60 s after its mtime, and a writer arriving before then must
+  // wait it out and steal it rather than fail
+  test("commit outwaits a crashed holder's lock") {
+    val s = spark
+    import s.implicits._
+    val t = tbl()
+    commit(spark, Seq(1L).toDF("id"), t)
+    val lock = new org.apache.hadoop.fs.Path(t, "_manifests/_commit.lock")
+    val f = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    java.nio.file.Files.createFile(java.nio.file.Paths.get(lock.toUri.getPath))
+    f.setTimes(lock, System.currentTimeMillis() - 45000L, -1L)
+    val t0 = System.nanoTime()
+    val v = commit(spark, Seq(2L).toDF("id"), t, replace = false)
+    val waited = (System.nanoTime() - t0) / 1e9
+    assert(v == 2)
+    assert(waited > 10.0, s"the lock was taken after only $waited s")
+    assert(!f.exists(lock), "the stolen lock was left behind")
+    assert(read(spark, t).count() == 2)
+  }
+
   test("upsert commits source-wins merge as a new version") {
     val s = spark
     import s.implicits._
@@ -139,19 +189,20 @@ class SnapshotTableSpec extends SparkSpec {
       s"lost update: $rows")
   }
 
-  test("fullSync and compactSnapshot survive an interleaved commit the " +
-    "same way") {
+  test("scoped upsertSnapshot and compactSnapshot survive an interleaved " +
+    "commit") {
     val s = spark
     import s.implicits._
     val t = tbl()
     commit(spark, Seq((1L, "keep", 0), (5L, "sync_me", 0))
       .toDF("id", "x", "ord"), t)
     var fired = false
-    // the interleaved row is OUT of the sync scope (id < 5): fullSync's
-    // delete clause may legitimately remove in-scope rows the source no
-    // longer carries, so surviving-the-race is only observable (and only
-    // required) for data the sync semantics don't delete
-    val v = fullSync(spark, Seq((6L, "synced", 1)).toDF("id", "x", "ord"),
+    // the interleaved row is OUT of the sync scope (id < 5): the scoped
+    // upsert's delete clause may legitimately remove in-scope rows the
+    // source no longer carries, so surviving-the-race is only observable
+    // (and only required) for data the sync semantics don't delete
+    val v = upsertSnapshot(spark,
+      Seq((6L, "synced", 1)).toDF("id", "x", "ord"),
       t, keyCols = Seq("id"), orderCol = "ord", scope = col("id") >= 5L,
       onBeforePublish = () => if (!fired) {
         fired = true
