@@ -199,14 +199,6 @@ object Plans {
         !dd9.contains("CartesianProduct") &&
         !dd9.contains("BroadcastNestedLoop")
     }
-    // a22: ONE data-sized hash aggregate; the quantile windows run over
-    // the bounded histogram AFTER the aggregate (no data-sized window sort
-    // and no extra exchange beyond the group key's)
-    check("a22: histogram-first — aggregate below the quantile windows") {
-      val p = planOf("a22_grid_quantiles")
-      "Exchange hashpartitioning".r.findAllIn(p).length <= 2 &&
-        "\\bWindow \\[".r.findAllIn(p).length == 2
-    }
     // mix2: same shape contract as mix1 — the per-row decision is a
     // broadcast-joined projection, never a shuffle join of the corpus
     check("mix2: decision is broadcast-joined projection, no shuffle join") {
@@ -238,14 +230,6 @@ object Plans {
       !p.contains("CartesianProduct") && !p.contains("SortMergeJoin") &&
         p.contains("BroadcastNestedLoopJoin")
     }
-    // a24: the contingency marginals + statistic are windows over the
-    // CELL table (one data-sized exchange for the groupBy; the window
-    // exchanges move ≤ |types|×|tiers| rows)
-    check("a24: one data-sized aggregate below the cell windows") {
-      val p = planOf("a24_chisq")
-      "\\bWindow \\[".r.findAllIn(p).length >= 3 &&
-        !p.contains("SortMergeJoin") && !p.contains("CartesianProduct")
-    }
     // o6: keyset pagination — the cursor predicate reaches the scan and
     // the page compiles to TakeOrdered (each page is O(page), no matter
     // how deep the cursor: the whole point vs OFFSET)
@@ -266,12 +250,6 @@ object Plans {
       val p = planOf("tx13_tfidf")
       "\\bWindow \\[".r.findAllIn(p).length == 1 &&
         !p.contains("CartesianProduct")
-    }
-    // a28: the 256-cell sketch broadcasts onto the point queries and the
-    // top-k compiles to TakeOrdered, never a global sort
-    check("a28: broadcast sketch join + TakeOrdered top-k") {
-      val p = planOf("a28_cms_topk")
-      p.contains("BroadcastHashJoin") && p.contains("TakeOrdered")
     }
     // tx9: the gram-count shuffle is keyed on the hashed (ord,g1,g2,g3)
     // long tuple — gram TEXT must never appear as a shuffle key (the
@@ -319,21 +297,6 @@ object Plans {
       p.contains("graft_dedup_stage") && !p.contains("CartesianProduct") &&
         "BroadcastHashJoin".r.findAllIn(p).length >= 2
     }
-    // a33: the HLL sketch must aggregate registers BEFORE the exchange —
-    // a partial_max on rho proves the map-side fold (the shuffle carries
-    // ≤ groups×256 register rows, not the input), and the audit branch is
-    // the only count-distinct
-    check("a33: map-side partial register fold before the shuffle") {
-      val p = planOf("a33_hll_distinct")
-      p.contains("partial_max(rho") && !p.contains("CartesianProduct")
-    }
-    // a35: the cube's Expand must collapse MAP-SIDE — a partial
-    // aggregate between Expand and the exchange proves the shuffle
-    // carries subtotal cells, not input-rows × grouping-sets
-    check("a35: Expand collapsed by a partial aggregate before the shuffle") {
-      val p = planOf("a35_cube")
-      p.contains("Expand") && p.contains("partial_count")
-    }
     // j12: the star rollup — the region predicate is pushed into the
     // dimension scan and the dims ride broadcast joins; never a
     // cartesian. (The orders⋈lineitem join broadcasts at fixture scale
@@ -374,19 +337,6 @@ object Plans {
     // the whole indicator, a second would mean the frames diverged
     check("w26: one shared exchange for lag + cumulative windows") {
       "Exchange hashpartitioning".r.findAllIn(planOf("w26_obv")).length == 1
-    }
-    // a40: rank window, count window and the final per-user aggregate all
-    // reuse ONE user_id exchange (the groupBy must not re-shuffle what
-    // the windows already partitioned)
-    check("a40: single user_id exchange for windows + final aggregate") {
-      "Exchange hashpartitioning".r
-        .findAllIn(planOf("a40_var_cvar")).length == 1
-    }
-    // a39: daily-rollup exchange + user_id window exchange only — the
-    // final moment aggregate reuses the window's partitioning
-    check("a39: final aggregate reuses the window exchange") {
-      "Exchange hashpartitioning".r
-        .findAllIn(planOf("a39_yang_zhang")).length == 2
     }
     // w27: the OHLC rollup and the oscillator windows are the only
     // keyed exchanges (%K quantization and %D stay in the window stage)
@@ -559,12 +509,6 @@ object Plans {
       "TakeOrdered".r.findAllIn(p).length >= 2 &&
         !p.contains("CartesianProduct")
     }
-    // a42: the data-sized work is ONE hash-agg shuffle; the CDF window
-    // and final agg share the user_id partitioning (no third exchange)
-    check("a42: at most two exchanges (cells agg + user window)") {
-      "Exchange hashpartitioning".r
-        .findAllIn(planOf("a42_ks_drift")).length <= 2
-    }
     // psi: decile edges and totals ride broadcast onto the scan — a
     // shuffle join anywhere would re-key the events for a 10-row dim
     check("psi: edges/totals broadcast, no shuffle join") {
@@ -600,24 +544,11 @@ object Plans {
       val p = planOf("pl26_bucketed_join")
       p.contains("SortMergeJoin") && !p.contains("Exchange")
     }
-    // a45: the transition matrix is event_type^2 rows — its
-    // row-normalizing join must broadcast, never re-shuffle
-    check("a45: broadcast row-normalization join") {
-      val p = planOf("a45_markov_transitions")
-      p.contains("BroadcastHashJoin") && !p.contains("SortMergeJoin")
-    }
     // j17: the fact scan's PartitionFilters must carry the runtime
     // dim-derived day set — without it the partitioned fact is read in
     // full and the row proves nothing
     check("j17: dynamic partition pruning on the fact scan") {
       planOf("j17_dpp_prune").toLowerCase.contains("dynamicpruning")
-    }
-    // a46: grouping sets are ONE Expand + hash-agg pass over the scan —
-    // a second exchange would mean the grains re-shuffled separately
-    check("a46: one Expand, at most one exchange") {
-      val p = planOf("a46_grouping_sets")
-      p.contains("Expand") &&
-        "Exchange hashpartitioning".r.findAllIn(p).length <= 1
     }
     // pl27: the native session rollup is one user-keyed exchange (the
     // hand-rolled pl2 needs the same exchange TWICE: lag pass + agg)
@@ -631,12 +562,6 @@ object Plans {
     check("w28: single exchange for the RANGE frame") {
       "Exchange hashpartitioning".r
         .findAllIn(planOf("w28_range_frame")).length == 1
-    }
-    // a48: the 9-row expectation dim and the 1-row total attach by
-    // broadcast — any shuffle join re-keys the corpus for constants
-    check("a48: broadcast-only joins") {
-      val p = planOf("a48_benford")
-      !p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin")
     }
     // pl28: the MV rewrite must answer from the summary scan; the base
     // fact table never opens
@@ -662,13 +587,6 @@ object Plans {
         (p.contains("SortMergeJoin") || p.contains("BroadcastHashJoin") ||
           p.contains("ShuffledHashJoin")) &&
         "Scan parquet".r.findAllIn(p).length == 2
-    }
-    // a50: the native sketch aggregate runs as partial+final
-    // ObjectHashAggregate — the shuffle carries 256-byte register
-    // buffers per (group, map task), never per-row (bucket, rho) cells
-    check("a50: partial+final ObjectHashAggregate on the sketch") {
-      "ObjectHashAggregate".r
-        .findAllIn(planOf("a50_hll_native")).length >= 2
     }
     // sim17: the benchmark side rides broadcasts (bucket collision,
     // candidate scoring) — no cartesian; the ONE shuffle join allowed
@@ -737,42 +655,6 @@ object Plans {
       imts > 0 && "Scan parquet".r.findAllIn(p).length == imts &&
         p.contains("BroadcastHashJoin") && !p.contains("SortMergeJoin") &&
         !p.contains("CartesianProduct")
-    }
-    // a25: the k-th order statistic rides the native KMV aggregate's
-    // bounded partial states — a Window here would put each source's
-    // whole distinct-gram set through one serial sort task (the 20×
-    // probe's only >40× row before kmv_sketch_agg landed)
-    check("a25: KMV minima via partial+final aggregate, no window") {
-      val p = planOf("a25_kmv_distinct")
-      p.contains("kmv_sketch_agg") && !p.contains("Window") &&
-        "ObjectHashAggregate".r.findAllIn(p).length >= 2
-    }
-    // a34: same contract for the overlap sketch BUILD (the windows that
-    // remain rank the 128-row pair unions — sketch-sized by construction)
-    check("a34: KMV sketch build via aggregate") {
-      val p = planOf("a34_kmv_overlap")
-      p.contains("kmv_sketch_agg")
-    }
-    // a25b: the shard and merge tiers are both native sketch aggregates
-    // (map-side-combined — partial state is ≤64 longs, the exchanges
-    // carry sketches), the exact audit is its own partial-distinct
-    // branch, nothing is persisted (the old vocabulary-frame cache was
-    // the board's GC outlier), no window anywhere
-    check("a25b: sketch-agg tiers, no cache, no window") {
-      val p = planOf("a25b_kmv_merge")
-      !p.contains("InMemoryTableScan") &&
-        "kmv_sketch_agg".r.findAllIn(p).length >= 4 && // 2 tiers × partial+final
-        !p.contains("Window")
-    }
-    // a43: ANALYZE is ONE scan into ONE partial+final aggregate — no
-    // melt explode before the agg, no persisted intermediate, no join;
-    // the sole exchange carries the fixed-width sketch partials
-    check("a43: one scan, one aggregate, no persist/join") {
-      val p = planOf("a43_analyze_stats")
-      "Scan parquet".r.findAllIn(p).length == 1 &&
-        "ObjectHashAggregate".r.findAllIn(p).length >= 2 &&
-        !p.contains("InMemoryTableScan") && !p.contains("Join") &&
-        "Exchange".r.findAllIn(p).length == 1
     }
     spark.stop()
     if (failed > 0) sys.exit(1)

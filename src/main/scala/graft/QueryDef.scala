@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -29,6 +30,12 @@ final case class QueryDef(
   *  4. Every `LIMIT`/top-k carries a full deterministic tiebreak.
   *  5. Linear fits build their features, exact-long moments, Cramer solve,
   *     SSE and quantizer from the [[LinearFit]] pairs, one copy per engine.
+  *  6. Sketches and exact quantiles have one format each: distinct counts
+  *     take bucket, rho, grid, fold and estimate from the HLL-256 object
+  *     ([[graft.functions.HllSketchAgg$]]) and the KMV estimate from
+  *     [[graft.functions.KmvSketchAgg$]]; exact percentiles and medians
+  *     of a bounded-domain column walk one per-group histogram
+  *     ([[HistogramWalk]]), whose domain guard names the row.
   */
 object Parity {
   /** Exact sum of a k-decimal double column, returned as double.
@@ -327,4 +334,79 @@ object LinearFit {
   def oQ(x: String, digits: Int): String =
     if (digits == 0) s"CAST(floor(($x) + 0.5e0) AS BIGINT)"
     else s"CAST(floor(($x) * 1.0e$digits + 0.5e0) AS BIGINT)"
+}
+
+/** Exact order statistics of a bounded-domain integral column as a walk
+  * over its per-group histogram, a DataFrame/oracle-SQL pair shared by
+  * a22, a29, a30, a36 and mlprep's median fill: one data-sized hash
+  * aggregate to (keys…, v, cnt), per-group windows over THAT table for
+  * the running count `cum` (v ascending) and the group total `n`, then
+  * `min(v where cum ≥ rank)` picks with integer ranks. The windows put a
+  * group's whole histogram in one partition, which is sound only while
+  * the domain is bounded, so every walk carries a runtime guard: a group
+  * with more than [[MaxCells]] cells fails the query with an error that
+  * names the row.
+  */
+object HistogramWalk {
+  /** Cells per group above which a walk refuses to run: far past any
+    * bounded-domain column (days-since-holiday tops out near 366) yet
+    * trivial for one partition, so the guard never fires on legitimate
+    * input and always fires on a mistaken high-cardinality column. */
+  val MaxCells = 100000L
+
+  /** (keys…, v, cnt, cum, n) from a histogram `h(keys…, v, cnt)`. */
+  def running(h: DataFrame, keys: Seq[String], v: String): DataFrame = {
+    val g = Window.partitionBy(keys.map(col): _*)
+    h.withColumn("cum", sum("cnt")
+        .over(g.orderBy(v).rowsBetween(Window.unboundedPreceding, 0)))
+      .withColumn("n", sum("cnt").over(g.rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing)))
+  }
+  def oRunning(h: String, keys: Seq[String], v: String): String = {
+    val part = if (keys.isEmpty) "" else s"PARTITION BY ${keys.mkString(", ")}"
+    s"""SELECT ${(keys :+ v).mkString(", ")}, cnt,
+       |    sum(cnt) OVER ($part ORDER BY $v
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
+       |    sum(cnt) OVER ($part) AS n
+       |  FROM $h""".stripMargin
+  }
+
+  /** `df` counted into its (keys…, v) histogram, [[running]], and
+    * grouped back by `keys` into the named aggregates `aggs`; the first
+    * is emitted only once the domain guard of `row` has passed. */
+  def walk(df: DataFrame, keys: Seq[String], v: String, row: String,
+           bound: Long = MaxCells)(aggs: (String, Column)*): DataFrame = {
+    val guard = assert_true(count(lit(1)) <= bound,
+      lit(s"$row: the $v histogram exceeds $bound cells per group — " +
+        "this exact walk is for bounded-domain columns; coarsen the " +
+        "grid, or use approx_percentile for continuous ones"))
+    val a = when(guard.isNull, aggs.head._2).as(aggs.head._1) +:
+      aggs.tail.map { case (n, c) => c.as(n) }
+    val h = df.groupBy((keys :+ v).map(col): _*)
+      .agg(count(lit(1)).as("cnt"))
+    running(h, keys, v).groupBy(keys.map(col): _*).agg(a.head, a.tail: _*)
+  }
+  /** [[walk]] over the relation `from(keys…, v)`, without the guard. */
+  def oWalk(from: String, keys: Seq[String], v: String)(
+      aggs: String*): String = {
+    val h = s"(SELECT ${(keys :+ v).mkString(", ")}, count(*) AS cnt " +
+      s"FROM $from GROUP BY ${(1 to keys.size + 1).mkString(", ")})"
+    s"""SELECT ${(keys ++ aggs).mkString(",\n  ")}
+       |FROM (${oRunning(h, keys, v)})""".stripMargin +
+      (if (keys.isEmpty) "" else s" GROUP BY ${keys.mkString(", ")}")
+  }
+
+  /** The smallest v whose running count reaches `rank`. */
+  def pick(rank: Column, v: String): Column =
+    min(when(col("cum") >= rank, col(v)))
+  def oPick(rank: String, v: String): String =
+    s"min(CASE WHEN cum >= $rank THEN $v END)"
+  /** The rank ceil(p·n / 100) of the lower p-th percentile. */
+  def pct(p: Int): Column = expr(s"(n * $p + 99) DIV 100")
+  def oPct(p: Int): String = s"(n * $p + 99) // 100"
+  /** The sum of the two middle order statistics: 2 × the median, exact. */
+  def median2(v: String): Column =
+    pick(expr("(n + 1) DIV 2"), v) + pick(expr("(n + 2) DIV 2"), v)
+  def oMedian2(v: String): String =
+    s"${oPick("(n + 1) // 2", v)} +\n    ${oPick("(n + 2) // 2", v)}"
 }

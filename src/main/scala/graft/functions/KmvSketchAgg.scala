@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
@@ -124,6 +125,13 @@ case class KmvSketchAgg(
 }
 
 object KmvSketchAgg {
+  /** The estimate (k−1) / (h_(k) / 2^32) from the k-th smallest distinct
+    * 32-bit hash `hk`: one IEEE tree in each spelling (a25, a25b, a34). */
+  def estimate(k: Column, hk: Column): Column =
+    (k - 1).cast("double") / (hk.cast("double") / 4294967296.0)
+  def oEstimate(k: String, hk: String): String =
+    s"CAST($k - 1 AS DOUBLE) / (CAST($hk AS DOUBLE) / 4294967296.0)"
+
   /** `kmv_sketch_agg(h)` or `kmv_sketch_agg(h, k)` with foldable int k.
     * Anything else (wrong arity, non-literal or non-int k) gets a clean
     * analysis-time error rather than a registry MatchError. */

@@ -61,12 +61,9 @@ object TextOps {
   def minhashParams(k: Int): Seq[(Long, Long)] =
     (0 until k).map(j => (2L * j + 3L, 1000003L * j + 12345L))
 
-  /** One minhash signature component over a PRE-HASHED shingle array (no
-    * shuffle — per-row higher-order functions only). Hash the shingles once
-    * with [[hashAll]] and feed every permutation from that: md5 is ~50× the
-    * cost of the affine map, so hashing per-permutation would dominate. */
-  def minhashSig(hashArr: Column, a: Long, b: Long): Column =
-    array_min(transform(hashArr, h => (h * a + b) % MinhashP))
+  /** Oracle-side minhash component over a shingle list hashed ONCE with
+    * [[oHashAll]] (md5 is ~50× the affine map's cost); the Spark side is
+    * [[DedupStage]]'s per-permutation `min` over [[shingleHashes]]. */
   def oMinhashSig(hashArr: String, a: Long, b: Long): String =
     s"list_min(list_transform($hashArr, h -> (h * $a + $b) % $MinhashP))"
 
@@ -81,8 +78,7 @@ object TextOps {
   def let1(e: Column)(body: Column => Column): Column =
     element_at(transform(array(e), x => body(x)), 1)
 
-  /** Hash every element of a string array to its portable 32-bit value. */
-  def hashAll(arr: Column): Column = transform(arr, s => hash32(s))
+  /** Oracle-side: [[oHash32]] of every element of a string list. */
   def oHashAll(arr: String): String =
     s"list_transform($arr, s -> ${oHash32("s")})"
 

@@ -1,6 +1,8 @@
 package graft.queries
 
-import graft.{Parity, QueryDef, Tables}
+import graft.{HistogramWalk => Walk, Parity, QueryDef, Tables}
+import graft.functions.{HllSketchAgg => Hll, KmvSketchAgg => Kmv}
+import graft.operators.TextOps.{hash32, oHash32, oShinglesFromList}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -23,43 +25,20 @@ object AggQueries {
   private val BenfordQ: IndexedSeq[Long] = (1 to 9).map(dd =>
     math.floor(math.log10(1.0 + 1.0 / dd) * 1e9 + 0.5).toLong)
 
-  /** HLL-256 primitives shared by a33/a33b so the cross-engine IEEE
-    * trees are identical BY CONSTRUCTION (each Scala helper mirrors its
-    * oracle-string twin term for term). rho = leading-zero rank of the
-    * 24 post-bucket hash bits, as a pure integer comparison sum — no
-    * engine-specific bin()/log2 whose string/float behavior could
-    * diverge. The estimate keeps every constant a division expression
-    * and rounds the linear-counting ln at 9 per the log-parity doctrine. */
-  private def hllRho(v: Column): Column =
-    lit(25) - (0 until 24)
-      .map(k => when(v >= (1L << k), 1).otherwise(0)).reduce(_ + _)
-  private[queries] def oHllRho(v: String): String =
-    s"25 - (" + (0 until 24)
-      .map(k => s"CASE WHEN $v >= ${1L << k} THEN 1 ELSE 0 END")
-      .mkString(" + ") + ")"
-  private def hll256Estimate(s: Column, v0: Column): Column = {
-    val eRaw = lit(7213.0) / lit(10000.0) /
-      (lit(1.0) + lit(1079.0) / lit(1000.0) / lit(256.0)) *
-      lit(65536.0) * lit(33554432.0) / s.cast("double")
-    when(eRaw <= 640.0 && v0 > 0,
-        round(lit(256.0) * log(lit(256.0) / v0.cast("double")), 9))
-      .otherwise(round(eRaw, 9))
-  }
-  private[queries] def oHll256Estimate(s: String, v0: String): String = {
-    val eRaw = s"7213.0 / 10000.0 / (1.0 + 1079.0 / 1000.0 / 256.0)" +
-      s" * 65536.0 * 33554432.0 / CAST($s AS DOUBLE)"
-    s"CASE WHEN $eRaw <= 640.0 AND $v0 > 0" +
-      s" THEN round(256.0 * ln(256.0 / CAST($v0 AS DOUBLE)), 9)" +
-      s" ELSE round($eRaw, 9) END"
-  }
+  /** The lower p-th percentile of a walk over the cent grid `vc`, in
+    * units (a22, a36). */
+  private def centQuantile(p: Int): Column =
+    Walk.pick(Walk.pct(p), "vc").cast("double") / 100.0
+  private def oCentQuantile(p: Int): String =
+    s"CAST(${Walk.oPick(Walk.oPct(p), "vc")} AS DOUBLE) / 100.0"
+
   /** The full a25 KMV-distinct oracle — shared verbatim by the direct
     * sketch build (`a25_kmv_distinct`) and the shard-merge path
     * (`a25b_kmv_merge`): two Spark plans, one truth (the a33/a50
     * doctrine applied to the OTHER distinct sketch). DuckDB computes the
     * k-th order statistic directly; KMV is deterministic given the hash,
     * so both engine plans must land on the same row bit-for-bit. */
-  private def kmvDistinctOracle: String = {
-    import graft.operators.TextOps.{oHash32, oShinglesFromList}
+  private def kmvDistinctOracle: String =
     s"""WITH t AS (
        |  SELECT source, string_split(text, ' ') AS lst FROM documents),
        |g AS (
@@ -75,52 +54,30 @@ object AggQueries {
        |  FROM dh)
        |SELECT source, CAST(n_exact AS BIGINT) AS n_exact,
        |  CAST(rn AS BIGINT) AS k,
-       |  CAST(rn - 1 AS DOUBLE) /
-       |    (CAST(h AS DOUBLE) / 4294967296.0) AS kmv_estimate
+       |  ${Kmv.oEstimate("rn", "h")} AS kmv_estimate
        |FROM r WHERE rn = least(64, n_exact)""".stripMargin
-  }
+  /** The HLL-256 sketch of distinct users per event type as oracle CTEs
+    * ending in `est(event_type, est)` — the replay of a33's register
+    * pipeline, shared by a33, a50 and st5. */
+  private[queries] val oHllUserCtes: String =
+    s"""h AS (
+       |  SELECT event_type, ${oHash32("CAST(user_id AS VARCHAR)")} AS h
+       |  FROM events),
+       |${Hll.oRegisters("", "h", "event_type")},
+       |${Hll.oEstimates("", "SELECT DISTINCT event_type FROM events",
+           "regs", "event_type")}""".stripMargin
   /** The full a33 HLL-distinct oracle — shared verbatim by the
     * declarative register pipeline (`a33_hll_distinct`) and the native
     * TypedImperativeAggregate path (`a50_hll_native`): two Spark plans,
     * one truth (the pl14/pl16 doctrine). */
   private def hllDistinctOracle: String =
-    s"""WITH h AS (
-       |  SELECT event_type,
-       |    CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)),1,8)
-       |         AS BIGINT) AS h
-       |  FROM events),
-       |b AS (
-       |  SELECT event_type, h % 256 AS bucket, h >> 8 AS v FROM h),
-       |r AS (
-       |  SELECT event_type, bucket, ${oHllRho("v")} AS rho FROM b),
-       |regs AS (
-       |  SELECT event_type, bucket, max(rho) AS mj
-       |  FROM r GROUP BY 1, 2),
-       |grid AS (
-       |  SELECT et.event_type, g.bucket
-       |  FROM (SELECT DISTINCT event_type FROM events) et,
-       |       range(0, 256) g(bucket)),
-       |fr AS (
-       |  SELECT grid.event_type, coalesce(regs.mj, 0) AS mj
-       |  FROM grid LEFT JOIN regs
-       |    ON grid.event_type = regs.event_type
-       |   AND grid.bucket = regs.bucket),
-       |sk AS (
-       |  SELECT event_type,
-       |    CAST(sum(CAST(1 AS BIGINT) << (25 - mj)) AS BIGINT) AS s,
-       |    CAST(sum(CASE WHEN mj = 0 THEN 1 ELSE 0 END) AS BIGINT)
-       |      AS v0
-       |  FROM fr GROUP BY 1),
-       |est AS (
-       |  SELECT event_type,
-       |    ${oHll256Estimate("s", "v0")} AS hll_estimate
-       |  FROM sk),
+    s"""WITH $oHllUserCtes,
        |ex AS (
        |  SELECT event_type, count(DISTINCT user_id) AS n_exact
        |  FROM events GROUP BY 1)
        |SELECT ex.event_type, CAST(ex.n_exact AS BIGINT) AS n_exact,
-       |  est.hll_estimate,
-       |  round((est.hll_estimate - CAST(ex.n_exact AS DOUBLE)) /
+       |  est.est AS hll_estimate,
+       |  round((est.est - CAST(ex.n_exact AS DOUBLE)) /
        |        CAST(ex.n_exact AS DOUBLE), 9) AS rel_err
        |FROM ex JOIN est ON ex.event_type = est.event_type""".stripMargin
 
@@ -558,53 +515,15 @@ object AggQueries {
     // the data-sized work is one hash aggregate.
     QueryDef(
       "a22_grid_quantiles",
-      Some("""WITH h AS (
-             |  SELECT event_type,
-             |    CAST(floor(value * 100.0 + 0.5) AS BIGINT) AS vc,
-             |    count(*) AS cnt
-             |  FROM events GROUP BY 1, 2),
-             |c AS (
-             |  SELECT event_type, vc,
-             |    sum(cnt) OVER (PARTITION BY event_type ORDER BY vc
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-             |    sum(cnt) OVER (PARTITION BY event_type) AS total
-             |  FROM h)
-             |SELECT event_type, CAST(max(total) AS BIGINT) AS n,
-             |  CAST(min(CASE WHEN cum >= (total * 25 + 99) // 100 THEN vc END)
-             |    AS DOUBLE) / 100.0 AS p25,
-             |  CAST(min(CASE WHEN cum >= (total * 50 + 99) // 100 THEN vc END)
-             |    AS DOUBLE) / 100.0 AS p50,
-             |  CAST(min(CASE WHEN cum >= (total * 75 + 99) // 100 THEN vc END)
-             |    AS DOUBLE) / 100.0 AS p75,
-             |  CAST(min(CASE WHEN cum >= (total * 95 + 99) // 100 THEN vc END)
-             |    AS DOUBLE) / 100.0 AS p95
-             |FROM c GROUP BY event_type""".stripMargin),
-      (s, d) => {
-        val cumW = Window.partitionBy("event_type").orderBy("vc")
-          .rowsBetween(Window.unboundedPreceding, 0)
-        val allW = Window.partitionBy("event_type")
-          .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-        def q(pct: Int): Column =
-          min(when(col("cum") >= expr(s"(total * $pct + 99) DIV 100"),
-            col("vc"))).cast("double") / 100.0
-        // same runtime cardinality guard as histogramMedian: the windows
-        // above are per-group single partitions over the histogram, sound
-        // only while the grid stays bounded
-        val guard = assert_true(count(lit(1)) <= 100000L,
-          lit("a22_grid_quantiles: value grid exceeds 100000 distinct " +
-            "cells per group — coarsen the quantization grid"))
-        Tables.events(s, d)
-          .select(col("event_type"),
-            floor(col("value") * 100.0 + 0.5).cast("long").as("vc"))
-          .groupBy("event_type", "vc")
-          .agg(count(lit(1)).as("cnt"))
-          .withColumn("cum", sum("cnt").over(cumW))
-          .withColumn("total", sum("cnt").over(allW))
-          .groupBy("event_type")
-          .agg(when(guard.isNull, max("total")).as("n"),
-            q(25).as("p25"), q(50).as("p50"),
-            q(75).as("p75"), q(95).as("p95"))
-      }),
+      Some(Walk.oWalk(s"(SELECT event_type, ${oLq("value")} AS vc FROM events)",
+        Seq("event_type"), "vc")("CAST(max(n) AS BIGINT) AS n" +:
+        Seq(25, 50, 75, 95).map(p => s"${oCentQuantile(p)} AS p$p"): _*)),
+      (s, d) =>
+        Walk.walk(Tables.events(s, d)
+            .select(col("event_type"), lq(col("value")).as("vc")),
+          Seq("event_type"), "vc", "a22_grid_quantiles")(
+          ("n" -> max("n")) +:
+            Seq(25, 50, 75, 95).map(p => s"p$p" -> centQuantile(p)): _*)),
 
     // A23: exact per-group mode (most frequent value, deterministic
     // min-value tiebreak) — the categorical summary pandas `.mode()`
@@ -720,7 +639,6 @@ object AggQueries {
       "a25_kmv_distinct",
       Some(kmvDistinctOracle),
       (s, d) => {
-        import graft.operators.TextOps.{hash32, shingles}
         // the k-th order statistic comes from the native KMV aggregate
         // (functions/KmvSketchAgg): partial state = the ≤64 minima per
         // (source, partition), merged k-small — no per-source whole-set
@@ -738,8 +656,7 @@ object AggQueries {
             expr("kmv_sketch_agg(h, 64)").as("mins"))
           .select(col("source"), col("n_exact"),
             kth.cast("long").as("k"),
-            ((kth - 1).cast("double") /
-              (element_at(col("mins"), kth).cast("double") / 4294967296.0))
+            Kmv.estimate(kth, element_at(col("mins"), kth))
               .as("kmv_estimate"))
       }),
 
@@ -761,7 +678,6 @@ object AggQueries {
       "a25b_kmv_merge",
       Some(kmvDistinctOracle),
       (s, d) => {
-        import graft.operators.TextOps.{hash32, shingles}
         val kth = least(lit(64), col("n_exact")).cast("int")
         // ONE gram explode feeds both consumers: the (source, shard, h)
         // DISTINCT is a single exchange whose subtree is plan-identical
@@ -796,8 +712,7 @@ object AggQueries {
         merged.join(broadcast(nExact), "source")
           .select(col("source"), col("n_exact"),
             kth.cast("long").as("k"),
-            ((kth - 1).cast("double") /
-              (element_at(col("mins"), kth).cast("double") / 4294967296.0))
+            Kmv.estimate(kth, element_at(col("mins"), kth))
               .as("kmv_estimate"))
       }),
 
@@ -960,7 +875,6 @@ object AggQueries {
              |ORDER BY est.cms_count DESC, est.user_id
              |LIMIT 20""".stripMargin),
       (s, d) => {
-        import graft.operators.TextOps.hash32
         val w = 64
         def bucketOf(u: Column, ri: Column): Column =
           hash32(concat(u.cast("string"), lit("#"), ri.cast("string"))) % w
@@ -1006,46 +920,24 @@ object AggQueries {
     // ≤1e5; switch the contribution sum to DECIMAL(38,0) beyond).
     QueryDef(
       "a29_gini",
-      Some("""WITH h AS (
-             |  SELECT event_type,
-             |    CAST(floor(value * 100.0 + 0.5) AS BIGINT) AS vc,
-             |    count(*) AS c
-             |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-             |r AS (
-             |  SELECT event_type, vc, c,
-             |    sum(c) OVER (PARTITION BY event_type ORDER BY vc
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-             |      - c AS rnk0,
-             |    sum(c) OVER (PARTITION BY event_type) AS n
-             |  FROM h)
-             |SELECT event_type, CAST(min(n) AS BIGINT) AS n,
-             |  CAST(sum(vc * (2 * (c * rnk0 + c * (c + 1) // 2)
-             |    - c * (n + 1))) AS DOUBLE) /
-             |  (CAST(min(n) AS DOUBLE) * CAST(sum(vc * c) AS DOUBLE))
-             |    AS gini
-             |FROM r GROUP BY event_type""".stripMargin),
-      (s, d) => {
-        val h = Tables.events(s, d)
-          .filter(col("value").isNotNull)
-          .groupBy(col("event_type"),
-            floor(col("value") * 100.0 + 0.5).cast("long").as("vc"))
-          .agg(count(lit(1)).as("c"))
-        val cumW = Window.partitionBy("event_type").orderBy("vc")
-          .rowsBetween(Window.unboundedPreceding, 0)
-        val allW = Window.partitionBy("event_type")
-        val r = h
-          .withColumn("rnk0", sum("c").over(cumW) - col("c"))
-          .withColumn("n", sum("c").over(allW))
-          // DIV: exact integer division (Column `/` would go through
-          // double); c*(c+1) is even so the halving is lossless
-          .withColumn("contrib", expr(
-            "vc * (2 * (c * rnk0 + c * (c + 1) DIV 2) - c * (n + 1))"))
-        r.groupBy("event_type")
-          .agg(min("n").as("n"),
-            (sum("contrib").cast("double") /
-              (min("n").cast("double") *
-               sum(col("vc") * col("c")).cast("double"))).as("gini"))
-      }),
+      Some(Walk.oWalk(s"(SELECT event_type, ${oLq("value")} AS vc " +
+          "FROM events WHERE value IS NOT NULL)", Seq("event_type"), "vc")(
+        "CAST(min(n) AS BIGINT) AS n",
+        """CAST(sum(vc * (2 * (cnt * (cum - cnt) + cnt * (cnt + 1) // 2)
+          |    - cnt * (n + 1))) AS DOUBLE) /
+          |  (CAST(min(n) AS DOUBLE) * CAST(sum(vc * cnt) AS DOUBLE))
+          |    AS gini""".stripMargin)),
+      (s, d) =>
+        // DIV: exact integer division (Column `/` would go through
+        // double); cnt·(cnt+1) is even so the halving is lossless
+        Walk.walk(Tables.events(s, d).filter(col("value").isNotNull)
+            .select(col("event_type"), lq(col("value")).as("vc")),
+          Seq("event_type"), "vc", "a29_gini")(
+          "n" -> min("n"),
+          "gini" -> (sum(expr("vc * (2 * (cnt * (cum - cnt) + " +
+              "cnt * (cnt + 1) DIV 2) - cnt * (n + 1))")).cast("double") /
+            (min("n").cast("double") *
+             sum(col("vc") * col("cnt")).cast("double"))))),
 
     // A30: robust outlier detection per group — median absolute deviation
     // (MAD), the data-quality screen that, unlike mean/std z-scores,
@@ -1063,71 +955,35 @@ object AggQueries {
     // hash aggregates and one scan.
     QueryDef(
       "a30_mad_outliers",
-      Some("""WITH ev AS (
+      Some(s"""WITH ev AS (
              |  SELECT event_id, event_type, value,
-             |    CAST(floor(value * 100.0 + 0.5) AS BIGINT) AS vc
+             |    ${oLq("value")} AS vc
              |  FROM events WHERE value IS NOT NULL),
-             |h1 AS (
-             |  SELECT event_type, vc, count(*) AS c FROM ev GROUP BY 1, 2),
-             |r1 AS (
-             |  SELECT event_type, vc,
-             |    sum(c) OVER (PARTITION BY event_type ORDER BY vc
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-             |      AS cum,
-             |    sum(c) OVER (PARTITION BY event_type) AS n
-             |  FROM h1),
              |m1 AS (
-             |  SELECT event_type,
-             |    min(CASE WHEN cum >= (n + 1) // 2 THEN vc END) +
-             |    min(CASE WHEN cum >= (n + 2) // 2 THEN vc END) AS med2
-             |  FROM r1 GROUP BY 1),
+             |  ${Walk.oWalk("ev", Seq("event_type"), "vc")(
+                    s"${Walk.oMedian2("vc")} AS med2")}),
              |dv AS (
              |  SELECT ev.*, m1.med2, abs(2 * ev.vc - m1.med2) AS dev
              |  FROM ev JOIN m1 USING (event_type)),
-             |h2 AS (
-             |  SELECT event_type, dev, count(*) AS c FROM dv GROUP BY 1, 2),
-             |r2 AS (
-             |  SELECT event_type, dev,
-             |    sum(c) OVER (PARTITION BY event_type ORDER BY dev
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-             |      AS cum,
-             |    sum(c) OVER (PARTITION BY event_type) AS n
-             |  FROM h2),
              |m2 AS (
-             |  SELECT event_type,
-             |    min(CASE WHEN cum >= (n + 1) // 2 THEN dev END) +
-             |    min(CASE WHEN cum >= (n + 2) // 2 THEN dev END) AS mad2
-             |  FROM r2 GROUP BY 1)
+             |  ${Walk.oWalk("dv", Seq("event_type"), "dev")(
+                    s"${Walk.oMedian2("dev")} AS mad2")})
              |SELECT dv.event_id, dv.event_type, dv.value,
              |  CAST(dv.med2 AS DOUBLE) / 200.0 AS med,
              |  CAST(m2.mad2 AS DOUBLE) / 400.0 AS mad,
              |  2 * dv.dev > 3 * m2.mad2 AS is_outlier
              |FROM dv JOIN m2 USING (event_type)""".stripMargin),
       (s, d) => {
-        def gridMed2(df: DataFrame, vCol: String): DataFrame = {
-          val cumW = Window.partitionBy("event_type").orderBy(vCol)
-            .rowsBetween(Window.unboundedPreceding, 0)
-          val allW = Window.partitionBy("event_type")
-          df.groupBy(col("event_type"), col(vCol))
-            .agg(count(lit(1)).as("c"))
-            .withColumn("cum", sum("c").over(cumW))
-            .withColumn("n", sum("c").over(allW))
-            .groupBy("event_type")
-            .agg((min(when(col("cum") >= expr("(n + 1) DIV 2"), col(vCol)))
-              + min(when(col("cum") >= expr("(n + 2) DIV 2"), col(vCol))))
-              .as(s"${vCol}_med2"))
-        }
+        def med2(df: DataFrame, v: String, as: String): DataFrame =
+          Walk.walk(df, Seq("event_type"), v, "a30_mad_outliers")(
+            as -> Walk.median2(v))
         val ev = Tables.events(s, d)
           .filter(col("value").isNotNull)
           .select(col("event_id"), col("event_type"), col("value"),
-            floor(col("value") * 100.0 + 0.5).cast("long").as("vc"))
-        val m1 = gridMed2(ev, "vc")
-          .withColumnRenamed("vc_med2", "med2")
-        val dv = ev.join(broadcast(m1), "event_type")
+            lq(col("value")).as("vc"))
+        val dv = ev.join(broadcast(med2(ev, "vc", "med2")), "event_type")
           .withColumn("dev", abs(lit(2) * col("vc") - col("med2")))
-        val m2 = gridMed2(dv, "dev")
-          .withColumnRenamed("dev_med2", "mad2")
-        dv.join(broadcast(m2), "event_type")
+        dv.join(broadcast(med2(dv, "dev", "mad2")), "event_type")
           .select(col("event_id"), col("event_type"), col("value"),
             (col("med2").cast("double") / 200.0).as("med"),
             (col("mad2").cast("double") / 400.0).as("mad"),
@@ -1276,23 +1132,11 @@ object AggQueries {
       "a33_hll_distinct",
       Some(hllDistinctOracle),
       (s, d) => {
-        import graft.operators.TextOps.hash32
         val ev = Tables.events(s, d)
-        val b = ev.select(col("event_type"),
-            hash32(col("user_id").cast("string")).as("h"))
-          .select(col("event_type"),
-            (col("h") % 256).as("bucket"), shiftright(col("h"), 8).as("v"))
-        val regs = b.withColumn("rho", hllRho(col("v")))
-          .groupBy("event_type", "bucket").agg(max("rho").as("mj"))
-        val grid = ev.select("event_type").distinct()
-          .withColumn("bucket", explode(sequence(lit(0), lit(255))))
-        val sk = grid.join(regs, Seq("event_type", "bucket"), "left")
-          .withColumn("mj", coalesce(col("mj"), lit(0)))
-          .groupBy("event_type")
-          .agg(sum(expr("shiftleft(CAST(1 AS BIGINT), 25 - mj)")).as("s"),
-               sum(when(col("mj") === 0, 1L).otherwise(0L)).as("v0"))
-        val est = sk.select(col("event_type"),
-          hll256Estimate(col("s"), col("v0")).as("hll_estimate"))
+        val regs = Hll.registers(ev.select(col("event_type"),
+          hash32(col("user_id").cast("string")).as("h")), "event_type")
+        val est = Hll.estimates(ev.select("event_type").distinct(), regs,
+          "hll_estimate")
         val exact = ev.groupBy("event_type")
           .agg(countDistinct("user_id").as("n_exact"))
         exact.join(broadcast(est), "event_type")
@@ -1318,37 +1162,11 @@ object AggQueries {
       Some {
         s"""WITH h AS (
            |  SELECT event_type, CAST(ts AS DATE) AS day,
-           |    CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)),1,8)
-           |         AS BIGINT) AS h
+           |    ${oHash32("CAST(user_id AS VARCHAR)")} AS h
            |  FROM events),
-           |b AS (
-           |  SELECT event_type, day, h % 256 AS bucket, h >> 8 AS v
-           |  FROM h),
-           |r AS (
-           |  SELECT event_type, day, bucket, ${oHllRho("v")} AS rho
-           |  FROM b),
-           |dregs AS (
-           |  SELECT event_type, day, bucket, max(rho) AS mj
-           |  FROM r GROUP BY 1, 2, 3),
-           |dgrid AS (
-           |  SELECT et.event_type, et.day, g.bucket
-           |  FROM (SELECT DISTINCT event_type, day FROM b) et,
-           |       range(0, 256) g(bucket)),
-           |dfull AS (
-           |  SELECT dgrid.event_type, dgrid.day, coalesce(dregs.mj, 0) AS mj
-           |  FROM dgrid LEFT JOIN dregs
-           |    ON dgrid.event_type = dregs.event_type
-           |   AND dgrid.day = dregs.day AND dgrid.bucket = dregs.bucket),
-           |dsk AS (
-           |  SELECT event_type, day,
-           |    CAST(sum(CAST(1 AS BIGINT) << (25 - mj)) AS BIGINT) AS s,
-           |    CAST(sum(CASE WHEN mj = 0 THEN 1 ELSE 0 END) AS BIGINT)
-           |      AS v0
-           |  FROM dfull GROUP BY 1, 2),
-           |dest AS (
-           |  SELECT event_type, day,
-           |    ${oHll256Estimate("s", "v0")} AS est
-           |  FROM dsk),
+           |${Hll.oRegisters("d", "h", "event_type", "day")},
+           |${Hll.oEstimates("d", "SELECT DISTINCT event_type, day FROM h",
+               "dregs", "event_type", "day")},
            |dsum AS (
            |  SELECT event_type, CAST(count(*) AS BIGINT) AS n_days,
            |    CAST(CAST(sum(CAST(floor(est * 1000000.0 + 0.5) AS BIGINT))
@@ -1358,53 +1176,23 @@ object AggQueries {
            |mregs AS (
            |  SELECT event_type, bucket, max(mj) AS mj
            |  FROM dregs GROUP BY 1, 2),
-           |mgrid AS (
-           |  SELECT et.event_type, g.bucket
-           |  FROM (SELECT DISTINCT event_type FROM events) et,
-           |       range(0, 256) g(bucket)),
-           |mfull AS (
-           |  SELECT mgrid.event_type, coalesce(mregs.mj, 0) AS mj
-           |  FROM mgrid LEFT JOIN mregs
-           |    ON mgrid.event_type = mregs.event_type
-           |   AND mgrid.bucket = mregs.bucket),
-           |msk AS (
-           |  SELECT event_type,
-           |    CAST(sum(CAST(1 AS BIGINT) << (25 - mj)) AS BIGINT) AS s,
-           |    CAST(sum(CASE WHEN mj = 0 THEN 1 ELSE 0 END) AS BIGINT)
-           |      AS v0
-           |  FROM mfull GROUP BY 1),
-           |mest AS (
-           |  SELECT event_type,
-           |    ${oHll256Estimate("s", "v0")} AS merged_estimate
-           |  FROM msk)
-           |SELECT d.event_type, d.n_days, m.merged_estimate,
+           |${Hll.oEstimates("m", "SELECT DISTINCT event_type FROM events",
+               "mregs", "event_type")}
+           |SELECT d.event_type, d.n_days, m.est AS merged_estimate,
            |  d.sum_daily_estimates,
-           |  round(d.sum_daily_estimates / m.merged_estimate, 9)
-           |    AS repeat_ratio
+           |  round(d.sum_daily_estimates / m.est, 9) AS repeat_ratio
            |FROM dsum d JOIN mest m ON d.event_type = m.event_type""".stripMargin
       },
       (s, d) => {
-        import graft.operators.TextOps.hash32
         val ev = Tables.events(s, d)
-        val b = ev.select(col("event_type"), to_date(col("ts")).as("day"),
-            hash32(col("user_id").cast("string")).as("h"))
-          .select(col("event_type"), col("day"),
-            (col("h") % 256).as("bucket"), shiftright(col("h"), 8).as("v"))
+        val hashed = ev.select(col("event_type"),
+          to_date(col("ts")).as("day"),
+          hash32(col("user_id").cast("string")).as("h"))
         // the persisted artifact at scale: per-day register tables
-        val dregs = b.withColumn("rho", hllRho(col("v")))
-          .groupBy("event_type", "day", "bucket").agg(max("rho").as("mj"))
+        val dregs = Hll.registers(hashed, "event_type", "day")
           .persist() // daily-estimate and merge branches both read it
-        val dgrid = b.select("event_type", "day").distinct()
-          .withColumn("bucket", explode(sequence(lit(0), lit(255))))
-        val sV0 = Seq(
-          sum(expr("shiftleft(CAST(1 AS BIGINT), 25 - mj)")).as("s"),
-          sum(when(col("mj") === 0, 1L).otherwise(0L)).as("v0"))
-        val dsk = dgrid.join(dregs, Seq("event_type", "day", "bucket"),
-            "left")
-          .withColumn("mj", coalesce(col("mj"), lit(0)))
-          .groupBy("event_type", "day").agg(sV0.head, sV0.tail: _*)
-        val dest = dsk.select(col("event_type"), col("day"),
-          hll256Estimate(col("s"), col("v0")).as("est"))
+        val dest = Hll.estimates(
+          hashed.select("event_type", "day").distinct(), dregs, "est")
         val dsum = dest.groupBy("event_type")
           .agg(count(lit(1)).as("n_days"),
             (sum(floor(col("est") * 1000000.0 + 0.5).cast("long"))
@@ -1412,13 +1200,8 @@ object AggQueries {
         // the range query: register-wise max over the day sketches
         val mregs = dregs.groupBy("event_type", "bucket")
           .agg(max("mj").as("mj"))
-        val msk = ev.select("event_type").distinct()
-          .withColumn("bucket", explode(sequence(lit(0), lit(255))))
-          .join(mregs, Seq("event_type", "bucket"), "left")
-          .withColumn("mj", coalesce(col("mj"), lit(0)))
-          .groupBy("event_type").agg(sV0.head, sV0.tail: _*)
-        val mest = msk.select(col("event_type"),
-          hll256Estimate(col("s"), col("v0")).as("merged_estimate"))
+        val mest = Hll.estimates(ev.select("event_type").distinct(), mregs,
+          "merged_estimate")
         dsum.join(broadcast(mest), "event_type")
           .select(col("event_type"), col("n_days"), col("merged_estimate"),
             col("sum_daily_estimates"),
@@ -1492,8 +1275,8 @@ object AggQueries {
            |est AS (
            |  SELECT type_a, type_b, m, both_cnt,
            |    CASE WHEN nu < 64 THEN CAST(nu AS DOUBLE)
-           |         ELSE round(CAST(m - 1 AS DOUBLE) /
-           |                    (hk / 4294967296.0), 9) END AS kmv_union,
+           |         ELSE round(${Kmv.oEstimate("m", "hk")}, 9) END
+           |      AS kmv_union,
            |    round(CAST(both_cnt AS DOUBLE) / CAST(m AS DOUBLE), 9)
            |      AS kmv_jaccard
            |  FROM agg),
@@ -1511,7 +1294,6 @@ object AggQueries {
            |  ON e.type_a = x.type_a AND e.type_b = x.type_b""".stripMargin
       },
       (s, d) => {
-        import graft.operators.TextOps.hash32
         val ev = Tables.events(s, d)
         // sketch build: the only data-sized stage (distinct 8-byte hashes)
         val dh = ev.select(col("event_type"),
@@ -1553,8 +1335,8 @@ object AggQueries {
         val est = agg.select(col("type_a"), col("type_b"), col("m"),
           col("both_cnt"),
           when(col("nu") < 64, col("nu").cast("double"))
-            .otherwise(round((col("m") - 1).cast("double") /
-              (col("hk") / 4294967296.0), 9)).as("kmv_union"),
+            .otherwise(round(Kmv.estimate(col("m"), col("hk")), 9))
+            .as("kmv_union"),
           round(col("both_cnt").cast("double") / col("m").cast("double"), 9)
             .as("kmv_jaccard"))
         val du = ev.select("event_type", "user_id").distinct()
@@ -1633,9 +1415,6 @@ object AggQueries {
              |    CAST(bin * 1000 AS DOUBLE) / 100.0 +
              |    10.0 * (CAST($q * n - 100 * (cum - cnt) AS DOUBLE) /
              |            CAST(100 * cnt AS DOUBLE)) END)""".stripMargin
-        def exq(q: Int): String =
-          s"CAST(min(CASE WHEN cum >= (n * $q + 99) // 100 THEN vc END) " +
-          s"AS DOUBLE) / 100.0"
         s"""WITH d AS (
            |  SELECT event_type, CAST(ts AS DATE) AS day,
            |    CAST(floor(value * 100.0 + 0.5) AS BIGINT) AS vc
@@ -1649,32 +1428,17 @@ object AggQueries {
            |  SELECT event_type, bin, CAST(sum(cnt) AS BIGINT) AS cnt
            |  FROM dh GROUP BY 1, 2),
            |c AS (
-           |  SELECT event_type, bin, cnt,
-           |    CAST(sum(cnt) OVER (PARTITION BY event_type ORDER BY bin
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           |      AS BIGINT) AS cum,
-           |    CAST(sum(cnt) OVER (PARTITION BY event_type) AS BIGINT) AS n
-           |  FROM mh),
+           |  ${Walk.oRunning("mh", Seq("event_type"), "bin")}),
            |est AS (
            |  SELECT event_type, max(n) AS n,
            |    ${estq(50)} AS est_p50,
            |    ${estq(90)} AS est_p90,
            |    ${estq(99)} AS est_p99
            |  FROM c GROUP BY 1),
-           |h2 AS (SELECT event_type, vc, count(*) AS cnt FROM d
-           |       GROUP BY 1, 2),
-           |c2 AS (
-           |  SELECT event_type, vc,
-           |    sum(cnt) OVER (PARTITION BY event_type ORDER BY vc
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-           |    sum(cnt) OVER (PARTITION BY event_type) AS n
-           |  FROM h2),
            |ex AS (
-           |  SELECT event_type,
-           |    ${exq(50)} AS exact_p50,
-           |    ${exq(90)} AS exact_p90,
-           |    ${exq(99)} AS exact_p99
-           |  FROM c2 GROUP BY 1)
+           |  ${Walk.oWalk("d", Seq("event_type"), "vc")(
+                  Seq(50, 90, 99).map(p =>
+                    s"${oCentQuantile(p)} AS exact_p$p"): _*)})
            |SELECT e.event_type, CAST(e.n AS BIGINT) AS n,
            |  e.est_p50, x.exact_p50,
            |  abs(e.est_p50 - x.exact_p50) AS err_p50,
@@ -1696,12 +1460,7 @@ object AggQueries {
           .agg(count(lit(1)).as("cnt"))
         // the range query: count-sum merge of the day histograms
         val mh = dh.groupBy("event_type", "bin").agg(sum("cnt").as("cnt"))
-        val wCum = Window.partitionBy("event_type").orderBy("bin")
-          .rowsBetween(Window.unboundedPreceding, 0)
-        val wAll = Window.partitionBy("event_type")
-          .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-        val c = mh.withColumn("cum", sum("cnt").over(wCum))
-          .withColumn("n", sum("cnt").over(wAll))
+        val c = Walk.running(mh, Seq("event_type"), "bin")
         def estq(q: Int): Column = {
           val t = col("n") * q
           val cb = (col("cum") - col("cnt")) * 100
@@ -1713,23 +1472,10 @@ object AggQueries {
         val est = c.groupBy("event_type")
           .agg(max("n").as("n"), estq(50).as("est_p50"),
             estq(90).as("est_p90"), estq(99).as("est_p99"))
-        // exact audit leg — a22's discrete-quantile histogram walk, with
-        // its bounded-grid cardinality guard
-        val wCum2 = Window.partitionBy("event_type").orderBy("vc")
-          .rowsBetween(Window.unboundedPreceding, 0)
-        val c2 = d0.groupBy("event_type", "vc")
-          .agg(count(lit(1)).as("cnt"))
-          .withColumn("cum", sum("cnt").over(wCum2))
-          .withColumn("n", sum("cnt").over(wAll))
-        def exq(q: Int): Column =
-          min(when(col("cum") >= expr(s"(n * $q + 99) DIV 100"),
-            col("vc"))).cast("double") / 100.0
-        val guard = assert_true(count(lit(1)) <= 100000L,
-          lit("a36_hist_quantile_merge: value grid exceeds 100000 " +
-            "distinct cells per group — coarsen the quantization grid"))
-        val ex = c2.groupBy("event_type")
-          .agg(when(guard.isNull, exq(50)).as("exact_p50"),
-            exq(90).as("exact_p90"), exq(99).as("exact_p99"))
+        // exact audit leg — a22's discrete-quantile histogram walk
+        val ex = Walk.walk(d0, Seq("event_type"), "vc",
+          "a36_hist_quantile_merge")(
+          Seq(50, 90, 99).map(p => s"exact_p$p" -> centQuantile(p)): _*)
         est.join(ex, "event_type")
           .select(col("event_type"), col("n"),
             col("est_p50"), col("exact_p50"),
@@ -2231,35 +1977,14 @@ object AggQueries {
            |    min(q) AS min_q, max(q) AS max_q
            |  FROM m GROUP BY 1),
            |h AS (
-           |  SELECT c, CAST('0x' || substr(md5(hv),1,8) AS BIGINT) AS h
-           |  FROM m WHERE hv IS NOT NULL),
-           |b AS (
-           |  SELECT c, h % 256 AS bucket, h >> 8 AS v FROM h),
-           |r AS (
-           |  SELECT c, bucket, ${oHllRho("v")} AS rho FROM b),
-           |regs AS (
-           |  SELECT c, bucket, max(rho) AS mj FROM r GROUP BY 1, 2),
-           |grid AS (
-           |  SELECT cs.c, g.bucket
-           |  FROM (SELECT DISTINCT c FROM m) cs, range(0, 256) g(bucket)),
-           |fr AS (
-           |  SELECT grid.c, coalesce(regs.mj, 0) AS mj
-           |  FROM grid LEFT JOIN regs
-           |    ON grid.c = regs.c AND grid.bucket = regs.bucket),
-           |sk AS (
-           |  SELECT c,
-           |    CAST(sum(CAST(1 AS BIGINT) << (25 - mj)) AS BIGINT) AS s,
-           |    CAST(sum(CASE WHEN mj = 0 THEN 1 ELSE 0 END) AS BIGINT)
-           |      AS v0
-           |  FROM fr GROUP BY 1),
-           |est AS (
-           |  SELECT c, ${oHll256Estimate("s", "v0")} AS ndv_hll FROM sk)
+           |  SELECT c, ${oHash32("hv")} AS h FROM m WHERE hv IS NOT NULL),
+           |${Hll.oRegisters("", "h", "c")},
+           |${Hll.oEstimates("", "SELECT DISTINCT c FROM m", "regs", "c")}
            |SELECT base.c AS col_name, base.n_rows, base.n_nulls,
-           |  est.ndv_hll, base.min_q, base.max_q
+           |  est.est AS ndv_hll, base.min_q, base.max_q
            |FROM base JOIN est ON base.c = est.c""".stripMargin
       },
       (s, d) => {
-        import graft.operators.TextOps.hash32
         val nullQ = lit(null).cast("long")
         // (name, hash-input string, numeric-grid value) per column
         val specs = Seq(
@@ -2283,22 +2008,15 @@ object AggQueries {
         // a global agg over an empty scan would emit a zero-count row
         // where the melt-shaped oracle emits none)
         val one = prepared.agg(aggs.head, aggs.tail: _*)
-        def regFold(n: String, f: String): Column =
-          expr(s"aggregate(regs_$n, CAST(0 AS BIGINT), (acc, mj) -> $f)")
         one.select(explode(array(specs.map { case (n, _, _) =>
-            struct(lit(n).as("col_name"), col("n_rows").as("n_rows"),
-              (col("n_rows") - col(s"nn_$n")).as("n_nulls"),
-              regFold(n,
-                "acc + shiftleft(CAST(1 AS BIGINT), 25 - CAST(mj AS INT))")
-                .as("sreg"),
-              regFold(n,
-                "acc + IF(mj = 0, CAST(1 AS BIGINT), CAST(0 AS BIGINT))")
-                .as("v0"),
-              col(s"min_$n").as("min_q"), col(s"max_$n").as("max_q"))
+            struct(Seq(lit(n).as("col_name"), col("n_rows").as("n_rows"),
+              (col("n_rows") - col(s"nn_$n")).as("n_nulls")) ++
+              Hll.foldArray(s"regs_$n") ++
+              Seq(col(s"min_$n").as("min_q"), col(s"max_$n").as("max_q")): _*)
           }: _*)).as("r"))
           .select(col("r.col_name").as("col_name"),
             col("r.n_rows").as("n_rows"), col("r.n_nulls").as("n_nulls"),
-            hll256Estimate(col("r.sreg"), col("r.v0")).as("ndv_hll"),
+            Hll.estimate(col("r.s"), col("r.v0")).as("ndv_hll"),
             col("r.min_q").as("min_q"), col("r.max_q").as("max_q"))
       }),
 
@@ -2640,28 +2358,24 @@ object AggQueries {
     // array per group, so the exchange carries |groups|×256 BYTES per
     // map task instead of a33's one (group, bucket, rho) row per input
     // row — the partial state IS the sketch, which is what makes a
-    // sketch worth having at 100 TB. Estimate math is the shared
-    // expression tree, registers explode into the identical (bucket,
-    // mj) grid, and the oracle is a33's, verbatim: three plans (a33
-    // declarative, a50 native, DuckDB replay), one truth. Bit-identity
-    // of the registers themselves is pinned by HllAggSpec.
+    // sketch worth having at 100 TB. The s/v0 fold runs over each
+    // register array in place (a43's fold — integer adds, order-free),
+    // the estimate is the shared expression tree, and the oracle is
+    // a33's, verbatim: three plans (a33 declarative, a50 native, DuckDB
+    // replay), one truth. Bit-identity of the registers themselves is
+    // pinned by HllAggSpec.
     QueryDef(
       "a50_hll_native",
       Some(hllDistinctOracle),
       (s, d) => {
-        import graft.operators.TextOps.hash32
         val ev = Tables.events(s, d)
-        val regs = ev.select(col("event_type"),
+        val est = ev.select(col("event_type"),
             hash32(col("user_id").cast("string")).as("h"))
           .groupBy("event_type")
           .agg(expr("hll_sketch_agg(h)").as("regs"))
-        val sk = regs.select(col("event_type"),
-            posexplode(col("regs")).as(Seq("bucket", "mj")))
-          .groupBy("event_type")
-          .agg(sum(expr("shiftleft(CAST(1 AS BIGINT), 25 - mj)")).as("s"),
-               sum(when(col("mj") === 0, 1L).otherwise(0L)).as("v0"))
-        val est = sk.select(col("event_type"),
-          hll256Estimate(col("s"), col("v0")).as("hll_estimate"))
+          .select(col("event_type") +: Hll.foldArray("regs"): _*)
+          .select(col("event_type"),
+            Hll.estimate(col("s"), col("v0")).as("hll_estimate"))
         val exact = ev.groupBy("event_type")
           .agg(countDistinct("user_id").as("n_exact"))
         exact.join(broadcast(est), "event_type")

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{HistogramWalk, QueryDef, Tables}
 import graft.LinearFit._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -50,15 +50,6 @@ object MlPrepQueries {
     * far beyond any fixture span; raise for longer archives. */
   private val MaxWindows = 200
 
-  /** Histogram rows above which [[histogramMedian]] refuses to run: the
-    * single-partition cumulative window below is sound ONLY because it runs
-    * over the value HISTOGRAM, not the data — 100k distinct values is far
-    * past any bounded-domain column (days-since-holiday tops out at ~366)
-    * while still trivial for one partition, so the guard never fires on
-    * legitimate input and always fires on a mistaken high-cardinality
-    * double column. */
-  private[graft] val MaxMedianDomain = 100000L
-
   /** mlprep_permutation_importance's moments: [[OlsYy]] plus the cross
     * terms with x1 or x2 replaced by its permuted copy (x1p, x2p), and
     * the [[sse]] term names that swap them in for feature 1 or 2. */
@@ -81,51 +72,23 @@ object MlPrepQueries {
       case c => c
     }
 
-  /** (median) 1-row frame of the exact median of an integral column,
-    * via value histogram + two middle order statistics. */
+  /** (median) 1-row frame of the exact median of an integral column:
+    * the mean of the two middle order statistics of its value histogram
+    * ([[graft.HistogramWalk]], whose guard names `row`). */
   private[graft] def histogramMedian(vals: DataFrame, c: String,
-      maxDomain: Long = MaxMedianDomain): DataFrame = {
-    val cumW = Window.orderBy(c).rowsBetween(Window.unboundedPreceding, 0)
-    val allW = Window.rowsBetween(Window.unboundedPreceding,
-      Window.unboundedFollowing)
-    // Cardinality guard as part of the PLAN (assert_true → runtime error),
-    // not prose: the final aggregate sees every histogram row, so
-    // count(*) there IS the domain size. Wrapped so the median is only
-    // emitted after the assertion evaluates (assert_true yields NULL on
-    // success), and the output schema stays the single `median` column.
-    val guard = assert_true(count(lit(1)) <= maxDomain,
-      lit(s"histogramMedian: value domain exceeds $maxDomain distinct " +
-        "values — this exact-median path is for bounded-domain columns; " +
-        "use approx_percentile for continuous ones"))
-    vals.filter(col(c).isNotNull)
-      .groupBy(c).agg(count(lit(1)).as("cnt"))
-      // the histogram is tiny (distinct values of a bounded-domain column);
-      // the single-partition windows below run over it, not the data
-      .withColumn("cum", sum("cnt").over(cumW))
-      .withColumn("total", sum("cnt").over(allW))
-      .withColumn("lo_pos", expr("(total + 1) DIV 2"))
-      .withColumn("hi_pos", expr("(total + 2) DIV 2"))
-      .agg(when(guard.isNull,
-        (min(when(col("cum") >= col("lo_pos"), col(c))) +
-         min(when(col("cum") >= col("hi_pos"), col(c)))) / 2.0)
-        .as("median"))
-  }
+      row: String = "mlprep", maxDomain: Long = HistogramWalk.MaxCells
+      ): DataFrame =
+    HistogramWalk.walk(vals.filter(col(c).isNotNull), Nil, c,
+      s"$row/histogramMedian", maxDomain)(
+      "median" -> (HistogramWalk.median2(c) / 2.0))
 
-  /** Oracle-side mirror of [[histogramMedian]] as a CTE body: expects a
+  /** Oracle-side mirror of [[histogramMedian]] as a CTE: expects a
     * relation `vals(v)`, yields `med(median)`. */
   private def oHistogramMedian: String =
-    """hist AS (
-      |  SELECT v, count(*) AS cnt FROM vals WHERE v IS NOT NULL GROUP BY v),
-      |cum AS (
-      |  SELECT v, sum(cnt) OVER (ORDER BY v
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-      |    sum(cnt) OVER () AS total
-      |  FROM hist),
-      |med AS (
-      |  SELECT (min(CASE WHEN cum >= (total + 1) // 2 THEN v END) +
-      |          min(CASE WHEN cum >= (total + 2) // 2 THEN v END)) / 2.0
-      |    AS median
-      |  FROM cum)""".stripMargin
+    s"""med AS (
+       |  ${HistogramWalk.oWalk("vals WHERE v IS NOT NULL", Nil, "v")(
+            s"(${HistogramWalk.oMedian2("v")}) / 2.0 AS median")})"""
+      .stripMargin
 
   /** The `exchange_maintenance` calendar from the committed fixture
     * ([[graft.sources.CalendarSource]]): its first entry falls mid-range of
@@ -276,7 +239,8 @@ object MlPrepQueries {
         val days = Tables.events(s, d)
           .select(to_date(col("ts")).as("day")).distinct()
         val dsh = daysSinceHoliday(days, s)
-        val med = histogramMedian(dsh.select(col("dsh")), "dsh")
+        val med = histogramMedian(dsh.select(col("dsh")), "dsh",
+          "mlprep_median_fill")
         dsh.crossJoin(broadcast(med))
           .select(col("day"), col("dsh"),
             coalesce(col("dsh").cast("double"), col("median"))
@@ -325,7 +289,8 @@ object MlPrepQueries {
         val withDsh = trimmed
           .join(broadcast(
             daysSinceHoliday(trimmed.select("day").distinct(), s)), "day")
-        val med = histogramMedian(withDsh.select(col("dsh")), "dsh")
+        val med = histogramMedian(withDsh.select(col("dsh")), "dsh",
+          "mlprep_prepare")
         val cutoff = trimmed.agg(date_sub(max(col("day")), 7).as("cutoff"))
         withDsh.crossJoin(broadcast(med)).crossJoin(broadcast(cutoff))
           .select(col("event_id"), col("day"),

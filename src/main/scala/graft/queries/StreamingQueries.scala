@@ -567,42 +567,11 @@ object StreamingQueries {
     QueryDef(
       "st5_stream_hll",
       Some {
-        s"""WITH h AS (
-           |  SELECT event_type,
-           |    CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)),1,8)
-           |         AS BIGINT) AS h
-           |  FROM events),
-           |b AS (
-           |  SELECT event_type, h % 256 AS bucket, h >> 8 AS v FROM h),
-           |r AS (
-           |  SELECT event_type, bucket, ${AggQueries.oHllRho("v")} AS rho
-           |  FROM b),
-           |regs AS (
-           |  SELECT event_type, bucket, max(rho) AS mj
-           |  FROM r GROUP BY 1, 2),
-           |grid AS (
-           |  SELECT et.event_type, g.bucket
-           |  FROM (SELECT DISTINCT event_type FROM events) et,
-           |       range(0, 256) g(bucket)),
-           |fr AS (
-           |  SELECT grid.event_type, coalesce(regs.mj, 0) AS mj
-           |  FROM grid LEFT JOIN regs
-           |    ON grid.event_type = regs.event_type
-           |   AND grid.bucket = regs.bucket),
-           |sk AS (
-           |  SELECT event_type,
-           |    CAST(sum(CAST(1 AS BIGINT) << (25 - mj)) AS BIGINT) AS s,
-           |    CAST(sum(CASE WHEN mj = 0 THEN 1 ELSE 0 END) AS BIGINT)
-           |      AS v0
-           |  FROM fr GROUP BY 1),
-           |est AS (
-           |  SELECT event_type,
-           |    ${AggQueries.oHll256Estimate("s", "v0")} AS hll_estimate
-           |  FROM sk),
+        s"""WITH ${AggQueries.oHllUserCtes},
            |n AS (
            |  SELECT event_type, count(*) AS n_total
            |  FROM events GROUP BY 1)
-           |SELECT n.event_type, est.hll_estimate, n.n_total
+           |SELECT n.event_type, est.est AS hll_estimate, n.n_total
            |FROM n JOIN est ON n.event_type = est.event_type"""
           .stripMargin
       },

@@ -135,24 +135,24 @@ object StreamingOps {
     * batch sketch queries (a33/a33b): one 256-register sketch per group
     * carried as `flatMapGroupsWithState` state, max-merged with each
     * micro-batch's rows, emitting the refreshed estimate per group per
-    * batch (Update mode). The register math is IDENTICAL to the batch
-    * queries' portable-hash column math (same hash32 → bucket/rho split —
-    * `Long.numberOfLeadingZeros` here computes exactly the 24-bit
-    * comparison-sum rank used there) and [[estimate256]] evaluates the
-    * same IEEE expression tree, so after any sequence of micro-batches the
-    * streaming estimate equals the batch query's estimate over the union
-    * of all rows BIT-FOR-BIT, regardless of how the stream was batched
+    * batch (Update mode). Bucket, rho and estimate are the Scala spelling
+    * of the HLL-256 format in [[graft.functions.HllSketchAgg$]] — the
+    * same object the batch queries' columns and oracle text come from —
+    * so after any sequence of micro-batches the streaming estimate
+    * equals the batch query's estimate over the union of all rows
+    * BIT-FOR-BIT, regardless of how the stream was batched
     * (`StreamingHllSpec`). That replay-stability is the merge law of
     * a33b in streaming form: registers are max-folds, so at-least-once
     * redelivery of rows cannot change the sketch.
     *
     * Scale shape: state is 256 bytes + one long per group FOREVER —
-    * distinct-count over an unbounded stream with bounded state and no
-    * distinct shuffle (the exact thing watermarked dropDuplicates cannot
-    * give you once the horizon passes). */
+    * distinct-count with bounded state and no distinct shuffle (the
+    * exact thing watermarked dropDuplicates cannot give you once the
+    * horizon passes). */
   final case class HllEstimate(event_type: String, estimate: Double,
                                n_total: Long)
   def streamingHll(events: DataFrame): Dataset[HllEstimate] = {
+    import graft.functions.{HllSketchAgg => Hll}
     val s = events.sparkSession
     import s.implicits._
     events
@@ -166,39 +166,17 @@ object StreamingOps {
         (et: String, rows: Iterator[(String, Long)],
          state: GroupState[(Array[Byte], Long)]) =>
           val (regs, seen) = state.getOption
-            .getOrElse((new Array[Byte](256), 0L))
+            .getOrElse((new Array[Byte](Hll.M), 0L))
           var n = seen
           rows.foreach { case (_, h) =>
-            val bucket = (h % 256L).toInt
-            val v = h >> 8
-            // 25 - bitlength(v); v = 0 → 25 (nlz(0) = 64)
-            val rho =
-              (25 - (64 - java.lang.Long.numberOfLeadingZeros(v))).toByte
+            val bucket = Hll.bucket(h)
+            val rho = Hll.rho(Hll.sub(h)).toByte
             if (rho > regs(bucket)) regs(bucket) = rho
             n += 1
           }
           state.update((regs, n))
-          Iterator.single(HllEstimate(et, estimate256(regs), n))
+          Iterator.single(HllEstimate(et, Hll.estimate(regs), n))
       }
-  }
-
-  /** The a33 HLL-256 estimate over raw registers, in the SAME IEEE
-    * operation order as the batch queries' column expression (and the
-    * same `BigDecimal.setScale(9, HALF_UP)` rounding Spark's `round`
-    * applies to doubles), so streaming and batch estimates are
-    * bit-comparable. */
-  def estimate256(regs: Array[Byte]): Double = {
-    var s = 0L; var v0 = 0
-    var i = 0
-    while (i < 256) {
-      s += 1L << (25 - regs(i)); if (regs(i) == 0) v0 += 1; i += 1
-    }
-    def round9(x: Double): Double =
-      BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val eRaw = 7213.0 / 10000.0 / (1.0 + 1079.0 / 1000.0 / 256.0) *
-      65536.0 * 33554432.0 / s.toDouble
-    if (eRaw <= 640.0 && v0 > 0) round9(256.0 * math.log(256.0 / v0))
-    else round9(eRaw)
   }
 
   /** Watermarked stream-stream interval join — clicks attributed to the
