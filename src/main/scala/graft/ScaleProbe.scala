@@ -30,7 +30,9 @@ import org.apache.spark.sql.functions._
   * interaction-effect check); otherwise the listed queries or the default
   * most-expensive-data-bound set run. Rows are flagged only when ratio >
   * 2N AND the replica run is slower than 2s — a 0.05s→1.5s row is
-  * constant-dominated, not a scale term.
+  * constant-dominated, not a scale term. The session is the bench
+  * profile ([[GraftSession.benchBuilder]]: `local[SPARK_GRAFT_CPUS]`,
+  * default 32), so probe and Bench timings compare.
   */
 object ScaleProbe {
 
@@ -55,7 +57,7 @@ object ScaleProbe {
         case q => rest += q; i += 1
       }
     }
-    val spark = GraftSession.builder("local[32]", "32").getOrCreate()
+    val spark = GraftSession.benchBuilder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val explicit = rest.result()
     val queries =

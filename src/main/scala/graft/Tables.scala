@@ -1,18 +1,23 @@
 package graft
 
+import graft.operators.ListedParquet
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Loaders for the driver-provided deterministic parquet fixtures
   * (`TESTDATA.md`): TPC-H-ish star schema + `events`/`documents`/`embeddings`.
   *
   * All loads are plain parquet scans so Catalyst's vectorized reader,
-  * predicate pushdown, and column pruning apply untouched. At cluster scale
-  * the same call sites take a Delta/Iceberg path; the query code never
-  * assumes a storage layout beyond "columnar with pushdown".
+  * predicate pushdown, and column pruning apply untouched. The schema
+  * comes from the table file's footer, read on the driver
+  * ([[graft.operators.ListedParquet.readPath]]), as a catalog serves it
+  * from table metadata: no Spark job runs to infer it, so building a
+  * query launches none of its own. At cluster scale the same call sites
+  * take a Delta/Iceberg path; the query code never assumes a storage
+  * layout beyond "columnar with pushdown".
   */
 object Tables {
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    ListedParquet.readPath(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame     = t(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = t(s, d, "nation")

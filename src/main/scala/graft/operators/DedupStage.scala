@@ -79,11 +79,11 @@ object DedupStage {
     buildNanos.add(math.round(
       StageCache.getOrBuild(dir)(build(s, d, _)) * 1e9))
     Stage(
-      s.read.parquet(s"$dir/membership"),
+      ListedParquet.readPath(s, s"$dir/membership"),
       // fan the single-scratch-file read out to all cores — banding and
       // jaccard expressions downstream are the per-row hot path
-      Tables.fanOut(s.read.parquet(s"$dir/profiles")),
-      Tables.fanOut(s.read.parquet(s"$dir/staged_pairs")))
+      Tables.fanOut(ListedParquet.readPath(s, s"$dir/profiles")),
+      Tables.fanOut(ListedParquet.readPath(s, s"$dir/staged_pairs")))
   }
 
   private def build(s: SparkSession, d: String, dir: String): Unit = {
@@ -134,7 +134,8 @@ object DedupStage {
     // paid HERE, once, inside [[buildSeconds]]; dd6 (member expansion) and
     // dd7 (connected components) then read this table like any other
     // upstream output.
-    val profs = Tables.fanOut(s.read.parquet(s"$dir/profiles")).persist()
+    val profs =
+      Tables.fanOut(ListedParquet.readPath(s, s"$dir/profiles")).persist()
     LshBanding.repPairs(profs, DedupParams.StagedBands,
         DedupParams.StagedThreshold, "stage_dropped_band_rows")
       .write.mode("overwrite").parquet(s"$dir/staged_pairs")

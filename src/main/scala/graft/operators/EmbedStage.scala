@@ -128,7 +128,7 @@ object EmbedStage {
     cellsMemo.computeIfAbsent(
       s"$d|${StageCache.parquetMtime(s"$d/embeddings.parquet")}",
       _ => IvfIndex.cellsFor(
-        s.read.parquet(s"$d/embeddings.parquet").count()))
+        ListedParquet.readPath(s, s"$d/embeddings.parquet").count()))
 
   private val cellsMemo =
     new java.util.concurrent.ConcurrentHashMap[String, Integer]
@@ -159,8 +159,8 @@ object EmbedStage {
     // (the usual case — the build fans out); it only fires when a stage
     // built by a smaller session is read by a larger one.
     Stage(
-      Tables.fanOut(s.read.parquet(s"$dir/vectors")),
-      Tables.fanOut(s.read.parquet(s"$dir/buckets")))
+      Tables.fanOut(ListedParquet.readPath(s, s"$dir/vectors")),
+      Tables.fanOut(ListedParquet.readPath(s, s"$dir/buckets")))
   }
 
   private def build(s: SparkSession, d: String, dir: String,
@@ -210,7 +210,7 @@ object EmbedStage {
     }
     // clean lineage: bucket bits derive from the just-written vectors
     // parquet, not a recompute of the quantization
-    s.read.parquet(s"$dir/vectors")
+    ListedParquet.readPath(s, s"$dir/vectors")
       .select(col("vec_id"), explode(array(structs: _*)).as("b"))
       .select(col("vec_id"), col("b.table_id").as("table_id"),
         col("b.bucket_pair").as("bucket_pair"),

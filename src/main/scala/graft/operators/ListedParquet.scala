@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.metadata.ColumnPath
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation.{
@@ -12,8 +13,9 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{INT32,
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{FileStatusCache,
   HadoopFsRelation, InMemoryFileIndex}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** A parquet read over data files the caller has already listed — a
   * snapshot manifest's file set or a merge sink's pruned listing.
@@ -27,8 +29,16 @@ import org.apache.spark.sql.types.StructType
   * discovered from the paths, typed by `schema` where it names the
   * column; without one, each file's directory is its own root.
   *
-  * `schema = None` infers it from the footers (one Spark job), the
-  * behavior of a schema-less `spark.read.parquet`.
+  * `schema = None` takes the schema from the first file's footer, read
+  * on the driver with Spark's own conversion
+  * (`ParquetFileFormat.readSchemaFromFooter`, a converter built from the
+  * session's conf, then made nullable as a file source's data schema
+  * is): what a schema-less `spark.read.parquet` infers, but without the
+  * one-task inference job it launches. Like that inference (without
+  * `mergeSchema`), it assumes every file shares the first one's schema.
+  * [[readPath]] is that read over one file or a flat directory of them:
+  * every fixture table and every materialized stage is read through it,
+  * so no Spark job runs before a query's own.
   *
   * [[footerRanges]] reads a data file's per-column value ranges from the
   * same footers, on the driver and without a Spark job: the merge sink's
@@ -50,15 +60,68 @@ object ListedParquet {
     val index = new InMemoryFileIndex(spark, files.map(_.getPath),
       basePath.map(b => "basePath" -> b.toString).toMap, schema, listed)
     val format = new ParquetFileFormat
-    val full = schema.getOrElse(format.inferSchema(spark, Map.empty, files)
-      .getOrElse(throw new IllegalArgumentException(
-        s"no parquet schema in ${files.size} files: ${files.take(3)
-          .map(_.getPath).mkString(", ")}")))
+    val full = schema.getOrElse(footerSchema(spark, files.headOption
+      .getOrElse(throw new IllegalArgumentException("no parquet files"))))
     val parts = index.partitionSchema
     val data = StructType(full.filterNot(f =>
       parts.fieldNames.contains(f.name)).map(_.copy(nullable = true)))
     spark.baseRelationToDataFrame(
       HadoopFsRelation(index, parts, data, None, format, Map.empty)(spark))
+  }
+
+  /** The parquet data at `path`: one file, or a flat directory of them
+    * as a Spark write leaves it (entries named `_…` or `.…` skipped),
+    * listed on the driver and read with the first data file's footer
+    * schema (by name). A missing path, a directory without a data file,
+    * a partitioned directory (`col=value/` below it) and a streaming
+    * sink's directory (its `_spark_metadata` log decides the file set)
+    * fail with an error that names the path. */
+  def readPath(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    def refuse(why: String) =
+      throw new IllegalArgumentException(s"parquet read of $path: $why")
+    val st = try fs.getFileStatus(p) catch {
+      case _: java.io.FileNotFoundException => refuse("no such path")
+    }
+    val files =
+      if (!st.isDirectory) Seq(st)
+      else {
+        val (hidden, shown) = fs.listStatus(p).toSeq
+          .partition(f => Set('_', '.')(f.getPath.getName.head))
+        if (hidden.exists(_.getPath.getName == "_spark_metadata"))
+          refuse("a streaming sink's directory")
+        if (shown.exists(_.isDirectory))
+          refuse(s"subdirectories (partitions?): ${shown.filter(_.isDirectory)
+            .map(_.getPath.getName).sorted.take(3).mkString(", ")}")
+        shown.sortBy(_.getPath.getName)
+      }
+    if (files.isEmpty) refuse("no data file")
+    read(spark, files, None, None)
+  }
+
+  /** `f`'s footer schema as a schema-less parquet read infers it. The
+    * inference job's converter takes case sensitivity, field-id reads
+    * and the variant annotation at their defaults; this one takes them
+    * from the session, where this engine leaves them at those defaults. */
+  private def footerSchema(spark: SparkSession, f: FileStatus): StructType = {
+    val meta = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(f, spark.sessionState.newHadoopConf()),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    nullable(ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, meta),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+      .asInstanceOf[StructType]
+  }
+
+  /** Every field, element and map value nullable, at every depth: a file
+    * source's data schema, as `spark.read` builds it. */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
+      valueContainsNull = true)
+    case other => other
   }
 
   /** The min/max of every top-level signed INT32/INT64 column (a DATE as

@@ -104,7 +104,7 @@ object PassageGraph {
       edgesOf(Tables.fanOut(Tables.documents(s, d)))
         .write.mode("overwrite").parquet(s"$tmp/edges")
     } * 1e9))
-    val edges = Tables.fanOut(s.read.parquet(s"$dir/edges"))
+    val edges = Tables.fanOut(ListedParquet.readPath(s, s"$dir/edges"))
     (edges, degrees(edges))
   }
 

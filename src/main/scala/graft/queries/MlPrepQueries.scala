@@ -3128,10 +3128,12 @@ object MlPrepQueries {
           max_by(col("cy"), col("rn")).as("ty"),
           max_by(col("cxy"), col("rn")).as("txy"),
           max_by(col("cyy"), col("rn")).as("tyy"))
-        val hold = cum
-          .join(broadcast(tt), cum("event_type") === tt("event_type")
-            && col("rn") === col("t"))
-          .drop(tt("event_type")).drop("days", "t")
+        // joined by name: tt and marks derive from cum, so a
+        // cum("event_type") === tt("event_type") predicate would compare
+        // one attribute with itself
+        val hold = cum.join(broadcast(tt), Seq("event_type"))
+          .filter(col("rn") === col("t"))
+          .drop("days", "t")
           .join(broadcast(tot), Seq("event_type"))
           .select(col("event_type"),
             (col("tn") - col("cn")).as("qn0"),
@@ -3145,10 +3147,8 @@ object MlPrepQueries {
               .as("frac"))
           .select(col("event_type"), col("days"), col("t"), col("frac"),
             expr("(t * frac + 99) DIV 100").as("kf"))
-        val pick = cum.join(broadcast(marks),
-            cum("event_type") === marks("event_type")
-              && col("rn") === col("kf"))
-          .drop(marks("event_type"))
+        val pick = cum.join(broadcast(marks), Seq("event_type"))
+          .filter(col("rn") === col("kf"))
           .join(broadcast(hold), Seq("event_type"))
           .select(col("event_type"), col("frac"),
             col("kf").as("train_days"),
