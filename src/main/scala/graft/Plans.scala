@@ -77,12 +77,6 @@ object Plans {
     check("dd5: both self-join sides read the postings cache") {
       "InMemoryTableScan".r.findAllIn(dd5).length >= 2
     }
-    // the rolling-splits range join broadcasts the (one-row-per-window)
-    // splits frame — never a shuffle or cartesian of the data side
-    check("mlprep_rolling: splits side broadcast, no cartesian") {
-      val p = planOf("mlprep_rolling_splits")
-      p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct")
-    }
     // sim4: the IVF probe join broadcasts the (NQ×P)-row probe frame
     // against the corpus — never a corpus shuffle join; the only hash
     // exchanges are the two tiny windows (probe ranking over NQ queries,
@@ -120,12 +114,6 @@ object Plans {
     check("dd6: reads materialized staged pairs, no inline band explode") {
       dd6.contains("staged_pairs") && !dd6.contains("Generate explode") &&
         planOf("dd3_minhash_lsh").contains("Generate explode")
-    }
-    // mlprep_prepare: every join is broadcast (the two 1-row crossJoins
-    // ride BroadcastNestedLoopJoin) — no cartesian, no shuffle join
-    check("mlprep_prepare: broadcasts only, no cartesian/shuffle join") {
-      val p = planOf("mlprep_prepare")
-      !p.contains("CartesianProduct") && !p.contains("SortMergeJoin")
     }
     // dd8: decontamination reads the staged gram hashes (no re-shingle of
     // raw text — no string split/explode of `text` in the plan) and the
@@ -222,13 +210,6 @@ object Plans {
       val p = planOf("sim6_pq_topk")
       p.contains("BroadcastHashJoin") && !p.contains("SortMergeJoin") &&
         !p.contains("CartesianProduct")
-    }
-    // mlprep_scaler: the fit statistics ride 1-row broadcast cross joins
-    // back onto the transform scan — never a cartesian or shuffle join
-    check("mlprep_scaler: stats broadcast onto the transform scan") {
-      val p = planOf("mlprep_scaler")
-      !p.contains("CartesianProduct") && !p.contains("SortMergeJoin") &&
-        p.contains("BroadcastNestedLoopJoin")
     }
     // o6: keyset pagination — the cursor predicate reaches the scan and
     // the page compiles to TakeOrdered (each page is O(page), no matter
@@ -359,13 +340,6 @@ object Plans {
       val p = planOf("mix5_weighted_sample")
       p.contains("WindowGroupLimit") && !p.contains("CartesianProduct")
     }
-    // class balance: the minority count rides a 1-row broadcast onto the
-    // label-partitioned rank window — never a cartesian/shuffle join
-    check("mlprep_class_balance: 1-row broadcast, label-keyed window") {
-      val p = planOf("mlprep_class_balance")
-      p.contains("BroadcastNestedLoopJoin") &&
-        !p.contains("CartesianProduct") && !p.contains("SortMergeJoin")
-    }
     // mm2: the per-kind manifest rollup is ONE hash aggregate — the only
     // exchange is the |kinds|-row partial-agg shuffle (plus fanOut-free
     // scan), never a sort or join
@@ -456,14 +430,6 @@ object Plans {
         .select(input_file_name()).distinct().count()
       added == 2 && readFiles == added
     }
-    // mlprep_eval_report's scale contract: the rank/cumulative window runs
-    // over the score HISTOGRAM, never the raw rows — every Window in the
-    // plan must sit on top of a hash aggregate
-    check("eval_report shape: windows run over the histogram aggregate") {
-      val plan = planOf("mlprep_eval_report")
-      val lastWin = plan.lastIndexOf("Window")
-      lastWin > 0 && plan.indexOf("HashAggregate", lastWin) > lastWin
-    }
     // sim10's corpus side must stream against BROADCAST query/pool frames
     // only (the pool is NQ×R rows by construction) — any shuffle join or
     // cartesian means the rerank pulled the corpus through an exchange
@@ -507,13 +473,6 @@ object Plans {
     check("sim13: TakeOrdered pools on both legs, no cartesian") {
       val p = planOf("sim13_hybrid_rrf")
       "TakeOrdered".r.findAllIn(p).length >= 2 &&
-        !p.contains("CartesianProduct")
-    }
-    // psi: decile edges and totals ride broadcast onto the scan — a
-    // shuffle join anywhere would re-key the events for a 10-row dim
-    check("psi: edges/totals broadcast, no shuffle join") {
-      val p = planOf("mlprep_psi_drift")
-      !p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin") &&
         !p.contains("CartesianProduct")
     }
     // sim14: the kNN join's pair space must come from the cell equi key
@@ -606,55 +565,6 @@ object Plans {
       (p.contains("RunningWindowFunction") || p.contains("Window")) &&
         !p.contains("CartesianProduct") &&
         !p.contains("BroadcastNestedLoopJoin")
-    }
-    // mlprep_learning_curve: prefixes come from the CACHED cumulative
-    // frame (one corpus scan feeds it); every boundary/holdout join is
-    // broadcast of day-count-sized frames
-    check("mlprep_learning_curve: cached cum frame, broadcast joins") {
-      val p = planOf("mlprep_learning_curve")
-      val imts = "InMemoryTableScan".r.findAllIn(p).length
-      imts > 0 && "Scan parquet".r.findAllIn(p).length == imts &&
-        !p.contains("SortMergeJoin") && !p.contains("CartesianProduct")
-    }
-    // mlprep_robust_scaler: the fit side works on the cent-grid
-    // HISTOGRAM (a data-sized sort would show as a second Sort under
-    // a non-histogram aggregate); the edges reach the transform scan
-    // by broadcast, never a shuffle join
-    check("mlprep_robust_scaler: histogram fit, broadcast edges") {
-      val p = planOf("mlprep_robust_scaler")
-      p.contains("BroadcastNestedLoopJoin") &&
-        !p.contains("SortMergeJoin") &&
-        "InMemoryTableScan".r.findAllIn(p).length > 0
-    }
-    // mlprep_roc_curve: the curve is windows over the SCORE HISTOGRAM —
-    // exactly one data-sized exchange (the histogram aggregate); the
-    // window sorts histogram rows, never data rows
-    check("mlprep_roc_curve: one data-sized exchange, histogram windows") {
-      val p = planOf("mlprep_roc_curve")
-      "Scan parquet".r.findAllIn(p).length == 1 && !p.contains("Join")
-    }
-    // mlprep_permutation_importance: ONE windowed pass (a second
-    // window or scan would mean per-feature re-permutation); join-free
-    check("mlprep_perm_importance: one scan, one window, join-free") {
-      val p = planOf("mlprep_permutation_importance")
-      "Scan parquet".r.findAllIn(p).length == 1 &&
-        "Window".r.findAllIn(p).length <= 2 && !p.contains("Join")
-    }
-    // mlprep_elastic_net: the whole λ-path is ONE scan into one
-    // aggregate; 40 coordinate updates stay pure projection work
-    check("mlprep_elastic_net: one scan, one aggregate, join-free") {
-      val p = planOf("mlprep_elastic_net")
-      "Scan parquet".r.findAllIn(p).length == 1 && !p.contains("Join") &&
-        "Exchange hashpartitioning".r.findAllIn(p).length == 1
-    }
-    // mlprep_shap_linear: moments, both histograms, and the sample all
-    // read the CACHED projection; model/summary attach by broadcast
-    check("mlprep_shap_linear: cached corpus pass, broadcast model") {
-      val p = planOf("mlprep_shap_linear")
-      val imts = "InMemoryTableScan".r.findAllIn(p).length
-      imts > 0 && "Scan parquet".r.findAllIn(p).length == imts &&
-        p.contains("BroadcastHashJoin") && !p.contains("SortMergeJoin") &&
-        !p.contains("CartesianProduct")
     }
     spark.stop()
     if (failed > 0) sys.exit(1)

@@ -338,7 +338,8 @@ object LinearFit {
 
 /** Exact order statistics of a bounded-domain integral column as a walk
   * over its per-group histogram, a DataFrame/oracle-SQL pair shared by
-  * a22, a29, a30, a36 and mlprep's median fill: one data-sized hash
+  * a22, a29, a30, a36, mlprep's median fill and its train-split edge fit
+  * (binning, robust scaler, PSI): one data-sized hash
   * aggregate to (keys…, v, cnt), per-group windows over THAT table for
   * the running count `cum` (v ascending) and the group total `n`, then
   * `min(v where cum ≥ rank)` picks with integer ranks. The windows put a
@@ -404,9 +405,21 @@ object HistogramWalk {
   /** The rank ceil(p·n / 100) of the lower p-th percentile. */
   def pct(p: Int): Column = expr(s"(n * $p + 99) DIV 100")
   def oPct(p: Int): String = s"(n * $p + 99) // 100"
+  /** The lower p-th percentile of a walk over the cent grid `vc` (exact
+    * hundredths as longs), back in units. */
+  def centQuantile(p: Int): Column =
+    pick(pct(p), "vc").cast("double") / 100.0
+  def oCentQuantile(p: Int): String =
+    s"CAST(${oPick(oPct(p), "vc")} AS DOUBLE) / 100.0"
+  /** The two middle order statistics, lower then upper (equal for odd n). */
+  def middle(v: String): (Column, Column) =
+    (pick(expr("(n + 1) DIV 2"), v), pick(expr("(n + 2) DIV 2"), v))
+  def oMiddle(v: String): (String, String) =
+    (oPick("(n + 1) // 2", v), oPick("(n + 2) // 2", v))
   /** The sum of the two middle order statistics: 2 × the median, exact. */
-  def median2(v: String): Column =
-    pick(expr("(n + 1) DIV 2"), v) + pick(expr("(n + 2) DIV 2"), v)
-  def oMedian2(v: String): String =
-    s"${oPick("(n + 1) // 2", v)} +\n    ${oPick("(n + 2) // 2", v)}"
+  def median2(v: String): Column = { val (lo, hi) = middle(v); lo + hi }
+  def oMedian2(v: String): String = {
+    val (lo, hi) = oMiddle(v)
+    s"$lo +\n    $hi"
+  }
 }

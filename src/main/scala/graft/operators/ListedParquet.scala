@@ -37,8 +37,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * one-task inference job it launches. Like that inference (without
   * `mergeSchema`), it assumes every file shares the first one's schema.
   * [[readPath]] is that read over one file or a flat directory of them:
-  * every fixture table and every materialized stage is read through it,
-  * so no Spark job runs before a query's own.
+  * every fixture table, every materialized stage and every snapshot
+  * delete vector is read through it, so no Spark job runs before a
+  * query's own.
   *
   * [[footerRanges]] reads a data file's per-column value ranges from the
   * same footers, on the driver and without a Spark job: the merge sink's

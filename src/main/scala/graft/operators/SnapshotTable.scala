@@ -965,7 +965,7 @@ object SnapshotTable {
           .groupBy(_.keyCol).toSeq.sortBy(_._1)
           .foldLeft(readFiles(spark, tablePath, v, group)) {
             case (acc, (kc, ds)) =>
-              val keys = ds.map(dd => spark.read.parquet(
+              val keys = ds.map(dd => ListedParquet.readPath(spark,
                   new Path(tablePath, dd.dir).toString))
                 .reduce(_ unionByName _).distinct()
               acc.join(keys, Seq(kc), "left_anti")

@@ -18,19 +18,13 @@ import org.apache.spark.sql.functions._
   */
 object AggQueries {
   import Parity._
+  import Walk.{centQuantile, oCentQuantile}
 
   /** Benford first-digit expectations log10(1+1/d) on the 1e-9 grid,
     * computed ONCE at class init and embedded as the SAME literal in
     * both engines' plans (a48) — no runtime libm anywhere. */
   private val BenfordQ: IndexedSeq[Long] = (1 to 9).map(dd =>
     math.floor(math.log10(1.0 + 1.0 / dd) * 1e9 + 0.5).toLong)
-
-  /** The lower p-th percentile of a walk over the cent grid `vc`, in
-    * units (a22, a36). */
-  private def centQuantile(p: Int): Column =
-    Walk.pick(Walk.pct(p), "vc").cast("double") / 100.0
-  private def oCentQuantile(p: Int): String =
-    s"CAST(${Walk.oPick(Walk.oPct(p), "vc")} AS DOUBLE) / 100.0"
 
   /** The full a25 KMV-distinct oracle — shared verbatim by the direct
     * sketch build (`a25_kmv_distinct`) and the shard-merge path

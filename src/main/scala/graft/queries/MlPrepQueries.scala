@@ -90,6 +90,32 @@ object MlPrepQueries {
             s"(${HistogramWalk.oMedian2("v")}) / 2.0 AS median")})"""
       .stripMargin
 
+  /** The leakage-safe fit of the binning, robust-scaler and PSI rows:
+    * over `ev(day, value, …)`, the 1-row `cutoff` (the last day − 7) and
+    * the 1-row `edges` (the named `fits`) of the walk over the TRAIN
+    * rows' cent grid `vc` ([[graft.HistogramWalk]], whose guard names
+    * `row`). Only the bounded histogram sorts; both rows ride broadcasts
+    * onto the transform scan. */
+  private def trainEdges(ev: DataFrame, row: String)(
+      fits: (String, Column)*): (DataFrame, DataFrame) = {
+    val cutoff = ev.agg(date_sub(max("day"), 7).as("cutoff"))
+    val train = ev.crossJoin(broadcast(cutoff))
+      .filter(col("day") < col("cutoff"))
+      .select(graft.Parity.lq(col("value")).as("vc"))
+    (cutoff, HistogramWalk.walk(train, Nil, "vc", row)(fits: _*))
+  }
+
+  /** Oracle-side mirror of [[trainEdges]] as CTEs: expects a relation
+    * `ev(day, value, …)`, yields `c(cutoff)` and `e(fits…)`. */
+  private def oTrainEdges(fits: String*): String =
+    s"""c AS (
+       |  SELECT CAST(max(day) - INTERVAL 7 DAY AS DATE) AS cutoff
+       |  FROM ev),
+       |e AS (
+       |  ${HistogramWalk.oWalk(s"(SELECT ${graft.Parity.oLq("value")} " +
+            "AS vc FROM ev, c WHERE ev.day < c.cutoff)", Nil, "vc")(
+            fits: _*)})""".stripMargin
+
   /** The `exchange_maintenance` calendar from the committed fixture
     * ([[graft.sources.CalendarSource]]): its first entry falls mid-range of
     * the events fixture, so days before it get NULL days-since-holiday —
@@ -369,30 +395,10 @@ object MlPrepQueries {
     // bounded grid.
     QueryDef(
       "mlprep_binning",
-      Some("""WITH ev AS (
+      Some(s"""WITH ev AS (
              |  SELECT event_id, CAST(ts AS DATE) AS day, value FROM events),
-             |c AS (
-             |  SELECT CAST(max(day) - INTERVAL 7 DAY AS DATE) AS cutoff
-             |  FROM ev),
-             |h AS (
-             |  SELECT CAST(floor(value * 100.0 + 0.5) AS BIGINT) AS vc,
-             |    count(*) AS cnt
-             |  FROM ev, c WHERE ev.day < c.cutoff GROUP BY 1),
-             |cm AS (
-             |  SELECT vc,
-             |    sum(cnt) OVER (ORDER BY vc
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-             |    sum(cnt) OVER () AS total
-             |  FROM h),
-             |e AS (
-             |  SELECT
-             |    CAST(min(CASE WHEN cum >= (total * 25 + 99) // 100
-             |      THEN vc END) AS DOUBLE) / 100.0 AS e25,
-             |    CAST(min(CASE WHEN cum >= (total * 50 + 99) // 100
-             |      THEN vc END) AS DOUBLE) / 100.0 AS e50,
-             |    CAST(min(CASE WHEN cum >= (total * 75 + 99) // 100
-             |      THEN vc END) AS DOUBLE) / 100.0 AS e75
-             |  FROM cm)
+             |${oTrainEdges(Seq(25, 50, 75).map(p =>
+                  s"${HistogramWalk.oCentQuantile(p)} AS e$p"): _*)}
              |SELECT event_id, day, value,
              |  CASE WHEN day < cutoff THEN 'train' ELSE 'test' END AS role,
              |  CAST(CASE WHEN value <= e25 THEN 0 WHEN value <= e50 THEN 1
@@ -405,21 +411,9 @@ object MlPrepQueries {
           .select(col("event_id"), to_date(col("ts")).as("day"),
             col("value"))
           .persist() // cutoff/fit aggregates + the binning scan
-        val cutoff = ev.agg(date_sub(max("day"), 7).as("cutoff"))
-        val cumW = Window.orderBy("vc")
-          .rowsBetween(Window.unboundedPreceding, 0)
-        val allW = Window.rowsBetween(Window.unboundedPreceding,
-          Window.unboundedFollowing)
-        def q(pct: Int) =
-          min(when(col("cum") >= expr(s"(total * $pct + 99) DIV 100"),
-            col("vc"))).cast("double") / 100.0
-        val edges = ev.crossJoin(broadcast(cutoff))
-          .filter(col("day") < col("cutoff"))
-          .select(floor(col("value") * 100.0 + 0.5).cast("long").as("vc"))
-          .groupBy("vc").agg(count(lit(1)).as("cnt"))
-          .withColumn("cum", sum("cnt").over(cumW))
-          .withColumn("total", sum("cnt").over(allW))
-          .agg(q(25).as("e25"), q(50).as("e50"), q(75).as("e75"))
+        val (cutoff, edges) = trainEdges(ev, "mlprep_binning")(
+          Seq(25, 50, 75).map(p =>
+            s"e$p" -> HistogramWalk.centQuantile(p)): _*)
         ev.crossJoin(broadcast(cutoff)).crossJoin(broadcast(edges))
           .select(col("event_id"), col("day"), col("value"),
             when(col("day") < col("cutoff"), "train").otherwise("test")
@@ -447,60 +441,32 @@ object MlPrepQueries {
     // transform is one identical subtract→divide IEEE tree both sides.
     QueryDef(
       "mlprep_robust_scaler",
-      Some("""WITH ev AS (
+      Some {
+        val (oLo, oHi) = HistogramWalk.oMiddle("vc")
+        s"""WITH ev AS (
              |  SELECT event_id, CAST(ts AS DATE) AS day, value FROM events),
-             |c AS (
-             |  SELECT CAST(max(day) - INTERVAL 7 DAY AS DATE) AS cutoff
-             |  FROM ev),
-             |h AS (
-             |  SELECT CAST(floor(value * 100.0 + 0.5) AS BIGINT) AS vc,
-             |    count(*) AS cnt
-             |  FROM ev, c WHERE ev.day < c.cutoff GROUP BY 1),
-             |cm AS (
-             |  SELECT vc,
-             |    sum(cnt) OVER (ORDER BY vc
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-             |    sum(cnt) OVER () AS total
-             |  FROM h),
-             |e AS (
-             |  SELECT
-             |    (CAST(min(CASE WHEN cum >= (total + 1) // 2 THEN vc END)
-             |        AS DOUBLE) +
-             |     CAST(min(CASE WHEN cum >= (total + 2) // 2 THEN vc END)
-             |        AS DOUBLE)) / 2.0 / 100.0 AS med,
-             |    CAST(min(CASE WHEN cum >= (total * 75 + 99) // 100
-             |      THEN vc END) AS DOUBLE) / 100.0
-             |    - CAST(min(CASE WHEN cum >= (total * 25 + 99) // 100
-             |      THEN vc END) AS DOUBLE) / 100.0 AS iqr
-             |  FROM cm)
+             |${oTrainEdges(
+                  s"(CAST($oLo AS DOUBLE) +\n    CAST($oHi AS DOUBLE)) " +
+                    "/ 2.0 / 100.0 AS med",
+                  s"${HistogramWalk.oCentQuantile(75)}\n    - " +
+                    s"${HistogramWalk.oCentQuantile(25)} AS iqr")}
              |SELECT event_id, day, value,
              |  CASE WHEN day < cutoff THEN 'train' ELSE 'test' END AS role,
              |  med, iqr,
              |  (value - med) / nullif(iqr, 0.0) AS zr
-             |FROM ev, c, e""".stripMargin),
+             |FROM ev, c, e""".stripMargin
+      },
       (s, d) => {
         val ev = Tables.events(s, d)
           .select(col("event_id"), to_date(col("ts")).as("day"),
             col("value"))
           .persist() // cutoff/fit aggregates + the transform scan
-        val cutoff = ev.agg(date_sub(max("day"), 7).as("cutoff"))
-        val cumW = Window.orderBy("vc")
-          .rowsBetween(Window.unboundedPreceding, 0)
-        val allW = Window.rowsBetween(Window.unboundedPreceding,
-          Window.unboundedFollowing)
-        def ord(posExpr: String) =
-          min(when(col("cum") >= expr(posExpr), col("vc"))).cast("double")
-        val edges = ev.crossJoin(broadcast(cutoff))
-          .filter(col("day") < col("cutoff"))
-          .select(floor(col("value") * 100.0 + 0.5).cast("long").as("vc"))
-          .groupBy("vc").agg(count(lit(1)).as("cnt"))
-          .withColumn("cum", sum("cnt").over(cumW))
-          .withColumn("total", sum("cnt").over(allW))
-          .agg(
-            ((ord("(total + 1) DIV 2") + ord("(total + 2) DIV 2")) /
-              lit(2.0) / lit(100.0)).as("med"),
-            (ord("(total * 75 + 99) DIV 100") / lit(100.0)
-              - ord("(total * 25 + 99) DIV 100") / lit(100.0)).as("iqr"))
+        val (lo, hi) = HistogramWalk.middle("vc")
+        val (cutoff, edges) = trainEdges(ev, "mlprep_robust_scaler")(
+          "med" -> ((lo.cast("double") + hi.cast("double")) /
+            lit(2.0) / lit(100.0)),
+          "iqr" -> (HistogramWalk.centQuantile(75) -
+            HistogramWalk.centQuantile(25)))
         ev.crossJoin(broadcast(cutoff)).crossJoin(broadcast(edges))
           .select(col("event_id"), col("day"), col("value"),
             when(col("day") < col("cutoff"), "train").otherwise("test")
@@ -1398,33 +1364,10 @@ object MlPrepQueries {
     // quantized to a long at 1e9 (lrq doctrine), PSI emitted at 1e9.
     QueryDef(
       "mlprep_psi_drift",
-      Some("""WITH ev AS (
+      Some(s"""WITH ev AS (
              |  SELECT CAST(ts AS DATE) AS day, value FROM events),
-             |c AS (
-             |  SELECT CAST(max(day) - INTERVAL 7 DAY AS DATE) AS cutoff
-             |  FROM ev),
-             |h AS (
-             |  SELECT CAST(floor(value * 100.0 + 0.5) AS BIGINT) AS vc,
-             |    count(*) AS cnt
-             |  FROM ev, c WHERE ev.day < c.cutoff GROUP BY 1),
-             |cm AS (
-             |  SELECT vc,
-             |    sum(cnt) OVER (ORDER BY vc
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-             |    sum(cnt) OVER () AS total
-             |  FROM h),
-             |e AS (
-             |  SELECT
-             |    CAST(min(CASE WHEN cum >= (total * 10 + 99) // 100 THEN vc END) AS DOUBLE) / 100.0 AS e1,
-             |    CAST(min(CASE WHEN cum >= (total * 20 + 99) // 100 THEN vc END) AS DOUBLE) / 100.0 AS e2,
-             |    CAST(min(CASE WHEN cum >= (total * 30 + 99) // 100 THEN vc END) AS DOUBLE) / 100.0 AS e3,
-             |    CAST(min(CASE WHEN cum >= (total * 40 + 99) // 100 THEN vc END) AS DOUBLE) / 100.0 AS e4,
-             |    CAST(min(CASE WHEN cum >= (total * 50 + 99) // 100 THEN vc END) AS DOUBLE) / 100.0 AS e5,
-             |    CAST(min(CASE WHEN cum >= (total * 60 + 99) // 100 THEN vc END) AS DOUBLE) / 100.0 AS e6,
-             |    CAST(min(CASE WHEN cum >= (total * 70 + 99) // 100 THEN vc END) AS DOUBLE) / 100.0 AS e7,
-             |    CAST(min(CASE WHEN cum >= (total * 80 + 99) // 100 THEN vc END) AS DOUBLE) / 100.0 AS e8,
-             |    CAST(min(CASE WHEN cum >= (total * 90 + 99) // 100 THEN vc END) AS DOUBLE) / 100.0 AS e9
-             |  FROM cm),
+             |${oTrainEdges((1 to 9).map(i =>
+                  s"${HistogramWalk.oCentQuantile(i * 10)} AS e$i"): _*)},
              |binned AS (
              |  SELECT CASE WHEN day < cutoff THEN 1 ELSE 0 END AS is_train,
              |    CAST(CASE WHEN value <= e1 THEN 0 WHEN value <= e2 THEN 1
@@ -1458,22 +1401,9 @@ object MlPrepQueries {
         val ev = Tables.events(s, d)
           .select(to_date(col("ts")).as("day"), col("value"))
           .persist() // cutoff + decile-fit aggregates + the binning scan
-        val cutoff = ev.agg(date_sub(max("day"), 7).as("cutoff"))
-        val cumW = Window.orderBy("vc")
-          .rowsBetween(Window.unboundedPreceding, 0)
-        val allW = Window.rowsBetween(Window.unboundedPreceding,
-          Window.unboundedFollowing)
-        def q(pct: Int) =
-          min(when(col("cum") >= expr(s"(total * $pct + 99) DIV 100"),
-            col("vc"))).cast("double") / 100.0
-        val edges = ev.crossJoin(broadcast(cutoff))
-          .filter(col("day") < col("cutoff"))
-          .select(floor(col("value") * 100.0 + 0.5).cast("long").as("vc"))
-          .groupBy("vc").agg(count(lit(1)).as("cnt"))
-          .withColumn("cum", sum("cnt").over(cumW))
-          .withColumn("total", sum("cnt").over(allW))
-          .agg(q(10).as("e1"),
-            (2 to 9).map(i => q(i * 10).as(s"e$i")): _*)
+        val (cutoff, edges) = trainEdges(ev, "mlprep_psi_drift")(
+          (1 to 9).map(i =>
+            s"e$i" -> HistogramWalk.centQuantile(i * 10)): _*)
         val bin = (1 to 9).foldLeft(when(col("value") <= col("e1"), 0L)) {
           case (acc, i) if i > 1 => acc.when(col("value") <= col(s"e$i"), i - 1L)
           case (acc, _) => acc

@@ -1,10 +1,12 @@
 package graft.queries
 
 import graft.{LinearFit, QueryDef, Sinks, Tables}
+import graft.streaming.StreamingOps
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 /** SURVEY §2.9 — the streaming flavors driven through REAL micro-batch
   * execution, hash-verified against declarative batch oracles. The batch
@@ -13,8 +15,19 @@ import org.apache.spark.sql.streaming.Trigger
   * source discovery order, watermark advancement across micro-batches,
   * append-mode window finalization, and the checkpointed foreachBatch
   * MERGE sink.
+  *
+  * Replay policy, the same for every row ([[Replay]]): the input is cut
+  * into chunk files whose modification times are spaced a minute apart in
+  * feed order, and the file source reads them in modification-time order,
+  * ONE file per trigger — so each chunk is one micro-batch and arrival
+  * order is data the row controls, not an accident of write latency. Each
+  * stream runs under its own shuffle-partition count, sized to stream
+  * volume (8; 4 where the fixed per-partition store machinery dominates),
+  * set for the run and restored afterwards, and drains under
+  * `Trigger.AvailableNow`.
   */
 object StreamingQueries {
+  import Replay.{bounds, slice}
 
   /** Recursively drop a scratch root (fresh state per invocation — a
     * leftover checkpoint would make the file source see "no new data"). */
@@ -25,24 +38,83 @@ object StreamingQueries {
     ()
   }
 
-  /** Run `body` with the shuffle-partition count the STREAM should use.
-    *
-    * Stateful streaming cost at fixture scale is dominated by fixed
-    * machinery — one state-store instance per shuffle partition per
-    * stateful operator per micro-batch (a stream-stream join keeps FOUR
-    * stores per partition) — not by rows. The batch default (32 here)
-    * exists for batch shuffles; a stream's state partitioning should be
-    * sized to stream volume. Structured Streaming pins the count into the
-    * checkpoint at first run (fresh per invocation here), so this is also
-    * the honest production shape: pick it per stream, scale it with
-    * throughput, never inherit the batch default. Restores the session
-    * conf afterwards (queries run sequentially in Verify/Bench).
-    */
-  private def withStreamPartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
+  /** One row's replay: a fresh scratch root under [[Sinks.dir]] holding
+    * the fed chunks (`src`), the sink and the checkpoint, and the steps
+    * every row takes over them, each written once here. */
+  private[graft] final class Replay(s: SparkSession, name: String,
+                                    d: String) {
+    val base: String = Sinks.dir(s, name, d)
+    reset(s, base)
+    val src = s"$base/src"
+    val sink = s"$base/sink"
+    val ckpt = s"$base/ckpt"
+    private var fed = 0
+
+    /** Write `chunks` as the next `chunk_<n>.parquet` files — `n` counts
+      * on across calls — with modification time `Epoch + n·60 s`, in one
+      * job ([[writeChunkFiles]]). */
+    def feed(chunks: DataFrame*): Unit = {
+      writeChunkFiles(s, chunks.zipWithIndex.map { case (c, i) =>
+        (c, s"$src/chunk_${fed + i}.parquet", Replay.Epoch + (fed + i) * 60000L)
+      })
+      fed += chunks.size
+    }
+
+    /** The fed chunks as a stream: one file per micro-batch, in
+      * modification-time order. */
+    def source(schema: StructType): DataFrame = s.readStream
+      .schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
+
+    /** Start a query with the AvailableNow trigger under `partitions`
+      * shuffle partitions (plus `conf`) and wait until it has drained
+      * every fed file; the session conf is restored afterwards. The
+      * partition count is pinned into the checkpoint at first run
+      * (fresh per invocation here), so this is also the production
+      * shape: pick it per stream, never inherit the batch default. */
+    def run(partitions: Int, conf: (String, String)*)(
+        start: Trigger => StreamingQuery): Unit =
+      Replay.withConf(s,
+        ("spark.sql.shuffle.partitions" -> partitions.toString) +: conf: _*) {
+        start(Trigger.AvailableNow()).awaitTermination()
+      }
+
+    /** The exactly-once parquet append sink at `sink`, fed by `df`
+      * (built when the run starts). */
+    def toFiles(df: => DataFrame): Trigger => StreamingQuery = t =>
+      df.writeStream.format("parquet")
+        .option("path", sink).option("checkpointLocation", ckpt)
+        .outputMode("append").trigger(t).start()
+
+    /** What the sink holds. */
+    def out: DataFrame = s.read.parquet(sink)
+  }
+
+  private[graft] object Replay {
+    /** The replay clock's origin (2023-11-14T22:13:20Z): chunk n's
+      * modification time is `Epoch + n·60 s`. */
+    val Epoch = 1700000000000L
+
+    /** `[t0, t1]`: the first and last `ts` of `df` in epoch ms. */
+    def bounds(df: DataFrame): (Long, Long) = {
+      val r = df.agg(min("ts"), max("ts")).head()
+      (r.getTimestamp(0).getTime, r.getTimestamp(1).getTime)
+    }
+
+    /** The rows of `df` whose `ts` lies in `[lo, hi)` epoch ms. */
+    def slice(df: DataFrame, lo: Long, hi: Long): DataFrame =
+      df.filter(col("ts") >= timestamp_millis(lit(lo)) &&
+        col("ts") < timestamp_millis(lit(hi)))
+
+    /** Run `body` with `kvs` set on the session conf; afterwards each key
+      * gets back its earlier value, or is unset if it had none. */
+    def withConf[T](s: SparkSession, kvs: (String, String)*)(body: => T): T = {
+      val prev = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
+      kvs.foreach { case (k, v) => s.conf.set(k, v) }
+      try body finally prev.foreach {
+        case (k, Some(v)) => s.conf.set(k, v)
+        case (k, None) => s.conf.unset(k)
+      }
+    }
   }
 
   /** A cut instant GUARANTEED to split a per-user window or session at
@@ -63,9 +135,7 @@ object StreamingQueries {
                                 maxGapUs: Long = Long.MaxValue): Long = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("user_id").orderBy("ts")
-    val pairs = ev
-      .filter(col("ts") >= timestamp_millis(lit(lo)) &&
-        col("ts") < timestamp_millis(lit(hi)))
+    val pairs = slice(ev, lo, hi)
       .withColumn("prev", lag("ts", 1).over(w))
       .filter(col("prev").isNotNull && col("prev") < col("ts"))
       .withColumn("gap", unix_micros(col("ts")) - unix_micros(col("prev")))
@@ -78,31 +148,69 @@ object StreamingQueries {
       r.getAs[java.sql.Timestamp]("ts").getTime + 1) / 2
   }
 
-  /** Write `df` as exactly one parquet FILE at `target` with a pinned
-    * modification time — the file source processes files in mod-time
-    * order, so arrival order is data the test controls, not an accident
-    * of write latency. */
-  private def writeOneFile(s: SparkSession, df: DataFrame, target: String,
-                           mtime: Long): Unit = {
-    val tgt = new Path(target)
-    val fs = tgt.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val tmp = new Path(target + "_tmp")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = fs.listStatus(tmp).map(_.getPath)
-      .find(_.getName.startsWith("part-"))
-      .getOrElse(throw new IllegalStateException(s"no part file under $tmp"))
-    fs.mkdirs(tgt.getParent)
-    fs.rename(part, tgt)
-    fs.delete(tmp, true)
-    fs.setTimes(tgt, mtime, -1)
+  /** Noon (UTC) of the middle day of `[t0, t1]`, not the raw span
+    * midpoint: the fixture's events end each day just before midnight,
+    * so a raw midpoint lands in the empty minutes near a day boundary —
+    * noon leaves both sides non-empty at every SF and splits some
+    * (user, day). */
+  private def middayCut(t0: Long, t1: Long): Long = {
+    val mid = t0 + (t1 - t0 + 1) / 2
+    mid - math.floorMod(mid, 86400000L) + 43200000L
   }
 
-  /** Write several same-schema chunks as exactly one parquet FILE each
-    * (same contract as [[writeOneFile]]) in ONE Spark job: the chunks are
+  /** Whether some (user, hour) of `ev` has rows on both sides of `cut`.
+    * Such a window IS the hour containing the cut, so the scan prunes to
+    * that hour before grouping. */
+  private def hourSpans(ev: DataFrame, cut: Long): Boolean = {
+    val c = timestamp_millis(lit(cut))
+    ev.filter(date_trunc("hour", col("ts")) === date_trunc("hour", c))
+      .groupBy(col("user_id"), date_trunc("hour", col("ts")).as("w"))
+      .agg(sum(when(col("ts") < c, 1L).otherwise(0L)).as("before"),
+        sum(when(col("ts") >= c, 1L).otherwise(0L)).as("after"))
+      .filter(col("before") > 0 && col("after") > 0).limit(1).count() > 0
+  }
+
+  /** One far-future `(user_id, ts, value)` row 30 days after `t1`: fed
+    * last, it advances the watermark past every real window (append mode
+    * emits a window exactly once, when it finalizes; the sentinel's own
+    * window never finalizes and is filtered anyway). */
+  private def sentinel(s: SparkSession, t1: Long): DataFrame = {
+    import s.implicits._
+    Seq((-1L, new java.sql.Timestamp(t1 + 30L * 24 * 3600 * 1000), 0.0))
+      .toDF("user_id", "ts", "value")
+  }
+
+  /** st1/st7's operator: 1-hour OHLC windows of the fed events, each
+    * MERGEd into the sink on (user_id, win_start) via the idempotent
+    * keyed insert. The batch IS the (user_id, win_start) aggregate —
+    * key-unique by construction, so the sink skips its per-batch dedup
+    * shuffle (r13). */
+  private def resampleMerge(r: Replay, schema: StructType)(
+      t: Trigger): StreamingQuery =
+    StreamingOps.mergeSink(StreamingOps.tumblingResample(r.source(schema)),
+      sinkPath = r.sink, keyCols = Seq("user_id", "win_start"),
+      orderCol = "win_start", checkpoint = r.ckpt, trigger = Some(t),
+      sourceKeyUnique = true)
+
+  /** st2/st12's two join sides: the views and the clicks of one fed
+    * event stream. Their runs take 4 shuffle partitions, not 8: a
+    * stream-stream join keeps FOUR state stores per partition (two per
+    * side) and every micro-batch commits all of them; at fixture volume
+    * that fixed store machinery is the whole cost. */
+  private def viewsAndClicks(r: Replay, schema: StructType)
+      : (DataFrame, DataFrame) = {
+    def side(tpe: String): DataFrame = r.source(schema)
+      .filter(col("event_type") === tpe)
+      .select("event_id", "user_id", "ts", "value")
+    (side("view"), side("click"))
+  }
+
+  /** Write several same-schema chunks as exactly one parquet FILE each,
+    * with a pinned modification time, in ONE Spark job: the chunks are
     * unioned under an index column, shuffled so each index lands whole in
     * one task, written with `partitionBy` (one file per index), then the
     * part files are renamed to their targets with pinned mod-times.
-    * r13 optimization: the per-chunk `coalesce(1)` writes each re-scanned
+    * r13 optimization: per-chunk `coalesce(1)` writes each re-scanned
     * the source and each paid a full job round-trip; the chunked-ingest
     * fixtures are all derived from one frame, so one job suffices. Row
     * ORDER inside a chunk file is shuffle-nondeterministic, which is
@@ -133,6 +241,14 @@ object StreamingQueries {
     }
     fs.delete(root, true)
   }
+
+  /** Midnight UTC of 2024-01-01, -11 and -21 in epoch ms: st10's commit
+    * slices, which its oracle spells as timestamps, and st9's inner cuts. */
+  private def utcDay(day: String): Long = java.time.LocalDate.parse(day)
+    .atStartOfDay(java.time.ZoneOffset.UTC).toInstant.toEpochMilli
+  private val Jan1 = utcDay("2024-01-01")
+  private val Jan11 = utcDay("2024-01-11")
+  private val Jan21 = utcDay("2024-01-21")
 
   /** The trend-segmentation oracle (state machine unrolled as a
     * recursive CTE) — shared by st6 (flatMapGroupsWithState) and st13
@@ -187,19 +303,17 @@ object StreamingQueries {
     // fetch window → ON CONFLICT DO NOTHING load, repeated per poll).
     //
     // Execution is genuinely incremental: the events table is split into
-    // TIME-ORDERED single-file chunks discovered one per micro-batch
-    // (maxFilesPerTrigger=1), so the 1-hour OHLC windows form across
-    // batch boundaries with a 2-hour watermark; a far-future sentinel file
-    // arrives last purely to advance the watermark past every real window
-    // (append mode emits a window exactly once, when it finalizes — the
-    // sentinel's own window never finalizes and is filtered anyway).
+    // TIME-ORDERED single-file chunks discovered one per micro-batch, so
+    // the 1-hour OHLC windows form across batch boundaries with a 2-hour
+    // watermark; a far-future sentinel file arrives last purely to
+    // advance the watermark past every real window.
     // Two data chunks: one boundary is enough to prove the cross-batch
     // window/watermark machinery, and each extra micro-batch costs ~1.5s
     // of fixed checkpoint/MERGE machinery in the bench — the row's cost
     // is that machinery, not data volume.
     // Each emitted window MERGEs into the parquet sink via the idempotent
     // keyed insert ([[graft.operators.MergeUpsert.insertIfAbsent]] on
-    // (user_id, win_start)) under a real checkpoint, Trigger.AvailableNow.
+    // (user_id, win_start)) under a real checkpoint.
     //
     // The oracle is the BATCH aggregate of the same rows — proving the
     // stream's per-batch emission converges to exactly the declarative
@@ -218,68 +332,20 @@ object StreamingQueries {
              |FROM events
              |GROUP BY 1, 2""".stripMargin),
       (s, d) => {
-        val base = Sinks.dir(s, "stream_merge", d)
-        reset(s, base)
-        val srcDir = s"$base/src"
+        val r = new Replay(s, "stream_merge", d)
         val ev = Tables.events(s, d).select("user_id", "ts", "value")
-        val bounds = ev.agg(min("ts"), max("ts")).head()
-        val t0 = bounds.getTimestamp(0).getTime
-        val t1 = bounds.getTimestamp(1).getTime
+        val (t0, t1) = bounds(ev)
         // interior cut between a same-user same-hour event pair so a
         // (user, window) genuinely forms ACROSS the batch boundary at
         // every SF
-        val cuts = Seq(t0,
-          cutInsideUserPair(ev, t0, t1 + 1, sameHour = true), t1 + 1)
-        // deterministic, widely spaced mod-times (file-source order key)
-        val mt0 = 1700000000000L
-        import s.implicits._
-        val sentinel = Seq(
-          (-1L, new java.sql.Timestamp(t1 + 30L * 24 * 3600 * 1000), 0.0))
-          .toDF("user_id", "ts", "value")
-        writeChunkFiles(s, (0 until 2).map { k =>
-          (ev.filter(
-            col("ts") >= timestamp_millis(lit(cuts(k))) &&
-              col("ts") < timestamp_millis(lit(cuts(k + 1)))),
-            s"$srcDir/chunk_$k.parquet", mt0 + k * 60000L)
-        } :+ ((sentinel, s"$srcDir/chunk_2.parquet", mt0 + 2 * 60000L)))
-
-        withStreamPartitions(s, 8) {
-          val stream = s.readStream
-            .schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(srcDir)
-          val q = graft.streaming.StreamingOps.mergeSink(
-            graft.streaming.StreamingOps.tumblingResample(stream),
-            sinkPath = s"$base/sink",
-            keyCols = Seq("user_id", "win_start"), orderCol = "win_start",
-            checkpoint = s"$base/ckpt",
-            trigger = Some(Trigger.AvailableNow()),
-            // the batch IS the (user_id, win_start) aggregate — key-
-            // unique by construction, so the sink skips its per-batch
-            // dedup shuffle (r13)
-            sourceKeyUnique = true)
-          q.awaitTermination()
-        }
+        val cut = cutInsideUserPair(ev, t0, t1 + 1, sameHour = true)
+        r.feed(slice(ev, t0, cut), slice(ev, cut, t1 + 1), sentinel(s, t1))
+        r.run(8)(resampleMerge(r, ev.schema))
         // a (user, window) must have rows in BOTH chunks: the cross-batch
-        // window/watermark machinery is the thing this row proves.
-        // r13: a window split by the boundary necessarily IS the hour
-        // containing it (rows on both sides of the cut inside one hour),
-        // so the scan prunes to that hour before grouping — identical
-        // predicate, pushdown-friendly.
-        val boundary = cuts(1)
-        val crossing = ev
-          .filter(date_trunc("hour", col("ts")) ===
-            date_trunc("hour", timestamp_millis(lit(boundary))))
-          .groupBy(col("user_id"), date_trunc("hour", col("ts")).as("w"))
-          .agg(
-            sum(when(col("ts") < timestamp_millis(lit(boundary)), 1L)
-              .otherwise(0L)).as("before"),
-            sum(when(col("ts") >= timestamp_millis(lit(boundary)), 1L)
-              .otherwise(0L)).as("after"))
-          .filter(col("before") > 0 && col("after") > 0).limit(1).count()
-        require(crossing > 0,
+        // window/watermark machinery is the thing this row proves
+        require(hourSpans(ev, cut),
           "st1: no window spans the batch boundary — proof is vacuous")
-        s.read.parquet(s"$base/sink")
+        r.out
           .filter(col("user_id") =!= -1L)
           .select("user_id", "win_start", "open", "high", "low", "close",
             "n_events")
@@ -312,48 +378,26 @@ object StreamingQueries {
              |  AND c.ts >= v.ts
              |  AND c.ts <= v.ts + INTERVAL 1 HOUR""".stripMargin),
       (s, d) => {
-        val base = Sinks.dir(s, "stream_ssj", d)
-        reset(s, base)
-        val srcDir = s"$base/src"
+        val r = new Replay(s, "stream_ssj", d)
         val ev = Tables.events(s, d)
           .select("event_id", "user_id", "ts", "value", "event_type")
           .filter(col("event_type").isin("view", "click"))
-        val bounds = ev.agg(min("ts"), max("ts")).head()
-        val t0 = bounds.getTimestamp(0).getTime
-        val span = bounds.getTimestamp(1).getTime - t0 + 1
-        val cuts = (0 to 2).map(k => t0 + span * k / 2)
-        val mt0 = 1700000000000L
-        writeChunkFiles(s, (0 until 2).map { k =>
-          (ev.filter(
-            col("ts") >= timestamp_millis(lit(cuts(k))) &&
-              col("ts") < timestamp_millis(lit(cuts(k + 1)))),
-            s"$srcDir/chunk_$k.parquet", mt0 + k * 60000L)
-        })
-        // 4 partitions, not the stream default 8: a stream-stream join
-        // keeps FOUR state stores per partition (two per side) and every
-        // micro-batch commits all of them; at fixture volume that fixed
-        // store machinery is the whole cost, so the join rows size state
-        // partitioning down further
-        withStreamPartitions(s, 4) {
-          def side(tpe: String): DataFrame = s.readStream
-            .schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(srcDir)
-            .filter(col("event_type") === tpe)
-            .select("event_id", "user_id", "ts", "value")
-          val joined = graft.streaming.StreamingOps.streamingIntervalJoin(
-            side("view"), side("click"), horizon = "1 hour")
-          val q = graft.streaming.StreamingOps.mergeSink(
-            joined, sinkPath = s"$base/sink",
+        val (t0, t1) = bounds(ev)
+        val mid = t0 + (t1 - t0 + 1) / 2
+        r.feed(slice(ev, t0, mid), slice(ev, mid, t1 + 1))
+        r.run(4) { t =>
+          val (views, clicks) = viewsAndClicks(r, ev.schema)
+          StreamingOps.mergeSink(
+            StreamingOps.streamingIntervalJoin(views, clicks,
+              horizon = "1 hour"),
+            sinkPath = r.sink,
             keyCols = Seq("imp_id", "click_id"), orderCol = "imp_id",
-            checkpoint = s"$base/ckpt",
-            trigger = Some(Trigger.AvailableNow()),
+            checkpoint = r.ckpt, trigger = Some(t),
             // one row per matched (imp, click) event-id pair — key-unique
             // by construction (r13)
             sourceKeyUnique = true)
-          q.awaitTermination()
         }
-        s.read.parquet(s"$base/sink")
+        r.out
           .select("user_id", "imp_ts", "imp_value", "click_ts",
             "imp_id", "click_id")
       }),
@@ -383,13 +427,10 @@ object StreamingQueries {
       "st3_stream_dedup",
       Some("SELECT DISTINCT md5(text) AS text_hash FROM documents"),
       (s, d) => {
-        val base = Sinks.dir(s, "stream_dedup", d)
-        reset(s, base)
-        val srcDir = s"$base/src"
+        val r = new Replay(s, "stream_dedup", d)
         val docs = Tables.documents(s, d).select("doc_id", "text")
-        val t0 = 1700000000000L
         val withTs = docs.withColumn("ts",
-          timestamp_millis(lit(t0) + col("doc_id") * 1000L))
+          timestamp_millis(lit(Replay.Epoch) + col("doc_id") * 1000L))
         val mid = docs.agg(max("doc_id")).head().getLong(0) / 2
         val chunk0 = withTs.filter(col("doc_id") <= mid)
         // cross-batch duplicates: every 5th chunk-0 doc re-arrives 30 min
@@ -397,29 +438,10 @@ object StreamingQueries {
         val dups = chunk0.filter(col("doc_id") % 5 === 0)
           .withColumn("ts", col("ts") + expr("INTERVAL 30 MINUTES"))
         val chunk1 = withTs.filter(col("doc_id") > mid).unionAll(dups)
-        val mt0 = 1700000000000L
-        writeChunkFiles(s, Seq(
-          (chunk0, s"$srcDir/chunk_0.parquet", mt0),
-          (chunk1, s"$srcDir/chunk_1.parquet", mt0 + 60000L)))
-
-        withStreamPartitions(s, 8) {
-          val stream = s.readStream
-            .schema(chunk0.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(srcDir)
-          val q = graft.streaming.StreamingOps.streamingDedup(
-              stream, horizon = "2 hours")
-            .select("text_hash")
-            .writeStream
-            .format("parquet")
-            .option("path", s"$base/sink")
-            .option("checkpointLocation", s"$base/ckpt")
-            .outputMode("append")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        val out = s.read.parquet(s"$base/sink")
+        r.feed(chunk0, chunk1)
+        r.run(8)(r.toFiles(StreamingOps.streamingDedup(
+          r.source(chunk0.schema), horizon = "2 hours").select("text_hash")))
+        val out = r.out
         // non-vacuity: duplicates were actually fed, and none survived
         val nDistinct = docs.select("text").distinct().count()
         val nFed = chunk0.count() + chunk1.count()
@@ -493,46 +515,24 @@ object StreamingQueries {
              |  OR date_diff('millisecond', session_end, max_ts)
              |     > 21600000""".stripMargin),
       (s, d) => {
-        val base = Sinks.dir(s, "stream_sess", d)
-        reset(s, base)
-        val srcDir = s"$base/src"
+        val r = new Replay(s, "stream_sess", d)
         val ev = Tables.events(s, d).select(col("user_id"), col("ts"),
           floor(col("value") * 100.0 + 0.5).cast("double").as("value"))
-        val bounds = ev.agg(min("ts"), max("ts")).head()
-        val t0 = bounds.getTimestamp(0).getTime
-        val t1 = bounds.getTimestamp(1).getTime
+        val (t0, t1) = bounds(ev)
         // cut between a same-user pair with gap <= 6 h: that user's
         // session provably spans the batch boundary at every SF
         val cut = cutInsideUserPair(ev, t0, t1 + 1, sameHour = false,
           maxGapUs = 21600L * 1000000L)
-        val mt0 = 1700000000000L
-        writeChunkFiles(s, Seq(
-          (ev.filter(col("ts") < timestamp_millis(lit(cut))),
-            s"$srcDir/chunk_0.parquet", mt0),
-          (ev.filter(col("ts") >= timestamp_millis(lit(cut))),
-            s"$srcDir/chunk_1.parquet", mt0 + 60000L)))
-
-        withStreamPartitions(s, 8) {
+        r.feed(slice(ev, t0, cut), slice(ev, cut, t1 + 1))
+        r.run(8)(r.toFiles {
           import s.implicits._
-          val stream = s.readStream
-            .schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(srcDir)
-          val q = graft.streaming.StreamingOps.sessionize(
-              stream.withWatermark("ts", "0 seconds")
-                .as[graft.streaming.StreamingOps.Ev],
+          StreamingOps.sessionize(
+              r.source(ev.schema).withWatermark("ts", "0 seconds")
+                .as[StreamingOps.Ev],
               gapSeconds = 21600L)
             .toDF()
-            .writeStream
-            .format("parquet")
-            .option("path", s"$base/sink")
-            .option("checkpointLocation", s"$base/ckpt")
-            .outputMode("append")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        val out = s.read.parquet(s"$base/sink")
+        })
+        val out = r.out
         // the cross-batch proof: at least one emitted session began
         // before the chunk cut and ended at/after it — state that
         // survived the micro-batch boundary and was extended there
@@ -576,42 +576,24 @@ object StreamingQueries {
           .stripMargin
       },
       (s, d) => {
-        val base = Sinks.dir(s, "stream_hll", d)
-        reset(s, base)
-        val srcDir = s"$base/src"
+        val r = new Replay(s, "stream_hll", d)
         val ev = Tables.events(s, d).select("user_id", "ts", "event_type")
-        val bounds = ev.agg(min("ts"), max("ts")).head()
-        val t0 = bounds.getTimestamp(0).getTime
-        val span = bounds.getTimestamp(1).getTime - t0 + 1
-        val cut = t0 + span / 2
-        val mt0 = 1700000000000L
-        writeChunkFiles(s, Seq(
-          (ev.filter(col("ts") < timestamp_millis(lit(cut))),
-            s"$srcDir/chunk_0.parquet", mt0),
-          (ev.filter(col("ts") >= timestamp_millis(lit(cut))),
-            s"$srcDir/chunk_1.parquet", mt0 + 60000L)))
-
-        withStreamPartitions(s, 8) {
-          val stream = s.readStream
-            .schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(srcDir)
-          val q = graft.streaming.StreamingOps.streamingHll(stream)
-            .toDF()
-            .writeStream
-            .option("checkpointLocation", s"$base/ckpt")
-            .foreachBatch { (batch: DataFrame, id: Long) =>
-              if (!batch.isEmpty)
-                batch.write.mode("overwrite").parquet(s"$base/sink/b=$id")
-              ()
-            }
-            .outputMode("update")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        val emissions = s.read.option("basePath", s"$base/sink")
-          .parquet(s"$base/sink")
+        val (t0, t1) = bounds(ev)
+        val cut = t0 + (t1 - t0 + 1) / 2
+        r.feed(slice(ev, t0, cut), slice(ev, cut, t1 + 1))
+        r.run(8)(t => StreamingOps.streamingHll(r.source(ev.schema))
+          .toDF()
+          .writeStream
+          .option("checkpointLocation", r.ckpt)
+          .foreachBatch { (batch: DataFrame, id: Long) =>
+            if (!batch.isEmpty)
+              batch.write.mode("overwrite").parquet(s"${r.sink}/b=$id")
+            ()
+          }
+          .outputMode("update")
+          .trigger(t)
+          .start())
+        val emissions = s.read.option("basePath", r.sink).parquet(r.sink)
         // ≥ 2 batch generations must have landed, or the merge law was
         // never exercised across a boundary
         require(emissions.select("b").distinct().count() >= 2,
@@ -644,42 +626,20 @@ object StreamingQueries {
       "st6_stream_trend",
       Some(trendOracle),
       (s, d) => {
-        val base = Sinks.dir(s, "stream_trend", d)
-        reset(s, base)
-        val srcDir = s"$base/src"
+        val r = new Replay(s, "stream_trend", d)
         val ev = Tables.events(s, d).select(
           col("user_id").cast("long").as("key"), col("ts"),
           col("value").cast("double").as("price"))
-        val bounds = ev.agg(min("ts"), max("ts")).head()
-        val t0 = bounds.getTimestamp(0).getTime
-        val span = bounds.getTimestamp(1).getTime - t0 + 1
-        val cut = t0 + span / 2
-        val mt0 = 1700000000000L
-        writeChunkFiles(s, Seq(
-          (ev.filter(col("ts") < timestamp_millis(lit(cut))),
-            s"$srcDir/chunk_0.parquet", mt0),
-          (ev.filter(col("ts") >= timestamp_millis(lit(cut))),
-            s"$srcDir/chunk_1.parquet", mt0 + 60000L)))
-
-        withStreamPartitions(s, 8) {
+        val (t0, t1) = bounds(ev)
+        val cut = t0 + (t1 - t0 + 1) / 2
+        r.feed(slice(ev, t0, cut), slice(ev, cut, t1 + 1))
+        r.run(8)(r.toFiles {
           import s.implicits._
-          val stream = s.readStream
-            .schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(srcDir)
-          val q = graft.streaming.StreamingOps.streamingTrend(
-              stream.as[graft.operators.TrendEvents.PricePoint])
+          StreamingOps.streamingTrend(
+              r.source(ev.schema).as[graft.operators.TrendEvents.PricePoint])
             .toDF()
-            .writeStream
-            .format("parquet")
-            .option("path", s"$base/sink")
-            .option("checkpointLocation", s"$base/ckpt")
-            .outputMode("append")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        val out = s.read.parquet(s"$base/sink")
+        })
+        val out = r.out
         // cross-batch proof: at least one closed segment began before the
         // chunk cut and closed at/after it — its reference price, extrema,
         // and count crossed the micro-batch boundary in state
@@ -725,85 +685,33 @@ object StreamingQueries {
              |FROM events
              |GROUP BY 1, 2""".stripMargin),
       (s, d) => {
-        val base = Sinks.dir(s, "stream_restart", d)
-        reset(s, base)
-        val srcDir = s"$base/src"
+        val r = new Replay(s, "stream_restart", d)
         val ev = Tables.events(s, d).select("user_id", "ts", "value")
-        val bounds = ev.agg(min("ts"), max("ts")).head()
-        val t0 = bounds.getTimestamp(0).getTime
-        val t1 = bounds.getTimestamp(1).getTime
-        val span = t1 - t0 + 1
-        // the RESTART boundary (cuts(2)) splits a same-user same-hour
-        // pair in the upper span so a (user, window) provably spans it at
-        // every SF; cuts(1) needs no such guarantee and halves the lower
-        // span
-        val c2 = cutInsideUserPair(ev, t0 + span / 3, t1 + 1,
+        val (t0, t1) = bounds(ev)
+        // the RESTART boundary c2 splits a same-user same-hour pair in
+        // the upper two thirds so a (user, window) provably spans it at
+        // every SF; c1 needs no such guarantee and halves the lower span
+        val c2 = cutInsideUserPair(ev, t0 + (t1 - t0 + 1) / 3, t1 + 1,
           sameHour = true)
-        val cuts = Seq(t0, t0 + (c2 - t0) / 2, c2, t1 + 1)
-        val mt0 = 1700000000000L
-        def chunk(k: Int): DataFrame = ev.filter(
-          col("ts") >= timestamp_millis(lit(cuts(k))) &&
-            col("ts") < timestamp_millis(lit(cuts(k + 1))))
-
-        def runOnce(): Unit = withStreamPartitions(s, 8) {
-          val stream = s.readStream
-            .schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(srcDir)
-          val q = graft.streaming.StreamingOps.mergeSink(
-            graft.streaming.StreamingOps.tumblingResample(stream),
-            sinkPath = s"$base/sink",
-            keyCols = Seq("user_id", "win_start"), orderCol = "win_start",
-            checkpoint = s"$base/ckpt",
-            trigger = Some(Trigger.AvailableNow()),
-            // the batch IS the (user_id, win_start) aggregate — key-
-            // unique by construction, so the sink skips its per-batch
-            // dedup shuffle (r13)
-            sourceKeyUnique = true)
-          q.awaitTermination()
-        }
+        val c1 = t0 + (c2 - t0) / 2
 
         // run 1: chunks 0 and 1 only
-        writeChunkFiles(s, Seq(
-          (chunk(0), s"$srcDir/chunk_0.parquet", mt0),
-          (chunk(1), s"$srcDir/chunk_1.parquet", mt0 + 60000L)))
-        runOnce()
-        val afterRun1 = s.read.parquet(s"$base/sink")
-          .filter(col("user_id") =!= -1L).count()
+        r.feed(slice(ev, t0, c1), slice(ev, c1, c2))
+        r.run(8)(resampleMerge(r, ev.schema))
+        val afterRun1 = r.out.filter(col("user_id") =!= -1L).count()
 
         // run 2: a NEW query over the SAME checkpoint sees only the new
         // files — the last data chunk plus the watermark-flushing sentinel
-        import s.implicits._
-        val sentinel = Seq(
-          (-1L, new java.sql.Timestamp(t1 + 30L * 24 * 3600 * 1000), 0.0))
-          .toDF("user_id", "ts", "value")
-        writeChunkFiles(s, Seq(
-          (chunk(2), s"$srcDir/chunk_2.parquet", mt0 + 120000L),
-          (sentinel, s"$srcDir/chunk_3.parquet", mt0 + 180000L)))
-        runOnce()
+        r.feed(slice(ev, c2, t1 + 1), sentinel(s, t1))
+        r.run(8)(resampleMerge(r, ev.schema))
 
-        val out = s.read.parquet(s"$base/sink")
-          .filter(col("user_id") =!= -1L)
+        val out = r.out.filter(col("user_id") =!= -1L)
         require(afterRun1 < out.count(),
           s"st7: run 1 already emitted everything ($afterRun1 windows) — " +
             "the restart proved nothing")
         // a window spanning the shutdown boundary received rows in BOTH
-        // runs: its state crossed the stop/restart, not just the flush.
-        // r13: such a window IS the hour containing the boundary — prune
-        // the scan to it (identical predicate, see st1).
-        val boundary = cuts(2)
-        val spanning = ev
-          .filter(date_trunc("hour", col("ts")) ===
-            date_trunc("hour", timestamp_millis(lit(boundary))))
-          .withColumn("w", date_trunc("hour", col("ts")))
-          .groupBy("user_id", "w")
-          .agg(
-            sum(when(col("ts") < timestamp_millis(lit(boundary)), 1L)
-              .otherwise(0L)).as("before"),
-            sum(when(col("ts") >= timestamp_millis(lit(boundary)), 1L)
-              .otherwise(0L)).as("after"))
-          .filter(col("before") > 0 && col("after") > 0).limit(1).count()
-        require(spanning > 0,
+        // runs: its state crossed the stop/restart, not just the flush
+        require(hourSpans(ev, c2),
           "st7: no window spans the restart boundary — proof is vacuous")
         out.select("user_id", "win_start", "open", "high", "low", "close",
           "n_events")
@@ -837,32 +745,16 @@ object StreamingQueries {
       "st8_stream_gold",
       Some(PipelineQueries.goldOracleSql),
       (s, d) => {
-        val base = Sinks.dir(s, "stream_gold", d)
-        reset(s, base)
-        val srcDir = s"$base/src"
+        val r = new Replay(s, "stream_gold", d)
         val ev = Tables.events(s, d).select("user_id", "ts", "value")
-        val bounds = ev.agg(min("ts"), max("ts")).head()
-        val t0 = bounds.getTimestamp(0).getTime
-        val t1 = bounds.getTimestamp(1).getTime
-        // cut at NOON (UTC) of the middle day, not the raw span midpoint:
-        // the fixture's events end each day just before midnight, so a raw
-        // midpoint lands in the empty minutes near a day boundary and
-        // splits no (user, day) — the update path the row must exercise
-        val mid = t0 + (t1 - t0 + 1) / 2
-        val cut = mid - math.floorMod(mid, 86400000L) + 12L * 3600 * 1000
-        val cuts = Seq(t0, cut, t1 + 1)
-        val mt0 = 1700000000000L
-        writeChunkFiles(s, (0 until 2).map { k =>
-          (ev.filter(
-            col("ts") >= timestamp_millis(lit(cuts(k))) &&
-              col("ts") < timestamp_millis(lit(cuts(k + 1)))),
-            s"$srcDir/chunk_$k.parquet", mt0 + k * 60000L)
-        })
+        val (t0, t1) = bounds(ev)
+        val cut = middayCut(t0, t1)
+        r.feed(slice(ev, t0, cut), slice(ev, cut, t1 + 1))
         // the cut must split some (user, day): batch 2 then refreshes a
         // day batch 1 already materialized, exercising the MERGE-update
         // path (not just appends). r13: a (user, day) split by the cut
         // necessarily lives on the cut's own day — prune the scan to it
-        // (identical count, see st1's hour argument).
+        // (identical count, see hourSpans).
         val split = ev
           .filter(to_date(col("ts")) ===
             to_date(timestamp_millis(lit(cut))))
@@ -877,25 +769,18 @@ object StreamingQueries {
           "st8: no (user, day) spans the batch boundary — the refresh " +
             "update path is untested, proof is vacuous")
 
-        withStreamPartitions(s, 8) {
-          val stream = s.readStream
-            .schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(srcDir)
-          val q = graft.streaming.StreamingOps.goldSink(
-            stream, bronzePath = s"$base/bronze",
-            goldPath = s"$base/gold", checkpoint = s"$base/ckpt",
-            trigger = Some(Trigger.AvailableNow()))
-          q.awaitTermination()
-        }
-        val fs = new Path(s"$base/bronze")
+        r.run(8)(t => StreamingOps.goldSink(
+          r.source(ev.schema), bronzePath = s"${r.base}/bronze",
+          goldPath = s"${r.base}/gold", checkpoint = r.ckpt,
+          trigger = Some(t)))
+        val fs = new Path(s"${r.base}/bronze")
           .getFileSystem(s.sparkContext.hadoopConfiguration)
-        val gens = fs.listStatus(new Path(s"$base/bronze"))
+        val gens = fs.listStatus(new Path(s"${r.base}/bronze"))
           .count(_.getPath.getName.startsWith("batch_id="))
         require(gens >= 2,
           s"st8: only $gens bronze batch generation(s) — the incremental " +
             "refresh never iterated, proof is vacuous")
-        s.read.parquet(s"$base/gold")
+        s.read.parquet(s"${r.base}/gold")
       }),
 
     // ST9: the snapshot table as a STREAMING SOURCE
@@ -924,56 +809,47 @@ object StreamingQueries {
       Some("""SELECT event_id, user_id, value FROM events"""),
       (s, d) => {
         import graft.operators.SnapshotTable
-        val base = Sinks.dir(s, "snap_tail", d)
-        reset(s, base)
-        val t = s"$base/table"
+        val r = new Replay(s, "snap_tail", d)
+        val t = s"${r.base}/table"
         val ev = Tables.events(s, d).select("event_id", "user_id", "ts",
           "value")
-        def slice(lo: String, hi: Option[String]) = {
-          val b = ev.filter(col("ts") >= lit(lo).cast("timestamp"))
-          hi.fold(b)(h => b.filter(col("ts") < lit(h).cast("timestamp")))
-            .drop("ts")
-        }
-        val s1 = slice("2024-01-01", Some("2024-01-11"))
-        val s2 = slice("2024-01-11", Some("2024-01-21"))
-        val s3 = slice("2024-01-21", None)
+        val (t0, t1) = bounds(ev)
+        def part(lo: Long, hi: Long) = slice(ev, lo, hi).drop("ts")
+        val s1 = part(t0, Jan11)
+        val s2 = part(Jan11, Jan21)
+        val s3 = part(Jan21, t1 + 1)
 
-        def runOnce(): Unit = withStreamPartitions(s, 8) {
-          val stream = s.readStream.format("snapshot-table")
-            .option("path", t).load()
-          val q = stream.writeStream
+        def runOnce(): Unit = r.run(8)(tr =>
+          s.readStream.format("snapshot-table").option("path", t).load()
+            .writeStream
             .foreachBatch { (b: DataFrame, _: Long) =>
               graft.operators.MergeUpsert.insertIfAbsent(
-                b.sparkSession, b, s"$base/sink",
+                b.sparkSession, b, r.sink,
                 keyCols = Seq("event_id"), orderCol = "event_id",
                 // commit slices are event_id-unique by construction (r13)
                 sourceKeyUnique = true)
               ()
             }
-            .option("checkpointLocation", s"$base/ckpt")
+            .option("checkpointLocation", r.ckpt)
             .outputMode("append")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        def sunk(): Long = s.read.parquet(s"$base/sink").count()
+            .trigger(tr)
+            .start())
 
         SnapshotTable.commit(s, s1, t)
         runOnce()
-        val n1 = sunk()
+        val n1 = r.out.count()
         require(n1 == s1.count(),
           s"st9: run 1 delivered $n1 rows, expected exactly v1's slice")
         SnapshotTable.commit(s, s2, t, replace = false)
         runOnce()
-        val n2 = sunk()
+        val n2 = r.out.count()
         require(n2 == n1 + s2.count(),
           s"st9: run 2 delivered ${n2 - n1} new rows, expected exactly " +
             "v2's appended slice — the checkpointed version offset did " +
             "not resume correctly")
         SnapshotTable.commit(s, s3, t, replace = false)
         runOnce()
-        s.read.parquet(s"$base/sink")
-          .select("event_id", "user_id", "value")
+        r.out.select("event_id", "user_id", "value")
       }),
 
     // ST10: CHANGE DATA FEED — the snapshot table's commits tailed as
@@ -1013,43 +889,27 @@ object StreamingQueries {
              |FROM del""".stripMargin),
       (s, d) => {
         import graft.operators.SnapshotTable
-        val base = Sinks.dir(s, "cdc_tail", d)
-        reset(s, base)
-        val t = s"$base/table"
+        val r = new Replay(s, "cdc_tail", d)
+        val t = s"${r.base}/table"
         val ev = Tables.events(s, d).select("event_id", "user_id", "ts",
           "value")
-        def slice(lo: String, hi: Option[String]) = {
-          val b = ev.filter(col("ts") >= lit(lo).cast("timestamp"))
-          hi.fold(b)(h => b.filter(col("ts") < lit(h).cast("timestamp")))
-            .drop("ts")
-        }
-        val s1 = slice("2024-01-01", Some("2024-01-11"))
-        val s2 = slice("2024-01-11", Some("2024-01-21"))
-        def runOnce(): Unit = withStreamPartitions(s, 8) {
-          val stream = s.readStream.format("snapshot-table")
-            .option("path", t).option("changeFeed", "true").load()
-          val q = stream.writeStream
-            .format("parquet").option("path", s"$base/sink")
-            .option("checkpointLocation", s"$base/ckpt")
-            .outputMode("append")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
+        val s1 = slice(ev, Jan1, Jan11).drop("ts")
+        val s2 = slice(ev, Jan11, Jan21).drop("ts")
+        def runOnce(): Unit = r.run(8)(r.toFiles(
+          s.readStream.format("snapshot-table")
+            .option("path", t).option("changeFeed", "true").load()))
         SnapshotTable.commit(s, s1, t)
         runOnce()
         SnapshotTable.deleteWhere(s, t, "event_id",
           col("event_id") % 5 === 0)
         runOnce()
-        val nDel = s.read.parquet(s"$base/sink")
-          .filter(col("change_op") === "delete").count()
+        val nDel = r.out.filter(col("change_op") === "delete").count()
         require(nDel > 0,
           "st10: the delete commit produced no CDC delete rows — the " +
             "change feed is not surfacing merge-on-read deletes")
         SnapshotTable.commit(s, s2, t, replace = false)
         runOnce()
-        s.read.parquet(s"$base/sink")
-          .select("event_id", "user_id", "value", "change_op")
+        r.out.select("event_id", "user_id", "value", "change_op")
       }),
 
     // ST11: STREAM-STATIC dimension enrichment — the join class st1–st10
@@ -1081,54 +941,31 @@ object StreamingQueries {
              |FROM events e JOIN customer cu ON e.user_id = cu.c_custkey, c
              |WHERE epoch_ms(e.ts) >= c.cut""".stripMargin),
       (s, d) => {
-        val base = Sinks.dir(s, "stream_dimjoin", d)
-        reset(s, base)
-        val srcDir = s"$base/src"
-        val dimDir = s"$base/dim"
+        val r = new Replay(s, "stream_dimjoin", d)
+        val dimDir = s"${r.base}/dim"
         val ev = Tables.events(s, d)
           .select("event_id", "user_id", "ts", "value")
-        val bounds = ev.agg(min("ts"), max("ts")).head()
-        val t0 = bounds.getTimestamp(0).getTime
-        val t1 = bounds.getTimestamp(1).getTime
-        // noon of the middle day (st8's cut): both eras provably
-        // non-empty at every SF
-        val mid = t0 + (t1 - t0 + 1) / 2
-        val cut = mid - math.floorMod(mid, 86400000L) + 43200000L
-        val cuts = Seq(t0, cut, t1 + 1)
-        val mt0 = 1700000000000L
-        def chunk(k: Int): DataFrame = ev.filter(
-          col("ts") >= timestamp_millis(lit(cuts(k))) &&
-            col("ts") < timestamp_millis(lit(cuts(k + 1))))
+        val (t0, t1) = bounds(ev)
+        // both eras provably non-empty at every SF
+        val cut = middayCut(t0, t1)
         def dim(bump: Int): DataFrame = Tables.customer(s, d)
           .select(col("c_custkey").as("user_id"),
             (col("c_nationkey").cast("long") + bump).as("nation_key"))
-        def runOnce(): Unit = withStreamPartitions(s, 8) {
-          val q = s.readStream
-            .schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(srcDir)
+        def runOnce(): Unit = r.run(8)(r.toFiles(
+          r.source(ev.schema)
             // resolved here, inside the run: each restart re-reads the
             // CURRENT dim state (the slowly-changing-dimension contract)
             .join(broadcast(s.read.parquet(dimDir)), Seq("user_id"))
-            .select("event_id", "user_id", "nation_key", "value")
-            .writeStream
-            .format("parquet")
-            .option("path", s"$base/sink")
-            .option("checkpointLocation", s"$base/ckpt")
-            .outputMode("append")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
+            .select("event_id", "user_id", "nation_key", "value")))
         // era 1: dim v1, first chunk only
         dim(0).write.mode("overwrite").parquet(dimDir)
-        writeOneFile(s, chunk(0), s"$srcDir/chunk_0.parquet", mt0)
+        r.feed(slice(ev, t0, cut))
         runOnce()
         // the dim changes, THEN the second chunk arrives
         dim(100).write.mode("overwrite").parquet(dimDir)
-        writeOneFile(s, chunk(1), s"$srcDir/chunk_1.parquet", mt0 + 60000L)
+        r.feed(slice(ev, cut, t1 + 1))
         runOnce()
-        val out = s.read.parquet(s"$base/sink")
+        val out = r.out
         // both eras must be present — a degenerate cut (or a dim frozen
         // at either version) makes the proof vacuous
         require(out.filter(col("nation_key") < 100).count() > 0 &&
@@ -1164,19 +1001,13 @@ object StreamingQueries {
              |  AND c.ts <= v.ts + INTERVAL 1 HOUR
              |WHERE v.event_type = 'view'""".stripMargin),
       (s, d) => {
-        val base = Sinks.dir(s, "stream_ssjl", d)
-        reset(s, base)
-        val srcDir = s"$base/src"
+        val r = new Replay(s, "stream_ssjl", d)
         val ev = Tables.events(s, d)
           .select("event_id", "user_id", "ts", "value", "event_type")
           .filter(col("event_type").isin("view", "click"))
-        val bounds = ev.agg(min("ts"), max("ts")).head()
-        val t0 = bounds.getTimestamp(0).getTime
-        val tMax = bounds.getTimestamp(1).getTime
-        val span = tMax - t0 + 1
-        val cuts = (0 to 2).map(k => t0 + span * k / 2)
-        val mt0 = 1700000000000L
-        // sentinel rows: one view + one click at tMax + 3 h push BOTH
+        val (t0, t1) = bounds(ev)
+        val mid = t0 + (t1 - t0 + 1) / 2
+        // sentinel rows: one view + one click at t1 + 3 h push BOTH
         // side watermarks past every real imp_ts + 1 h horizon, so every
         // real unmatched impression's null row is forced out of state.
         // They ride INSIDE the last data chunk (watermarks take effect
@@ -1184,34 +1015,18 @@ object StreamingQueries {
         // no-data micro-batch) — a separate sentinel chunk would buy a
         // whole extra MERGE cycle for nothing.
         import s.implicits._
-        val sentinel = Seq(
-          (-1L, -999L, new java.sql.Timestamp(tMax + 3 * 3600 * 1000L),
+        val sentinels = Seq(
+          (-1L, -999L, new java.sql.Timestamp(t1 + 3 * 3600 * 1000L),
             0.0, "view"),
-          (-2L, -999L, new java.sql.Timestamp(tMax + 3 * 3600 * 1000L),
+          (-2L, -999L, new java.sql.Timestamp(t1 + 3 * 3600 * 1000L),
             0.0, "click"))
           .toDF("event_id", "user_id", "ts", "value", "event_type")
-        writeChunkFiles(s, (0 until 2).map { k =>
-          val chunk0 = ev.filter(
-            col("ts") >= timestamp_millis(lit(cuts(k))) &&
-              col("ts") < timestamp_millis(lit(cuts(k + 1))))
-          val chunk = if (k == 1) chunk0.unionByName(sentinel) else chunk0
-          (chunk, s"$srcDir/chunk_$k.parquet", mt0 + k * 60000L)
-        })
-        // 4 partitions, not the stream default 8: a stream-stream join
-        // keeps FOUR state stores per partition (two per side) and every
-        // micro-batch commits all of them; at fixture volume that fixed
-        // store machinery is the whole cost, so the join rows size state
-        // partitioning down further
-        withStreamPartitions(s, 4) {
-          def side(tpe: String): DataFrame = s.readStream
-            .schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(srcDir)
-            .filter(col("event_type") === tpe)
-            .select("event_id", "user_id", "ts", "value")
-          val joined = graft.streaming.StreamingOps.streamingIntervalJoin(
-            side("view"), side("click"), horizon = "1 hour",
-            joinType = "left_outer")
+        r.feed(slice(ev, t0, mid),
+          slice(ev, mid, t1 + 1).unionByName(sentinels))
+        r.run(4) { t =>
+          val (views, clicks) = viewsAndClicks(r, ev.schema)
+          val joined = StreamingOps.streamingIntervalJoin(views, clicks,
+            horizon = "1 hour", joinType = "left_outer")
           // null click_id breaks a MERGE key, so key on imp_id alone:
           // each impression emits exactly one FINAL disposition row per
           // (imp, click) pair — imp_id+click_id for matches, imp_id+null
@@ -1219,17 +1034,15 @@ object StreamingQueries {
           // totality
           val keyed = joined.withColumn("merge_click",
             coalesce(col("click_id"), lit(-1L)))
-          val q = graft.streaming.StreamingOps.mergeSink(
-            keyed, sinkPath = s"$base/sink",
+          StreamingOps.mergeSink(
+            keyed, sinkPath = r.sink,
             keyCols = Seq("imp_id", "merge_click"), orderCol = "imp_id",
-            checkpoint = s"$base/ckpt",
-            trigger = Some(Trigger.AvailableNow()),
+            checkpoint = r.ckpt, trigger = Some(t),
             // exactly one final disposition row per (imp, merge_click) —
             // key-unique by construction (r13)
             sourceKeyUnique = true)
-          q.awaitTermination()
         }
-        val out = s.read.parquet(s"$base/sink")
+        val out = r.out
           .filter(col("user_id") >= 0) // drop the sentinel's own rows
         // non-vacuity: the outer half actually emitted — unmatched
         // impressions exist at every fixture SF, and each must appear
@@ -1252,52 +1065,25 @@ object StreamingQueries {
       "st13_trend_tws",
       Some(trendOracle),
       (s, d) => {
-        val base = Sinks.dir(s, "stream_tws", d)
-        reset(s, base)
-        val srcDir = s"$base/src"
+        val r = new Replay(s, "stream_tws", d)
         val ev = Tables.events(s, d).select(
           col("user_id").cast("long").as("key"), col("ts"),
           col("value").cast("double").as("price"))
-        val bounds = ev.agg(min("ts"), max("ts")).head()
-        val t0 = bounds.getTimestamp(0).getTime
-        val span = bounds.getTimestamp(1).getTime - t0 + 1
-        val cut = t0 + span / 2
-        val mt0 = 1700000000000L
-        writeChunkFiles(s, Seq(
-          (ev.filter(col("ts") < timestamp_millis(lit(cut))),
-            s"$srcDir/chunk_0.parquet", mt0),
-          (ev.filter(col("ts") >= timestamp_millis(lit(cut))),
-            s"$srcDir/chunk_1.parquet", mt0 + 60000L)))
-
+        val (t0, t1) = bounds(ev)
+        val cut = t0 + (t1 - t0 + 1) / 2
+        r.feed(slice(ev, t0, cut), slice(ev, cut, t1 + 1))
         // transformWithState keeps its state variables in RocksDB column
         // families — the provider is a per-stream requirement, pinned
         // into the checkpoint at first run like the partition count
-        val provKey = "spark.sql.streaming.stateStore.providerClass"
-        val prevProv = s.conf.getOption(provKey)
-        s.conf.set(provKey, "org.apache.spark.sql.execution.streaming" +
-          ".state.RocksDBStateStoreProvider")
-        try withStreamPartitions(s, 8) {
+        r.run(8, "spark.sql.streaming.stateStore.providerClass" ->
+            ("org.apache.spark.sql.execution.streaming" +
+              ".state.RocksDBStateStoreProvider"))(r.toFiles {
           import s.implicits._
-          val stream = s.readStream
-            .schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(srcDir)
-          val q = graft.streaming.StreamingOps.streamingTrendTws(
-              stream.as[graft.operators.TrendEvents.PricePoint])
+          StreamingOps.streamingTrendTws(
+              r.source(ev.schema).as[graft.operators.TrendEvents.PricePoint])
             .toDF()
-            .writeStream
-            .format("parquet")
-            .option("path", s"$base/sink")
-            .option("checkpointLocation", s"$base/ckpt")
-            .outputMode("append")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        } finally prevProv match {
-          case Some(v) => s.conf.set(provKey, v)
-          case None => s.conf.unset(provKey)
-        }
-        val out = s.read.parquet(s"$base/sink")
+        })
+        val out = r.out
         val crossing = out.filter(
           col("start_ts") < timestamp_millis(lit(cut)) &&
             col("end_ts") >= timestamp_millis(lit(cut))).count()
@@ -1323,40 +1109,25 @@ object StreamingQueries {
       Some("""SELECT event_id, user_id, ts, value FROM events"""),
       (s, d) => {
         import graft.operators.SnapshotTable
-        val base = Sinks.dir(s, "stream_txn", d)
-        reset(s, base)
-        val srcDir = s"$base/src"
-        val tbl = s"$base/table"
+        val r = new Replay(s, "stream_txn", d)
+        val tbl = s"${r.base}/table"
         val ev = Tables.events(s, d)
           .select("event_id", "user_id", "ts", "value")
-        val bounds = ev.agg(min("ts"), max("ts")).head()
-        val t0 = bounds.getTimestamp(0).getTime
-        val span = bounds.getTimestamp(1).getTime - t0 + 1
-        val cuts = (0 to 3).map(k => t0 + span * k / 3)
-        val mt0 = 1700000000000L
-        def chunk(k: Int) = ev.filter(
-          col("ts") >= timestamp_millis(lit(cuts(k))) &&
-            col("ts") < timestamp_millis(lit(cuts(k + 1))))
-        def runOnce(): Unit = withStreamPartitions(s, 4) {
-          val q = graft.streaming.StreamingOps.snapshotSink(
-            s.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", "1").parquet(srcDir),
-            tablePath = tbl, appId = "st14",
-            checkpoint = s"$base/ckpt",
-            trigger = Some(Trigger.AvailableNow()))
-          q.awaitTermination()
-        }
+        val (t0, t1) = bounds(ev)
+        val cuts = (0 to 3).map(k => t0 + (t1 - t0 + 1) * k / 3)
+        def chunk(k: Int) = slice(ev, cuts(k), cuts(k + 1))
+        def runOnce(): Unit = r.run(4)(t => StreamingOps.snapshotSink(
+          r.source(ev.schema), tablePath = tbl, appId = "st14",
+          checkpoint = r.ckpt, trigger = Some(t)))
         // run 1: chunks 0+1 → two txn-stamped commits
-        writeChunkFiles(s, Seq(
-          (chunk(0), s"$srcDir/chunk_0.parquet", mt0),
-          (chunk(1), s"$srcDir/chunk_1.parquet", mt0 + 60000L)))
+        r.feed(chunk(0), chunk(1))
         runOnce()
         require(SnapshotTable.versions(s, tbl).size == 2,
           "st14: run 1 must land two commits (one per micro-batch)")
         val lastTxn = SnapshotTable.txnVersion(s, tbl, "st14").get
         // run 2: a NEW query object over the same checkpoint sees only
         // the new chunk
-        writeOneFile(s, chunk(2), s"$srcDir/chunk_2.parquet", mt0 + 120000L)
+        r.feed(chunk(2))
         runOnce()
         require(SnapshotTable.versions(s, tbl).size == 3,
           "st14: the restart must append exactly one commit")
@@ -1420,34 +1191,21 @@ object StreamingQueries {
               |FROM scored s JOIN bb ON s.event_type = bb.event_type
               |  AND s.era = bb.version""".stripMargin),
       (s, d) => {
-        val base = Sinks.dir(s, "stream_score", d)
-        reset(s, base)
-        val srcDir = s"$base/src"
-        val modelDir = s"$base/model"
+        val r = new Replay(s, "stream_score", d)
+        val modelDir = s"${r.base}/model"
         val ev = Tables.events(s, d)
           .select("event_id", "event_type", "ts", "value")
-        val bounds = ev.agg(min("ts"), max("ts")).head()
-        val t0 = bounds.getTimestamp(0).getTime
-        val t1 = bounds.getTimestamp(1).getTime
-        val mid = t0 + (t1 - t0 + 1) / 2
-        val cut = mid - math.floorMod(mid, 86400000L) + 43200000L
-        val cuts = Seq(t0, cut, t1 + 1)
-        val mt0 = 1700000000000L
-        def chunk(k: Int): DataFrame = ev.filter(
-          col("ts") >= timestamp_millis(lit(cuts(k))) &&
-            col("ts") < timestamp_millis(lit(cuts(k + 1))))
+        val (t0, t1) = bounds(ev)
+        val cut = middayCut(t0, t1)
         // the mlprep_ols_normal fit as a publishable model table
         def fit(df: DataFrame, ver: Int): DataFrame = LinearFit.fitOls(df)
           .select(col("event_type"), lit(ver.toLong).as("model_version"),
             col("b0"), col("b1"), col("b2"))
-        def runOnce(): Unit = withStreamPartitions(s, 8) {
+        def runOnce(): Unit = r.run(8)(r.toFiles {
           val model = broadcast(s.read.parquet(modelDir))
           val pred = col("b0") + col("b1") * col("x1").cast("double") +
             col("b2") * col("x2").cast("double")
-          val query = s.readStream
-            .schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(srcDir)
+          r.source(ev.schema)
             .withColumn("x1", LinearFit.x1)
             .withColumn("x2", LinearFit.x2)
             .join(model, Seq("event_type"))
@@ -1455,24 +1213,17 @@ object StreamingQueries {
               col("model_version"),
               LinearFit.q(pred, 6).as("pred_q"),
               LinearFit.q(col("value") - pred, 6).as("resid_q"))
-            .writeStream
-            .format("parquet")
-            .option("path", s"$base/sink")
-            .option("checkpointLocation", s"$base/ckpt")
-            .outputMode("append")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          query.awaitTermination()
-        }
+        })
         // serve v1 (trained on the pre-cut slice) over era 1
-        fit(chunk(0), 1).write.mode("overwrite").parquet(modelDir)
-        writeOneFile(s, chunk(0), s"$srcDir/chunk_0.parquet", mt0)
+        val era1 = slice(ev, t0, cut)
+        fit(era1, 1).write.mode("overwrite").parquet(modelDir)
+        r.feed(era1)
         runOnce()
         // retrain on everything, THEN era 2 arrives at the restart
         fit(ev, 2).write.mode("overwrite").parquet(modelDir)
-        writeOneFile(s, chunk(1), s"$srcDir/chunk_1.parquet", mt0 + 60000L)
+        r.feed(slice(ev, cut, t1 + 1))
         runOnce()
-        val out = s.read.parquet(s"$base/sink")
+        val out = r.out
         // both model eras must have scored rows — a frozen registry or
         // a degenerate cut makes the refresh proof vacuous
         require(out.filter(col("model_version") === 1).count() > 0 &&

@@ -137,7 +137,7 @@ class SnapshotStreamSource(sqlContext: SQLContext, tablePath: String,
           else SnapshotTable.deleteVectors(spark, tablePath)
             .filter(dv => dv.version > from && dv.version <= to)
             .map { dv =>
-              val keys = spark.read.parquet(
+              val keys = graft.operators.ListedParquet.readPath(spark,
                 new org.apache.hadoop.fs.Path(tablePath, dv.dir).toString)
               keys.select(dataSchema.fields.map { f =>
                 if (f.name == dv.keyCol) col(f.name).cast(f.dataType)

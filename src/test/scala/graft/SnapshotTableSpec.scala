@@ -438,9 +438,26 @@ class SnapshotTableSpec extends SparkSpec {
     val t = tbl()
     commit(spark, Seq((1L, "a"), (2L, "b")).toDF("id", "x"), t)
     deleteWhere(spark, t, "id", col("id") === 2L)
-    // second delete matches only already-deleted rows → empty key file
+    // second delete matches only already-deleted rows → empty key file,
+    // still a recorded vector that reads
     deleteWhere(spark, t, "id", col("x") === "b")
+    assert(deleteVectors(spark, t).size == 2)
     assert(readMor(spark, t).count() == 1)
+  }
+
+  // a delete vector is a flat Spark output directory: its keys take
+  // their schema from one footer on the driver, so building a
+  // merge-on-read read launches no job per applicable vector
+  test("readMor builds with the same job count at 0, 1 and 2 delete vectors") {
+    val t = tbl()
+    commit(spark, spark.range(0, 20).toDF("id"), t)
+    def building(): Int = jobsDuring { readMor(spark, t); () }
+    val jobs = building() +: (1L to 2L).map { k =>
+      deleteWhere(spark, t, "id", col("id") === k)
+      building()
+    }
+    assert(jobs.distinct.size == 1, jobs)
+    assert(readMor(spark, t).count() == 18)
   }
 
   test("commitAudited publishes only on a passing audit") {
