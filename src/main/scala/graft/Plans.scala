@@ -77,26 +77,6 @@ object Plans {
     check("dd5: both self-join sides read the postings cache") {
       "InMemoryTableScan".r.findAllIn(dd5).length >= 2
     }
-    // sim4: the IVF probe join broadcasts the (NQ×P)-row probe frame
-    // against the corpus — never a corpus shuffle join; the only hash
-    // exchanges are the two tiny windows (probe ranking over NQ queries,
-    // final top-k over the scored candidates)
-    val sim4 = planOf("sim4_ivf_topk")
-    check("sim4: probes broadcast against the corpus, no shuffle join") {
-      sim4.contains("BroadcastHashJoin") && !sim4.contains("SortMergeJoin") &&
-        !sim4.contains("CartesianProduct")
-    }
-    check("sim4: only the two small-side window exchanges") {
-      "Exchange hashpartitioning".r.findAllIn(sim4).length == 2
-    }
-    // the sim family reads the MATERIALIZED vector-index stage
-    // (operators.EmbedStage) — no inline re-quantization / re-encoding of
-    // the corpus on any query path
-    check("sim2/sim4/sim6: read the materialized vector-index stage") {
-      planOf("sim2_ann_lsh").contains("graft_embed_stage") &&
-        sim4.contains("graft_embed_stage") &&
-        planOf("sim6_pq_topk").contains("graft_embed_stage")
-    }
     // dd3/dd6 consume the MATERIALIZED signature stage (operators.DedupStage)
     // instead of re-running the md5-shingle preamble, and their banding
     // path has no window sort anywhere. dd6 additionally reads the stage's
@@ -123,13 +103,6 @@ object Plans {
     check("dd8: stage read + broadcast benchmark dim, no sort-merge") {
       dd8.contains("graft_dedup_stage") &&
         dd8.contains("BroadcastHashJoin") && !dd8.contains("SortMergeJoin")
-    }
-    // sim5: the within-cluster pair space comes from the cid equi-join —
-    // never a cartesian; the coarse assignment is a projection (no
-    // shuffle before the pair join's own cid exchange)
-    check("sim5: cid-keyed pair join, no cartesian") {
-      val p = planOf("sim5_semdedup")
-      !p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoop")
     }
     // mix1: the per-row decision is a projection over ONE corpus scan —
     // every join in the plan is broadcast
@@ -202,14 +175,6 @@ object Plans {
       w17.contains("BroadcastHashJoin") && !w17.contains("SortMergeJoin") &&
         "\\bSort \\[".r.findAllIn(w17).length == 1 &&
         "\\bWindow \\[".r.findAllIn(w17).length == 2
-    }
-    // sim6: every join rides a broadcast of the tiny side (probes with
-    // LUTs against the encoded corpus; pool + query dims against the
-    // rerank scan) — the corpus is never shuffle-joined or cartesian'd
-    check("sim6: probes/pool broadcast against corpus scans, no shuffle join") {
-      val p = planOf("sim6_pq_topk")
-      p.contains("BroadcastHashJoin") && !p.contains("SortMergeJoin") &&
-        !p.contains("CartesianProduct")
     }
     // o6: keyset pagination — the cursor predicate reaches the scan and
     // the page compiles to TakeOrdered (each page is O(page), no matter
@@ -306,12 +271,6 @@ object Plans {
     // would surface as a cartesian
     check("j14: blocked equi-joins only, no cartesian") {
       !planOf("j14_fuzzy_blocking").contains("CartesianProduct")
-    }
-    // sim9 audits the INDEX, so it must read the materialized stage (cid
-    // included), never re-quantize/re-assign the corpus inline
-    check("sim9: reads the vector-index stage, no cartesian") {
-      val p = planOf("sim9_centroid_drift")
-      p.contains("graft_embed_stage") && !p.contains("CartesianProduct")
     }
     // w26: the lag window and the running-sum window share the SAME
     // (user_id / ts,event_id) partitioning+ordering — one exchange for
@@ -430,29 +389,6 @@ object Plans {
         .select(input_file_name()).distinct().count()
       added == 2 && readFiles == added
     }
-    // sim10's corpus side must stream against BROADCAST query/pool frames
-    // only (the pool is NQ×R rows by construction) — any shuffle join or
-    // cartesian means the rerank pulled the corpus through an exchange
-    check("sim10: pool rides broadcast joins, no cartesian") {
-      val p = planOf("sim10_mmr_rerank")
-      !p.contains("CartesianProduct") && !p.contains("SortMergeJoin") &&
-        !p.contains("ShuffledHashJoin")
-    }
-    // sim11's Lloyd iteration: the refined centroids ride a 1-row
-    // broadcast and reassignment is a per-row fold — the corpus must
-    // never be exchanged by vec_id (no explode-×C + re-group, no
-    // per-vector window), and no shuffle join anywhere
-    check("sim11: reassignment folds in-row, corpus never keyed by vec_id") {
-      val p = planOf("sim11_kmeans_refine")
-      !p.contains("CartesianProduct") && !p.contains("SortMergeJoin") &&
-        !p.contains("hashpartitioning(vec_id")
-    }
-    // sim12 holds sim11's invariant across every training round
-    check("sim12: no corpus shuffle in any training round") {
-      val p = planOf("sim12_kmeans_train")
-      !p.contains("CartesianProduct") &&
-        !p.contains("hashpartitioning(vec_id")
-    }
     // mix6's LM count tables must BROADCAST onto the token stream (they
     // are ≤ B rows by the hash-bucket construction) — a shuffle join
     // there would re-key the whole token explosion
@@ -466,26 +402,6 @@ object Plans {
     check("dd13: no cartesian in the canonical selection") {
       val p = planOf("dd13_cluster_canonical")
       !p.contains("CartesianProduct")
-    }
-    // sim13: both retrieval legs must pool via TakeOrdered (top-R, never
-    // a global sort/rank of the corpus) and the 1-row stat/query
-    // broadcasts must never degrade to a cartesian
-    check("sim13: TakeOrdered pools on both legs, no cartesian") {
-      val p = planOf("sim13_hybrid_rrf")
-      "TakeOrdered".r.findAllIn(p).length >= 2 &&
-        !p.contains("CartesianProduct")
-    }
-    // sim14: the kNN join's pair space must come from the cell equi key
-    // (Σ|cell|² bounded), never an all-pairs loop over the corpus; and
-    // the top-k window must rank the pair stream INSIDE the join's cid
-    // partitioning (window keys (cid, query_id) — a superset of the
-    // join key, so no second exchange of the Σ|cell|²-row intermediate;
-    // only the two join-input exchanges may appear)
-    check("sim14: cell equi-join, no all-pairs scan, no pair re-shuffle") {
-      val p = planOf("sim14_knn_join")
-      !p.contains("CartesianProduct") &&
-        !p.contains("BroadcastNestedLoopJoin") &&
-        "Exchange hashpartitioning".r.findAllIn(p).size == 2
     }
     // j16: the key-free interval join must ride the bucket EQUI key
     // (hash/SMJ/broadcast-hash — partition-parallel at any scale), never
@@ -546,15 +462,6 @@ object Plans {
         (p.contains("SortMergeJoin") || p.contains("BroadcastHashJoin") ||
           p.contains("ShuffledHashJoin")) &&
         "Scan parquet".r.findAllIn(p).length == 2
-    }
-    // sim17: the benchmark side rides broadcasts (bucket collision,
-    // candidate scoring) — no cartesian; the ONE shuffle join allowed
-    // is the final corpus-universe LEFT join, whose both sides are
-    // corpus-sized and co-keyed (the correct plan at any scale)
-    check("sim17: benchmark broadcast, one corpus-keyed outer join") {
-      val p = planOf("sim17_semantic_decon")
-      p.contains("BroadcastHashJoin") && !p.contains("CartesianProduct") &&
-        "SortMergeJoin".r.findAllIn(p).length <= 1
     }
     // sql4: the parser-tier ASOF sugar must lower to the union+ffill
     // window plan — a Window over one hash exchange — and NEVER a range

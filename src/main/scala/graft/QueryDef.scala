@@ -36,6 +36,9 @@ final case class QueryDef(
   *     [[graft.functions.KmvSketchAgg$]]; exact percentiles and medians
   *     of a bounded-domain column walk one per-group histogram
   *     ([[HistogramWalk]]), whose domain guard names the row.
+  *  7. Embedding cosines come from the [[graft.operators.VectorOps]]
+  *     `cosine`/`oCosine` pair: exact long dot over the exact-long norms'
+  *     square roots, one tree per engine.
   */
 object Parity {
   /** Exact sum of a k-decimal double column, returned as double.

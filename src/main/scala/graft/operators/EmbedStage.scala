@@ -19,6 +19,11 @@ object VectorOps {
   def quant(c: Column): Column =
     transform(c, x => floor(x.cast("double") * 1000000.0 + 0.5).cast("long"))
 
+  /** DuckDB text of [[quant]] over the raw `embedding` column: the
+    * quantized embedding as list<BIGINT>. */
+  val oQuant =
+    "list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT))"
+
   /** Exact integer inner product of two quantized vectors — the NATIVE
     * codegen'd expression ([[graft.functions.DotLong]], injected by
     * GraftExtensions in every [[graft.GraftSession]]): one primitive
@@ -49,19 +54,43 @@ object VectorOps {
   /** Exact squared norm (long): 64 axes × (~3e5)² ≈ 6e12 « 2^53, so the
     * eventual cast to double is exact on both engines. */
   def normSq(a: Column): Column = dotL(a, a)
+
+  /** DuckDB text of [[dotL]] over two list expressions. */
+  def oDotL(a: String, b: String): String =
+    s"list_sum(list_transform(generate_series(1, len($a)), i -> $a[i] * $b[i]))"
+
+  /** DuckDB text of [[normSq]] over a list expression. */
+  def oNormSq(a: String): String = s"list_sum(list_transform($a, v -> v * v))"
+
+  /** Exact cosine of a query side and a candidate side, each given as
+    * (quantized vector, exact squared norm): the exact long dot, cast
+    * once, over the product of the two norm square roots. Every input
+    * double is an exact integer and each op is correctly rounded, so
+    * [[oCosine]] gives the same double on DuckDB. */
+  def cosine(q: (Column, Column), c: (Column, Column)): Column =
+    dotL(q._1, c._1).cast("double") /
+      (sqrt(q._2.cast("double")) * sqrt(c._2.cast("double")))
+
+  /** DuckDB text of [[cosine]]; sides are (list, squared-norm) texts. */
+  def oCosine(q: (String, String), c: (String, String)): String =
+    s"CAST(${oDotL(q._1, c._1)} AS DOUBLE) /\n" +
+      s"  (sqrt(CAST(${q._2} AS DOUBLE)) * sqrt(CAST(${c._2} AS DOUBLE)))"
+
+  /** An oracle side whose squared norm is computed from its list. */
+  def oSide(qv: String): (String, String) = (qv, oNormSq(qv))
 }
 
 /** The MATERIALIZED vector-index stage shared by the similarity family
-  * (sim1–sim12) — reference semantics per `SURVEY.md` §2's similarity
+  * (sim1–sim17) — reference semantics per `SURVEY.md` §2's similarity
   * rows; the staging itself is the standard large-corpus design (index
   * once, query many), not a reference feature.
   *
-  * Motivation: the six similarity operators all start from the same
-  * per-vector substrate — quantize the embedding, square the norm, inner-
-  * product the [[IvfIndex]] centroids, argmin-encode the [[PqIndex]]
-  * codes, sign-test the [[SignLsh]] hyperplanes. Computed inline, each
-  * operator pays that cost again on every run; at 100 TB that is six full
-  * corpus scans with 64-dim arithmetic per row. A real vector pipeline
+  * Motivation: the similarity rows all start from the same per-vector
+  * substrate — quantize the embedding, square the norm, inner-product
+  * the [[IvfIndex]] centroids, argmin-encode the [[PqIndex]] codes,
+  * sign-test the [[SignLsh]] hyperplanes. Computed inline, each row
+  * pays that cost again on every run; at 100 TB that is one full corpus
+  * scan per row with 64-dim arithmetic per vector. A real vector pipeline
   * computes the index ONCE per corpus snapshot and materializes it —
   * exactly what FAISS/Milvus-style systems persist — and the search
   * operators read it. The index rows are small (the quantized vector plus

@@ -127,6 +127,32 @@ object IvfIndex {
   def oracleAssign(dl: String): String =
     s"CAST(list_position($dl, list_max($dl)) - 1 AS INT)"
 
+  /** DuckDB CTEs replaying the stage's `dl` and `cid` columns over the
+    * rows of `src` (which carry the quantized list `qv`): `d` adds the
+    * centroid dots `dl`, then `asg` (or the name given) the assigned cell
+    * `cid`. `cols` are carried through both. */
+  def oracleAssignCtes(src: String, cols: Seq[String], dim: Int,
+                       asg: String = "asg"): String =
+    s"""d AS (
+       |  SELECT ${cols.mkString(", ")}, ${oracleDots("qv", dim)} AS dl
+       |  FROM $src),
+       |$asg AS (
+       |  SELECT ${cols.mkString(", ")}, ${oracleAssign("dl")} AS cid
+       |  FROM d)""".stripMargin
+
+  /** DuckDB text of [[probeCells]] at the [[C]]-cell floor (every oracle
+    * SF): each row of relation `q`, which carries the dots `dl`, expands
+    * to its [[P]] best cells, ties to the lowest cell. `keep` columns are
+    * carried and `cid` is added. */
+  def oracleProbeCells(q: String, qid: String, keep: Seq[String]): String =
+    s"""SELECT ${(keep :+ "cid").mkString(", ")} FROM (
+       |  SELECT ${keep.map("q." + _).mkString(", ")},
+       |    CAST(t.j AS INT) AS cid,
+       |    row_number() OVER (PARTITION BY q.$qid
+       |      ORDER BY q.dl[t.j + 1] DESC, t.j) AS rn
+       |  FROM $q q, generate_series(0, ${C - 1}) t(j))
+       |WHERE rn <= $P""".stripMargin
+
   // ---------------------------------------------------------------------
   // Hierarchical (two-level) quantizer — the beyond-threshold regime
   // ---------------------------------------------------------------------
@@ -202,18 +228,32 @@ object IvfIndex {
     * to [[ChildLitMaxCells]] (cheapest per corpus row — this is the
     * n-row build hot path), the in-expression formula beyond it, so a
     * 25M-vector build crosses the literal boundary silently-correctly
-    * instead of planting a ~100MB literal (or require-failing) there. */
+    * instead of planting a ~100MB literal (or require-failing) there.
+    *
+    * The parent dots, the block and the child dots are each evaluated
+    * once per row ([[let]]): the formula path reads the block inside its
+    * per-(child, axis) lambda, and an unbound block there re-ran the
+    * whole parent argmax ~B·dim times per row. */
   def assignHier(qv: Column, dim: Int, cells: Int): Column = {
     val (g, b) = hierGeometry(cells)
     val parents = typedLit((0 until g).map(j => centroid(j, dim): Seq[Long]))
     def dot(c: Column): Column =
       aggregate(zip_with(qv, c, (x, w) => x * w), lit(0L), (a, v) => a + v)
-    val pDots = transform(parents, dot(_))
-    val block = (array_position(pDots, array_max(pDots)) - 1).cast("int")
-    val kDots = childDots(qv, block, dim, cells)
-    val local = array_position(kDots, array_max(kDots)) - 1
-    (block * b + local).cast("int")
+    let(argmax(transform(parents, dot(_))).cast("int")) { block =>
+      (block * b + argmax(childDots(qv, block, dim, cells))).cast("int")
+    }
   }
+
+  /** 0-based position of the first maximum of array `a`, `a` evaluated
+    * once. */
+  private def argmax(a: Column): Column =
+    let(a)(v => array_position(v, array_max(v)) - 1)
+
+  /** `f(v)` with `v` evaluated once per row: `v` rides a one-element
+    * array into a lambda, so every use inside `f` reads the bound
+    * variable instead of re-evaluating the expression. */
+  private def let(v: Column)(f: Column => Column): Column =
+    element_at(transform(array(v), f), 1)
 
   /** TEST knob: force the two-level regime below [[HierarchyThreshold]]
     * so flat and hier can be compared head-to-head on the SAME corpus

@@ -40,8 +40,8 @@ object SemanticDecon {
       col("qv").as("qv_q"), col("nsq").as("nsq_q"))
     val c = benchVecs.select(col("id").as("bid"),
       col("qv").as("qv_c"), col("nsq").as("nsq_c"))
-    val cosine = VectorOps.dotL(col("qv_q"), col("qv_c")).cast("double") /
-      (sqrt(col("nsq_q").cast("double")) * sqrt(col("nsq_c").cast("double")))
+    val cosine = VectorOps.cosine((col("qv_q"), col("nsq_q")),
+      (col("qv_c"), col("nsq_c")))
     val agg = cand.join(q, "cid").join(broadcast(c), "bid")
       .select(col("cid"), cosine.as("cosine"))
       .groupBy("cid")

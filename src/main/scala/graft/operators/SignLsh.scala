@@ -57,6 +57,16 @@ object SignLsh {
       s"(CASE WHEN $qv[${p1 + 1}] >= $qv[${p2 + 1}] THEN ${1L << i} ELSE 0 END)"
     }.mkString(" + ")
 
+  /** DuckDB text of a bucket table: one (vec_id, t, bucket) row per
+    * table per row of relation `src` (which carries `vec_id` and the
+    * quantized list `qv`) — the oracle replay of the stage's buckets. */
+  def oracleTables(src: String, tables: Int, bits: Int, dim: Int): String = {
+    val ps = planes(tables, bits, dim)
+    (0 until tables).map { t =>
+      s"SELECT vec_id, $t AS t, CAST(${oracleBucket("qv", ps(t))} AS BIGINT) AS bucket FROM $src"
+    }.mkString("\n  UNION ALL ")
+  }
+
   /** (id, table_id, bucket) — one row per table per vector, buckets larger
     * than `maxBucket` removed. Input must carry `idCol` and the quantized
     * vector column `qvCol`.

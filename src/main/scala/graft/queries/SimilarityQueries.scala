@@ -1,7 +1,7 @@
 package graft.queries
 
-import graft.QueryDef
-import org.apache.spark.sql.Column
+import graft.{QueryDef, Tables}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,17 +23,32 @@ import org.apache.spark.sql.functions._
   * IVF-style partition-pruned search. Recall mechanics are spec-tested on
   * planted near-duplicates (SignLshSpec).
   *
-  * All six operators read the MATERIALIZED vector-index stage
+  * All seventeen rows read the MATERIALIZED vector-index stage
   * ([[graft.operators.EmbedStage]]): quantized vectors, norms, IVF
   * assignments, PQ codes, and LSH buckets are computed once per corpus
   * snapshot, the way a real vector pipeline maintains its index tables —
   * each query here is the SEARCH side only. The DuckDB oracles still
   * replay the full derivation from raw embeddings, so hash verification
   * covers index construction too.
+  *
+  * Each scoring decision is written once, as a DataFrame/oracle-SQL pair,
+  * and each row keeps only its candidate source, its cut and its
+  * non-vacuity checks:
+  *  - the exact cosine: `VectorOps.cosine`/`oCosine` over the query side
+  *    and candidate side projections ([[querySide]], [[candSide]]);
+  *  - the per-query top-k cut: [[topK]]/[[oTopK]];
+  *  - the candidate sources: the brute-force scan
+  *    ([[exactScan]]/[[oExactScan]]) and the IVF probe scan
+  *    ([[ivfScan]]/[[oIvfScan]]); the index oracles live with their
+  *    indexes (`IvfIndex.oracleAssignCtes`/`oracleProbeCells`,
+  *    `SignLsh.oracleTables`);
+  *  - one Lloyd step ([[lloydStep]]/[[oLloydStep]]; sim11, sim12) and one
+  *    recall audit ([[recall]]/[[oRecall]]; sim8, sim16).
   */
 object SimilarityQueries {
-  import graft.operators.{EmbedStage, VectorOps}
-  import VectorOps.dotL
+  import graft.operators.{EmbedStage, IvfIndex, Mmr, PqIndex, SemanticDecon,
+    SignLsh, TextOps, VectorOps}
+  import VectorOps.{dotL, oCosine, oQuant, oSide}
 
   private val NQ = 5   // query vectors: vec_id < NQ
   private val TopK = 10
@@ -68,56 +83,205 @@ object SimilarityQueries {
   private val MmrK = 5
   private val MmrLambda = 0.5
 
-  /** Quantized embedding as list<BIGINT> (oracle side of
-    * [[VectorOps.quant]]). */
-  private val oQuant =
-    "list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT))"
+  /** The quantized corpus (vec_id, `extra`, qv): every oracle's first CTE. */
+  private def oQv(extra: String*): String =
+    s"qv AS (\n  SELECT ${("vec_id" +: extra).mkString(", ")}, $oQuant AS qv FROM embeddings)"
 
-  /** sqrt of the stage's exact squared norm — same double as
-    * sqrt(normSq(qv)) computed inline, so parity with the
-    * raw-embedding-replaying oracle is untouched. */
-  private def nrmOf(nsq: Column): Column = sqrt(nsq.cast("double"))
+  /** Query side of a scored pair: `keep`, then the stage's (qv, nsq) as
+    * (qv_q, nsq_q). */
+  private def querySide(v: DataFrame, keep: Column*): DataFrame =
+    v.select(keep ++ Seq(col("qv").as("qv_q"), col("nsq").as("nsq_q")): _*)
 
-  private val oDot =
-    "list_sum(list_transform(generate_series(1, len(q.qv)), i -> q.qv[i] * c.qv[i]))"
-  private val oNorm = (t: String) =>
-    s"list_sum(list_transform($t.qv, v -> v * v))"
+  /** Candidate side of a scored pair: `keep`, then (qv_c, nsq_c). */
+  private def candSide(v: DataFrame, keep: Column*): DataFrame =
+    v.select(keep ++ Seq(col("qv").as("qv_c"), col("nsq").as("nsq_c")): _*)
+
+  /** The exact cosine of a joined query-side and candidate-side row. */
+  private val cosine = VectorOps.cosine((col("qv_q"), col("nsq_q")),
+    (col("qv_c"), col("nsq_c")))
+
+  /** Per-query top-k: the `k` highest-`score` rows of each `keys` group,
+    * score ties to the lowest `cand_id`, with their rank in `rn`. */
+  private[graft] def topK(scored: DataFrame, score: String, k: Int,
+                          keys: Seq[String] = Seq("query_id")): DataFrame =
+    scored.withColumn("rn", row_number().over(
+        Window.partitionBy(keys.map(col): _*)
+          .orderBy(col(score).desc, col("cand_id"))))
+      .filter(col("rn") <= k)
+
+  /** Oracle text of [[topK]] per query_id over relation `scored`,
+    * projecting `cols`. */
+  private[graft] def oTopK(scored: String, score: String, k: Int,
+                           cols: String): String =
+    s"""SELECT $cols FROM (
+       |  SELECT *, row_number() OVER (PARTITION BY query_id
+       |    ORDER BY $score DESC, cand_id) AS rn
+       |  FROM $scored) WHERE rn <= $k""".stripMargin
+
+  /** Brute-force candidate source: the first NQ vectors of `v` (vec_id,
+    * qv, nsq) broadcast against all of it, every pair scored —
+    * (query_id, cand_id, cosine). */
+  private def exactScan(v: DataFrame): DataFrame =
+    broadcast(querySide(v.filter(col("vec_id") < NQ),
+        col("vec_id").as("query_id")))
+      .crossJoin(candSide(v, col("vec_id").as("cand_id")))
+      .filter(col("cand_id") =!= col("query_id"))
+      .select(col("query_id"), col("cand_id"), cosine.as("cosine"))
+
+  /** Oracle text of [[exactScan]] over the `list` column of relation
+    * `src`. */
+  private def oExactScan(src: String = "qv", list: String = "qv"): String =
+    s"""SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
+       |    ${oCosine(oSide(s"q.$list"), oSide(s"c.$list"))} AS cosine
+       |  FROM $src q JOIN $src c ON c.vec_id <> q.vec_id
+       |  WHERE q.vec_id < $NQ""".stripMargin
+
+  /** IVF candidate source: the first NQ vectors of stage frame `v` expand
+    * to their probe cells (regime-aware `EmbedStage.probeCells`, a
+    * broadcast of NQ×P rows), and every vector of a probed cell is scored
+    * against them — (query_id, cand_id, `keep`, cosine). `keep` columns
+    * also join the probe to the cell (sim15's label pre-filter). */
+  private def ivfScan(s: SparkSession, d: String,
+                      v: DataFrame, keep: String*): DataFrame = {
+    val corpus = candSide(v,
+      (col("vec_id").as("cand_id") +: col("cid") +: keep.map(col)): _*)
+    val probes = EmbedStage.probeCells(s, d,
+        v.filter(col("vec_id") < NQ).select((col("vec_id").as("query_id")
+          +: keep.map(col)) ++ Seq(col("qv"), col("nsq").as("nsq_q"),
+          col("dl")): _*),
+        "query_id")
+      .withColumnRenamed("qv", "qv_q")
+    corpus.join(broadcast(probes), "cid" +: keep)
+      .filter(col("cand_id") =!= col("query_id"))
+      .select((Seq(col("query_id"), col("cand_id")) ++ keep.map(col)) :+
+        cosine.as("cosine"): _*)
+  }
+
+  /** Oracle text of [[ivfScan]] over the `d`/`asg` CTEs of
+    * `IvfIndex.oracleAssignCtes` (which must carry `keep`). */
+  private def oIvfScan(keep: String*): String = {
+    val qd = s"(SELECT ${("vec_id AS query_id" +: keep).mkString(", ")}, " +
+      s"qv AS qv_q, dl FROM d WHERE vec_id < $NQ)"
+    val probes = IvfIndex.oracleProbeCells(qd, "query_id",
+      ("query_id" +: keep) :+ "qv_q")
+    s"""SELECT ${(Seq("p.query_id", "c.vec_id AS cand_id") ++
+         keep.map("c." + _)).mkString(", ")},
+       |    ${oCosine(oSide("p.qv_q"), oSide("c.qv"))} AS cosine
+       |  FROM ($probes) p
+       |  JOIN asg c ON p.cid = c.cid${keep.map(k => s" AND p.$k = c.$k").mkString}
+       |    AND c.vec_id <> p.query_id""".stripMargin
+  }
+
+  /** One Lloyd step over `asg` (vec_id, qv, cid): each cell's per-axis
+    * mean, rounded to the 1e-6 grid (`floor(mean + 0.5)`), becomes its
+    * refined centroid, and every vector moves to the nearest refined
+    * centroid by exact long L2, ties to the smallest cid — (vec_id, qv,
+    * cid_prev, cid, d).
+    *
+    * The mean pass is a posexplode → (cid, dim) hash-agg (map-side
+    * partial, the shuffle carries ≤ cells×Dim rows); the refined
+    * centroids collapse to a ONE-ROW broadcast, cid-sorted, each struct
+    * carrying its squared norm `cc` (a trailing field — array_sort still
+    * orders by the unique leading cid1), and reassignment is a per-row
+    * fold whose strict-less keeps the smallest cid on ties: distance
+    * xx − 2·dot_long(qv, cq) + cc, one native long loop per centroid —
+    * argmin without exploding the corpus ×cells or windowing by vec_id.
+    * Empty cells contribute no centroid (drop-empty Lloyd). */
+  private def lloydStep(asg: DataFrame): DataFrame = {
+    val cent = asg
+      .select(col("cid"), posexplode(col("qv")).as(Seq("pos", "x")))
+      .groupBy("cid", "pos")
+      .agg(sum("x").as("sx"), count(lit(1)).as("n"))
+      .groupBy(col("cid").as("cid1"))
+      .agg(transform(
+        array_sort(collect_list(struct(col("pos"),
+          floor(col("sx").cast("double") / col("n") + 0.5)
+            .cast("long").as("cq")))),
+        e => e.getField("cq")).as("cq"))
+    val cents = cent
+      .agg(array_sort(collect_list(struct(col("cid1"), col("cq"),
+        dotL(col("cq"), col("cq")).as("cc"))))
+        .as("cents"))
+    val best = aggregate(col("cents"),
+      struct(lit(Long.MaxValue).as("d"), lit(-1).as("cid1")),
+      (acc, c) => {
+        val dd = col("__xx") + c.getField("cc") -
+          lit(2L) * dotL(col("qv"), c.getField("cq"))
+        when(dd < acc.getField("d"),
+          struct(dd.as("d"), c.getField("cid1").as("cid1")))
+          .otherwise(acc)
+      })
+    asg.crossJoin(broadcast(cents))
+      .withColumn("__xx", dotL(col("qv"), col("qv")))
+      .select(col("vec_id"), col("qv"), col("cid").as("cid_prev"),
+        best.as("best"))
+      .select(col("vec_id"), col("qv"), col("cid_prev"),
+        col("best.cid1").as("cid"), col("best.d").as("d"))
+  }
+
+  /** Oracle text of [[lloydStep]]: CTEs g`i`, cent`i`, dist`i` and
+    * asg`i` (vec_id, qv, cid, cid_prev, d) over relation `prev` (vec_id,
+    * qv, cid); the nearest centroid is a row_number over (d, cid). */
+  private def oLloydStep(i: Int, prev: String): String =
+    s"""g$i AS (
+       |  SELECT cid, i, CAST(sum(qv[i]) AS BIGINT) AS sx,
+       |    count(*) AS n
+       |  FROM $prev CROSS JOIN generate_series(1, $Dim) t(i)
+       |  GROUP BY cid, i),
+       |cent$i AS (
+       |  SELECT cid AS cidc,
+       |    list(CAST(floor(CAST(sx AS DOUBLE) / n + 0.5) AS BIGINT)
+       |      ORDER BY i) AS cq
+       |  FROM g$i GROUP BY cid),
+       |dist$i AS (
+       |  SELECT a.vec_id, a.qv, a.cid AS cid_prev, c.cidc AS cid,
+       |    CAST(list_sum(list_transform(generate_series(1, $Dim),
+       |      i -> (a.qv[i] - c.cq[i]) * (a.qv[i] - c.cq[i])))
+       |      AS BIGINT) AS d
+       |  FROM $prev a CROSS JOIN cent$i c),
+       |asg$i AS (
+       |  SELECT vec_id, qv, cid, cid_prev, d FROM (
+       |    SELECT *, row_number() OVER (PARTITION BY vec_id
+       |      ORDER BY d, cid) AS rn
+       |    FROM dist$i) WHERE rn = 1)""".stripMargin
+
+  /** Per-query recall of the `approx` ranking against the `exact` one,
+    * each one row per (query_id, cand_id): n_exact, n_hit, recall. */
+  private def recall(exact: DataFrame, approx: DataFrame): DataFrame = {
+    val ap = approx.select(col("query_id").as("a_qid"),
+      col("cand_id").as("a_cand"))
+    exact.join(ap, col("query_id") === col("a_qid") &&
+        col("cand_id") === col("a_cand"), "left")
+      .groupBy("query_id")
+      .agg(count(lit(1)).as("n_exact"),
+        count(col("a_cand")).as("n_hit"),
+        (count(col("a_cand")).cast("double") /
+          count(lit(1)).cast("double")).as("recall"))
+  }
+
+  /** Oracle text of [[recall]] over the CTEs `exact` and `approx`. */
+  private val oRecall =
+    """SELECT e.query_id, count(*) AS n_exact,
+      |  CAST(count(a.cand_id) AS BIGINT) AS n_hit,
+      |  CAST(count(a.cand_id) AS DOUBLE) / CAST(count(*) AS DOUBLE)
+      |    AS recall
+      |FROM exact e LEFT JOIN approx a
+      |  ON e.query_id = a.query_id AND e.cand_id = a.cand_id
+      |GROUP BY 1""".stripMargin
 
   val all: Seq[QueryDef] = Seq(
 
     // SIM1: brute-force cosine top-k for a query subset.
     QueryDef(
       "sim1_cosine_topk",
-      Some(s"""WITH qv AS (
-              |  SELECT vec_id, $oQuant AS qv FROM embeddings),
+      Some(s"""WITH ${oQv()},
               |scored AS (
-              |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-              |    CAST($oDot AS DOUBLE) /
-              |      (sqrt(CAST(${oNorm("q")} AS DOUBLE)) *
-              |       sqrt(CAST(${oNorm("c")} AS DOUBLE))) AS cosine
-              |  FROM qv q JOIN qv c ON c.vec_id <> q.vec_id
-              |  WHERE q.vec_id < $NQ)
-              |SELECT query_id, cand_id, cosine FROM (
-              |  SELECT *, row_number() OVER (PARTITION BY query_id
-              |    ORDER BY cosine DESC, cand_id) AS rn
-              |  FROM scored) WHERE rn <= $TopK""".stripMargin),
+              |  ${oExactScan()})
+              |${oTopK("scored", "cosine", TopK, "query_id, cand_id, cosine")}""".stripMargin),
       (s, d) => {
         val emb = EmbedStage(s, d).vectors
           .select(col("vec_id"), col("qv"), col("nsq"))
-        val q = emb.filter(col("vec_id") < NQ)
-          .select(col("vec_id").as("query_id"), col("qv").as("qv_q"),
-            col("nsq").as("nsq_q"))
-        val c = emb.select(col("vec_id").as("cand_id"),
-          col("qv").as("qv_c"), col("nsq").as("nsq_c"))
-        val cosine = dotL(col("qv_q"), col("qv_c")).cast("double") /
-          (nrmOf(col("nsq_q")) * nrmOf(col("nsq_c")))
-        val scored = broadcast(q).crossJoin(c)
-          .filter(col("cand_id") =!= col("query_id"))
-          .select(col("query_id"), col("cand_id"), cosine.as("cosine"))
-        val w = Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("cand_id"))
-        scored.withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= TopK)
+        topK(exactScan(emb), "cosine", TopK)
           .select("query_id", "cand_id", "cosine")
       }),
 
@@ -132,37 +296,25 @@ object SimilarityQueries {
     // rides the tiny query side, never the corpus.
     QueryDef(
       "sim2_ann_lsh",
-      Some {
-        val ps = graft.operators.SignLsh.planes(LshTables, Sim2Bits, Dim)
-        val tableSelects = (0 until LshTables).map { t =>
-          s"SELECT vec_id, $t AS t, CAST(${graft.operators.SignLsh.oracleBucket("qv", ps(t))} AS BIGINT) AS bucket FROM qv"
-        }.mkString("\n  UNION ALL ")
-        s"""WITH qv AS (
-           |  SELECT vec_id, $oQuant AS qv FROM embeddings),
-           |bk AS (
-           |  $tableSelects),
-           |qp AS (
-           |  SELECT vec_id, t,
-           |    unnest(${graft.operators.SignLsh.oracleProbeBuckets("bucket", Sim2Bits)})
-           |      AS bucket
-           |  FROM bk WHERE vec_id < $NQ),
-           |cand AS (
-           |  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS cand_id
-           |  FROM qp q JOIN bk c
-           |    ON q.t = c.t AND q.bucket = c.bucket AND c.vec_id <> q.vec_id),
-           |scored AS (
-           |  SELECT cd.query_id, cd.cand_id,
-           |    CAST($oDot AS DOUBLE) /
-           |      (sqrt(CAST(${oNorm("q")} AS DOUBLE)) *
-           |       sqrt(CAST(${oNorm("c")} AS DOUBLE))) AS cosine
-           |  FROM cand cd
-           |  JOIN qv q ON cd.query_id = q.vec_id
-           |  JOIN qv c ON cd.cand_id = c.vec_id)
-           |SELECT query_id, cand_id, cosine FROM (
-           |  SELECT *, row_number() OVER (PARTITION BY query_id
-           |    ORDER BY cosine DESC, cand_id) AS rn
-           |  FROM scored) WHERE rn <= $TopK""".stripMargin
-      },
+      Some(s"""WITH ${oQv()},
+              |bk AS (
+              |  ${SignLsh.oracleTables("qv", LshTables, Sim2Bits, Dim)}),
+              |qp AS (
+              |  SELECT vec_id, t,
+              |    unnest(${SignLsh.oracleProbeBuckets("bucket", Sim2Bits)})
+              |      AS bucket
+              |  FROM bk WHERE vec_id < $NQ),
+              |cand AS (
+              |  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS cand_id
+              |  FROM qp q JOIN bk c
+              |    ON q.t = c.t AND q.bucket = c.bucket AND c.vec_id <> q.vec_id),
+              |scored AS (
+              |  SELECT cd.query_id, cd.cand_id,
+              |    ${oCosine(oSide("q.qv"), oSide("c.qv"))} AS cosine
+              |  FROM cand cd
+              |  JOIN qv q ON cd.query_id = q.vec_id
+              |  JOIN qv c ON cd.cand_id = c.vec_id)
+              |${oTopK("scored", "cosine", TopK, "query_id, cand_id, cosine")}""".stripMargin),
       (s, d) => {
         // the quantized frame and the bucket bits are STAGE reads
         // (EmbedStage — index once, query many); what stays on the query
@@ -170,14 +322,14 @@ object SimilarityQueries {
         // expansion, and the scoring itself.
         val st = EmbedStage(s, d)
         val emb = st.vectors.select(col("vec_id"), col("qv"), col("nsq"))
-        val bk = graft.operators.SignLsh.capBuckets(
+        val bk = SignLsh.capBuckets(
           st.buckets.select(col("vec_id"), col("table_id"),
             col("bucket_query").as("bucket")),
           MaxLshBucket, Some("sim2_dropped_bucket_rows"))
         val qb = bk.filter(col("vec_id") < NQ)
           .select(col("vec_id").as("query_id"), col("table_id"),
-            explode(graft.operators.SignLsh.probeBuckets(col("bucket"),
-              Sim2Bits)).as("bucket"))
+            explode(SignLsh.probeBuckets(col("bucket"), Sim2Bits))
+              .as("bucket"))
         val cb = bk.select(col("vec_id").as("cand_id"), col("table_id"),
           col("bucket"))
         // probe buckets are NQ×tables×(bits+1) rows — broadcast; the
@@ -186,24 +338,17 @@ object SimilarityQueries {
         val cand = cb.join(broadcast(qb), Seq("table_id", "bucket"))
           .filter(col("cand_id") =!= col("query_id"))
           .select("query_id", "cand_id").distinct()
-        val q = emb.select(col("vec_id").as("query_id"),
-          col("qv").as("qv_q"), col("nsq").as("nsq_q"))
-        val c = emb.select(col("vec_id").as("cand_id"),
-          col("qv").as("qv_c"), col("nsq").as("nsq_c"))
-        val cosine = dotL(col("qv_q"), col("qv_c")).cast("double") /
-          (nrmOf(col("nsq_q")) * nrmOf(col("nsq_c")))
         // scoring join direction matters at 100 TB: the corpus is the
         // STREAM side scanned once, the (candidate × query-vector) frame —
         // small by LSH construction — broadcasts. Explicit, so neither AQE
         // estimation stages nor a corpus shuffle appear.
-        val candq = cand.join(broadcast(q), "query_id")
-        val scored = c.join(broadcast(candq), "cand_id")
+        val candq = cand.join(
+          broadcast(querySide(emb, col("vec_id").as("query_id"))),
+          "query_id")
+        val scored = candSide(emb, col("vec_id").as("cand_id"))
+          .join(broadcast(candq), "cand_id")
           .select(col("query_id"), col("cand_id"), cosine.as("cosine"))
-        val w = Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("cand_id"))
-        scored.withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= TopK)
-          .select("query_id", "cand_id", "cosine")
+        topK(scored, "cosine", TopK).select("query_id", "cand_id", "cosine")
       }),
 
     // SIM3: pairwise high-similarity detection (embedding near-dup dedup)
@@ -216,44 +361,31 @@ object SimilarityQueries {
     QueryDef(
       "sim3_embedding_neardup",
       Some {
-        val ps = graft.operators.SignLsh.planes(LshTables, LshBits, Dim)
-        val tableSelects = (0 until LshTables).map { t =>
-          s"SELECT vec_id, $t AS t, CAST(${graft.operators.SignLsh.oracleBucket("qv", ps(t))} AS BIGINT) AS bucket FROM qv"
-        }.mkString("\n  UNION ALL ")
-        s"""WITH qv AS (
-           |  SELECT vec_id, $oQuant AS qv FROM embeddings),
+        val cos = oCosine(oSide("q.qv"), oSide("c.qv"))
+        s"""WITH ${oQv()},
            |bk AS (
-           |  $tableSelects),
+           |  ${SignLsh.oracleTables("qv", LshTables, LshBits, Dim)}),
            |cand AS (
            |  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
            |  FROM bk a JOIN bk b
            |    ON a.t = b.t AND a.bucket = b.bucket AND a.vec_id < b.vec_id)
            |SELECT cd.id_a, cd.id_b,
-           |  CAST($oDot AS DOUBLE) /
-           |    (sqrt(CAST(${oNorm("q")} AS DOUBLE)) *
-           |     sqrt(CAST(${oNorm("c")} AS DOUBLE))) AS cosine
+           |  $cos AS cosine
            |FROM cand cd
            |JOIN qv q ON cd.id_a = q.vec_id
            |JOIN qv c ON cd.id_b = c.vec_id
-           |WHERE CAST($oDot AS DOUBLE) /
-           |    (sqrt(CAST(${oNorm("q")} AS DOUBLE)) *
-           |     sqrt(CAST(${oNorm("c")} AS DOUBLE))) >= 0.4""".stripMargin
+           |WHERE $cos >= 0.4""".stripMargin
       },
       (s, d) => {
         val st = EmbedStage(s, d)
-        val cand = graft.operators.SignLsh.pairsFromBuckets(
-          graft.operators.SignLsh.capBuckets(
+        val cand = SignLsh.pairsFromBuckets(
+          SignLsh.capBuckets(
             st.buckets.select(col("vec_id"), col("table_id"),
               col("bucket_pair").as("bucket")),
             MaxLshBucket, Some("sim3_dropped_bucket_rows")),
           "vec_id")
-        val q = st.vectors.select(col("vec_id").as("id_a"),
-          col("qv").as("qv_q"), col("nsq").as("nsq_q"))
-        val c = st.vectors.select(col("vec_id").as("id_b"),
-          col("qv").as("qv_c"), col("nsq").as("nsq_c"))
-        val cosine = dotL(col("qv_q"), col("qv_c")).cast("double") /
-          (nrmOf(col("nsq_q")) * nrmOf(col("nsq_c")))
-        cand.join(q, "id_a").join(c, "id_b")
+        cand.join(querySide(st.vectors, col("vec_id").as("id_a")), "id_a")
+          .join(candSide(st.vectors, col("vec_id").as("id_b")), "id_b")
           .select(col("id_a"), col("id_b"), cosine.as("cosine"))
           .filter(col("cosine") >= 0.4)
       }),
@@ -267,65 +399,18 @@ object SimilarityQueries {
     // assignment is a partition, so a candidate pair arises exactly once.
     QueryDef(
       "sim4_ivf_topk",
-      Some {
-        import graft.operators.IvfIndex
-        val oDotQC =
-          "list_sum(list_transform(generate_series(1, len(p.qv_q)), i -> p.qv_q[i] * c.qv[i]))"
-        val oNormQ = "list_sum(list_transform(p.qv_q, v -> v * v))"
-        val oNormC = "list_sum(list_transform(c.qv, v -> v * v))"
-        s"""WITH qv AS (
-           |  SELECT vec_id, $oQuant AS qv FROM embeddings),
-           |d AS (
-           |  SELECT vec_id, qv, ${IvfIndex.oracleDots("qv", Dim)} AS dl
-           |  FROM qv),
-           |asg AS (
-           |  SELECT vec_id, qv, ${IvfIndex.oracleAssign("dl")} AS cid
-           |  FROM d),
-           |qd AS (
-           |  SELECT vec_id, qv, dl FROM d WHERE vec_id < $NQ),
-           |qp AS (
-           |  SELECT query_id, qv_q, cid FROM (
-           |    SELECT q.vec_id AS query_id, q.qv AS qv_q,
-           |      CAST(t.j AS INT) AS cid,
-           |      row_number() OVER (PARTITION BY q.vec_id
-           |        ORDER BY q.dl[t.j + 1] DESC, t.j) AS rn
-           |    FROM qd q, generate_series(0, ${IvfIndex.C - 1}) t(j))
-           |  WHERE rn <= ${IvfIndex.P}),
-           |scored AS (
-           |  SELECT p.query_id, c.vec_id AS cand_id,
-           |    CAST($oDotQC AS DOUBLE) /
-           |      (sqrt(CAST($oNormQ AS DOUBLE)) *
-           |       sqrt(CAST($oNormC AS DOUBLE))) AS cosine
-           |  FROM qp p JOIN asg c ON p.cid = c.cid AND c.vec_id <> p.query_id)
-           |SELECT query_id, cand_id, cosine FROM (
-           |  SELECT *, row_number() OVER (PARTITION BY query_id
-           |    ORDER BY cosine DESC, cand_id) AS rn
-           |  FROM scored) WHERE rn <= $TopK""".stripMargin
-      },
+      Some(s"""WITH ${oQv()},
+              |${IvfIndex.oracleAssignCtes("qv", Seq("vec_id", "qv"), Dim)},
+              |scored AS (
+              |  ${oIvfScan()})
+              |${oTopK("scored", "cosine", TopK, "query_id, cand_id, cosine")}""".stripMargin),
       (s, d) => {
         // corpus assignment (cid) and the centroid-dot array (dl) are
         // stage columns — the query path is probe expansion (regime-aware:
         // flat dl rank at fixture scale, two-level parent→child expansion
         // beyond the cell threshold) + the broadcast probe join + exact
         // scoring of the probed lists only
-        val v = EmbedStage(s, d).vectors
-        val corpus = v.select(col("vec_id").as("cand_id"),
-          col("qv").as("qv_c"), col("nsq").as("nsq_c"), col("cid"))
-        val probes = EmbedStage.probeCells(s, d,
-            v.filter(col("vec_id") < NQ)
-              .select(col("vec_id").as("query_id"), col("qv"),
-                col("nsq").as("nsq_q"), col("dl")),
-            "query_id")
-          .withColumnRenamed("qv", "qv_q")
-        val cosine = dotL(col("qv_q"), col("qv_c")).cast("double") /
-          (nrmOf(col("nsq_q")) * nrmOf(col("nsq_c")))
-        val scored = corpus.join(broadcast(probes), "cid")
-          .filter(col("cand_id") =!= col("query_id"))
-          .select(col("query_id"), col("cand_id"), cosine.as("cosine"))
-        val wTop = Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("cand_id"))
-        scored.withColumn("rn", row_number().over(wTop))
-          .filter(col("rn") <= TopK)
+        topK(ivfScan(s, d, EmbedStage(s, d).vectors), "cosine", TopK)
           .select("query_id", "cand_id", "cosine")
       }),
 
@@ -345,31 +430,23 @@ object SimilarityQueries {
     // and C grows with the corpus to hold cluster_size ~constant — the
     // quadratic term never sees the whole corpus. Exact integer dots on
     // the 1e-6 grid keep the threshold comparison bit-identical across
-    // engines.
+    // engines; the squared norms are per-vector stage columns, so the
+    // pair join evaluates only the dot.
     QueryDef(
       "sim5_semdedup",
       Some {
-        import graft.operators.IvfIndex
-        val oDotAB =
-          "list_sum(list_transform(generate_series(1, len(a.qv)), i -> a.qv[i] * b.qv[i]))"
-        val oN = (t: String) =>
-          s"list_sum(list_transform($t.qv, v -> v * v))"
-        s"""WITH qv AS (
-           |  SELECT vec_id, $oQuant AS qv FROM embeddings),
-           |asg AS (
-           |  SELECT vec_id, qv,
-           |    ${IvfIndex.oracleAssign(IvfIndex.oracleDots("qv", Dim))}
-           |      AS cid,
-           |    sqrt(CAST(list_sum(list_transform(qv, v -> v * v))
-           |      AS DOUBLE)) AS nrm
-           |  FROM qv),
+        val cos = oCosine(("a.qv", "a.nsq"), ("b.qv", "b.nsq"))
+        s"""WITH ${oQv()},
+           |n AS (
+           |  SELECT vec_id, qv, ${VectorOps.oNormSq("qv")} AS nsq FROM qv),
+           |${IvfIndex.oracleAssignCtes("n", Seq("vec_id", "qv", "nsq"), Dim)},
            |near AS (
            |  SELECT a.vec_id,
            |    CAST(count(*) AS BIGINT) AS n_near,
-           |    max(CAST($oDotAB AS DOUBLE) / (a.nrm * b.nrm)) AS max_cos
+           |    max($cos) AS max_cos
            |  FROM asg a JOIN asg b
            |    ON a.cid = b.cid AND b.vec_id < a.vec_id
-           |  WHERE CAST($oDotAB AS DOUBLE) / (a.nrm * b.nrm) >= $SemTau
+           |  WHERE $cos >= $SemTau
            |  GROUP BY 1)
            |SELECT s.vec_id, s.cid,
            |  coalesce(n.n_near, 0) AS n_near, n.max_cos,
@@ -377,22 +454,10 @@ object SimilarityQueries {
            |FROM asg s LEFT JOIN near n ON s.vec_id = n.vec_id""".stripMargin
       },
       (s, d) => {
-        // cluster assignment and squared norm are stage columns; the norm
-        // sqrt is once per VECTOR, not per pair — the pair join below
-        // evaluates O(n·cluster) interpreted lambdas, and keeping the two
-        // per-pair norm recomputes out of it cuts 2/3 of that work (sqrt
-        // of the same exact-int double is bit-identical wherever it's
-        // computed, so parity is unaffected)
         val asg = EmbedStage(s, d).vectors
-          .select(col("vec_id"), col("qv"), col("cid"),
-            nrmOf(col("nsq")).as("nrm"))
-        val a = asg.select(col("vec_id"), col("cid"), col("qv").as("qv_a"),
-          col("nrm").as("nrm_a"))
-        val b = asg.select(col("vec_id").as("id_b"), col("cid"),
-          col("qv").as("qv_b"), col("nrm").as("nrm_b"))
-        val cosine = dotL(col("qv_a"), col("qv_b")).cast("double") /
-          (col("nrm_a") * col("nrm_b"))
-        val near = a.join(b, "cid")
+          .select(col("vec_id"), col("qv"), col("nsq"), col("cid"))
+        val near = querySide(asg, col("vec_id"), col("cid"))
+          .join(candSide(asg, col("vec_id").as("id_b"), col("cid")), "cid")
           .filter(col("id_b") < col("vec_id"))
           .select(col("vec_id"), cosine.as("cosine"))
           .filter(col("cosine") >= SemTau)
@@ -420,31 +485,19 @@ object SimilarityQueries {
     QueryDef(
       "sim6_pq_topk",
       Some {
-        import graft.operators.{IvfIndex, PqIndex}
-        val oDotQC =
-          "list_sum(list_transform(generate_series(1, len(q.qv)), i -> q.qv[i] * c.qv[i]))"
-        s"""WITH qv AS (
-           |  SELECT vec_id, $oQuant AS qv FROM embeddings),
-           |d AS (
-           |  SELECT vec_id, qv, ${IvfIndex.oracleDots("qv", Dim)} AS dl
-           |  FROM qv),
+        val qd = s"(SELECT vec_id AS query_id, qv AS qv_q, dl FROM d " +
+          s"WHERE vec_id < $NQ)"
+        s"""WITH ${oQv()},
+           |${IvfIndex.oracleAssignCtes("qv", Seq("vec_id", "qv"), Dim)},
            |enc0 AS (
-           |  SELECT vec_id, ${IvfIndex.oracleAssign("dl")} AS cid,
-           |    ${PqIndex.oracleDls("qv", Dim)} AS dls
-           |  FROM d),
+           |  SELECT vec_id, cid, ${PqIndex.oracleDls("qv", Dim)} AS dls
+           |  FROM asg),
            |enc AS (
            |  SELECT vec_id AS cand_id, cid,
            |    ${PqIndex.oracleEncode("dls")} AS codes
            |  FROM enc0),
-           |qd AS (SELECT vec_id, qv, dl FROM d WHERE vec_id < $NQ),
            |qp AS (
-           |  SELECT query_id, qv_q, cid FROM (
-           |    SELECT q.vec_id AS query_id, q.qv AS qv_q,
-           |      CAST(t.j AS INT) AS cid,
-           |      row_number() OVER (PARTITION BY q.vec_id
-           |        ORDER BY q.dl[t.j + 1] DESC, t.j) AS rn
-           |    FROM qd q, generate_series(0, ${IvfIndex.C - 1}) t(j))
-           |  WHERE rn <= ${IvfIndex.P}),
+           |  ${IvfIndex.oracleProbeCells(qd, "query_id", Seq("query_id", "qv_q"))}),
            |probes AS (
            |  SELECT query_id, cid, ${PqIndex.oracleLuts("qv_q", Dim)}
            |    AS luts
@@ -455,27 +508,16 @@ object SimilarityQueries {
            |  FROM probes p JOIN enc e
            |    ON p.cid = e.cid AND e.cand_id <> p.query_id),
            |pool AS (
-           |  SELECT query_id, cand_id, adc FROM (
-           |    SELECT *, row_number() OVER (PARTITION BY query_id
-           |      ORDER BY adc DESC, cand_id) AS rn
-           |    FROM scored) WHERE rn <= $PqPool),
+           |  ${oTopK("scored", "adc", PqPool, "query_id, cand_id, adc")}),
            |rer AS (
            |  SELECT pool.query_id, pool.cand_id, pool.adc,
-           |    CAST($oDotQC AS DOUBLE) /
-           |      (sqrt(CAST(list_sum(list_transform(q.qv, v -> v * v))
-           |         AS DOUBLE)) *
-           |       sqrt(CAST(list_sum(list_transform(c.qv, v -> v * v))
-           |         AS DOUBLE))) AS cosine
+           |    ${oCosine(oSide("q.qv"), oSide("c.qv"))} AS cosine
            |  FROM pool
            |  JOIN qv q ON q.vec_id = pool.query_id
            |  JOIN qv c ON c.vec_id = pool.cand_id)
-           |SELECT query_id, cand_id, adc, cosine FROM (
-           |  SELECT *, row_number() OVER (PARTITION BY query_id
-           |    ORDER BY cosine DESC, cand_id) AS rn
-           |  FROM rer) WHERE rn <= $TopK""".stripMargin
+           |${oTopK("rer", "cosine", TopK, "query_id, cand_id, adc, cosine")}""".stripMargin
       },
       (s, d) => {
-        import graft.operators.{IvfIndex, PqIndex}
         // codes, cid, and dl are stage columns — the encoded-corpus scan
         // (cid + codes, no raw vectors) is exactly the compressed index
         // table an IVF-ADC deployment keeps hot
@@ -492,28 +534,17 @@ object SimilarityQueries {
           .filter(col("cand_id") =!= col("query_id"))
           .select(col("query_id"), col("cand_id"),
             PqIndex.adc(col("codes"), col("luts")).as("adc"))
-        val wPool = Window.partitionBy("query_id")
-          .orderBy(col("adc").desc, col("cand_id"))
-        val pool = scored.withColumn("rn", row_number().over(wPool))
-          .filter(col("rn") <= PqPool).select("query_id", "cand_id", "adc")
+        val pool = topK(scored, "adc", PqPool)
+          .select("query_id", "cand_id", "adc")
         // exact rerank: corpus scan joins the tiny pool/query dims —
         // never the reverse
-        val rer = v.select(col("vec_id"), col("qv"), col("nsq"))
-          .join(broadcast(pool), col("vec_id") === col("cand_id"))
-          .select(col("query_id"), col("cand_id"), col("adc"),
-            col("qv").as("qv_c"), col("nsq").as("nsq_c"))
-          .join(broadcast(v.filter(col("vec_id") < NQ)
-            .select(col("vec_id").as("query_id"), col("qv").as("qv_q"),
-              col("nsq").as("nsq_q"))),
-            "query_id")
-        val cosine = dotL(col("qv_q"), col("qv_c")).cast("double") /
-          (nrmOf(col("nsq_q")) * nrmOf(col("nsq_c")))
-        val wTop = Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("cand_id"))
-        rer.select(col("query_id"), col("cand_id"), col("adc"),
-            cosine.as("cosine"))
-          .withColumn("rn", row_number().over(wTop))
-          .filter(col("rn") <= TopK)
+        val rer = candSide(v.join(broadcast(pool),
+            col("vec_id") === col("cand_id")),
+            col("query_id"), col("cand_id"), col("adc"))
+          .join(broadcast(querySide(v.filter(col("vec_id") < NQ),
+            col("vec_id").as("query_id"))), "query_id")
+        topK(rer.select(col("query_id"), col("cand_id"), col("adc"),
+            cosine.as("cosine")), "cosine", TopK)
           .select("query_id", "cand_id", "adc", "cosine")
       }),
 
@@ -527,74 +558,29 @@ object SimilarityQueries {
     // (query × label) table.
     QueryDef(
       "sim7_knn_classify",
-      Some {
-        import graft.operators.IvfIndex
-        val oDotQC =
-          "list_sum(list_transform(generate_series(1, len(p.qv_q)), i -> p.qv_q[i] * c.qv[i]))"
-        val oNormQ = "list_sum(list_transform(p.qv_q, v -> v * v))"
-        val oNormC = "list_sum(list_transform(c.qv, v -> v * v))"
-        s"""WITH qv AS (
-           |  SELECT vec_id, label, $oQuant AS qv FROM embeddings),
-           |d AS (
-           |  SELECT vec_id, label, qv, ${IvfIndex.oracleDots("qv", Dim)}
-           |    AS dl
-           |  FROM qv),
-           |asg AS (
-           |  SELECT vec_id, label, qv, ${IvfIndex.oracleAssign("dl")}
-           |    AS cid
-           |  FROM d),
-           |qd AS (SELECT vec_id, qv, dl FROM d WHERE vec_id < $NQ),
-           |qp AS (
-           |  SELECT query_id, qv_q, cid FROM (
-           |    SELECT q.vec_id AS query_id, q.qv AS qv_q,
-           |      CAST(t.j AS INT) AS cid,
-           |      row_number() OVER (PARTITION BY q.vec_id
-           |        ORDER BY q.dl[t.j + 1] DESC, t.j) AS rn
-           |    FROM qd q, generate_series(0, ${IvfIndex.C - 1}) t(j))
-           |  WHERE rn <= ${IvfIndex.P}),
-           |nbr AS (
-           |  SELECT query_id, label FROM (
-           |    SELECT p.query_id, c.label,
-           |      row_number() OVER (PARTITION BY p.query_id
-           |        ORDER BY CAST($oDotQC AS DOUBLE) /
-           |          (sqrt(CAST($oNormQ AS DOUBLE)) *
-           |           sqrt(CAST($oNormC AS DOUBLE))) DESC, c.vec_id)
-           |        AS rn
-           |    FROM qp p JOIN asg c
-           |      ON p.cid = c.cid AND c.vec_id <> p.query_id)
-           |  WHERE rn <= $TopK),
-           |votes AS (
-           |  SELECT query_id, label, count(*) AS votes,
-           |    sum(count(*)) OVER (PARTITION BY query_id) AS n_neighbors
-           |  FROM nbr GROUP BY 1, 2)
-           |SELECT query_id, label AS pred_label, votes,
-           |  CAST(n_neighbors AS BIGINT) AS n_neighbors
-           |FROM (
-           |  SELECT *, row_number() OVER (PARTITION BY query_id
-           |    ORDER BY votes DESC, label) AS vr
-           |  FROM votes) WHERE vr = 1""".stripMargin
-      },
+      Some(s"""WITH ${oQv()},
+              |${IvfIndex.oracleAssignCtes("qv", Seq("vec_id", "qv"), Dim)},
+              |scored AS (
+              |  ${oIvfScan()}),
+              |nbr AS (
+              |  SELECT t.query_id, e.label FROM (
+              |    ${oTopK("scored", "cosine", TopK, "query_id, cand_id")}) t
+              |  JOIN embeddings e ON e.vec_id = t.cand_id),
+              |votes AS (
+              |  SELECT query_id, label, count(*) AS votes,
+              |    sum(count(*)) OVER (PARTITION BY query_id) AS n_neighbors
+              |  FROM nbr GROUP BY 1, 2)
+              |SELECT query_id, label AS pred_label, votes,
+              |  CAST(n_neighbors AS BIGINT) AS n_neighbors
+              |FROM (
+              |  SELECT *, row_number() OVER (PARTITION BY query_id
+              |    ORDER BY votes DESC, label) AS vr
+              |  FROM votes) WHERE vr = 1""".stripMargin),
       (s, d) => {
-        val v = EmbedStage(s, d).vectors
-        val labels = graft.Tables.embeddings(s, d).select(
+        val labels = Tables.embeddings(s, d).select(
           col("vec_id").as("cand_id"), col("label"))
-        val corpus = v.select(col("vec_id").as("cand_id"),
-          col("qv").as("qv_c"), col("nsq").as("nsq_c"), col("cid"))
-        val probes = EmbedStage.probeCells(s, d,
-            v.filter(col("vec_id") < NQ)
-              .select(col("vec_id").as("query_id"), col("qv"),
-                col("nsq").as("nsq_q"), col("dl")),
-            "query_id")
-          .withColumnRenamed("qv", "qv_q")
-        val cosine = dotL(col("qv_q"), col("qv_c")).cast("double") /
-          (nrmOf(col("nsq_q")) * nrmOf(col("nsq_c")))
-        val wTop = Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("cand_id"))
-        val nbr = corpus.join(broadcast(probes), "cid")
-          .filter(col("cand_id") =!= col("query_id"))
-          .select(col("query_id"), col("cand_id"), cosine.as("cosine"))
-          .withColumn("rn", row_number().over(wTop))
-          .filter(col("rn") <= TopK)
+        val nbr = topK(ivfScan(s, d, EmbedStage(s, d).vectors), "cosine",
+            TopK)
           .join(labels, "cand_id")
         val wAll = Window.partitionBy("query_id")
         val wVote = Window.partitionBy("query_id")
@@ -618,98 +604,19 @@ object SimilarityQueries {
     // the point, not avoided.
     QueryDef(
       "sim8_recall_audit",
-      Some {
-        import graft.operators.IvfIndex
-        val oDotQC =
-          "list_sum(list_transform(generate_series(1, len(q.qv_q)), i -> q.qv_q[i] * c.qv[i]))"
-        val oNormQ = "list_sum(list_transform(q.qv_q, v -> v * v))"
-        val oNormC = "list_sum(list_transform(c.qv, v -> v * v))"
-        s"""WITH qv AS (
-           |  SELECT vec_id, $oQuant AS qv FROM embeddings),
-           |d AS (
-           |  SELECT vec_id, qv, ${IvfIndex.oracleDots("qv", Dim)} AS dl
-           |  FROM qv),
-           |asg AS (
-           |  SELECT vec_id, qv, ${IvfIndex.oracleAssign("dl")} AS cid
-           |  FROM d),
-           |qs AS (
-           |  SELECT vec_id AS query_id, qv AS qv_q, dl
-           |  FROM d WHERE vec_id < $NQ),
-           |exact AS (
-           |  SELECT query_id, cand_id FROM (
-           |    SELECT q.query_id, c.vec_id AS cand_id,
-           |      row_number() OVER (PARTITION BY q.query_id
-           |        ORDER BY CAST($oDotQC AS DOUBLE) /
-           |          (sqrt(CAST($oNormQ AS DOUBLE)) *
-           |           sqrt(CAST($oNormC AS DOUBLE))) DESC, c.vec_id)
-           |        AS rn
-           |    FROM qs q JOIN qv c ON c.vec_id <> q.query_id)
-           |  WHERE rn <= $TopK),
-           |qp AS (
-           |  SELECT query_id, qv_q, cid FROM (
-           |    SELECT q.query_id, q.qv_q, CAST(t.j AS INT) AS cid,
-           |      row_number() OVER (PARTITION BY q.query_id
-           |        ORDER BY q.dl[t.j + 1] DESC, t.j) AS rn
-           |    FROM qs q, generate_series(0, ${IvfIndex.C - 1}) t(j))
-           |  WHERE rn <= ${IvfIndex.P}),
-           |approx AS (
-           |  SELECT query_id, cand_id FROM (
-           |    SELECT q.query_id, c.vec_id AS cand_id,
-           |      row_number() OVER (PARTITION BY q.query_id
-           |        ORDER BY CAST($oDotQC AS DOUBLE) /
-           |          (sqrt(CAST($oNormQ AS DOUBLE)) *
-           |           sqrt(CAST($oNormC AS DOUBLE))) DESC, c.vec_id)
-           |        AS rn
-           |    FROM qp q JOIN asg c
-           |      ON q.cid = c.cid AND c.vec_id <> q.query_id)
-           |  WHERE rn <= $TopK)
-           |SELECT e.query_id,
-           |  count(*) AS n_exact,
-           |  CAST(count(a.cand_id) AS BIGINT) AS n_hit,
-           |  CAST(count(a.cand_id) AS DOUBLE) / CAST(count(*) AS DOUBLE)
-           |    AS recall
-           |FROM exact e LEFT JOIN approx a
-           |  ON e.query_id = a.query_id AND e.cand_id = a.cand_id
-           |GROUP BY 1""".stripMargin
-      },
+      Some(s"""WITH ${oQv()},
+              |${IvfIndex.oracleAssignCtes("qv", Seq("vec_id", "qv"), Dim)},
+              |exact AS (
+              |  ${oTopK(s"(${oExactScan()})", "cosine", TopK, "query_id, cand_id")}),
+              |approx AS (
+              |  ${oTopK(s"(${oIvfScan()})", "cosine", TopK, "query_id, cand_id")})
+              |$oRecall""".stripMargin),
       (s, d) => {
         val v = EmbedStage(s, d).vectors
-        val qs = v.filter(col("vec_id") < NQ)
-          .select(col("vec_id").as("query_id"), col("qv").as("qv_q"),
-            col("nsq").as("nsq_q"))
-        val cosine = dotL(col("qv_q"), col("qv_c")).cast("double") /
-          (nrmOf(col("nsq_q")) * nrmOf(col("nsq_c")))
-        val wTop = Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("cand_id"))
-        def topK(scored: org.apache.spark.sql.DataFrame) = scored
-          .withColumn("rn", row_number().over(wTop))
-          .filter(col("rn") <= TopK).select("query_id", "cand_id")
-        // exact leg: corpus scan × broadcast query sample (sim1 shape)
-        val corpusAll = v.select(col("vec_id").as("cand_id"),
-          col("qv").as("qv_c"), col("nsq").as("nsq_c"), col("cid"))
-        val exact = topK(corpusAll
-          .crossJoin(broadcast(qs.select("query_id", "qv_q", "nsq_q")))
-          .filter(col("cand_id") =!= col("query_id"))
-          .select(col("query_id"), col("cand_id"), cosine.as("cosine")))
+        // exact leg: corpus scan × broadcast query sample (sim1 shape);
         // approx leg: the sim4 probed-lists search (regime-aware probes)
-        val probes = EmbedStage.probeCells(s, d,
-            v.filter(col("vec_id") < NQ)
-              .select(col("vec_id").as("query_id"), col("qv"),
-                col("nsq").as("nsq_q"), col("dl")),
-            "query_id")
-          .withColumnRenamed("qv", "qv_q")
-        val approx = topK(corpusAll.join(broadcast(probes), "cid")
-          .filter(col("cand_id") =!= col("query_id"))
-          .select(col("query_id"), col("cand_id"), cosine.as("cosine")))
-        val ap = approx.select(col("query_id").as("a_qid"),
-          col("cand_id").as("a_cand"))
-        exact.join(ap, col("query_id") === col("a_qid") &&
-            col("cand_id") === col("a_cand"), "left")
-          .groupBy("query_id")
-          .agg(count(lit(1)).as("n_exact"),
-            count(col("a_cand")).as("n_hit"),
-            (count(col("a_cand")).cast("double") /
-              count(lit(1)).cast("double")).as("recall"))
+        recall(topK(exactScan(v), "cosine", TopK),
+          topK(ivfScan(s, d, v), "cosine", TopK))
       }),
 
     // SIM9: IVF centroid-drift audit — the index-maintenance check that
@@ -735,19 +642,13 @@ object SimilarityQueries {
     QueryDef(
       "sim9_centroid_drift",
       Some {
-        import graft.operators.IvfIndex
         val cm = IvfIndex.matrix(Dim)
           .map(_.mkString("[", ", ", "]")).mkString("[", ", ", "]")
         val rsq = s"list_sum(list_transform(generate_series(1, $Dim), " +
           s"i -> (qv[i] - ($cm)[cid + 1][i]) * " +
           s"(qv[i] - ($cm)[cid + 1][i])))"
-        s"""WITH q AS (
-           |  SELECT vec_id, $oQuant AS qv FROM embeddings),
-           |asg AS (
-           |  SELECT vec_id, qv,
-           |    ${IvfIndex.oracleAssign(IvfIndex.oracleDots("qv", Dim))}
-           |      AS cid
-           |  FROM q),
+        s"""WITH ${oQv()},
+           |${IvfIndex.oracleAssignCtes("qv", Seq("vec_id", "qv"), Dim)},
            |r AS (
            |  SELECT cid, qv,
            |    CAST(floor(CAST($rsq AS DOUBLE) * 1.0E-6 + 0.5) AS BIGINT)
@@ -781,7 +682,6 @@ object SimilarityQueries {
            |FROM f""".stripMargin
       },
       (s, d) => {
-        import graft.operators.IvfIndex
         // sized to the stage's actual cid domain (the quantizer scales
         // with the corpus; the fixture floor is C, but a probe replica's
         // stage assigns cids beyond it and a C-row literal would
@@ -794,7 +694,6 @@ object SimilarityQueries {
         // of the interpreted zip_with fold; all three dots are
         // whole-stage-codegen'd [[graft.functions.DotLong]] loops.
         val cvec = element_at(cmat, col("cid") + 1)
-        val dotL = graft.operators.VectorOps.dotL _
         val rsqCol = dotL(col("qv"), col("qv")) +
           dotL(cvec, cvec) - lit(2L) * dotL(col("qv"), cvec)
         val rows = EmbedStage(s, d).vectors
@@ -837,25 +736,14 @@ object SimilarityQueries {
     // selection exactly. Scores ship 1e-6-quantized (the tx7 pattern).
     QueryDef(
       "sim10_mmr_rerank",
-      Some(s"""WITH RECURSIVE qv AS (
-              |  SELECT vec_id, $oQuant AS qv FROM embeddings),
+      Some(s"""WITH RECURSIVE ${oQv()},
               |scored AS (
-              |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-              |    CAST($oDot AS DOUBLE) /
-              |      (sqrt(CAST(${oNorm("q")} AS DOUBLE)) *
-              |       sqrt(CAST(${oNorm("c")} AS DOUBLE))) AS rel
-              |  FROM qv q JOIN qv c ON c.vec_id <> q.vec_id
-              |  WHERE q.vec_id < $NQ),
+              |  ${oExactScan()}),
               |pool AS (
-              |  SELECT query_id, cand_id, rel FROM (
-              |    SELECT *, row_number() OVER (PARTITION BY query_id
-              |      ORDER BY rel DESC, cand_id) AS rn
-              |    FROM scored) WHERE rn <= $MmrPool),
+              |  ${oTopK("scored", "cosine", MmrPool, "query_id, cand_id, cosine AS rel")}),
               |sims AS (
               |  SELECT p1.query_id, p1.cand_id AS a, p2.cand_id AS b,
-              |    CAST($oDot AS DOUBLE) /
-              |      (sqrt(CAST(${oNorm("q")} AS DOUBLE)) *
-              |       sqrt(CAST(${oNorm("c")} AS DOUBLE))) AS sim
+              |    ${oCosine(oSide("q.qv"), oSide("c.qv"))} AS sim
               |  FROM pool p1
               |  JOIN pool p2 ON p2.query_id = p1.query_id
               |    AND p2.cand_id <> p1.cand_id
@@ -893,29 +781,16 @@ object SimilarityQueries {
               |  CAST(floor(score * 1000000.0 + 0.5) AS BIGINT) AS mmr_q
               |FROM mmr""".stripMargin),
       (s, d) => {
-        val st = EmbedStage(s, d)
-        val emb = st.vectors.select(col("vec_id"), col("qv"), col("nsq"))
-        val q = emb.filter(col("vec_id") < NQ)
-          .select(col("vec_id").as("query_id"), col("qv").as("qv_q"),
-            col("nsq").as("nsq_q"))
-        val c = emb.select(col("vec_id").as("cand_id"),
-          col("qv").as("qv_c"), col("nsq").as("nsq_c"))
-        val cosine = dotL(col("qv_q"), col("qv_c")).cast("double") /
-          (nrmOf(col("nsq_q")) * nrmOf(col("nsq_c")))
+        val emb = EmbedStage(s, d).vectors
+          .select(col("vec_id"), col("qv"), col("nsq"))
         // top-R WITHOUT the vector payload (arrays never ride the sort);
         // the ≤ NQ×R pool re-joins its qv after the cut.
-        val w = Window.partitionBy("query_id")
-          .orderBy(col("rel").desc, col("cand_id"))
-        val top = broadcast(q).crossJoin(c)
-          .filter(col("cand_id") =!= col("query_id"))
-          .select(col("query_id"), col("cand_id"), cosine.as("rel"))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= MmrPool)
-          .select("query_id", "cand_id", "rel")
+        val top = topK(exactScan(emb), "cosine", MmrPool)
+          .select(col("query_id"), col("cand_id"), col("cosine").as("rel"))
         val pool = emb.select(col("vec_id").as("cand_id"), col("qv"))
           .join(broadcast(top), "cand_id")
           .select("query_id", "cand_id", "rel", "qv")
-        graft.operators.Mmr.rerank(pool, MmrK, MmrLambda).toDF()
+        Mmr.rerank(pool, MmrK, MmrLambda).toDF()
           .select(col("query_id"),
             col("rank").cast("long").as("pick_rank"), col("cand_id"),
             floor(col("mmr_score") * 1000000.0 + 0.5).cast("long")
@@ -930,102 +805,29 @@ object SimilarityQueries {
     // same correctly-rounded IEEE tree both engines), then reassign every
     // vector to its nearest refined centroid by EXACT integer L2
     // (64 × (2e6)² ≈ 2.6e14 « 2^63, so the argmin compares exact longs —
-    // no float accumulation anywhere).
+    // no float accumulation anywhere) — [[lloydStep]].
     //
-    // Scale shape: iteration = two corpus scans, no corpus shuffle. The
-    // mean pass is a posexplode → (cid, dim) hash-agg (map-side partial,
-    // shuffle carries ≤ C×Dim cells); the refined centroids collapse to a
-    // ONE-ROW broadcast frame, and reassignment is a per-row FOLD over
-    // the C-entry centroid array (aggregate over a sorted struct array,
-    // strict-less keeps the smallest cid on ties) — argmin without
-    // exploding the corpus ×C or windowing by vec_id. Empty coarse
-    // clusters simply contribute no centroid (the standard drop-empty
-    // Lloyd policy). Per-row distances are exact longs, so the per-
-    // cluster SSE is an exact long sum (rows × 2.6e14 « 2^63 up to ~3e4
-    // rows; beyond that, de-scale per-row or sum in DECIMAL).
+    // Scale shape: iteration = two corpus scans, no corpus shuffle.
+    // Per-row distances are exact longs, so the per-cluster SSE is an
+    // exact long sum (rows × 2.6e14 « 2^63 up to ~3e4 rows; beyond that,
+    // de-scale per-row or sum in DECIMAL).
     QueryDef(
       "sim11_kmeans_refine",
-      Some {
-        import graft.operators.IvfIndex
-        s"""WITH q AS (
-           |  SELECT vec_id, $oQuant AS qv FROM embeddings),
-           |asg AS (
-           |  SELECT vec_id, qv,
-           |    ${IvfIndex.oracleAssign(IvfIndex.oracleDots("qv", Dim))}
-           |      AS cid0
-           |  FROM q),
-           |g AS (
-           |  SELECT cid0, i, CAST(sum(qv[i]) AS BIGINT) AS sx,
-           |    count(*) AS n
-           |  FROM asg CROSS JOIN generate_series(1, $Dim) t(i)
-           |  GROUP BY cid0, i),
-           |cent AS (
-           |  SELECT cid0 AS cid1,
-           |    list(CAST(floor(CAST(sx AS DOUBLE) / n + 0.5) AS BIGINT)
-           |      ORDER BY i) AS cq
-           |  FROM g GROUP BY cid0),
-           |dist AS (
-           |  SELECT a.vec_id, a.cid0, c.cid1,
-           |    CAST(list_sum(list_transform(generate_series(1, $Dim),
-           |      i -> (a.qv[i] - c.cq[i]) * (a.qv[i] - c.cq[i])))
-           |      AS BIGINT) AS d
-           |  FROM asg a CROSS JOIN cent c),
-           |re AS (
-           |  SELECT vec_id, cid0, cid1, d FROM (
-           |    SELECT *, row_number() OVER (PARTITION BY vec_id
-           |      ORDER BY d, cid1) AS rn
-           |    FROM dist) WHERE rn = 1)
-           |SELECT cid1, count(*) AS n1,
-           |  CAST(sum(CASE WHEN cid1 <> cid0 THEN 1 ELSE 0 END)
-           |    AS BIGINT) AS moved,
-           |  CAST(sum(d) AS BIGINT) AS sse_q
-           |FROM re GROUP BY cid1""".stripMargin
-      },
+      Some(s"""WITH ${oQv()},
+              |${IvfIndex.oracleAssignCtes("qv", Seq("vec_id", "qv"), Dim, "asg0")},
+              |${oLloydStep(1, "asg0")}
+              |SELECT cid AS cid1, count(*) AS n1,
+              |  CAST(sum(CASE WHEN cid <> cid_prev THEN 1 ELSE 0 END)
+              |    AS BIGINT) AS moved,
+              |  CAST(sum(d) AS BIGINT) AS sse_q
+              |FROM asg1 GROUP BY cid""".stripMargin),
       (s, d) => {
         val v = EmbedStage(s, d).vectors
-          .select(col("vec_id"), col("qv"), col("cid").as("cid0"))
-        // refined centroid = grid-rounded per-dim mean over the coarse
-        // cluster (exact long sums; one tiny (cid, dim) shuffle)
-        val g = v.select(col("cid0"),
-            posexplode(col("qv")).as(Seq("pos", "x")))
-          .groupBy("cid0", "pos")
-          .agg(sum("x").as("sx"), count(lit(1)).as("n"))
-        val cent = g.groupBy(col("cid0").as("cid1"))
-          .agg(transform(
-            array_sort(collect_list(struct(col("pos"),
-              floor(col("sx").cast("double") / col("n") + 0.5)
-                .cast("long").as("cq")))),
-            e => e.getField("cq")).as("cq"))
-        // ALL refined centroids as one broadcast row, cid-sorted so the
-        // fold's strict-less keeps the smallest cid on distance ties.
-        // r13: each struct carries its precomputed squared norm `cc`
-        // (a trailing field — array_sort still orders by the unique
-        // leading cid1), so the fold's per-centroid distance is
-        // xx − 2·dot_long(qv,cq) + cc: one native long-loop per centroid
-        // instead of the interpreted per-element zip_with lambda.
-        // Identical long values → identical argmin and SSE.
-        val dotL = graft.operators.VectorOps.dotL _
-        val cents = cent
-          .agg(array_sort(collect_list(struct(col("cid1"), col("cq"),
-              dotL(col("cq"), col("cq")).as("cc"))))
-            .as("cents"))
-        val best = aggregate(col("cents"),
-          struct(lit(Long.MaxValue).as("d"), lit(-1).as("cid1")),
-          (acc, c) => {
-            val dd = col("__xx") + c.getField("cc") -
-              lit(2L) * dotL(col("qv"), c.getField("cq"))
-            when(dd < acc.getField("d"),
-              struct(dd.as("d"), c.getField("cid1").as("cid1")))
-              .otherwise(acc)
-          })
-        v.crossJoin(broadcast(cents))
-          .withColumn("__xx", dotL(col("qv"), col("qv")))
-          .select(col("vec_id"), col("cid0"), best.as("best"))
-          .select(col("vec_id"), col("cid0"),
-            col("best.cid1").as("cid1"), col("best.d").as("d"))
-          .groupBy("cid1")
+          .select(col("vec_id"), col("qv"), col("cid"))
+        lloydStep(v)
+          .groupBy(col("cid").as("cid1"))
           .agg(count(lit(1)).as("n1"),
-            sum(when(col("cid1") =!= col("cid0"), 1L).otherwise(0L))
+            sum(when(col("cid") =!= col("cid_prev"), 1L).otherwise(0L))
               .as("moved"),
             sum("d").as("sse_q"))
       }),
@@ -1045,105 +847,42 @@ object SimilarityQueries {
     // i+1 reads a materialized frame, not i's recomputed lineage (at
     // 100s of rounds you also checkpoint every ~10 to cut lineage — the
     // ConnectedComponents doctrine; 3 rounds don't need it).
-    QueryDef(
-      "sim12_kmeans_train",
-      Some {
-        import graft.operators.IvfIndex
-        val Iters = 3
-        val blocks = (1 to Iters).map { i =>
-          s"""g$i AS (
-             |  SELECT cid, i, CAST(sum(qv[i]) AS BIGINT) AS sx,
-             |    count(*) AS n
-             |  FROM asg${i - 1} CROSS JOIN generate_series(1, $Dim) t(i)
-             |  GROUP BY cid, i),
-             |cent$i AS (
-             |  SELECT cid AS cidc,
-             |    list(CAST(floor(CAST(sx AS DOUBLE) / n + 0.5) AS BIGINT)
-             |      ORDER BY i) AS cq
-             |  FROM g$i GROUP BY cid),
-             |dist$i AS (
-             |  SELECT a.vec_id, a.qv, a.cid AS cid_prev, c.cidc AS cid,
-             |    CAST(list_sum(list_transform(generate_series(1, $Dim),
-             |      i -> (a.qv[i] - c.cq[i]) * (a.qv[i] - c.cq[i])))
-             |      AS BIGINT) AS d
-             |  FROM asg${i - 1} a CROSS JOIN cent$i c),
-             |asg$i AS (
-             |  SELECT vec_id, qv, cid, cid_prev, d FROM (
-             |    SELECT *, row_number() OVER (PARTITION BY vec_id
-             |      ORDER BY d, cid) AS rn
-             |    FROM dist$i) WHERE rn = 1)""".stripMargin
-        }.mkString(",\n")
-        val stats = (1 to Iters).map { i =>
-          s"""SELECT CAST($i AS BIGINT) AS iter,
-             |  CAST(count(DISTINCT cid) AS BIGINT) AS n_clusters,
-             |  CAST(sum(CASE WHEN cid <> cid_prev THEN 1 ELSE 0 END)
-             |    AS BIGINT) AS moved,
-             |  CAST(sum(d) AS BIGINT) AS sse_q
-             |FROM asg$i""".stripMargin
-        }.mkString("\nUNION ALL\n")
-        s"""WITH q AS (
-           |  SELECT vec_id, $oQuant AS qv FROM embeddings),
-           |asg0 AS (
-           |  SELECT vec_id, qv,
-           |    ${IvfIndex.oracleAssign(IvfIndex.oracleDots("qv", Dim))}
-           |      AS cid
-           |  FROM q),
-           |$blocks
-           |$stats""".stripMargin
-      },
-      (s, d) => {
-        val Iters = 3
-        var asg = EmbedStage(s, d).vectors
-          .select(col("vec_id"), col("qv"), col("cid"))
-        // r13: per-centroid distance via the native dot (xx − 2xc + cc,
-        // exact long identity — same values, same argmin/SSE) instead of
-        // the interpreted zip_with fold; cc rides the broadcast struct
-        // as a trailing field (array_sort still orders by unique cid1).
-        val dotL = graft.operators.VectorOps.dotL _
-        val perIter = (1 to Iters).map { it =>
-          val cent = asg
-            .select(col("cid"), posexplode(col("qv")).as(Seq("pos", "x")))
-            .groupBy("cid", "pos")
-            .agg(sum("x").as("sx"), count(lit(1)).as("n"))
-            .groupBy(col("cid").as("cidc"))
-            .agg(transform(
-              array_sort(collect_list(struct(col("pos"),
-                floor(col("sx").cast("double") / col("n") + 0.5)
-                  .cast("long").as("cq")))),
-              e => e.getField("cq")).as("cq"))
-          val cents = cent
-            .agg(array_sort(collect_list(struct(col("cidc").as("cid1"),
-              col("cq"), dotL(col("cq"), col("cq")).as("cc"))))
-              .as("cents"))
-          val best = aggregate(col("cents"),
-            struct(lit(Long.MaxValue).as("d"), lit(-1).as("cid1")),
-            (acc, c) => {
-              val dd = col("__xx") + c.getField("cc") -
-                lit(2L) * dotL(col("qv"), c.getField("cq"))
-              when(dd < acc.getField("d"),
-                struct(dd.as("d"), c.getField("cid1").as("cid1")))
-                .otherwise(acc)
-            })
-          val next = asg.crossJoin(broadcast(cents))
-            .withColumn("__xx", dotL(col("qv"), col("qv")))
-            .select(col("vec_id"), col("qv"),
-              col("cid").as("cid_prev"), best.as("best"))
-            .select(col("vec_id"), col("qv"),
-              col("best.cid1").as("cid"), col("cid_prev"),
-              col("best.d").as("d"))
-            .persist()
-          val stats = next.agg(
-              countDistinct("cid").cast("long").as("n_clusters"),
-              sum(when(col("cid") =!= col("cid_prev"), 1L).otherwise(0L))
-                .as("moved"),
-              sum("d").as("sse_q"))
-            .select(lit(it).cast("long").as("iter"), col("n_clusters"),
-              col("moved"), col("sse_q"))
-          asg = next.select("vec_id", "qv", "cid")
-          stats
-        }
-        perIter.reduce(_ unionByName _)
-      }),
+    {
+      val Iters = 3
+      QueryDef(
+        "sim12_kmeans_train",
+        Some {
+          val stats = (1 to Iters).map { i =>
+            s"""SELECT CAST($i AS BIGINT) AS iter,
+               |  CAST(count(DISTINCT cid) AS BIGINT) AS n_clusters,
+               |  CAST(sum(CASE WHEN cid <> cid_prev THEN 1 ELSE 0 END)
+               |    AS BIGINT) AS moved,
+               |  CAST(sum(d) AS BIGINT) AS sse_q
+               |FROM asg$i""".stripMargin
+          }.mkString("\nUNION ALL\n")
+          s"""WITH ${oQv()},
+             |${IvfIndex.oracleAssignCtes("qv", Seq("vec_id", "qv"), Dim, "asg0")},
+             |${(1 to Iters).map(i => oLloydStep(i, s"asg${i - 1}")).mkString(",\n")}
+             |$stats""".stripMargin
+        },
+        (s, d) => {
+          var asg = EmbedStage(s, d).vectors
+            .select(col("vec_id"), col("qv"), col("cid"))
+          val perIter = (1 to Iters).map { it =>
+            val next = lloydStep(asg).persist()
+            val stats = next.agg(
+                countDistinct("cid").cast("long").as("n_clusters"),
+                sum(when(col("cid") =!= col("cid_prev"), 1L).otherwise(0L))
+                  .as("moved"),
+                sum("d").as("sse_q"))
+              .select(lit(it).cast("long").as("iter"), col("n_clusters"),
+                col("moved"), col("sse_q"))
+            asg = next.select("vec_id", "qv", "cid")
+            stats
+          }
+          perIter.reduce(_ unionByName _)
+        })
+    },
 
     // SIM13: HYBRID retrieval fusion — reciprocal-rank fusion (RRF,
     // Cormack/Clarke/Buettcher '09: score(d) = Σ_legs 1/(k + rank_leg(d)),
@@ -1173,8 +912,7 @@ object SimilarityQueries {
       val RrfK = 60.0   // RRF rank damping constant
       QueryDef(
         "sim13_hybrid_rrf",
-        Some(s"""WITH ${graft.operators.TextOps.oBm25Cte(
-                    graft.operators.TextOps.Bm25Terms)},
+        Some(s"""WITH ${TextOps.oBm25Cte(TextOps.Bm25Terms)},
                 |lexpool AS (
                 |  SELECT doc_id, score_q FROM bm_scored WHERE doc_id <> $QV
                 |  ORDER BY score_q DESC, doc_id LIMIT $PoolR),
@@ -1182,13 +920,10 @@ object SimilarityQueries {
                 |  SELECT doc_id, row_number() OVER (
                 |    ORDER BY score_q DESC, doc_id) AS rank_lex
                 |  FROM lexpool),
-                |qv AS (
-                |  SELECT vec_id, $oQuant AS qv FROM embeddings),
+                |${oQv()},
                 |vscored AS (
                 |  SELECT c.vec_id AS doc_id,
-                |    CAST($oDot AS DOUBLE) /
-                |      (sqrt(CAST(${oNorm("q")} AS DOUBLE)) *
-                |       sqrt(CAST(${oNorm("c")} AS DOUBLE))) AS cosine
+                |    ${oCosine(oSide("q.qv"), oSide("c.qv"))} AS cosine
                 |  FROM qv q JOIN qv c ON c.vec_id <> q.vec_id
                 |  WHERE q.vec_id = $QV),
                 |vecpool AS (
@@ -1213,23 +948,17 @@ object SimilarityQueries {
                 |LIMIT $FuseK""".stripMargin),
         (s, d) => {
           val lexW = Window.orderBy(col("score_q").desc, col("doc_id"))
-          val lex = graft.operators.TextOps
-            .bm25Scores(s, d, graft.operators.TextOps.Bm25Terms)
+          val lex = TextOps.bm25Scores(s, d, TextOps.Bm25Terms)
             .filter(col("doc_id") =!= QV)
             .orderBy(col("score_q").desc, col("doc_id")).limit(PoolR)
             .withColumn("rank_lex", row_number().over(lexW).cast("long"))
             .select("doc_id", "rank_lex")
           val emb = EmbedStage(s, d).vectors
             .select(col("vec_id"), col("qv"), col("nsq"))
-          val q = emb.filter(col("vec_id") === QV)
-            .select(col("qv").as("qv_q"), col("nsq").as("nsq_q"))
-          val cosine = dotL(col("qv_q"), col("qv_c")).cast("double") /
-            (nrmOf(col("nsq_q")) * nrmOf(col("nsq_c")))
           val vecW = Window.orderBy(col("cosine").desc, col("doc_id"))
-          val vec = broadcast(q)
-            .crossJoin(emb.filter(col("vec_id") =!= QV)
-              .select(col("vec_id").as("doc_id"), col("qv").as("qv_c"),
-                col("nsq").as("nsq_c")))
+          val vec = broadcast(querySide(emb.filter(col("vec_id") === QV)))
+            .crossJoin(candSide(emb.filter(col("vec_id") =!= QV),
+              col("vec_id").as("doc_id")))
             .select(col("doc_id"), cosine.as("cosine"))
             .orderBy(col("cosine").desc, col("doc_id")).limit(PoolR)
             .withColumn("rank_vec", row_number().over(vecW).cast("long"))
@@ -1276,40 +1005,18 @@ object SimilarityQueries {
       val KnnK = 3
       QueryDef(
         "sim14_knn_join",
-        Some {
-          import graft.operators.IvfIndex
-          val oDotQC =
-            "list_sum(list_transform(generate_series(1, len(q.qv)), i -> q.qv[i] * c.qv[i]))"
-          s"""WITH qv AS (
-             |  SELECT vec_id, $oQuant AS qv FROM embeddings),
-             |d AS (
-             |  SELECT vec_id, qv, ${IvfIndex.oracleDots("qv", Dim)} AS dl
-             |  FROM qv),
-             |asg AS (
-             |  SELECT vec_id, qv, ${IvfIndex.oracleAssign("dl")} AS cid
-             |  FROM d),
-             |scored AS (
-             |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-             |    CAST($oDotQC AS DOUBLE) /
-             |      (sqrt(CAST(${oNorm("q")} AS DOUBLE)) *
-             |       sqrt(CAST(${oNorm("c")} AS DOUBLE))) AS cosine
-             |  FROM asg q JOIN asg c
-             |    ON q.cid = c.cid AND c.vec_id <> q.vec_id)
-             |SELECT query_id, cand_id, CAST(rn AS BIGINT) AS rank, cosine
-             |FROM (
-             |  SELECT *, row_number() OVER (PARTITION BY query_id
-             |    ORDER BY cosine DESC, cand_id) AS rn
-             |  FROM scored) WHERE rn <= $KnnK""".stripMargin
-        },
+        Some(s"""WITH ${oQv()},
+                |${IvfIndex.oracleAssignCtes("qv", Seq("vec_id", "qv"), Dim)},
+                |scored AS (
+                |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
+                |    ${oCosine(oSide("q.qv"), oSide("c.qv"))} AS cosine
+                |  FROM asg q JOIN asg c
+                |    ON q.cid = c.cid AND c.vec_id <> q.vec_id)
+                |${oTopK("scored", "cosine", KnnK,
+                    "query_id, cand_id, CAST(rn AS BIGINT) AS rank, cosine")}""".stripMargin),
         (s, d) => {
           val v = EmbedStage(s, d).vectors
             .select(col("vec_id"), col("qv"), col("nsq"), col("cid"))
-          val q = v.select(col("vec_id").as("query_id"),
-            col("qv").as("qv_q"), col("nsq").as("nsq_q"), col("cid"))
-          val c = v.select(col("vec_id").as("cand_id"),
-            col("qv").as("qv_c"), col("nsq").as("nsq_c"), col("cid"))
-          val cosine = dotL(col("qv_q"), col("qv_c")).cast("double") /
-            (nrmOf(col("nsq_q")) * nrmOf(col("nsq_c")))
           // The top-k window partitions by (cid, query_id), NOT query_id
           // alone. Semantically identical — single-probe means every
           // candidate row of a query carries the query's own cell id, so
@@ -1320,15 +1027,13 @@ object SimilarityQueries {
           // whole sim family) is ranked WHERE IT WAS JOINED instead of
           // being exchanged a second time by query_id. Measured at the
           // 1.5M-vector hier point (x750): one less Exchange over ~384M
-          // pair rows (PROBE_r12 / Plans pins the single-exchange shape).
-          val wTop = Window.partitionBy("cid", "query_id")
-            .orderBy(col("cosine").desc, col("cand_id"))
-          q.join(c, "cid")
+          // pair rows (PROBE_r12; SimilarityPlanSpec pins the shape).
+          val scored = querySide(v, col("vec_id").as("query_id"), col("cid"))
+            .join(candSide(v, col("vec_id").as("cand_id"), col("cid")), "cid")
             .filter(col("cand_id") =!= col("query_id"))
             .select(col("cid"), col("query_id"), col("cand_id"),
               cosine.as("cosine"))
-            .withColumn("rn", row_number().over(wTop))
-            .filter(col("rn") <= KnnK)
+          topK(scored, "cosine", KnnK, Seq("cid", "query_id"))
             .select(col("query_id"), col("cand_id"),
               col("rn").cast("long").as("rank"), col("cosine"))
         })
@@ -1345,67 +1050,15 @@ object SimilarityQueries {
     // broadcast at fixture scale, co-located equi join at corpus scale.
     QueryDef(
       "sim15_filtered_ann",
-      Some {
-        import graft.operators.IvfIndex
-        val oDotQC =
-          "list_sum(list_transform(generate_series(1, len(p.qv_q)), i -> p.qv_q[i] * c.qv[i]))"
-        val oNormQ = "list_sum(list_transform(p.qv_q, v -> v * v))"
-        val oNormC = "list_sum(list_transform(c.qv, v -> v * v))"
-        s"""WITH qv AS (
-           |  SELECT vec_id, label, $oQuant AS qv FROM embeddings),
-           |d AS (
-           |  SELECT vec_id, label, qv, ${IvfIndex.oracleDots("qv", Dim)}
-           |    AS dl
-           |  FROM qv),
-           |asg AS (
-           |  SELECT vec_id, label, qv, ${IvfIndex.oracleAssign("dl")}
-           |    AS cid
-           |  FROM d),
-           |qd AS (
-           |  SELECT vec_id, label, qv, dl FROM d WHERE vec_id < $NQ),
-           |qp AS (
-           |  SELECT query_id, label, qv_q, cid FROM (
-           |    SELECT q.vec_id AS query_id, q.label, q.qv AS qv_q,
-           |      CAST(t.j AS INT) AS cid,
-           |      row_number() OVER (PARTITION BY q.vec_id
-           |        ORDER BY q.dl[t.j + 1] DESC, t.j) AS rn
-           |    FROM qd q, generate_series(0, ${IvfIndex.C - 1}) t(j))
-           |  WHERE rn <= ${IvfIndex.P}),
-           |scored AS (
-           |  SELECT p.query_id, c.vec_id AS cand_id, c.label,
-           |    CAST($oDotQC AS DOUBLE) /
-           |      (sqrt(CAST($oNormQ AS DOUBLE)) *
-           |       sqrt(CAST($oNormC AS DOUBLE))) AS cosine
-           |  FROM qp p JOIN asg c
-           |    ON p.cid = c.cid AND p.label = c.label
-           |   AND c.vec_id <> p.query_id)
-           |SELECT query_id, cand_id, label, cosine FROM (
-           |  SELECT *, row_number() OVER (PARTITION BY query_id
-           |    ORDER BY cosine DESC, cand_id) AS rn
-           |  FROM scored) WHERE rn <= $TopK""".stripMargin
-      },
+      Some(s"""WITH ${oQv("label")},
+              |${IvfIndex.oracleAssignCtes("qv", Seq("vec_id", "label", "qv"), Dim)},
+              |scored AS (
+              |  ${oIvfScan("label")})
+              |${oTopK("scored", "cosine", TopK, "query_id, cand_id, label, cosine")}""".stripMargin),
       (s, d) => {
-        val lab = graft.Tables.embeddings(s, d).select("vec_id", "label")
+        val lab = Tables.embeddings(s, d).select("vec_id", "label")
         val v = EmbedStage(s, d).vectors.join(lab, "vec_id")
-        val corpus = v.select(col("vec_id").as("cand_id"),
-          col("qv").as("qv_c"), col("nsq").as("nsq_c"), col("cid"),
-          col("label"))
-        val probes = EmbedStage.probeCells(s, d,
-            v.filter(col("vec_id") < NQ)
-              .select(col("vec_id").as("query_id"), col("label"),
-                col("qv"), col("nsq").as("nsq_q"), col("dl")),
-            "query_id")
-          .withColumnRenamed("qv", "qv_q")
-        val cosine = dotL(col("qv_q"), col("qv_c")).cast("double") /
-          (nrmOf(col("nsq_q")) * nrmOf(col("nsq_c")))
-        val scored = corpus.join(broadcast(probes), Seq("cid", "label"))
-          .filter(col("cand_id") =!= col("query_id"))
-          .select(col("query_id"), col("cand_id"), col("label"),
-            cosine.as("cosine"))
-        val wTop = Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("cand_id"))
-        scored.withColumn("rn", row_number().over(wTop))
-          .filter(col("rn") <= TopK)
+        topK(ivfScan(s, d, v, "label"), "cosine", TopK)
           .select("query_id", "cand_id", "label", "cosine")
       }),
 
@@ -1432,12 +1085,7 @@ object SimilarityQueries {
         val code = "CASE WHEN mx[i] = mn[i] THEN CAST(0 AS BIGINT) " +
           "ELSE CAST(floor(CAST(qv[i] - mn[i] AS DOUBLE) * 255.0 / " +
           "CAST(mx[i] - mn[i] AS DOUBLE) + 0.5) AS BIGINT) END"
-        val oDotC =
-          "list_sum(list_transform(generate_series(1, len(q.code)), i -> q.code[i] * c.code[i]))"
-        val oNormC = (t: String) =>
-          s"list_sum(list_transform($t.code, v -> v * v))"
-        s"""WITH qv AS (
-           |  SELECT vec_id, $oQuant AS qv FROM embeddings),
+        s"""WITH ${oQv()},
            |ds AS (
            |  SELECT i AS pos, MIN(qv[i]) AS mn, MAX(qv[i]) AS mx
            |  FROM qv CROSS JOIN generate_series(1, $Dim) t(i)
@@ -1446,37 +1094,15 @@ object SimilarityQueries {
            |  SELECT list(mn ORDER BY pos) AS mn, list(mx ORDER BY pos) AS mx
            |  FROM ds),
            |cv AS (
-           |  SELECT vec_id, qv,
+           |  SELECT vec_id,
            |    list_transform(generate_series(1, $Dim), i -> $code)
            |      AS code
            |  FROM qv CROSS JOIN da),
            |exact AS (
-           |  SELECT query_id, cand_id FROM (
-           |    SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-           |      row_number() OVER (PARTITION BY q.vec_id
-           |        ORDER BY CAST($oDot AS DOUBLE) /
-           |          (sqrt(CAST(${oNorm("q")} AS DOUBLE)) *
-           |           sqrt(CAST(${oNorm("c")} AS DOUBLE))) DESC, c.vec_id)
-           |        AS rn
-           |    FROM qv q JOIN qv c ON c.vec_id <> q.vec_id
-           |    WHERE q.vec_id < $NQ) WHERE rn <= $TopK),
+           |  ${oTopK(s"(${oExactScan()})", "cosine", TopK, "query_id, cand_id")}),
            |approx AS (
-           |  SELECT query_id, cand_id FROM (
-           |    SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-           |      row_number() OVER (PARTITION BY q.vec_id
-           |        ORDER BY CAST($oDotC AS DOUBLE) /
-           |          (sqrt(CAST(${oNormC("q")} AS DOUBLE)) *
-           |           sqrt(CAST(${oNormC("c")} AS DOUBLE))) DESC, c.vec_id)
-           |        AS rn
-           |    FROM cv q JOIN cv c ON c.vec_id <> q.vec_id
-           |    WHERE q.vec_id < $NQ) WHERE rn <= $TopK)
-           |SELECT e.query_id, count(*) AS n_exact,
-           |  CAST(count(a.cand_id) AS BIGINT) AS n_hit,
-           |  CAST(count(a.cand_id) AS DOUBLE) / CAST(count(*) AS DOUBLE)
-           |    AS recall
-           |FROM exact e LEFT JOIN approx a
-           |  ON e.query_id = a.query_id AND e.cand_id = a.cand_id
-           |GROUP BY 1""".stripMargin
+           |  ${oTopK(s"(${oExactScan("cv", "code")})", "cosine", TopK, "query_id, cand_id")})
+           |$oRecall""".stripMargin
       },
       (s, d) => {
         val v = EmbedStage(s, d).vectors.select("vec_id", "qv", "nsq")
@@ -1495,36 +1121,13 @@ object SimilarityQueries {
             floor((q - mn).cast("double") * 255.0 /
               (mx - mn).cast("double") + 0.5).cast("long"))
         }
-        val cv = v.crossJoin(stats).select(col("vec_id"), col("qv"),
-          col("nsq"),
-          transform(sequence(lit(1), lit(Dim)), codeAt).as("code"))
-          .withColumn("cnsq", dotL(col("code"), col("code")))
-        def leg(qvCol: String, nCol: String) = {
-          val q = cv.filter(col("vec_id") < NQ)
-            .select(col("vec_id").as("query_id"),
-              col(qvCol).as("a_q"), col(nCol).as("n_q"))
-          val c = cv.select(col("vec_id").as("cand_id"),
-            col(qvCol).as("a_c"), col(nCol).as("n_c"))
-          val cos = dotL(col("a_q"), col("a_c")).cast("double") /
-            (nrmOf(col("n_q")) * nrmOf(col("n_c")))
-          val w = Window.partitionBy("query_id")
-            .orderBy(col("cos").desc, col("cand_id"))
-          c.crossJoin(broadcast(q))
-            .filter(col("cand_id") =!= col("query_id"))
-            .select(col("query_id"), col("cand_id"), cos.as("cos"))
-            .withColumn("rn", row_number().over(w))
-            .filter(col("rn") <= TopK).select("query_id", "cand_id")
-        }
-        val exact = leg("qv", "nsq")
-        val approx = leg("code", "cnsq")
-          .select(col("query_id").as("a_qid"), col("cand_id").as("a_cand"))
-        exact.join(approx, col("query_id") === col("a_qid") &&
-            col("cand_id") === col("a_cand"), "left")
-          .groupBy("query_id")
-          .agg(count(lit(1)).as("n_exact"),
-            count(col("a_cand")).as("n_hit"),
-            (count(col("a_cand")).cast("double") /
-              count(lit(1)).cast("double")).as("recall"))
+        // the int8 codes as the scan's (qv, nsq) vectors
+        val codes = v.crossJoin(stats)
+          .select(col("vec_id"),
+            transform(sequence(lit(1), lit(Dim)), codeAt).as("qv"))
+          .withColumn("nsq", VectorOps.normSq(col("qv")))
+        recall(topK(exactScan(v), "cosine", TopK),
+          topK(exactScan(codes), "cosine", TopK))
       }),
 
     // SIM17: SEMANTIC decontamination — the embedding-space complement
@@ -1539,43 +1142,34 @@ object SimilarityQueries {
     // cosines, null-candidate keeps) against the raw-embedding replay.
     QueryDef(
       "sim17_semantic_decon",
-      Some {
-        val ps = graft.operators.SignLsh.planes(LshTables, LshBits, Dim)
-        val tableSelects = (0 until LshTables).map { t =>
-          s"SELECT vec_id, $t AS t, CAST(${graft.operators.SignLsh.oracleBucket("qv", ps(t))} AS BIGINT) AS bucket FROM qv"
-        }.mkString("\n  UNION ALL ")
-        s"""WITH qv AS (
-           |  SELECT vec_id, $oQuant AS qv FROM embeddings),
-           |bk AS (
-           |  $tableSelects),
-           |cand AS (
-           |  SELECT DISTINCT a.vec_id AS cid, b.vec_id AS bid
-           |  FROM bk a JOIN bk b ON a.t = b.t AND a.bucket = b.bucket
-           |  WHERE a.vec_id % 29 <> 0 AND b.vec_id % 29 = 0),
-           |cs AS (
-           |  SELECT cd.cid,
-           |    CAST($oDot AS DOUBLE) /
-           |      (sqrt(CAST(${oNorm("q")} AS DOUBLE)) *
-           |       sqrt(CAST(${oNorm("c")} AS DOUBLE))) AS cosine
-           |  FROM cand cd
-           |  JOIN qv q ON cd.cid = q.vec_id
-           |  JOIN qv c ON cd.bid = c.vec_id),
-           |agg AS (
-           |  SELECT cid, max(cosine) AS max_cos,
-           |    CAST(count(*) AS BIGINT) AS n_cand
-           |  FROM cs GROUP BY 1)
-           |SELECT e.vec_id, a.max_cos,
-           |  coalesce(a.n_cand, CAST(0 AS BIGINT)) AS n_cand,
-           |  (a.max_cos IS NULL OR a.max_cos < $SemTau) AS keep
-           |FROM (SELECT vec_id FROM embeddings WHERE vec_id % 29 <> 0) e
-           |LEFT JOIN agg a ON e.vec_id = a.cid""".stripMargin
-      },
+      Some(s"""WITH ${oQv()},
+              |bk AS (
+              |  ${SignLsh.oracleTables("qv", LshTables, LshBits, Dim)}),
+              |cand AS (
+              |  SELECT DISTINCT a.vec_id AS cid, b.vec_id AS bid
+              |  FROM bk a JOIN bk b ON a.t = b.t AND a.bucket = b.bucket
+              |  WHERE a.vec_id % 29 <> 0 AND b.vec_id % 29 = 0),
+              |cs AS (
+              |  SELECT cd.cid,
+              |    ${oCosine(oSide("q.qv"), oSide("c.qv"))} AS cosine
+              |  FROM cand cd
+              |  JOIN qv q ON cd.cid = q.vec_id
+              |  JOIN qv c ON cd.bid = c.vec_id),
+              |agg AS (
+              |  SELECT cid, max(cosine) AS max_cos,
+              |    CAST(count(*) AS BIGINT) AS n_cand
+              |  FROM cs GROUP BY 1)
+              |SELECT e.vec_id, a.max_cos,
+              |  coalesce(a.n_cand, CAST(0 AS BIGINT)) AS n_cand,
+              |  (a.max_cos IS NULL OR a.max_cos < $SemTau) AS keep
+              |FROM (SELECT vec_id FROM embeddings WHERE vec_id % 29 <> 0) e
+              |LEFT JOIN agg a ON e.vec_id = a.cid""".stripMargin),
       (s, d) => {
         val st = EmbedStage(s, d)
         val isBench = col("vec_id") % 29 === 0
         def side(bench: Boolean) = {
           val f = if (bench) isBench else !isBench
-          (graft.operators.SignLsh.capBuckets(
+          (SignLsh.capBuckets(
              st.buckets.filter(f).select(col("vec_id").as("id"),
                col("table_id"), col("bucket_pair").as("bucket")),
              MaxLshBucket,
@@ -1585,7 +1179,7 @@ object SimilarityQueries {
         }
         val (cb, cv) = side(bench = false)
         val (bb, bv) = side(bench = true)
-        val out = graft.operators.SemanticDecon.audit(
+        val out = SemanticDecon.audit(
           cb, bb, cv, bv, SemTau)
         // non-vacuity: bucket collisions must exist at every SF — a
         // zero-candidate audit proves nothing about the pipeline

@@ -265,6 +265,28 @@ class IvfSpec extends SparkSpec {
     assert(cids.forall(c => c >= 0 && c < cells))
   }
 
+  test("assignHier computes the parent argmax once per row: no " +
+    "parent-dot aggregate inside any child lambda") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayTransform,
+      Expression, LambdaFunction, Literal}
+    // the parent dots are the one transform over a literal matrix
+    def isParentDots(e: Expression) = e match {
+      case t: ArrayTransform => t.argument.isInstanceOf[Literal]
+      case _ => false
+    }
+    val (df, _) = planted(1, 0, 0.0)
+    for (cells <- Seq(100, IvfIndex.ChildLitMaxCells + 50)) {
+      val es = df.select(IvfIndex.assignHier(col("qv"), Dim, cells))
+        .queryExecution.analyzed.expressions
+      assert(es.map(_.collect { case x if isParentDots(x) => x }.size).sum
+        == 1, s"cells=$cells: parent dots built more than once")
+      val inLambda = es.flatMap(_.collect { case l: LambdaFunction => l })
+        .exists(_.function.find(isParentDots).isDefined)
+      assert(!inLambda, s"cells=$cells: parent dots inside a child lambda")
+    }
+  }
+
+
   test("probe budgets target a constant corpus share: P=4 exactly at the " +
     "oracle floor, ∝cells above it, continuous across the regime seam") {
     // ORACLE BYTE-STABILITY PIN: at the C-cell floor the share term
