@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.functions.{broadcast, col, count, lit}
 
 /** Telemetry for silent-drop guards (LSH bucket caps, stop-shingle caps).
   *
@@ -36,6 +37,18 @@ object CapTelemetry {
     val idx = df.schema.fieldIndex(weightCol)
     df.mapPartitions { it => it.map { r => acc.add(r.getLong(idx)); r } }(
       Encoders.row(df.schema))
+  }
+
+  /** `df` without the rows of its `keys` groups that hold more than `cap`
+    * rows, the dropped rows counted as `name`: a hash-agg of group sizes
+    * and a broadcast anti-join of the (tiny, normally empty) hot set —
+    * never a window sort over `df`. */
+  def capped(df: DataFrame, keys: Seq[String], cap: Long,
+             name: String): DataFrame = {
+    val hot = counted(df.groupBy(keys.map(col): _*)
+        .agg(count(lit(1)).as("__n")).filter(col("__n") > cap), name, "__n")
+      .select(keys.map(col): _*)
+    df.join(broadcast(hot), keys, "left_anti")
   }
 
   /** Latest counter values per metric (0 = nothing dropped). */

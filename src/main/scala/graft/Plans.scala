@@ -11,9 +11,8 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.builder("local[4]", "4").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // plan-string assertions match on scan locations (e.g. the stage's
-    // staged_pairs path), which the default 100-char metadata truncation
-    // would cut off
+    // plan-string assertions match on scan locations (e.g. pl28's MV
+    // path), which the default 100-char metadata truncation would cut off
     spark.conf.set("spark.sql.maxMetadataStringLength", "1000")
     val names = if (args.nonEmpty) args.toSeq
       else Seq("s1_scan_pushdown", "j2_broadcast_dim_join", "pl6_feature_battery",
@@ -68,49 +67,6 @@ object Plans {
       "\\bSort \\[".r.findAllIn(pl16).length == 1 &&
         "\\bWindow \\[".r.findAllIn(pl16).length >= 3
     }
-    // dd5: the skew cap is a hash-agg + broadcast anti-join — NO window
-    // sort over the postings; both self-join sides read the same cache
-    val dd5 = planOf("dd5_ngram_jaccard")
-    check("dd5: no window sort in the postings pipeline") {
-      !dd5.contains("Window [")
-    }
-    check("dd5: both self-join sides read the postings cache") {
-      "InMemoryTableScan".r.findAllIn(dd5).length >= 2
-    }
-    // dd3/dd6 consume the MATERIALIZED signature stage (operators.DedupStage)
-    // instead of re-running the md5-shingle preamble, and their banding
-    // path has no window sort anywhere. dd6 additionally reads the stage's
-    // PUBLISHED pair table (band join paid once at build), so its plan
-    // must contain NO band explode — dd3 keeps the inline band join as the
-    // timed exemplar of the same core.
-    val dd6 = planOf("dd6_staged_neardup")
-    check("dd6: reads the materialized signature stage") {
-      dd6.contains("graft_dedup_stage") &&
-        planOf("dd3_minhash_lsh").contains("graft_dedup_stage")
-    }
-    check("dd6: no window sort in the banding pipeline") {
-      !dd6.contains("Window [")
-    }
-    check("dd6: reads materialized staged pairs, no inline band explode") {
-      dd6.contains("staged_pairs") && !dd6.contains("Generate explode") &&
-        planOf("dd3_minhash_lsh").contains("Generate explode")
-    }
-    // dd8: decontamination reads the staged gram hashes (no re-shingle of
-    // raw text — no string split/explode of `text` in the plan) and the
-    // benchmark dim rides a broadcast join, never a shuffle join of the
-    // corpus side
-    val dd8 = planOf("dd8_decontaminate")
-    check("dd8: stage read + broadcast benchmark dim, no sort-merge") {
-      dd8.contains("graft_dedup_stage") &&
-        dd8.contains("BroadcastHashJoin") && !dd8.contains("SortMergeJoin")
-    }
-    // mix1: the per-row decision is a projection over ONE corpus scan —
-    // every join in the plan is broadcast
-    check("mix1: decision is broadcast-joined projection, no shuffle join") {
-      val p = planOf("mix1_domain_mixture")
-      !p.contains("SortMergeJoin") && !p.contains("CartesianProduct") &&
-        p.contains("BroadcastHashJoin")
-    }
     // j10: the salted join must actually exercise the salted-shuffle path —
     // a ShuffledHashJoin keyed on (user_id, salt), NOT a broadcast (which
     // would make the salt decorative) and NOT a sort-merge (the hint asks
@@ -146,27 +102,6 @@ object Plans {
         finalSection.contains("__salt") &&
         !finalSection.contains("BroadcastHashJoin")
     }
-    // dd9: passage stream persisted once, read by BOTH the occurrence
-    // aggregate and the join probe. The count join is deliberately
-    // UNHINTED: at fixture scale Catalyst broadcasts the (small, cached,
-    // accurately-sized) count table, at 100 TB the same declarative plan
-    // crosses the threshold and becomes a ph-keyed shuffle join — both are
-    // the right strategy for their scale, so the assertion pins only the
-    // scale-invariant properties (dual cache read, equi-join, never a
-    // cartesian or nested loop).
-    val dd9 = planOf("dd9_passage_dedup")
-    check("dd9: both count and probe read the passage cache, equi-join") {
-      "InMemoryTableScan".r.findAllIn(dd9).length >= 2 &&
-        !dd9.contains("CartesianProduct") &&
-        !dd9.contains("BroadcastNestedLoop")
-    }
-    // mix2: same shape contract as mix1 — the per-row decision is a
-    // broadcast-joined projection, never a shuffle join of the corpus
-    check("mix2: decision is broadcast-joined projection, no shuffle join") {
-      val p = planOf("mix2_token_budget")
-      !p.contains("SortMergeJoin") && !p.contains("CartesianProduct") &&
-        p.contains("BroadcastHashJoin")
-    }
     // w17: the index joins broadcast (never a data shuffle join) and the
     // lag + rolling-moment windows share ONE Sort — a second Sort would
     // mean the two window frames stopped sharing the (user_id, day) order
@@ -190,58 +125,11 @@ object Plans {
       val p = planOf("j11_bloom_prune")
       p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct")
     }
-    // tx13: exactly ONE window (the per-doc top-k) — a second Window or a
-    // cartesian would mean the idf join or corpus-count broadcast broke
-    check("tx13: single per-doc window, no cartesian") {
-      val p = planOf("tx13_tfidf")
-      "\\bWindow \\[".r.findAllIn(p).length == 1 &&
-        !p.contains("CartesianProduct")
-    }
-    // tx9: the gram-count shuffle is keyed on the hashed (ord,g1,g2,g3)
-    // long tuple — gram TEXT must never appear as a shuffle key (the
-    // dedup-family rule; tx12/dd5 follow it, round-4 tx9 violated it)
-    check("tx9: gram shuffle keyed on hash longs, never gram strings") {
-      val p = planOf("tx9_repetition")
-      p.contains("g1") && !p.toLowerCase.contains("gram#")
-    }
     // mm1: media metadata + offset sampling is a pure projection + a
     // 4-element explode — ZERO exchanges of any kind; the payload bytes
     // never leave the scan
     check("mm1: zero shuffles in the media-metadata plan") {
       !planOf("mm1_media_metadata").contains("Exchange")
-    }
-    // tx15: chunk segmentation is projection + explode only — no KEYED
-    // shuffle at any corpus size (the dd9 no-pairwise rule; the one
-    // roundrobin exchange is Tables.fanOut spreading the single fixture
-    // file across cores, absent on a real multi-file table)
-    check("tx15: no keyed shuffle in the chunking plan") {
-      !planOf("tx15_chunk_windows").contains("Exchange hashpartitioning")
-    }
-    // dd10: the calibration audit reads the materialized signature stage
-    // (never re-shingles the corpus) and its pair space is the bucketed
-    // band join — no cartesian anywhere
-    check("dd10: stage read + bucketed candidates, no cartesian") {
-      val p = planOf("dd10_minhash_calibration")
-      p.contains("graft_dedup_stage") && !p.contains("CartesianProduct")
-    }
-    // dd11: the containment pair space is the integer-keyed postings
-    // self-join (never a cartesian), and the per-doc fingerprint-size
-    // lookups ride broadcasts — the big shuffle moves only (doc_id, w)
-    // long pairs, the winnowed print arrays stay inside their scan stage
-    check("dd11: integer-keyed postings join, broadcast sizes, no cartesian") {
-      val p = planOf("dd11_containment")
-      !p.contains("CartesianProduct") &&
-        p.contains("Exchange hashpartitioning(w") &&
-        "BroadcastHashJoin".r.findAllIn(p).length >= 2
-    }
-    // dd12: the incremental gate reads the MATERIALIZED stage on both
-    // sides (exact gate from membership, near gate from profile
-    // signatures — the corpus text is never re-shingled), the batch's
-    // band keys ride broadcasts, and the pair space is never a cartesian
-    check("dd12: stage read on both gates, broadcast batch, no cartesian") {
-      val p = planOf("dd12_incremental_dedup")
-      p.contains("graft_dedup_stage") && !p.contains("CartesianProduct") &&
-        "BroadcastHashJoin".r.findAllIn(p).length >= 2
     }
     // j12: the star rollup — the region predicate is pushed into the
     // dimension scan and the dims ride broadcast joins; never a
@@ -283,21 +171,6 @@ object Plans {
     check("w27: two keyed exchanges (rollup + window stage)") {
       "Exchange hashpartitioning".r
         .findAllIn(planOf("w27_stochastic")).length == 2
-    }
-    // mix4: the rank window partitions by source — the data-sized
-    // window must never run on a single partition (the 8-row audit
-    // window above the shard aggregate is the only global step)
-    check("mix4: size-rank window partitioned by source, no cartesian") {
-      val p = planOf("mix4_shard_snake")
-      p.contains("Exchange hashpartitioning(source") &&
-        !p.contains("CartesianProduct")
-    }
-    // mix5: the rank-filter pushes down as WindowGroupLimit — each
-    // partition pre-selects its top-k BEFORE the source exchange, so the
-    // shuffle carries ~k rows per partition, not the corpus
-    check("mix5: WindowGroupLimit pushdown on the weighted-sample rank") {
-      val p = planOf("mix5_weighted_sample")
-      p.contains("WindowGroupLimit") && !p.contains("CartesianProduct")
     }
     // mm2: the per-kind manifest rollup is ONE hash aggregate — the only
     // exchange is the |kinds|-row partial-agg shuffle (plus fanOut-free
@@ -388,20 +261,6 @@ object Plans {
       val readFiles = SnapshotTable.readAppendsSince(spark, t, 1)
         .select(input_file_name()).distinct().count()
       added == 2 && readFiles == added
-    }
-    // mix6's LM count tables must BROADCAST onto the token stream (they
-    // are ≤ B rows by the hash-bucket construction) — a shuffle join
-    // there would re-key the whole token explosion
-    check("mix6: LM dims broadcast, token stream never shuffle-joined") {
-      val p = planOf("mix6_dsir_select")
-      !p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin") &&
-        !p.contains("CartesianProduct")
-    }
-    // dd13: the canonical pick must not broadcast the (unbounded)
-    // cluster membership — only the cluster-size dim rides broadcast
-    check("dd13: no cartesian in the canonical selection") {
-      val p = planOf("dd13_cluster_canonical")
-      !p.contains("CartesianProduct")
     }
     // j16: the key-free interval join must ride the bucket EQUI key
     // (hash/SMJ/broadcast-hash — partition-parallel at any scale), never

@@ -2,30 +2,32 @@ package graft.operators
 
 import graft.Tables
 import graft.operators.TextOps._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The MATERIALIZED signature stage shared by the dedup family (dd3 / dd5 /
-  * dd6) — reference semantics per `SURVEY.md` §2's dedup rows; the staging
-  * itself is the standard large-corpus design (one signature pass, many
-  * consumers), not a reference feature.
+/** The MATERIALIZED signature stage shared by the dedup family (dd3, dd5,
+  * dd6, dd7, dd8, dd10, dd12 and dd13) — reference semantics per
+  * `SURVEY.md` §2's dedup rows; the staging itself is the standard
+  * large-corpus design (one signature pass, many consumers), not a
+  * reference feature.
   *
-  * Motivation: the three dedup operators all start from the same expensive
+  * Motivation: the dedup operators all start from the same expensive
   * substrate — md5 every shingle of every distinct document, aggregate the
   * K minhash permutation minima. Computed inline, each operator pays that
-  * cost again (~2s × 3 at sf0.1; at 100 TB, three full corpus scans with
-  * per-token md5). A real pipeline computes the signature stage ONCE and
-  * materializes it as a table the dedup operators read — signatures are
+  * cost again (~2s per row at sf0.1; at 100 TB, one full corpus scan with
+  * per-token md5 per row). A real pipeline computes the signature stage
+  * ONCE and materializes it as a table the dedup operators read — signatures are
   * tiny relative to text (two longs + K ints + the hashed shingle set per
   * DISTINCT document, no raw text), and they are immutable for an immutable
   * corpus snapshot.
   *
   * This object is that stage: built once per (JVM, corpus dir, stage
-  * version, corpus mtime), written to local scratch as two parquet tables,
-  * then served as plain reads. At cluster scale the same two tables are a
-  * silver-layer output (`documents_membership`, `documents_signatures`)
-  * partitioned like any other table; the mtime in the cache key is the
-  * local stand-in for snapshot/version pinning.
+  * version, corpus mtime), written to local scratch as three parquet
+  * tables, then served as plain reads. At cluster scale the same tables
+  * are a silver-layer output (`documents_membership`,
+  * `documents_signatures`, `documents_dup_pairs`) partitioned like any
+  * other table; the mtime in the cache key is the local stand-in for
+  * snapshot/version pinning.
   *
   * Tables:
   *  - `membership(doc_id, rep_id)` — every document mapped to the integer
@@ -35,6 +37,11 @@ import org.apache.spark.sql.functions._
   *    DISTINCT text: duplicate-group size, the distinct hashed-shingle set
   *    (32-bit ints — the raw text never leaves this builder), and the K
   *    minhash signature components.
+  *  - `staged_pairs(rep_a, rep_b, jaccard)` — the verified representative
+  *    pairs at the staged operating point ([[Stage.stagedPairs]]).
+  *
+  * The oracle mirror of `profiles.hs` is [[oShingleSetCtes]]; the
+  * signature and band texts live with [[LshBanding]].
   *
   * Build-physics notes (same reasoning as the previous inline preamble):
   * explicit repartition on the text hash so AQE can't serialize the md5
@@ -141,6 +148,17 @@ object DedupStage {
       .write.mode("overwrite").parquet(s"$dir/staged_pairs")
     profs.unpersist()
   }
+
+  /** Oracle CTEs `toks(doc_id, lst)` and `sh(doc_id, hs)`: every
+    * document's distinct hashed-shingle set — `profiles.hs` per document,
+    * with no representative collapse. Splice after `WITH`. */
+  val oShingleSetCtes: String =
+    s"""toks AS (
+       |  SELECT doc_id, ${oTokens("text")} AS lst FROM documents),
+       |sh AS (
+       |  SELECT doc_id,
+       |    ${oShingleHashSet("lst")} AS hs
+       |  FROM toks)""".stripMargin
 }
 
 /** Signature constants shared by the stage builder and its consumers. */
@@ -175,34 +193,80 @@ object DedupParams {
   */
 object LshBanding {
 
+  /** The K signature columns `sig0..sig{K-1}` cut into `bands` bands;
+    * a band's key is the md5 of its components joined with ','. */
+  private def bandSigs(bands: Int): Seq[(Seq[String], Int)] =
+    (0 until DedupParams.K).map(j => s"sig$j")
+      .grouped(DedupParams.K / bands).toSeq.zipWithIndex
+
+  /** Band rows `(as, band_idx, band_hash)` of `df`'s `id` column. */
+  def bandRows(df: DataFrame, id: String, as: String,
+               bands: Int): DataFrame = {
+    val bandStructs = bandSigs(bands).map { case (sigs, bIdx) =>
+      struct(lit(bIdx).as("band_idx"), md5(concat_ws(",",
+        sigs.map(c => col(c).cast("string")): _*)).as("band_hash"))
+    }
+    df.select(col(id).as(as), explode(array(bandStructs: _*)).as("b"))
+      .select(col(as), col("b.band_idx").as("band_idx"),
+              col("b.band_hash").as("band_hash"))
+  }
+
+  /** Oracle [[bandRows]]: one `SELECT doc_id, band_idx, band_hash` per
+    * band over the `sig` CTE, rows cut by `where` when given, joined with
+    * UNION ALL. */
+  def oBandSelects(bands: Int, where: String = ""): String =
+    bandSigs(bands).map { case (sigs, bIdx) =>
+      val parts = sigs.map(c => s"CAST($c AS VARCHAR)").mkString(" || ',' || ")
+      s"SELECT doc_id, $bIdx AS band_idx, md5($parts) AS band_hash FROM sig" +
+        (if (where.isEmpty) "" else s" WHERE $where")
+    }.mkString("\n  UNION ALL ")
+
+  /** Oracle CTE `sig(doc_id, hs, sig0..sig{K-1})` over
+    * [[DedupStage.oShingleSetCtes]]' `sh` — the K minhash minima of each
+    * shingle set; `nonEmpty` keeps only documents with ≥1 shingle. */
+  def oSignatureCte(nonEmpty: Boolean): String = {
+    val sigs = minhashParams(DedupParams.K).zipWithIndex.map {
+      case ((a, b), j) => s"${oMinhashSig("hs", a, b)} AS sig$j"
+    }.mkString(",\n    ")
+    s"""sig AS (
+       |  SELECT doc_id, hs,
+       |    $sigs
+       |  FROM sh${if (nonEmpty) " WHERE len(hs) > 0" else ""})""".stripMargin
+  }
+
+  /** Oracle CTEs `bands` and `cand(doc_a < doc_b)`: the band self-join's
+    * distinct candidate pairs over the `sig` CTE. */
+  def oCandidateCtes(bands: Int): String =
+    s"""bands AS (
+       |  ${oBandSelects(bands)}),
+       |cand AS (
+       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+       |  FROM bands a JOIN bands b
+       |    ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
+       |   AND a.doc_id < b.doc_id)""".stripMargin
+
+  /** Exact Jaccard |a ∩ b| / |a ∪ b| of two distinct hashed-shingle sets,
+    * and its 1e-6-grid quantization `floor(J·1e6 + 0.5)` as a long. */
+  def jaccard(a: Column, b: Column): Column =
+    size(array_intersect(a, b)).cast("double") /
+      size(array_union(a, b)).cast("double")
+  def oJaccard(a: String, b: String): String =
+    s"""CAST(len(list_intersect($a, $b)) AS DOUBLE) /
+       |  CAST(len(list_distinct(list_concat($a, $b))) AS DOUBLE)""".stripMargin
+  def jaccardQ(a: Column, b: Column): Column =
+    floor(jaccard(a, b) * 1000000.0 + 0.5).cast("long")
+  def oJaccardQ(a: String, b: String): String =
+    s"CAST(floor(${oJaccard(a, b)}\n  * 1000000.0 + 0.5) AS BIGINT)"
+
   /** Candidate representative pairs `(rep_a < rep_b)` from the band join
     * alone — no Jaccard verification (the calibration audit dd10 reads the
     * RAW candidate space; [[repPairs]] adds the verify). Caller persists
     * `profiles`. */
   def candidatePairs(profiles: DataFrame, bands: Int,
                      capMetric: String): DataFrame = {
-    val rowsPerBand = DedupParams.K / bands
-    val bandStructs = (0 until bands).map { bIdx =>
-      val parts = (0 until rowsPerBand)
-        .map(r => col(s"sig${bIdx * rowsPerBand + r}").cast("string"))
-      struct(lit(bIdx).as("band_idx"),
-             md5(concat_ws(",", parts: _*)).as("band_hash"))
-    }
-    val allBands = profiles
-      .select(col("rep_id"), explode(array(bandStructs: _*)).as("b"))
-      .select(col("rep_id"), col("b.band_idx").as("band_idx"),
-              col("b.band_hash").as("band_hash"))
-      .persist()
-    // Skew cap as hash-agg + broadcast anti-join (not a window sort over
-    // every band row), with the dropped-row count observed.
-    val bucketSizes = allBands.groupBy("band_idx", "band_hash")
-      .agg(count(lit(1)).as("bucket_n"))
-    val hotBuckets = graft.CapTelemetry.counted(
-        bucketSizes.filter(col("bucket_n") > DedupParams.MaxBucket),
-        capMetric, "bucket_n")
-      .select("band_idx", "band_hash")
-    val bandsKept = allBands
-      .join(broadcast(hotBuckets), Seq("band_idx", "band_hash"), "left_anti")
+    val allBands = bandRows(profiles, "rep_id", "rep_id", bands).persist()
+    val bandsKept = graft.CapTelemetry.capped(allBands,
+      Seq("band_idx", "band_hash"), DedupParams.MaxBucket, capMetric)
     val a = bandsKept.select(col("rep_id").as("rep_a"),
       col("band_idx"), col("band_hash"))
     val b = bandsKept.select(col("rep_id").as("rep_b"),
@@ -220,10 +284,9 @@ object LshBanding {
     val cand = candidatePairs(profiles, bands, capMetric)
     val x = profiles.select(col("rep_id").as("rep_a"), col("hs").as("hs_a"))
     val y = profiles.select(col("rep_id").as("rep_b"), col("hs").as("hs_b"))
-    val jac = size(array_intersect(col("hs_a"), col("hs_b"))).cast("double") /
-      size(array_union(col("hs_a"), col("hs_b"))).cast("double")
     cand.join(x, "rep_a").join(y, "rep_b")
-      .select(col("rep_a"), col("rep_b"), jac.as("jaccard"))
+      .select(col("rep_a"), col("rep_b"),
+        jaccard(col("hs_a"), col("hs_b")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
 }

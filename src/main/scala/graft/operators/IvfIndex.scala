@@ -231,15 +231,15 @@ object IvfIndex {
     * instead of planting a ~100MB literal (or require-failing) there.
     *
     * The parent dots, the block and the child dots are each evaluated
-    * once per row ([[let]]): the formula path reads the block inside its
-    * per-(child, axis) lambda, and an unbound block there re-ran the
-    * whole parent argmax ~B·dim times per row. */
+    * once per row ([[TextOps.let1]]): the formula path reads the block
+    * inside its per-(child, axis) lambda, and an unbound block there
+    * re-ran the whole parent argmax ~B·dim times per row. */
   def assignHier(qv: Column, dim: Int, cells: Int): Column = {
     val (g, b) = hierGeometry(cells)
     val parents = typedLit((0 until g).map(j => centroid(j, dim): Seq[Long]))
     def dot(c: Column): Column =
       aggregate(zip_with(qv, c, (x, w) => x * w), lit(0L), (a, v) => a + v)
-    let(argmax(transform(parents, dot(_))).cast("int")) { block =>
+    TextOps.let1(argmax(transform(parents, dot(_))).cast("int")) { block =>
       (block * b + argmax(childDots(qv, block, dim, cells))).cast("int")
     }
   }
@@ -247,13 +247,7 @@ object IvfIndex {
   /** 0-based position of the first maximum of array `a`, `a` evaluated
     * once. */
   private def argmax(a: Column): Column =
-    let(a)(v => array_position(v, array_max(v)) - 1)
-
-  /** `f(v)` with `v` evaluated once per row: `v` rides a one-element
-    * array into a lambda, so every use inside `f` reads the bound
-    * variable instead of re-evaluating the expression. */
-  private def let(v: Column)(f: Column => Column): Column =
-    element_at(transform(array(v), f), 1)
+    TextOps.let1(a)(v => array_position(v, array_max(v)) - 1)
 
   /** TEST knob: force the two-level regime below [[HierarchyThreshold]]
     * so flat and hier can be compared head-to-head on the SAME corpus

@@ -70,14 +70,7 @@ object PassageGraph {
     * `(doc_id, text)` frame — the pure edge semantics, stage-independent so
     * specs can drive hand-built corpora through it. */
   def edgesOf(docs: DataFrame): DataFrame = {
-    val chunks = transform(
-      sequence(lit(1), ceil(size(col("lst")) / lit(P.toDouble)).cast("int")),
-      i => concat_ws(" ", slice(col("lst"), (i - 1) * P + 1, lit(P))))
-    val pd = docs
-      .select(col("doc_id"), tokens(col("text")).as("lst"))
-      .select(col("doc_id"), explode(chunks).as("passage"))
-      .select(col("doc_id"), md5(col("passage")).as("ph"))
-      .distinct()
+    val pd = passageHashes(docs, P).distinct()
     // boilerplate cap: tiny hash-agg dim, joined on the md5 key — the
     // postings join never sees a stop-passage's O(df²) fan-out
     val okp = pd.groupBy("ph").agg(count(lit(1)).as("df"))

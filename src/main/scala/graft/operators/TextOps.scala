@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Column-level text primitives for the training-data pipeline operators
@@ -11,6 +11,13 @@ import org.apache.spark.sql.functions._
   * 100 TB. The string hash is the first 8 hex chars of md5 parsed as a
   * uint32: md5 is bit-identical across engines, which makes every derived
   * signature (minhash, simhash, LSH bucket) oracle-verifiable.
+  *
+  * Each text decision the tx, dd and mix rows share is written here
+  * once, as a DataFrame/oracle-SQL pair: the tokenization, token count
+  * and token-hash list; the doc-keyed hash and unit draw; the hashed
+  * shingle set; the rolling-hash winnowing; the passage hashes; the token
+  * stats, stopwords and quality score; the fingerprint. The dedup index
+  * pairs (signatures, bands, Jaccard) live with [[LshBanding]].
   */
 object TextOps {
 
@@ -21,8 +28,27 @@ object TextOps {
   def oHash32(x: String): String =
     s"CAST('0x' || substr(md5($x),1,8) AS BIGINT)"
 
-  /** Whitespace tokens. */
+  /** Whitespace tokens, their count and their per-token [[hash32]]
+    * list — the tokenization every text, dedup and mixture row shares. */
   def tokens(text: Column): Column = split(text, " ")
+  def oTokens(x: String): String = s"string_split($x, ' ')"
+  def nTokens(text: Column): Column = size(tokens(text)).cast("long")
+  def oNTokens(x: String): String = s"CAST(len(${oTokens(x)}) AS BIGINT)"
+  def tokenHashes(text: Column): Column =
+    transform(tokens(text), t => hash32(t))
+  def oTokenHashes(x: String): String =
+    s"list_transform(${oTokens(x)}, t -> ${oHash32("t")})"
+
+  /** Doc-keyed hash `hash32('<tag>:' || id)` and its unit draw in [0, 1):
+    * a per-row random number fixed across runs and engines. */
+  def keyHash(tag: String, id: Column): Column =
+    hash32(concat(lit(s"$tag:"), id.cast("string")))
+  def oKeyHash(tag: String, id: String): String =
+    oHash32(s"'$tag:' || CAST($id AS VARCHAR)")
+  def unitDraw(tag: String, id: Column): Column =
+    keyHash(tag, id).cast("double") / 4294967296.0
+  def oUnitDraw(tag: String, id: String): String =
+    s"CAST(${oKeyHash(tag, id)} AS DOUBLE) / 4294967296.0"
 
   /** Hashed word n-gram stream as ONE native expression
     * ([[graft.functions.ShingleHash32]]): bit-identical to
@@ -46,7 +72,7 @@ object TextOps {
     when(size(toks) >= n, grams).otherwise(array().cast("array<string>"))
   }
   /** Oracle-side shingles over a BOUND token-list column named `lst`
-    * (bind it in a prior CTE: `string_split(text, ' ') AS lst`). */
+    * (bind it in a prior CTE: `${oTokens("text")} AS lst`). */
   def oShinglesFromList(lst: String, n: Int = 3): String = {
     val parts = (0 until n).map(k => s"$lst[i + $k]").mkString(" || ' ' || ")
     s"""CASE WHEN len($lst) >= $n THEN
@@ -62,8 +88,9 @@ object TextOps {
     (0 until k).map(j => (2L * j + 3L, 1000003L * j + 12345L))
 
   /** Oracle-side minhash component over a shingle list hashed ONCE with
-    * [[oHashAll]] (md5 is ~50× the affine map's cost); the Spark side is
-    * [[DedupStage]]'s per-permutation `min` over [[shingleHashes]]. */
+    * [[oShingleHashSet]] (md5 is ~50× the affine map's cost); the Spark
+    * side is [[DedupStage]]'s per-permutation `min` over
+    * [[shingleHashes]]. */
   def oMinhashSig(hashArr: String, a: Long, b: Long): String =
     s"list_min(list_transform($hashArr, h -> (h * $a + $b) % $MinhashP))"
 
@@ -78,13 +105,114 @@ object TextOps {
   def let1(e: Column)(body: Column => Column): Column =
     element_at(transform(array(e), x => body(x)), 1)
 
-  /** Oracle-side: [[oHash32]] of every element of a string list. */
-  def oHashAll(arr: String): String =
-    s"list_transform($arr, s -> ${oHash32("s")})"
+  /** Oracle-side distinct hashed 3-gram shingle set over a BOUND token
+    * list — the set [[DedupStage]] materializes per representative. */
+  def oShingleHashSet(lst: String): String =
+    s"list_distinct(list_transform(${oShinglesFromList(lst)},\n" +
+      s"  s -> ${oHash32("s")}))"
+
+  /** Karp-Rabin rolling hash over the token-hash stream, one mod per
+    * step (th < 2^32, B ≈ 2^20: products stay < 2^52). [[docHash]] folds
+    * the whole stream; [[rollingGrams]] hashes every token 3-gram;
+    * [[winnow]] keeps the distinct minima of each [[WinnowW]]-gram window
+    * (Schleimer et al. 2003), or all grams' minimum when fewer. tx5
+    * reports the winnowed set, dd11 indexes it. Each intermediate array
+    * is [[let1]]-bound: unbound, a pushed-down filter on the winnowed set
+    * inlined the chain into every `element_at` (dd11: 239 s → 1.4 s at
+    * sf0.01). The oracle binds them as CTE columns ([[oWinnowCtes]]). */
+  val RollB = 1000003L
+  val RollM = 2147483647L
+  val WinnowW = 4
+  def docHash(th: Column): Column =
+    aggregate(th, lit(0L), (a, x) => (a * RollB + x) % RollM)
+  def oDocHash(th: String): String =
+    s"""list_reduce(list_prepend(CAST(0 AS BIGINT), $th),
+       |      (a, x) -> (a * $RollB + x) % $RollM)""".stripMargin
+  def rollingGrams(th: Column): Column = let1(th) { t =>
+    when(size(t) >= 3,
+      transform(sequence(lit(1), size(t) - 2),
+        i => (((element_at(t, i) * RollB +
+                element_at(t, i + 1)) % RollM) * RollB +
+              element_at(t, i + 2)) % RollM))
+      .otherwise(array().cast("array<long>"))
+  }
+  def winnow(grams: Column): Column = let1(grams) { g =>
+    when(size(g) >= WinnowW,
+      array_distinct(transform(
+        sequence(lit(1), size(g) - (WinnowW - 1)),
+        i => array_min(slice(g, i, lit(WinnowW))))))
+      .when(size(g) > 0, array(array_min(g)))
+      .otherwise(array().cast("array<long>"))
+  }
+
+  /** Oracle chain: CTEs `th(doc_id, th)`, `g(doc_id, th, grams)` and
+    * `fp(doc_id, th, grams, winnowed)` over `documents`. */
+  val oWinnowCtes: String = {
+    val (b, m, w) = (RollB, RollM, WinnowW)
+    s"""th AS (
+       |  SELECT doc_id, ${oTokenHashes("text")} AS th FROM documents),
+       |g AS (
+       |  SELECT doc_id, th,
+       |    list_transform(generate_series(1, len(th) - 2), i ->
+       |      (((th[i] * $b + th[i + 1]) % $m) * $b + th[i + 2]) % $m)
+       |      AS grams
+       |  FROM th),
+       |fp AS (
+       |  SELECT doc_id, th, grams,
+       |    CASE WHEN len(grams) >= $w THEN
+       |      list_distinct(list_transform(
+       |        generate_series(1, len(grams) - ${w - 1}),
+       |        i -> list_min(grams[i:i + ${w - 1}])))
+       |    WHEN len(grams) > 0 THEN [list_min(grams)]
+       |    ELSE [] END AS winnowed
+       |  FROM g)""".stripMargin
+  }
+
+  /** `(doc_id, ph)`: the md5 of every non-overlapping `p`-token passage of
+    * each `(doc_id, text)` row, partial tail kept — dd9's duplicated
+    * passages and [[PassageGraph]]'s shared-passage edges. [[oPassageCtes]]
+    * is the oracle: CTEs `t(doc_id, lst)` and `p(doc_id, ph)`. */
+  def passageHashes(docs: DataFrame, p: Int): DataFrame = {
+    val chunks = transform(
+      sequence(lit(1), ceil(size(col("lst")) / lit(p.toDouble)).cast("int")),
+      i => concat_ws(" ", slice(col("lst"), (i - 1) * p + 1, lit(p))))
+    docs.select(col("doc_id"), tokens(col("text")).as("lst"))
+      .select(col("doc_id"), explode(chunks).as("passage"))
+      .select(col("doc_id"), md5(col("passage")).as("ph"))
+  }
+  def oPassageCtes(p: Int): String =
+    s"""t AS (
+       |  SELECT doc_id, ${oTokens("text")} AS lst FROM documents),
+       |p AS (
+       |  SELECT doc_id, unnest(list_transform(
+       |    generate_series(1, CAST(ceil(len(lst) / $p.0) AS INT)),
+       |    i -> md5(array_to_string(lst[(i-1)*$p+1 : i*$p], ' '))))
+       |    AS ph
+       |  FROM t)""".stripMargin
+
+  /** Per-document token stats `n_tokens`, `n_distinct`, `n_stop` (tokens
+    * in [[Stopwords]]) — the inputs of [[qualityScore]]. */
+  val Stopwords: Seq[String] = Seq("the", "a")
+  def tokenStats(text: Column): Seq[Column] = {
+    val toks = tokens(text)
+    Seq(nTokens(text).as("n_tokens"),
+      size(array_distinct(toks)).cast("long").as("n_distinct"),
+      size(filter(toks, w => Stopwords.map(w === _).reduce(_ || _)))
+        .cast("long").as("n_stop"))
+  }
+  def oTokenStats(x: String): String = {
+    val stop = Stopwords.map(w => s"w = '$w'").mkString(" OR ")
+    s"""${oNTokens(x)} AS n_tokens,
+       |    CAST(len(list_distinct(${oTokens(x)})) AS BIGINT)
+       |      AS n_distinct,
+       |    CAST(len(list_filter(${oTokens(x)},
+       |      w -> $stop)) AS BIGINT) AS n_stop""".stripMargin
+  }
 
   /** Document quality score over pre-computed token stats — ONE definition
-    * per engine side, shared by the scoring query (tx2) and the curation
-    * gate (tx6) so a threshold tweak cannot silently diverge them.
+    * per engine side, shared by the scoring query (tx2), the curation
+    * gate (tx6) and the canonical pick (dd13) so a threshold tweak cannot
+    * silently diverge them.
     * length ≥ 20 tokens (0.4) + stopword ratio in [0.01, 0.5] (0.3) +
     * type-token ratio ≥ 0.3 (0.3). */
   def qualityScore(nTokens: Column, nStop: Column,
@@ -130,7 +258,7 @@ object TextOps {
   def fingerprint(text: Column): Column =
     md5(concat_ws(" ", array_sort(array_distinct(tokens(text)))))
   def oFingerprint(x: String): String =
-    s"md5(array_to_string(list_sort(list_distinct(string_split($x, ' '))), ' '))"
+    s"md5(array_to_string(list_sort(list_distinct(${oTokens(x)})), ' '))"
 
   /** The fixed query term set tx7 and sim13 rank the corpus for. */
   val Bm25Terms: Seq[String] = Seq("spark", "query", "stream")

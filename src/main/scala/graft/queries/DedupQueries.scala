@@ -1,8 +1,13 @@
 package graft.queries
 
 import graft.{CapTelemetry, QueryDef, Tables}
+import graft.operators.{ConnectedComponents, DedupStage}
+import graft.operators.DedupParams.{K, StagedBands, StagedThreshold}
+import graft.operators.DedupStage.oShingleSetCtes
+import graft.operators.LshBanding._
 import graft.operators.TextOps._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for the training-data pipeline — graded as
@@ -31,18 +36,22 @@ import org.apache.spark.sql.functions._
   *    sf0.1 — its pairwise shingle overlap is dense at low similarity, so
   *    candidate verification dominates any exact algorithm; dd6 is the
   *    structural answer, not more filtering.)
+  *
+  * Shared pairs (each a DataFrame/oracle-SQL pair, written once):
+  *  - tokenization, token hashes, the rolling-hash winnowing and the
+  *    token stats behind `qualityScore` — [[graft.operators.TextOps]];
+  *  - the oracle shingle-set CTEs — [[DedupStage.oShingleSetCtes]];
+  *  - band rows, signature CTE, candidate CTEs and the exact Jaccard
+  *    (plain and 1e-6-quantized) — [[graft.operators.LshBanding]];
+  *  - here, privately: the member expansion ([[expandPairs]]), the
+  *    df-capped postings self-join ([[sharedKeys]], dd5 and dd11) and the
+  *    cluster walk ([[clusters]], dd7 and dd13).
   */
 object DedupQueries {
 
-  private val K = graft.operators.DedupParams.K // minhash permutations
   private val Bands = 4       // dd3 LSH bands (4 rows each)
   private val SimBits = 16    // simhash width
-  /** Staged-pipeline banding + bucket cap live in
-    * [[graft.operators.DedupParams]] — shared with the stage builder that
-    * materializes the pair table at those parameters. */
-  private val StagedBands = graft.operators.DedupParams.StagedBands
-  private val StagedThreshold = graft.operators.DedupParams.StagedThreshold
-  /** dd5 postings cap (stop-shingle guard): shingles appearing in more
+  /** dd5/dd11 postings cap (stop-shingle guard): keys appearing in more
     * docs than this are dropped from the candidate self-join — they
     * contribute O(df²) candidate pairs while carrying no discriminative
     * signal. Sized far above fixture document frequencies (max df ~10)
@@ -54,31 +63,37 @@ object DedupQueries {
   // The shared dedup-first preamble (md5 text hash → representative per
   // distinct text → hashed shingle sets → K minhash minima) lives in
   // [[graft.operators.DedupStage]], MATERIALIZED once per (session, corpus)
-  // and read by all three operators below — the silver-layer signature
-  // table a 100 TB pipeline would maintain, instead of three full
-  // per-token-md5 corpus scans per dedup pass.
+  // and read by every stage-backed operator below — the silver-layer
+  // signature table a 100 TB pipeline would maintain, instead of one full
+  // per-token-md5 corpus scan per dedup pass.
 
-  /** Expand surviving representative pairs (rep_a < rep_b, jaccard) to
-    * member pairs, plus the within-group pairs of duplicate groups
-    * (identical texts → jaccard exactly 1.0). `dupReps` = rep_ids of
-    * groups with >1 copy and ≥1 shingle — empty shingle sets are excluded
-    * on both engines (no sigs/postings in the oracle, filtered here). */
-  private def expandPairs(membership: DataFrame, survivors: DataFrame,
-                          dupReps: DataFrame): DataFrame = {
+  /** Expand surviving representative pairs `(rep_a < rep_b, values…)` to
+    * member pairs `(doc_a < doc_b, values…)`, plus the within-group pairs
+    * of the duplicate groups in `profiles` (>1 copy), which carry the
+    * `within` values (identical texts → jaccard exactly 1.0 by default).
+    * Groups with an empty shingle set are excluded on both engines (no
+    * sigs/postings in the oracle, filtered here). */
+  private[graft] def expandPairs(membership: DataFrame, survivors: DataFrame,
+      profiles: DataFrame,
+      within: Seq[(String, Column)] = Seq("jaccard" -> lit(1.0))
+    ): DataFrame = {
     val ma = membership.select(col("rep_id").as("rep_a"),
       col("doc_id").as("id_a"))
     val mb = membership.select(col("rep_id").as("rep_b"),
       col("doc_id").as("id_b"))
     val cross = survivors.join(ma, "rep_a").join(mb, "rep_b")
-      .select(least(col("id_a"), col("id_b")).as("doc_a"),
-              greatest(col("id_a"), col("id_b")).as("doc_b"),
-              col("jaccard"))
-    val m1 = membership.join(dupReps, "rep_id")
-    val within = m1.select(col("rep_id"), col("doc_id").as("doc_a"))
+      .select(least(col("id_a"), col("id_b")).as("doc_a") +:
+              greatest(col("id_a"), col("id_b")).as("doc_b") +:
+              within.map { case (n, _) => col(n) }: _*)
+    val m1 = membership.join(profiles
+      .filter(col("n_copies") > 1 && size(col("hs")) > 0).select("rep_id"),
+      "rep_id")
+    val pairs = m1.select(col("rep_id"), col("doc_id").as("doc_a"))
       .join(m1.select(col("rep_id"), col("doc_id").as("doc_b")), "rep_id")
       .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"), lit(1.0).as("jaccard"))
-    cross.unionByName(within)
+      .select(col("doc_a") +: col("doc_b") +:
+              within.map { case (n, v) => v.as(n) }: _*)
+    cross.unionByName(pairs)
   }
 
   /** MinHash-LSH near-duplicate pairs: band the K signatures `bands` ways,
@@ -87,64 +102,140 @@ object DedupQueries {
     * core — dd3 (4×4 bands, J≥0.5) and dd6 (8×2 bands, J≥0.4) are two
     * parameterizations of this one operator. */
   private def lshNearDup(s: SparkSession, d: String, bands: Int,
-                         threshold: Double, capMetric: String): DataFrame = {
-    val stage = graft.operators.DedupStage(s, d)
-    // persist: the profiles feed the band build + both jaccard sides.
-    // (Bench/Verify clearCache() releases the persist after the action.)
-    val docs = stage.profiles.persist()
-    val survivors =
-      graft.operators.LshBanding.repPairs(docs, bands, threshold, capMetric)
-    expandPairs(stage.membership, survivors, dupReps(docs))
-  }
+                         threshold: Double, capMetric: String): DataFrame =
+    nearDup(s, d)((_, docs) => repPairs(docs, bands, threshold, capMetric))
 
-  /** rep_ids of duplicate groups (>1 copy, ≥1 shingle) — their within-group
-    * pairs are exact duplicates (jaccard 1.0) appended by [[expandPairs]]. */
-  private def dupReps(profiles: DataFrame): DataFrame =
-    profiles.filter(col("n_copies") > 1 && size(col("hs")) > 0)
-      .select("rep_id")
+  /** Member pairs of the representative pairs `pairs(stage, profiles)`
+    * picks. `profiles` is persisted: it feeds the duplicate groups and,
+    * for [[lshNearDup]], the band build + both jaccard sides.
+    * (Bench/Verify clearCache() releases the persist after the action.) */
+  private def nearDup(s: SparkSession, d: String)(
+      pairs: (DedupStage.Stage, DataFrame) => DataFrame): DataFrame = {
+    val stage = DedupStage(s, d)
+    val docs = stage.profiles.persist()
+    expandPairs(stage.membership, pairs(stage, docs), docs)
+  }
 
   /** DuckDB mirror of [[lshNearDup]] (no dedup-first collapse — identical
     * docs share every band, so member-pair output equals rep-pair output
     * expanded; the collapse is a pure physical optimization). */
-  private def oLshNearDup(bands: Int, threshold: Double): String = {
-    val rowsPerBand = K / bands
-    val sigs = minhashParams(K).zipWithIndex.map { case ((a, b), j) =>
-      s"${oMinhashSig("hs", a, b)} AS sig$j"
-    }.mkString(",\n    ")
-    val bandSelects = (0 until bands).map { bIdx =>
-      val parts = (0 until rowsPerBand)
-        .map(r => s"CAST(sig${bIdx * rowsPerBand + r} AS VARCHAR)")
-        .mkString(" || ',' || ")
-      s"SELECT doc_id, $bIdx AS band_idx, md5($parts) AS band_hash FROM sig"
-    }.mkString("\n  UNION ALL ")
-    s"""WITH toks AS (
-       |  SELECT doc_id, string_split(text, ' ') AS lst FROM documents),
-       |sh AS (
-       |  SELECT doc_id,
-       |    list_distinct(${oHashAll(oShinglesFromList("lst"))}) AS hs
-       |  FROM toks),
-       |sig AS (
-       |  SELECT doc_id, hs,
-       |    $sigs
-       |  FROM sh),
-       |bands AS (
-       |  $bandSelects),
-       |cand AS (
-       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM bands a JOIN bands b
-       |    ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-       |   AND a.doc_id < b.doc_id)
+  private def oLshNearDup(bands: Int, threshold: Double): String =
+    s"""WITH $oShingleSetCtes,
+       |${oSignatureCte(nonEmpty = false)},
+       |${oCandidateCtes(bands)}
        |SELECT c.doc_a, c.doc_b,
-       |  CAST(len(list_intersect(x.hs, y.hs)) AS DOUBLE) /
-       |  CAST(len(list_distinct(list_concat(x.hs, y.hs))) AS DOUBLE)
+       |  ${oJaccard("x.hs", "y.hs")}
        |    AS jaccard
        |FROM cand c
        |JOIN sh x ON c.doc_a = x.doc_id
        |JOIN sh y ON c.doc_b = y.doc_id
-       |WHERE CAST(len(list_intersect(x.hs, y.hs)) AS DOUBLE) /
-       |      CAST(len(list_distinct(list_concat(x.hs, y.hs))) AS DOUBLE)
+       |WHERE ${oJaccard("x.hs", "y.hs")}
        |      >= $threshold""".stripMargin
+
+  /** The stage's published pair table (dd6's operating point) expanded
+    * to member pairs — dd6's output and the input of [[clusters]]. */
+  private def stagedNearDup(s: SparkSession, d: String): DataFrame =
+    nearDup(s, d)((stage, _) => stage.stagedPairs)
+
+  /** Duplicate clusters `(doc_id, cluster_id, cluster_size)` over the
+    * staged near-dup pairs: iterative min-label propagation
+    * ([[ConnectedComponents]]); the cluster id IS the canonical keep id
+    * (min doc_id). Cluster sizes ride a tiny groupBy on the (already
+    * small) label frame, broadcast back onto the per-doc rows. */
+  private def clusters(s: SparkSession, d: String): DataFrame = {
+    val comp = ConnectedComponents.run(
+      stagedNearDup(s, d).select("doc_a", "doc_b"))
+    val sizes = comp.groupBy("cluster_id")
+      .agg(count(lit(1)).as("cluster_size"))
+    comp.join(broadcast(sizes), "cluster_id")
+      .select(col("doc_id"), col("cluster_id"), col("cluster_size"))
   }
+
+  /** Oracle [[clusters]]: the same closure as a recursive-CTE label walk
+    * over [[oLshNearDup]]'s staged pairs, ending in the CTE
+    * `clusters(doc_id, cluster_id, cluster_size)`. Opens the `WITH`. */
+  private val oClusterCtes: String =
+    s"""WITH RECURSIVE pairs AS (
+       |  SELECT doc_a, doc_b FROM (
+       |${oLshNearDup(StagedBands, StagedThreshold)}
+       |  )),
+       |edges AS (
+       |  SELECT doc_a AS src, doc_b AS dst FROM pairs
+       |  UNION
+       |  SELECT doc_b, doc_a FROM pairs),
+       |walk(doc_id, label) AS (
+       |  SELECT DISTINCT src, src FROM edges
+       |  UNION
+       |  SELECT e.dst, w.label FROM walk w JOIN edges e
+       |    ON w.doc_id = e.src),
+       |comp AS (
+       |  SELECT doc_id, min(label) AS cluster_id FROM walk
+       |  GROUP BY doc_id),
+       |sizes AS (
+       |  SELECT cluster_id, count(*) AS cluster_size FROM comp
+       |  GROUP BY cluster_id),
+       |clusters AS (
+       |  SELECT c.doc_id, c.cluster_id, s.cluster_size
+       |  FROM comp c JOIN sizes s USING (cluster_id))""".stripMargin
+
+  /** Id pairs `(a < b)` of `sets`' `id` column whose `set` arrays share
+    * ≥1 element, with the shared count `c` and both set sizes `na`, `nb`
+    * — the inverted-index self-join of dd5 (shingle sets) and dd11
+    * (winnowed prints), postings keyed by `key`.
+    *
+    * Stop-key guard: postings whose document frequency exceeds
+    * [[MaxPostingDf]] are dropped before the self-join (df² candidate
+    * blowup, no discriminative value) by [[CapTelemetry.capped]], the
+    * drop counted as `capMetric`, never silent. The kept postings
+    * (16-byte rows, two longs) are cached PRE-CLUSTERED on the key
+    * (explicit repartition, so AQE cannot coalesce the tiny shuffle to one
+    * partition): both self-join sides read the same hash(key)-partitioned
+    * cache with no exchange. The pair aggregate sees ~O(Σdf²) rows (1.1M
+    * at sf0.1 for dd5) — a shuffle of only ~tens of MB, which AQE would
+    * coalesce to ONE partition, serializing the hash aggregate onto one
+    * core (measured: that single-core agg was most of dd5's round-2 6.4s);
+    * the explicit pair repartition keeps it parallel and the groupBy
+    * reuses it. The size frame is one row per set — always
+    * broadcast-size relative to the pair frame it annotates. Caller
+    * persists `sets`. */
+  private[graft] def sharedKeys(sets: DataFrame, id: String, set: String,
+      key: String, a: String, b: String, capMetric: String): DataFrame = {
+    val par = sets.sparkSession.sparkContext.defaultParallelism
+    val posts = sets.select(col(id), explode(col(set)).as(key))
+    val kept = CapTelemetry.capped(posts, Seq(key), MaxPostingDf, capMetric)
+      .repartition(par, col(key))
+      .persist()
+    val sz = sets.filter(size(col(set)) > 0)
+      .select(col(id), size(col(set)).cast("long").as("n"))
+    kept.as("a")
+      .join(kept.as("b"),
+        col(s"a.$key") === col(s"b.$key") && col(s"a.$id") < col(s"b.$id"))
+      .select(col(s"a.$id").as(a), col(s"b.$id").as(b))
+      .repartition(par, col(a), col(b))
+      .groupBy(a, b)
+      .agg(count(lit(1)).as("c"))
+      .join(broadcast(sz.select(col(id).as(a), col("n").as("na"))), a)
+      .join(broadcast(sz.select(col(id).as(b), col("n").as("nb"))), b)
+  }
+
+  /** Oracle [[sharedKeys]] over a CTE `sets(doc_id, set)`, ending in the
+    * CTE `shared(doc_a < doc_b, c, na, nb)` (the oracle has no df cap). */
+  private def oSharedKeyCtes(sets: String, set: String,
+                             key: String): String =
+    s"""sz AS (
+       |  SELECT doc_id, CAST(len($set) AS BIGINT) AS n
+       |  FROM $sets WHERE len($set) > 0),
+       |posts AS (SELECT doc_id, unnest($set) AS $key FROM $sets),
+       |common AS (
+       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS c
+       |  FROM posts a JOIN posts b
+       |    ON a.$key = b.$key AND a.doc_id < b.doc_id
+       |  GROUP BY 1, 2),
+       |shared AS (
+       |  SELECT cm.doc_a, cm.doc_b, cm.c, sa.n AS na, sb.n AS nb
+       |  FROM common cm
+       |  JOIN sz sa ON cm.doc_a = sa.doc_id
+       |  JOIN sz sb ON cm.doc_b = sb.doc_id)""".stripMargin
 
   val all: Seq[QueryDef] = Seq(
 
@@ -199,9 +290,7 @@ object DedupQueries {
           s"CASE WHEN s$i > 0 THEN ${1L << i} ELSE 0 END"
         }.mkString(" + ")
         s"""WITH hs AS (
-           |  SELECT doc_id,
-           |    list_transform(string_split(text, ' '), t -> ${oHash32("t")})
-           |      AS hs
+           |  SELECT doc_id, ${oTokenHashes("text")} AS hs
            |  FROM documents),
            |bits AS (
            |  SELECT doc_id,
@@ -214,7 +303,7 @@ object DedupQueries {
       },
       (s, d) => {
         val hs = Tables.fanOut(Tables.documents(s, d)).select(col("doc_id"),
-          transform(tokens(col("text")), t => hash32(t)).as("hs"))
+          tokenHashes(col("text")).as("hs"))
         val bitCols = (0 until SimBits).map { i =>
           aggregate(col("hs"), lit(0L), (acc, h) =>
             acc + when(shiftright(h, i).bitwiseAND(1) === 1, 1L)
@@ -235,93 +324,30 @@ object DedupQueries {
     // dd6's verify stage; standalone it is exact on small corpora.
     QueryDef(
       "dd5_ngram_jaccard",
-      Some(s"""WITH toks AS (
-              |  SELECT doc_id, string_split(text, ' ') AS lst FROM documents),
-              |sets AS (
-              |  SELECT doc_id,
-              |    list_distinct(${oHashAll(oShinglesFromList("lst"))}) AS sh
-              |  FROM toks),
-              |sz AS (SELECT doc_id, len(sh) AS n FROM sets),
-              |posts AS (SELECT doc_id, unnest(sh) AS s FROM sets),
-              |common AS (
-              |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS c
-              |  FROM posts a JOIN posts b ON a.s = b.s AND a.doc_id < b.doc_id
-              |  GROUP BY 1, 2)
-              |SELECT cm.doc_a, cm.doc_b,
-              |  CAST(cm.c AS DOUBLE) / CAST(sa.n + sb.n - cm.c AS DOUBLE)
-              |    AS jaccard
-              |FROM common cm
-              |JOIN sz sa ON cm.doc_a = sa.doc_id
-              |JOIN sz sb ON cm.doc_b = sb.doc_id
-              |WHERE CAST(cm.c AS DOUBLE) / CAST(sa.n + sb.n - cm.c AS DOUBLE)
-              |      >= 0.4""".stripMargin),
+      Some(s"""WITH $oShingleSetCtes,
+              |${oSharedKeyCtes("sh", "hs", "s")}
+              |SELECT doc_a, doc_b,
+              |  CAST(c AS DOUBLE) / CAST(na + nb - c AS DOUBLE) AS jaccard
+              |FROM shared
+              |WHERE CAST(c AS DOUBLE) / CAST(na + nb - c AS DOUBLE) >= 0.4"""
+        .stripMargin),
       (s, d) => {
         // Same dedup-first structure as dd3: postings are built over one
         // representative per distinct text (identical docs are the postings
         // hotspot — a dup group of size g puts g copies on every one of its
         // shingles), surviving rep pairs expand back to member pairs. The
-        // shingle sets come from the materialized signature stage; postings
-        // are just their explode, sizes their array length.
-        val stage = graft.operators.DedupStage(s, d)
-        val membership = stage.membership
+        // shingle sets come from the materialized signature stage; empty
+        // sets have no postings on either engine.
+        val stage = DedupStage(s, d)
         val profiles = stage.profiles.persist()
-        // set sizes per representative (empty shingle sets excluded —
-        // they have no postings on either engine)
-        val sz = profiles.filter(size(col("hs")) > 0)
-          .select(col("rep_id"), size(col("hs")).cast("long").as("n"))
-        // Stop-shingle guard: drop postings whose document frequency
-        // exceeds MaxPostingDf before the self-join (df² candidate blowup,
-        // no discriminative value). Hash-agg the df counts, broadcast the
-        // (tiny, normally empty) hot set as an anti-join, and observe how
-        // many postings the cap removed — never silent.
-        val posts = profiles
-          .select(col("rep_id"), explode(col("hs")).as("s"))
-        val dfCounts = posts.groupBy("s").agg(count(lit(1)).as("df"))
-        val hotShingles = CapTelemetry.counted(
-            dfCounts.filter(col("df") > MaxPostingDf),
-            "dd5_dropped_postings", "df")
-          .select("s")
-        // persist: both sides of the self-join read the capped postings;
-        // 16-byte rows (two longs), the cheapest possible pair-join input.
-        // Cached PRE-CLUSTERED on the join key (explicit repartition, so
-        // AQE cannot coalesce the tiny shuffle to one partition): the
-        // self-join then needs no exchange at all — both sides are the
-        // same hash(s)-partitioned cache.
-        val par = s.sparkContext.defaultParallelism
-        val postsKept = posts
-          .join(broadcast(hotShingles), Seq("s"), "left_anti")
-          .repartition(par, col("s"))
-          .persist()
-        // The pair aggregate sees ~O(Σdf²) rows (1.1M at sf0.1) — its
-        // shuffle is only ~tens of MB, which AQE would coalesce to ONE
-        // partition, serializing the 1M-group hash aggregate onto one
-        // core (measured: that single-core agg was most of dd5's round-2
-        // 6.4s). Explicit repartition keeps it parallel; the groupBy
-        // reuses the exchange (same clustering).
-        val common = postsKept.as("a")
-          .join(postsKept.as("b"),
-            col("a.s") === col("b.s") && col("a.rep_id") < col("b.rep_id"))
-          .select(col("a.rep_id").as("rep_a"), col("b.rep_id").as("rep_b"))
-          .repartition(par, col("rep_a"), col("rep_b"))
-          .groupBy("rep_a", "rep_b")
-          .agg(count(lit(1)).as("c"))
         val jac = col("c").cast("double") /
           (col("na") + col("nb") - col("c")).cast("double")
-        // sz is one row per distinct text — always broadcast-size relative
-        // to the pair frame it annotates.
-        val survivors = common
-          .join(broadcast(sz.select(col("rep_id").as("rep_a"),
-                                    col("n").as("na"))), "rep_a")
-          .join(broadcast(sz.select(col("rep_id").as("rep_b"),
-                                    col("n").as("nb"))), "rep_b")
+        val survivors = sharedKeys(profiles, "rep_id", "hs", "s",
+            "rep_a", "rep_b", "dd5_dropped_postings")
           .select(col("rep_a"), col("rep_b"), jac.as("jaccard"))
           .filter(col("jaccard") >= 0.4)
-        // identical texts share all shingles → jaccard exactly 1.0 ≥ 0.4;
-        // empty shingle sets have no postings on either engine.
-        val dupReps = profiles
-          .filter(col("n_copies") > 1 && size(col("hs")) > 0)
-          .select("rep_id")
-        expandPairs(membership, survivors, dupReps)
+        // identical texts share all shingles → jaccard exactly 1.0 ≥ 0.4
+        expandPairs(stage.membership, survivors, profiles)
       }),
 
     // DD6: STAGED near-dup — the 100 TB composition the dd3/dd5 scaladocs
@@ -341,11 +367,7 @@ object DedupQueries {
     QueryDef(
       "dd6_staged_neardup",
       Some(oLshNearDup(StagedBands, StagedThreshold)),
-      (s, d) => {
-        val stage = graft.operators.DedupStage(s, d)
-        val docs = stage.profiles.persist()
-        expandPairs(stage.membership, stage.stagedPairs, dupReps(docs))
-      }),
+      (s, d) => stagedNearDup(s, d)),
 
     // DD7: duplicate CLUSTERS — the step after pair generation that makes
     // dedup actionable: near-dup pairs are evidence, the unit a pipeline
@@ -353,50 +375,16 @@ object DedupQueries {
     // {a,b,c}). dd6's pairs feed iterative min-label propagation
     // (operators.ConnectedComponents); the cluster id IS the canonical
     // keep id (min doc_id). Oracle: the same closure as a recursive-CTE
-    // label walk over the same pair query.
+    // label walk over the same pair query ([[clusters]]).
     QueryDef(
       "dd7_dup_clusters",
-      Some {
-        val pairsSql = oLshNearDup(StagedBands, StagedThreshold)
-        s"""WITH RECURSIVE pairs AS (
-           |  SELECT doc_a, doc_b FROM (
-           |$pairsSql
-           |  )),
-           |edges AS (
-           |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-           |  UNION
-           |  SELECT doc_b, doc_a FROM pairs),
-           |walk(doc_id, label) AS (
-           |  SELECT DISTINCT src, src FROM edges
-           |  UNION
-           |  SELECT e.dst, w.label FROM walk w JOIN edges e
-           |    ON w.doc_id = e.src),
-           |comp AS (
-           |  SELECT doc_id, min(label) AS cluster_id FROM walk
-           |  GROUP BY doc_id),
-           |sizes AS (
-           |  SELECT cluster_id, count(*) AS cluster_size FROM comp
-           |  GROUP BY cluster_id)
-           |SELECT c.doc_id, c.cluster_id, s.cluster_size
-           |FROM comp c JOIN sizes s USING (cluster_id)""".stripMargin
-      },
-      (s, d) => {
-        // Composed pipeline: read the stage's materialized pair table
-        // (dd6's published output) and expand to member pairs — the CC
-        // iteration is this query's only new work.
-        val stage = graft.operators.DedupStage(s, d)
-        val docs = stage.profiles.persist()
-        val pairs =
-          expandPairs(stage.membership, stage.stagedPairs, dupReps(docs))
-            .select("doc_a", "doc_b")
-        val comp = graft.operators.ConnectedComponents.run(pairs)
-        // cluster sizes ride a tiny groupBy on the (already small) label
-        // frame; broadcast back onto the per-doc rows
-        val sizes = comp.groupBy("cluster_id")
-          .agg(count(lit(1)).as("cluster_size"))
-        comp.join(broadcast(sizes), "cluster_id")
-          .select(col("doc_id"), col("cluster_id"), col("cluster_size"))
-      }),
+      Some(s"""$oClusterCtes
+              |SELECT doc_id, cluster_id, cluster_size FROM clusters"""
+        .stripMargin),
+      // Composed pipeline: read the stage's materialized pair table (dd6's
+      // published output) and expand to member pairs — the CC iteration
+      // is this query's only new work.
+      (s, d) => clusters(s, d)),
 
     // DD8: benchmark decontamination — before a corpus trains anything,
     // scrub it against the held-out evaluation set (the published
@@ -423,21 +411,15 @@ object DedupQueries {
     // instead of 8-byte hashes — both losses grow with corpus size).
     QueryDef(
       "dd8_decontaminate",
-      Some(s"""WITH t AS (
-              |  SELECT doc_id, string_split(text, ' ') AS lst
-              |  FROM documents),
-              |s AS (
-              |  SELECT doc_id,
-              |    list_distinct(${oHashAll(oShinglesFromList("lst"))}) AS hs
-              |  FROM t),
+      Some(s"""WITH $oShingleSetCtes,
               |b AS (
               |  SELECT list_distinct(flatten(list(hs))) AS bset
-              |  FROM s WHERE doc_id % 29 = 0),
+              |  FROM sh WHERE doc_id % 29 = 0),
               |o AS (
               |  SELECT doc_id,
               |    CAST(len(hs) AS BIGINT) AS n_grams,
               |    CAST(len(list_intersect(hs, bset)) AS BIGINT) AS n_hit
-              |  FROM s CROSS JOIN b),
+              |  FROM sh CROSS JOIN b),
               |f AS (
               |  SELECT doc_id, n_grams, n_hit,
               |    CASE WHEN n_grams = 0 THEN CAST(0.0 AS DOUBLE)
@@ -449,7 +431,7 @@ object DedupQueries {
               |  frac < 0.5 AS keep
               |FROM f""".stripMargin),
       (s, d) => {
-        val stage = graft.operators.DedupStage(s, d)
+        val stage = DedupStage(s, d)
         // benchmark subset (deterministic stand-in for the external eval
         // set): doc → rep → staged gram hashes → distinct broadcast dim
         // the benchmark member list is small by nature → broadcast it
@@ -496,15 +478,7 @@ object DedupQueries {
     // aggregate and the join probe read it.
     QueryDef(
       "dd9_passage_dedup",
-      Some("""WITH t AS (
-             |  SELECT doc_id, string_split(text, ' ') AS lst
-             |  FROM documents),
-             |p AS (
-             |  SELECT doc_id, unnest(list_transform(
-             |    generate_series(1, CAST(ceil(len(lst) / 8.0) AS INT)),
-             |    i -> md5(array_to_string(lst[(i-1)*8+1 : i*8], ' '))))
-             |    AS ph
-             |  FROM t),
+      Some(s"""WITH ${oPassageCtes(8)},
              |c AS (SELECT ph, count(*) AS occ FROM p GROUP BY ph),
              |a AS (
              |  SELECT p.doc_id, count(*) AS n_passages,
@@ -517,16 +491,8 @@ object DedupQueries {
              |  n_dup * 2 <= n_passages AS keep
              |FROM a""".stripMargin),
       (s, d) => {
-        val P = 8
-        val chunks = transform(
-          sequence(lit(1), ceil(size(col("lst")) / lit(P.toDouble))
-            .cast("int")),
-          i => concat_ws(" ", slice(col("lst"), (i - 1) * P + 1, lit(P))))
-        val passages = Tables.fanOut(Tables.documents(s, d))
-          .select(col("doc_id"), tokens(col("text")).as("lst"))
-          .select(col("doc_id"), explode(chunks).as("passage"))
-          .select(col("doc_id"), md5(col("passage")).as("ph"))
-          .persist()
+        val passages =
+          passageHashes(Tables.fanOut(Tables.documents(s, d)), 8).persist()
         val occ = passages.groupBy("ph").agg(count(lit(1)).as("occ"))
         passages.join(occ, "ph")
           .groupBy("doc_id")
@@ -556,41 +522,15 @@ object DedupQueries {
     QueryDef(
       "dd10_minhash_calibration",
       Some {
-        val rowsPerBand = K / StagedBands
-        val sigs = minhashParams(K).zipWithIndex.map { case ((a, b), j) =>
-          s"${oMinhashSig("hs", a, b)} AS sig$j"
-        }.mkString(",\n    ")
-        val bandSelects = (0 until StagedBands).map { bIdx =>
-          val parts = (0 until rowsPerBand)
-            .map(r => s"CAST(sig${bIdx * rowsPerBand + r} AS VARCHAR)")
-            .mkString(" || ',' || ")
-          s"SELECT doc_id, $bIdx AS band_idx, md5($parts) AS band_hash FROM sig"
-        }.mkString("\n  UNION ALL ")
         val matchSum = (0 until K)
           .map(j => s"CASE WHEN x.sig$j = y.sig$j THEN 1 ELSE 0 END")
           .mkString(" + ")
-        s"""WITH toks AS (
-           |  SELECT doc_id, string_split(text, ' ') AS lst FROM documents),
-           |sh AS (
-           |  SELECT doc_id,
-           |    list_distinct(${oHashAll(oShinglesFromList("lst"))}) AS hs
-           |  FROM toks),
-           |sig AS (
-           |  SELECT doc_id, hs,
-           |    $sigs
-           |  FROM sh WHERE len(hs) > 0),
-           |bands AS (
-           |  $bandSelects),
-           |cand AS (
-           |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-           |  FROM bands a JOIN bands b
-           |    ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-           |   AND a.doc_id < b.doc_id),
+        s"""WITH $oShingleSetCtes,
+           |${oSignatureCte(nonEmpty = true)},
+           |${oCandidateCtes(StagedBands)},
            |j AS (
            |  SELECT CAST($matchSum AS BIGINT) AS matches,
-           |    CAST(floor(CAST(len(list_intersect(x.hs, y.hs)) AS DOUBLE) /
-           |      CAST(len(list_distinct(list_concat(x.hs, y.hs))) AS DOUBLE)
-           |      * 1000000.0 + 0.5) AS BIGINT) AS jq
+           |    ${oJaccardQ("x.hs", "y.hs")} AS jq
            |  FROM cand c
            |  JOIN sig x ON c.doc_a = x.doc_id
            |  JOIN sig y ON c.doc_b = y.doc_id)
@@ -604,41 +544,26 @@ object DedupQueries {
            |FROM j GROUP BY matches""".stripMargin
       },
       (s, d) => {
-        val stage = graft.operators.DedupStage(s, d)
+        val stage = DedupStage(s, d)
         // empty shingle sets are excluded on BOTH engines: the oracle's
         // NULL band hashes never join, while Spark's concat_ws would hash
         // null sigs to a real (matching) band key
         val docs = stage.profiles.filter(size(col("hs")) > 0).persist()
-        val cand = graft.operators.LshBanding
-          .candidatePairs(docs, StagedBands, "dd10_dropped_band_rows")
+        val cand = candidatePairs(docs, StagedBands, "dd10_dropped_band_rows")
         def side(tag: String) = docs.select(
           col("rep_id").as(s"rep_$tag") +: col("hs").as(s"hs_$tag") +:
           (0 until K).map(j => col(s"sig$j").as(s"s${tag}_$j")): _*)
         val matches = (0 until K)
           .map(j => when(col(s"sa_$j") === col(s"sb_$j"), 1L).otherwise(0L))
           .reduce(_ + _)
-        val jac =
-          size(array_intersect(col("hs_a"), col("hs_b"))).cast("double") /
-          size(array_union(col("hs_a"), col("hs_b"))).cast("double")
         val repPairs = cand.join(side("a"), "rep_a").join(side("b"), "rep_b")
           .select(col("rep_a"), col("rep_b"), matches.as("matches"),
-            floor(jac * 1000000.0 + 0.5).cast("long").as("jq"))
+            jaccardQ(col("hs_a"), col("hs_b")).as("jq"))
         // expand to member pairs (the oracle has no rep collapse):
-        // cross-rep candidates fan out over both memberships; duplicate
-        // groups contribute their within-group pairs at matches=16, J=1
-        val ma = stage.membership.select(col("rep_id").as("rep_a"),
-          col("doc_id").as("id_a"))
-        val mb = stage.membership.select(col("rep_id").as("rep_b"),
-          col("doc_id").as("id_b"))
-        val cross = repPairs.join(ma, "rep_a").join(mb, "rep_b")
-          .select(col("matches"), col("jq"))
-        val m1 = stage.membership
-          .join(docs.filter(col("n_copies") > 1).select("rep_id"), "rep_id")
-        val within = m1.select(col("rep_id"), col("doc_id").as("doc_a"))
-          .join(m1.select(col("rep_id"), col("doc_id").as("doc_b")), "rep_id")
-          .filter(col("doc_a") < col("doc_b"))
-          .select(lit(16L).as("matches"), lit(1000000L).as("jq"))
-        cross.unionByName(within)
+        // duplicate groups contribute their within-group pairs at
+        // matches=16, J=1
+        expandPairs(stage.membership, repPairs, docs,
+            Seq("matches" -> lit(16L), "jq" -> lit(1000000L)))
           .groupBy("matches")
           .agg(count(lit(1)).as("n_pairs"),
                (sum("jq").cast("double") / count(lit(1)) / 1000000.0)
@@ -668,100 +593,28 @@ object DedupQueries {
     // here is the same bucketed integer-key self-join as dd5.
     QueryDef(
       "dd11_containment",
-      Some {
-        val B = 1000003L; val M = 2147483647L; val W = 4
-        val th =
-          s"list_transform(string_split(text, ' '), t -> ${oHash32("t")})"
-        s"""WITH th AS (
-           |  SELECT doc_id, $th AS th FROM documents),
-           |g AS (
-           |  SELECT doc_id,
-           |    list_transform(generate_series(1, len(th) - 2), i ->
-           |      (((th[i] * $B + th[i + 1]) % $M) * $B + th[i + 2]) % $M)
-           |      AS grams
-           |  FROM th),
-           |fp AS (
-           |  SELECT doc_id,
-           |    CASE WHEN len(grams) >= $W THEN
-           |      list_distinct(list_transform(
-           |        generate_series(1, len(grams) - ${W - 1}),
-           |        i -> list_min(grams[i:i + ${W - 1}])))
-           |    WHEN len(grams) > 0 THEN [list_min(grams)]
-           |    ELSE [] END AS winnowed
-           |  FROM g),
-           |sz AS (
-           |  SELECT doc_id, CAST(len(winnowed) AS BIGINT) AS n
-           |  FROM fp WHERE len(winnowed) > 0),
-           |posts AS (SELECT doc_id, unnest(winnowed) AS w FROM fp),
-           |common AS (
-           |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS c
-           |  FROM posts a JOIN posts b
-           |    ON a.w = b.w AND a.doc_id < b.doc_id
-           |  GROUP BY 1, 2)
-           |SELECT cm.doc_a, cm.doc_b, CAST(cm.c AS BIGINT) AS shared,
-           |  CAST(cm.c AS DOUBLE) / CAST(sa.n AS DOUBLE) AS containment_a,
-           |  CAST(cm.c AS DOUBLE) / CAST(sb.n AS DOUBLE) AS containment_b
-           |FROM common cm
-           |JOIN sz sa ON cm.doc_a = sa.doc_id
-           |JOIN sz sb ON cm.doc_b = sb.doc_id
-           |WHERE greatest(CAST(cm.c AS DOUBLE) / CAST(sa.n AS DOUBLE),
-           |               CAST(cm.c AS DOUBLE) / CAST(sb.n AS DOUBLE))
-           |      >= 0.5""".stripMargin
-      },
+      Some(s"""WITH $oWinnowCtes,
+              |${oSharedKeyCtes("fp", "winnowed", "w")}
+              |SELECT doc_a, doc_b, CAST(c AS BIGINT) AS shared,
+              |  CAST(c AS DOUBLE) / CAST(na AS DOUBLE) AS containment_a,
+              |  CAST(c AS DOUBLE) / CAST(nb AS DOUBLE) AS containment_b
+              |FROM shared
+              |WHERE greatest(CAST(c AS DOUBLE) / CAST(na AS DOUBLE),
+              |               CAST(c AS DOUBLE) / CAST(nb AS DOUBLE)) >= 0.5"""
+        .stripMargin),
       (s, d) => {
-        val B = 1000003L; val M = 2147483647L; val W = 4
-        // the whole tokens→grams→winnowed chain is let1-bound so every
-        // intermediate array is evaluated ONCE per row — without the
-        // binding, the pushed-down size(winnowed)>0 filter inlines the
-        // full chain and each element_at re-derives the upstream array
-        // (measured: 239s → 1.4s at sf0.01 for this one query)
-        val winnowedCol = let1(transform(tokens(col("text")),
-            t => hash32(t))) { th =>
-          let1(when(size(th) >= 3,
-              transform(sequence(lit(1), size(th) - 2),
-                i => (((element_at(th, i) * B +
-                        element_at(th, i + 1)) % M) * B +
-                      element_at(th, i + 2)) % M))
-            .otherwise(array().cast("array<long>"))) { grams =>
-            when(size(grams) >= W,
-              array_distinct(transform(
-                sequence(lit(1), size(grams) - (W - 1)),
-                i => array_min(slice(grams, i, lit(W))))))
-            .when(size(grams) > 0, array(array_min(grams)))
-            .otherwise(array().cast("array<long>"))
-          }
-        }
+        // winnow/rollingGrams bind every intermediate array with let1, so
+        // the pushed-down size(winnowed) > 0 filter cannot re-derive the
+        // chain per element (see TextOps' rolling-hash note)
         val fp = Tables.fanOut(Tables.documents(s, d))
-          .select(col("doc_id"), winnowedCol.as("winnowed"))
+          .select(col("doc_id"),
+            winnow(rollingGrams(tokenHashes(col("text")))).as("winnowed"))
           .filter(size(col("winnowed")) > 0)
           .persist() // sizes + postings both read it
-        val sz = fp.select(col("doc_id"),
-          size(col("winnowed")).cast("long").as("n"))
-        val posts = fp.select(col("doc_id"), explode(col("winnowed")).as("w"))
-        val dfCounts = posts.groupBy("w").agg(count(lit(1)).as("df"))
-        val hotPrints = CapTelemetry.counted(
-            dfCounts.filter(col("df") > MaxPostingDf),
-            "dd11_dropped_postings", "df")
-          .select("w")
-        val par = s.sparkContext.defaultParallelism
-        val postsKept = posts
-          .join(broadcast(hotPrints), Seq("w"), "left_anti")
-          .repartition(par, col("w"))
-          .persist()
-        val common = postsKept.as("a")
-          .join(postsKept.as("b"),
-            col("a.w") === col("b.w") && col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-          .repartition(par, col("doc_a"), col("doc_b"))
-          .groupBy("doc_a", "doc_b")
-          .agg(count(lit(1)).as("c"))
         val ca = col("c").cast("double") / col("na").cast("double")
         val cb = col("c").cast("double") / col("nb").cast("double")
-        common
-          .join(broadcast(sz.select(col("doc_id").as("doc_a"),
-                                    col("n").as("na"))), "doc_a")
-          .join(broadcast(sz.select(col("doc_id").as("doc_b"),
-                                    col("n").as("nb"))), "doc_b")
+        sharedKeys(fp, "doc_id", "winnowed", "w", "doc_a", "doc_b",
+            "dd11_dropped_postings")
           .filter(greatest(ca, cb) >= 0.5)
           .select(col("doc_a"), col("doc_b"),
             col("c").cast("long").as("shared"),
@@ -795,74 +648,48 @@ object DedupQueries {
     // the filter in front of it.
     QueryDef(
       "dd12_incremental_dedup",
-      Some {
-        val rowsPerBand = K / StagedBands
-        val sigs = minhashParams(K).zipWithIndex.map { case ((a, b), j) =>
-          s"${oMinhashSig("hs", a, b)} AS sig$j"
-        }.mkString(",\n    ")
-        def bandSelects(src: String, filt: String) =
-          (0 until StagedBands).map { bIdx =>
-            val parts = (0 until rowsPerBand)
-              .map(r => s"CAST(sig${bIdx * rowsPerBand + r} AS VARCHAR)")
-              .mkString(" || ',' || ")
-            s"SELECT doc_id, $bIdx AS band_idx, md5($parts) AS band_hash" +
-              s" FROM $src WHERE $filt"
-          }.mkString("\n  UNION ALL ")
-        s"""WITH exm AS (
-           |  SELECT md5(text) AS m, min(doc_id) AS exact_id
-           |  FROM documents WHERE doc_id % 5 <> 0 GROUP BY 1),
-           |incx AS (
-           |  SELECT i.doc_id, e.exact_id
-           |  FROM documents i LEFT JOIN exm e ON md5(i.text) = e.m
-           |  WHERE i.doc_id % 5 = 0),
-           |toks AS (
-           |  SELECT doc_id, string_split(text, ' ') AS lst FROM documents),
-           |sh AS (
-           |  SELECT doc_id,
-           |    list_distinct(${oHashAll(oShinglesFromList("lst"))}) AS hs
-           |  FROM toks),
-           |sig AS (
-           |  SELECT doc_id, hs,
-           |    $sigs
-           |  FROM sh WHERE len(hs) > 0),
-           |bin AS (
-           |  ${bandSelects("sig", "doc_id % 5 = 0")}),
-           |bex AS (
-           |  ${bandSelects("sig", "doc_id % 5 <> 0")}),
-           |cand AS (
-           |  SELECT DISTINCT i.doc_id AS in_id, e.doc_id AS ex_id
-           |  FROM bin i JOIN bex e
-           |    ON i.band_idx = e.band_idx AND i.band_hash = e.band_hash),
-           |jq AS (
-           |  SELECT c.in_id, c.ex_id,
-           |    CAST(floor(CAST(len(list_intersect(x.hs, y.hs)) AS DOUBLE) /
-           |      CAST(len(list_distinct(list_concat(x.hs, y.hs))) AS DOUBLE)
-           |      * 1000000.0 + 0.5) AS BIGINT) AS jq
-           |  FROM cand c
-           |  JOIN sig x ON c.in_id = x.doc_id
-           |  JOIN sig y ON c.ex_id = y.doc_id),
-           |best AS (
-           |  SELECT in_id, ex_id, jq,
-           |    row_number() OVER (PARTITION BY in_id
-           |                       ORDER BY jq DESC, ex_id) AS rn
-           |  FROM jq)
-           |SELECT i.doc_id,
-           |  CASE WHEN i.exact_id IS NOT NULL THEN 'exact_dup'
-           |       WHEN b.jq >= 500000 THEN 'near_dup'
-           |       ELSE 'new' END AS verdict,
-           |  CASE WHEN i.exact_id IS NOT NULL THEN i.exact_id
-           |       WHEN b.jq >= 500000 THEN b.ex_id END AS match_id,
-           |  CASE WHEN i.exact_id IS NOT NULL THEN CAST(1.0 AS DOUBLE)
-           |       WHEN b.jq >= 500000 THEN CAST(b.jq AS DOUBLE) / 1000000.0
-           |       END AS jaccard
-           |FROM incx i
-           |LEFT JOIN (SELECT * FROM best WHERE rn = 1) b
-           |  ON i.doc_id = b.in_id""".stripMargin
-      },
+      Some(s"""WITH exm AS (
+              |  SELECT md5(text) AS m, min(doc_id) AS exact_id
+              |  FROM documents WHERE doc_id % 5 <> 0 GROUP BY 1),
+              |incx AS (
+              |  SELECT i.doc_id, e.exact_id
+              |  FROM documents i LEFT JOIN exm e ON md5(i.text) = e.m
+              |  WHERE i.doc_id % 5 = 0),
+              |$oShingleSetCtes,
+              |${oSignatureCte(nonEmpty = true)},
+              |bin AS (
+              |  ${oBandSelects(StagedBands, "doc_id % 5 = 0")}),
+              |bex AS (
+              |  ${oBandSelects(StagedBands, "doc_id % 5 <> 0")}),
+              |cand AS (
+              |  SELECT DISTINCT i.doc_id AS in_id, e.doc_id AS ex_id
+              |  FROM bin i JOIN bex e
+              |    ON i.band_idx = e.band_idx AND i.band_hash = e.band_hash),
+              |jq AS (
+              |  SELECT c.in_id, c.ex_id,
+              |    ${oJaccardQ("x.hs", "y.hs")} AS jq
+              |  FROM cand c
+              |  JOIN sig x ON c.in_id = x.doc_id
+              |  JOIN sig y ON c.ex_id = y.doc_id),
+              |best AS (
+              |  SELECT in_id, ex_id, jq,
+              |    row_number() OVER (PARTITION BY in_id
+              |                       ORDER BY jq DESC, ex_id) AS rn
+              |  FROM jq)
+              |SELECT i.doc_id,
+              |  CASE WHEN i.exact_id IS NOT NULL THEN 'exact_dup'
+              |       WHEN b.jq >= 500000 THEN 'near_dup'
+              |       ELSE 'new' END AS verdict,
+              |  CASE WHEN i.exact_id IS NOT NULL THEN i.exact_id
+              |       WHEN b.jq >= 500000 THEN b.ex_id END AS match_id,
+              |  CASE WHEN i.exact_id IS NOT NULL THEN CAST(1.0 AS DOUBLE)
+              |       WHEN b.jq >= 500000 THEN CAST(b.jq AS DOUBLE) / 1000000.0
+              |       END AS jaccard
+              |FROM incx i
+              |LEFT JOIN (SELECT * FROM best WHERE rn = 1) b
+              |  ON i.doc_id = b.in_id""".stripMargin),
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val rowsPerBand = K / StagedBands
-        val stage = graft.operators.DedupStage(s, d)
+        val stage = DedupStage(s, d)
         val isIncoming = col("doc_id") % 5 === 0
         // exact gate off membership alone: same text ⟺ same rep, so the
         // min EXISTING doc id per rep group is the oracle's min-id-per-md5
@@ -881,29 +708,17 @@ object DedupQueries {
         // doc-level tiebreak target (all members share hs/sigs)
         val exProf = profiles
           .join(exMin.withColumnRenamed("exact_id", "ex_id"), "rep_id")
-        def bandsOf(df: DataFrame, idCol: String, tag: String) = df.select(
-            col(idCol).as(s"${tag}_id"),
-            explode(array((0 until StagedBands).map { bIdx =>
-              struct(lit(bIdx).as("band_idx"),
-                md5(concat_ws(",", (0 until rowsPerBand).map(r =>
-                  col(s"sig${bIdx * rowsPerBand + r}").cast("string")): _*))
-                  .as("band_hash"))
-            }: _*)).as("bd"))
-          .select(col(s"${tag}_id"), col("bd.band_idx"), col("bd.band_hash"))
         // corpus band table streams; the batch's band keys broadcast
-        val cand = bandsOf(exProf, "ex_id", "ex")
-          .join(broadcast(bandsOf(inProf, "rep_id", "in")),
+        val cand = bandRows(exProf, "ex_id", "ex_id", StagedBands)
+          .join(broadcast(bandRows(inProf, "rep_id", "in_id", StagedBands)),
             Seq("band_idx", "band_hash"))
           .select("in_id", "ex_id").distinct()
-        val jac =
-          size(array_intersect(col("hs_i"), col("hs_e"))).cast("double") /
-          size(array_union(col("hs_i"), col("hs_e"))).cast("double")
         val jq = cand
           .join(broadcast(inProf.select(col("rep_id").as("in_id"),
             col("hs").as("hs_i"))), "in_id")
           .join(exProf.select(col("ex_id"), col("hs").as("hs_e")), "ex_id")
           .select(col("in_id"), col("ex_id"),
-            floor(jac * 1000000.0 + 0.5).cast("long").as("jq"))
+            jaccardQ(col("hs_i"), col("hs_e")).as("jq"))
         // best candidate per incoming rep: highest verified J, min-id tie
         val w = Window.partitionBy("in_id")
           .orderBy(col("jq").desc, col("ex_id"))
@@ -937,72 +752,34 @@ object DedupQueries {
     // cluster sizes are bounded by the near-dup relation, not the corpus.
     QueryDef(
       "dd13_cluster_canonical",
-      Some {
-        val pairsSql = oLshNearDup(StagedBands, StagedThreshold)
-        s"""WITH RECURSIVE pairs AS (
-           |  SELECT doc_a, doc_b FROM (
-           |$pairsSql
-           |  )),
-           |edges AS (
-           |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-           |  UNION
-           |  SELECT doc_b, doc_a FROM pairs),
-           |walk(doc_id, label) AS (
-           |  SELECT DISTINCT src, src FROM edges
-           |  UNION
-           |  SELECT e.dst, w.label FROM walk w JOIN edges e
-           |    ON w.doc_id = e.src),
-           |comp AS (
-           |  SELECT doc_id, min(label) AS cluster_id FROM walk
-           |  GROUP BY doc_id),
-           |sizes AS (
-           |  SELECT cluster_id, count(*) AS cluster_size FROM comp
-           |  GROUP BY cluster_id),
-           |qual AS (
-           |  SELECT doc_id,
-           |    ${oQualityScore("n_tokens", "n_stop", "n_distinct")}
-           |      AS quality
-           |  FROM (
-           |    SELECT doc_id,
-           |      CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-           |      CAST(len(list_distinct(string_split(text, ' ')))
-           |        AS BIGINT) AS n_distinct,
-           |      CAST(len(list_filter(string_split(text, ' '),
-           |        w -> w = 'the' OR w = 'a')) AS BIGINT) AS n_stop
-           |    FROM documents)),
-           |ranked AS (
-           |  SELECT c.cluster_id, c.doc_id, s.cluster_size, q.quality,
-           |    row_number() OVER (PARTITION BY c.cluster_id
-           |      ORDER BY q.quality DESC, c.doc_id) AS rn
-           |  FROM comp c
-           |  JOIN sizes s USING (cluster_id)
-           |  JOIN qual q USING (doc_id))
-           |SELECT cluster_id, doc_id AS canonical_doc, cluster_size,
-           |  CAST(cluster_size - 1 AS BIGINT) AS n_dropped,
-           |  CAST(floor(quality * 1000000.0 + 0.5) AS BIGINT) AS q_quality
-           |FROM ranked WHERE rn = 1""".stripMargin
-      },
+      Some(s"""$oClusterCtes,
+              |qual AS (
+              |  SELECT doc_id,
+              |    ${oQualityScore("n_tokens", "n_stop", "n_distinct")}
+              |      AS quality
+              |  FROM (
+              |    SELECT doc_id,
+              |      ${oTokenStats("text")}
+              |    FROM documents)),
+              |ranked AS (
+              |  SELECT c.cluster_id, c.doc_id, c.cluster_size, q.quality,
+              |    row_number() OVER (PARTITION BY c.cluster_id
+              |      ORDER BY q.quality DESC, c.doc_id) AS rn
+              |  FROM clusters c
+              |  JOIN qual q USING (doc_id))
+              |SELECT cluster_id, doc_id AS canonical_doc, cluster_size,
+              |  CAST(cluster_size - 1 AS BIGINT) AS n_dropped,
+              |  CAST(floor(quality * 1000000.0 + 0.5) AS BIGINT) AS q_quality
+              |FROM ranked WHERE rn = 1""".stripMargin),
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val stage = graft.operators.DedupStage(s, d)
-        val docs = stage.profiles.persist()
-        val pairs =
-          expandPairs(stage.membership, stage.stagedPairs, dupReps(docs))
-            .select("doc_a", "doc_b")
-        val comp = graft.operators.ConnectedComponents.run(pairs)
-        val sizes = comp.groupBy("cluster_id")
-          .agg(count(lit(1)).as("cluster_size"))
-        val toks = tokens(col("text"))
-        val qual = Tables.fanOut(Tables.documents(s, d)).select(
-            col("doc_id"),
-            qualityScore(size(toks).cast("long"),
-              size(filter(toks, w => w === "the" || w === "a"))
-                .cast("long"),
-              size(array_distinct(toks)).cast("long")).as("quality"))
+        val qual = Tables.fanOut(Tables.documents(s, d))
+          .select(col("doc_id") +: tokenStats(col("text")): _*)
+          .select(col("doc_id"),
+            qualityScore(col("n_tokens"), col("n_stop"), col("n_distinct"))
+              .as("quality"))
         val w = Window.partitionBy("cluster_id")
           .orderBy(col("quality").desc, col("doc_id"))
-        comp.join(qual, "doc_id")
-          .join(broadcast(sizes), "cluster_id")
+        clusters(s, d).join(qual, "doc_id")
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") === 1)
           .select(col("cluster_id"), col("doc_id").as("canonical_doc"),

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.QueryDef
-import graft.operators.PassageGraph
+import graft.operators.{PassageGraph, TextOps}
 import org.apache.spark.sql.functions._
 
 /** Distributed graph analytics over the corpus duplication graph — thin
@@ -30,16 +30,7 @@ object GraphQueries {
     * documents → distinct (doc, passage-hash) → df-capped shared-passage
     * edges (both directions) → degrees. */
   private val oGraph =
-    s"""WITH t AS (
-       |  SELECT doc_id, string_split(text, ' ') AS lst FROM documents),
-       |p AS (
-       |  SELECT doc_id, unnest(list_transform(
-       |    generate_series(1, CAST(ceil(len(lst) / ${PassageGraph.P}.0)
-       |      AS INT)),
-       |    i -> md5(array_to_string(
-       |      lst[(i-1)*${PassageGraph.P}+1 : i*${PassageGraph.P}], ' '))))
-       |    AS ph
-       |  FROM t),
+    s"""WITH ${TextOps.oPassageCtes(PassageGraph.P)},
        |pd AS (SELECT DISTINCT doc_id, ph FROM p),
        |okp AS (
        |  SELECT ph FROM pd GROUP BY ph

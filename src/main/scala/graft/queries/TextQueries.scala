@@ -2,13 +2,15 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.operators.TextOps._
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for the training-data pipeline: language ID,
   * quality scoring, token counting, fingerprint reporting. All pure
   * columnar expressions over `documents` — each scales as a single
   * projection (+ one tiny aggregate where noted), no UDFs.
+  * Shared text decisions are DataFrame/oracle-SQL pairs in
+  * [[graft.operators.TextOps]]; each row keeps its own cut and thresholds.
   */
 object TextQueries {
 
@@ -37,7 +39,7 @@ object TextQueries {
       Some {
         val scores = markers.map { case (lang, ws) =>
           val hits = ws.map(w =>
-            s"len(list_filter(string_split(text, ' '), t -> t = '$w'))")
+            s"len(list_filter(${oTokens("text")}, t -> t = '$w'))")
             .mkString(" + ")
           s"CAST($hits AS BIGINT) AS score_$lang"
         }.mkString(",\n    ")
@@ -80,11 +82,7 @@ object TextQueries {
       "tx2_quality_score",
       Some(s"""WITH t AS (
              |  SELECT doc_id, n_chars,
-             |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-             |    CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT)
-             |      AS n_distinct,
-             |    CAST(len(list_filter(string_split(text, ' '),
-             |      w -> w = 'the' OR w = 'a')) AS BIGINT) AS n_stop
+             |    ${oTokenStats("text")}
              |  FROM documents)
              |SELECT doc_id, n_tokens, n_distinct,
              |  CAST(n_chars AS DOUBLE) / CAST(n_tokens AS DOUBLE)
@@ -96,13 +94,8 @@ object TextQueries {
              |  ${oQualityScore("n_tokens", "n_stop", "n_distinct")} AS quality
              |FROM t""".stripMargin),
       (s, d) => {
-        val toks = tokens(col("text"))
         val t = Tables.fanOut(Tables.documents(s, d)).select(
-          col("doc_id"), col("n_chars"),
-          size(toks).cast("long").as("n_tokens"),
-          size(array_distinct(toks)).cast("long").as("n_distinct"),
-          size(filter(toks, w => w === "the" || w === "a")).cast("long")
-            .as("n_stop"))
+          col("doc_id") +: col("n_chars") +: tokenStats(col("text")): _*)
         val stopR = col("n_stop").cast("double") / col("n_tokens").cast("double")
         val ttr = col("n_distinct").cast("double") / col("n_tokens").cast("double")
         t.select(
@@ -119,8 +112,8 @@ object TextQueries {
     // (letter runs / digit runs / single punctuation) + char count.
     QueryDef(
       "tx3_token_count",
-      Some("""SELECT doc_id,
-             |  CAST(len(string_split(text, ' ')) AS BIGINT) AS ws_tokens,
+      Some(s"""SELECT doc_id,
+             |  ${oNTokens("text")} AS ws_tokens,
              |  CAST(len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]'))
              |    AS BIGINT) AS bpe_tokens,
              |  CAST(length(text) AS BIGINT) AS n_chars_measured
@@ -128,7 +121,7 @@ object TextQueries {
       (s, d) =>
         Tables.fanOut(Tables.documents(s, d)).select(
           col("doc_id"),
-          size(tokens(col("text"))).cast("long").as("ws_tokens"),
+          nTokens(col("text")).as("ws_tokens"),
           size(expr("regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]', 0)"))
             .cast("long").as("bpe_tokens"),
           length(col("text")).cast("long").as("n_chars_measured"))),
@@ -162,68 +155,29 @@ object TextQueries {
     // hash over the token-hash stream for the whole-document identity,
     // plus a winnowing fingerprint (Schleimer et al. 2003): the rolling
     // hash of every token 3-gram, thinned to the minimum of each 4-gram
-    // window — the selection a plagiarism/containment detector indexes.
-    // All pure per-row expressions; long arithmetic throughout
-    // (th < 2^32, B ≈ 2^20, one mod per step keeps products < 2^52).
+    // window — the selection a plagiarism/containment detector indexes
+    // (dd11 indexes the same set). All pure per-row expressions
+    // (TextOps' rolling-hash pairs).
     QueryDef(
       "tx5_rolling_fingerprint",
-      Some {
-        val B = 1000003L; val M = 2147483647L; val W = 4
-        val th = s"list_transform(string_split(text, ' '), t -> ${oHash32("t")})"
-        s"""WITH th AS (
-           |  SELECT doc_id, $th AS th FROM documents),
-           |g AS (
-           |  SELECT doc_id, th,
-           |    list_reduce(list_prepend(CAST(0 AS BIGINT), th),
-           |      (a, x) -> (a * $B + x) % $M) AS doc_hash,
-           |    list_transform(generate_series(1, len(th) - 2), i ->
-           |      (((th[i] * $B + th[i + 1]) % $M) * $B + th[i + 2]) % $M)
-           |      AS grams
-           |  FROM th),
-           |fp AS (
-           |  SELECT doc_id, doc_hash, len(grams) AS n_grams,
-           |    CASE WHEN len(grams) >= $W THEN
-           |      list_distinct(list_transform(
-           |        generate_series(1, len(grams) - ${W - 1}),
-           |        i -> list_min(grams[i:i + ${W - 1}])))
-           |    WHEN len(grams) > 0 THEN [list_min(grams)]
-           |    ELSE [] END AS winnowed
-           |  FROM g)
-           |SELECT doc_id, doc_hash, CAST(n_grams AS BIGINT) AS n_grams,
-           |  md5(array_to_string(list_sort(winnowed), ',')) AS fp_digest,
-           |  CAST(len(winnowed) AS BIGINT) AS n_fp
-           |FROM fp""".stripMargin
-      },
-      (s, d) => {
-        val B = 1000003L; val M = 2147483647L; val W = 4
-        val th = transform(tokens(col("text")), t => hash32(t))
-        val docHash = aggregate(col("th"), lit(0L),
-          (a, x) => (a * B + x) % M)
-        val grams = transform(
-          sequence(lit(1), greatest(size(col("th")) - 2, lit(0))),
-          i => (((element_at(col("th"), i) * B +
-                  element_at(col("th"), i + 1)) % M) * B +
-                element_at(col("th"), i + 2)) % M)
-        val winnowed =
-          when(size(col("grams")) >= W,
-            array_distinct(transform(
-              sequence(lit(1), size(col("grams")) - (W - 1)),
-              i => array_min(slice(col("grams"), i, lit(W))))))
-          .when(size(col("grams")) > 0, array(array_min(col("grams"))))
-          .otherwise(array().cast("array<long>"))
+      Some(s"""WITH $oWinnowCtes
+              |SELECT doc_id, ${oDocHash("th")} AS doc_hash,
+              |  CAST(len(grams) AS BIGINT) AS n_grams,
+              |  md5(array_to_string(list_sort(winnowed), ',')) AS fp_digest,
+              |  CAST(len(winnowed) AS BIGINT) AS n_fp
+              |FROM fp""".stripMargin),
+      (s, d) =>
         Tables.fanOut(Tables.documents(s, d))
-          .select(col("doc_id"), th.as("th"))
-          .select(col("doc_id"), docHash.as("doc_hash"),
-            when(size(col("th")) >= 3, grams)
-              .otherwise(array().cast("array<long>")).as("grams"))
+          .select(col("doc_id"), tokenHashes(col("text")).as("th"))
+          .select(col("doc_id"), docHash(col("th")).as("doc_hash"),
+            rollingGrams(col("th")).as("grams"))
           .select(col("doc_id"), col("doc_hash"),
             size(col("grams")).cast("long").as("n_grams"),
-            winnowed.as("winnowed"))
+            winnow(col("grams")).as("winnowed"))
           .select(col("doc_id"), col("doc_hash"), col("n_grams"),
             md5(concat_ws(",", transform(array_sort(col("winnowed")),
               x => x.cast("string")))).as("fp_digest"),
-            size(col("winnowed")).cast("long").as("n_fp"))
-      }),
+            size(col("winnowed")).cast("long").as("n_fp"))),
 
     // TX6: the curation COMPOSITION a training-data pipeline actually
     // runs — quality gate (tx2's scoring) first, then exact dedup
@@ -235,11 +189,7 @@ object TextQueries {
       "tx6_corpus_curation",
       Some(s"""WITH t AS (
              |  SELECT doc_id, lang, text,
-             |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-             |    CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT)
-             |      AS n_distinct,
-             |    CAST(len(list_filter(string_split(text, ' '),
-             |      w -> w = 'the' OR w = 'a')) AS BIGINT) AS n_stop
+             |    ${oTokenStats("text")}
              |  FROM documents),
              |q AS (
              |  SELECT *,
@@ -252,13 +202,9 @@ object TextQueries {
              |FROM q WHERE quality >= 0.7
              |GROUP BY md5(text)""".stripMargin),
       (s, d) => {
-        val toks = tokens(col("text"))
         val t = Tables.fanOut(Tables.documents(s, d)).select(
-          col("doc_id"), col("lang"), col("text"),
-          size(toks).cast("long").as("n_tokens"),
-          size(array_distinct(toks)).cast("long").as("n_distinct"),
-          size(filter(toks, w => w === "the" || w === "a")).cast("long")
-            .as("n_stop"))
+          col("doc_id") +: col("lang") +: col("text") +:
+          tokenStats(col("text")): _*)
         t.withColumn("quality",
             qualityScore(col("n_tokens"), col("n_stop"), col("n_distinct")))
           .filter(col("quality") >= 0.7)
@@ -372,9 +318,8 @@ object TextQueries {
     QueryDef(
       "tx9_repetition",
       Some(s"""WITH t AS (
-              |  SELECT doc_id, string_split(text, ' ') AS raw,
-              |    list_transform(string_split(text, ' '),
-              |      tk -> ${oHash32("tk")}) AS lst
+              |  SELECT doc_id, ${oTokens("text")} AS raw,
+              |    ${oTokenHashes("text")} AS lst
               |  FROM documents),
               |base AS (
               |  SELECT doc_id,
@@ -420,7 +365,6 @@ object TextQueries {
               |FROM a""".stripMargin),
       (s, d) => {
         val toks = tokens(col("text"))
-        val hashed = transform(toks, tk => hash32(tk))
         // gram identity = (ord, h1, h2, h3) long tuple over the hashed
         // token list (g3 = 0 for bigrams — ord disambiguates). Spark's
         // sequence() counts DOWN below 1, so short docs need the guard.
@@ -437,9 +381,9 @@ object TextQueries {
         }
         val base = Tables.fanOut(Tables.documents(s, d)).select(
           col("doc_id"),
-          size(toks).cast("long").as("n_tokens"),
+          nTokens(col("text")).as("n_tokens"),
           size(array_distinct(toks)).cast("long").as("n_distinct"),
-          hashed.as("lst"))
+          tokenHashes(col("text")).as("lst"))
         val grams = base.select(
           col("doc_id"), col("n_tokens"), col("n_distinct"),
           explode(concat(gramStructs(2), gramStructs(3))).as("g"))
@@ -492,8 +436,8 @@ object TextQueries {
     // not a per-query recompute.
     QueryDef(
       "tx10_unigram_surprisal",
-      Some("""WITH tok AS (
-             |  SELECT doc_id, unnest(string_split(text, ' ')) AS w
+      Some(s"""WITH tok AS (
+             |  SELECT doc_id, unnest(${oTokens("text")}) AS w
              |  FROM documents),
              |cnt AS (SELECT w, count(*) AS c FROM tok GROUP BY w),
              |tot AS (SELECT count(*) AS t FROM tok),
@@ -568,8 +512,7 @@ object TextQueries {
               |  FROM c CROSS JOIN tw CROSS JOIN nm)
               |SELECT d.doc_id, d.source, r.n AS n_source,
               |  r.target_frac, r.sample_rate,
-              |  CAST(${oHash32("'mx1:' || CAST(d.doc_id AS VARCHAR)")}
-              |    AS DOUBLE) / 4294967296.0 < r.sample_rate AS keep
+              |  ${oUnitDraw("mx1", "d.doc_id")} < r.sample_rate AS keep
               |FROM documents d JOIN r USING (source)""".stripMargin),
       (s, d) => {
         val docs = Tables.fanOut(Tables.documents(s, d))
@@ -591,8 +534,7 @@ object TextQueries {
             targetFrac.as("target_frac"),
             least(lit(1.0), col("nmix") * targetFrac /
               col("n").cast("double")).as("sample_rate"))
-        val u = hash32(concat(lit("mx1:"), col("doc_id").cast("string")))
-          .cast("double") / 4294967296.0
+        val u = unitDraw("mx1", col("doc_id"))
         docs.join(broadcast(r), "source")
           .select(col("doc_id"), col("source"), col("n_source"),
             col("target_frac"), col("sample_rate"),
@@ -620,7 +562,7 @@ object TextQueries {
       "mix2_token_budget",
       Some(s"""WITH c AS (
               |  SELECT source,
-              |    CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS tok
+              |    CAST(sum(len(${oTokens("text")})) AS BIGINT) AS tok
               |  FROM documents GROUP BY 1),
               |w AS (
               |  SELECT source, tok,
@@ -641,14 +583,12 @@ object TextQueries {
               |  FROM w CROSS JOIN tw)
               |SELECT d.doc_id, d.source, r.n_tokens_source, r.target_frac,
               |  r.sample_rate,
-              |  CAST(${oHash32("'mx2:' || CAST(d.doc_id AS VARCHAR)")}
-              |    AS DOUBLE) / 4294967296.0 < r.sample_rate AS keep
+              |  ${oUnitDraw("mx2", "d.doc_id")} < r.sample_rate AS keep
               |FROM documents d JOIN r USING (source)""".stripMargin),
       (s, d) => {
         val docs = Tables.fanOut(Tables.documents(s, d))
         val c = docs
-          .select(col("source"), size(tokens(col("text"))).cast("long")
-            .as("nt"))
+          .select(col("source"), nTokens(col("text")).as("nt"))
           .groupBy("source").agg(sum("nt").as("tok"))
         val w = c.withColumn("wq",
           floor(sqrt(col("tok").cast("double")) * 1000000.0 + 0.5)
@@ -663,8 +603,7 @@ object TextQueries {
             targetFrac.as("target_frac"),
             least(lit(1.0), lit(0.5) * col("ttok").cast("double") *
               targetFrac / col("tok").cast("double")).as("sample_rate"))
-        val u = hash32(concat(lit("mx2:"), col("doc_id").cast("string")))
-          .cast("double") / 4294967296.0
+        val u = unitDraw("mx2", col("doc_id"))
         docs.join(broadcast(r), "source")
           .select(col("doc_id"), col("source"), col("n_tokens_source"),
             col("target_frac"), col("sample_rate"),
@@ -680,11 +619,11 @@ object TextQueries {
     // the normalized text itself never needs to materialize anywhere.
     QueryDef(
       "tx11_normalize_tokens",
-      Some("""WITH t AS (
+      Some(s"""WITH t AS (
              |  SELECT doc_id,
-             |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_raw,
+             |    ${oNTokens("text")} AS n_raw,
              |    list_filter(
-             |      list_transform(string_split(text, ' '),
+             |      list_transform(${oTokens("text")},
              |        w -> regexp_replace(w, '[^a-z0-9]', '', 'g')),
              |      w -> len(w) >= 2 AND w <> 'the' AND w <> 'a') AS kept
              |  FROM documents)
@@ -701,7 +640,7 @@ object TextQueries {
           w => length(w) >= 2 && w =!= "the" && w =!= "a")
         Tables.fanOut(Tables.documents(s, d))
           .select(col("doc_id"),
-            size(tokens(col("text"))).cast("long").as("n_raw"),
+            nTokens(col("text")).as("n_raw"),
             kept.as("kept"))
           .select(col("doc_id"), col("n_raw"),
             size(col("kept")).cast("long").as("n_kept"),
@@ -732,9 +671,7 @@ object TextQueries {
     QueryDef(
       "tx12_bigram_surprisal",
       Some(s"""WITH t AS (
-             |  SELECT doc_id,
-             |    list_transform(string_split(text, ' '),
-             |      tk -> ${graft.operators.TextOps.oHash32("tk")}) AS lst
+             |  SELECT doc_id, ${oTokenHashes("text")} AS lst
              |  FROM documents),
              |bp AS (
              |  SELECT doc_id, pr['p'] AS p, pr['w'] AS w FROM (
@@ -769,13 +706,12 @@ object TextQueries {
              |    <= 0.1 AS keep
              |FROM a CROSS JOIN tot""".stripMargin),
       (s, d) => {
-        val lst = transform(tokens(col("text")), tk => hash32(tk))
         val pairs = zip_with(
           slice(col("lst"), lit(1), size(col("lst")) - 1),
           slice(col("lst"), lit(2), size(col("lst")) - 1),
           (a, b) => struct(a.as("p"), b.as("w")))
         val t = Tables.fanOut(Tables.documents(s, d))
-          .select(col("doc_id"), lst.as("lst"))
+          .select(col("doc_id"), tokenHashes(col("text")).as("lst"))
           .persist() // feeds the bigram stream AND the vocabulary count
         val bp = t
           .select(col("doc_id"),
@@ -828,9 +764,9 @@ object TextQueries {
     // family and keep one term copy for display.
     QueryDef(
       "tx13_tfidf",
-      Some("""WITH toks AS (
-             |  SELECT doc_id, unnest(string_split(text, ' ')) AS term,
-             |    CAST(len(string_split(text, ' ')) AS BIGINT) AS dl
+      Some(s"""WITH toks AS (
+             |  SELECT doc_id, unnest(${oTokens("text")}) AS term,
+             |    ${oNTokens("text")} AS dl
              |  FROM documents),
              |tf AS (
              |  SELECT doc_id, term, min(dl) AS dl, count(*) AS tf
@@ -852,8 +788,8 @@ object TextQueries {
       (s, d) => {
         val docs = Tables.fanOut(Tables.documents(s, d))
         val tf = docs
-          .select(col("doc_id"), size(tokens(col("text"))).cast("long")
-            .as("dl"), explode(tokens(col("text"))).as("term"))
+          .select(col("doc_id"), nTokens(col("text")).as("dl"),
+            explode(tokens(col("text"))).as("term"))
           .groupBy("doc_id", "term")
           .agg(min("dl").as("dl"), count(lit(1)).as("tf"))
         // tf feeds both the df dimension and the scoring join; measured:
@@ -866,8 +802,8 @@ object TextQueries {
           (col("tf").cast("double") / col("dl").cast("double")) *
             log(col("n_docs").cast("double") / col("df").cast("double")),
           9)
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("doc_id").orderBy(col("tfidf").desc, col("term"))
+        val w = Window.partitionBy("doc_id")
+          .orderBy(col("tfidf").desc, col("term"))
         tf.join(df, "term").crossJoin(broadcast(nDocs))
           .select(col("doc_id"), col("term"), tfidf.as("tfidf"))
           .withColumn("rnk", row_number().over(w).cast("long"))
@@ -888,11 +824,11 @@ object TextQueries {
     // nothing to pack and are excluded by contract.
     QueryDef(
       "mix3_pack_sequences",
-      Some("""WITH t AS (
+      Some(s"""WITH t AS (
              |  SELECT doc_id,
-             |    CAST(len(string_split(text, ' ')) AS BIGINT) AS nt,
-             |    CAST(CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)),
-             |      1, 8) AS BIGINT) % 8 AS BIGINT) AS shard
+             |    ${oNTokens("text")} AS nt,
+             |    CAST(${oHash32("CAST(doc_id AS VARCHAR)")} % 8 AS BIGINT)
+             |      AS shard
              |  FROM documents),
              |c AS (
              |  SELECT doc_id, shard, nt,
@@ -908,13 +844,11 @@ object TextQueries {
       (s, d) => {
         val t = Tables.fanOut(Tables.documents(s, d))
           .select(col("doc_id"),
-            size(tokens(col("text"))).cast("long").as("nt"),
+            nTokens(col("text")).as("nt"),
             (hash32(col("doc_id").cast("string")) % 8).as("shard"))
           .filter(col("nt") > 0)
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("shard").orderBy("doc_id")
-          .rowsBetween(org.apache.spark.sql.expressions.Window
-            .unboundedPreceding, 0)
+        val w = Window.partitionBy("shard").orderBy("doc_id")
+          .rowsBetween(Window.unboundedPreceding, 0)
         t.withColumn("cum", sum("nt").over(w))
           .select(col("doc_id"), col("shard"), col("nt"),
             expr("(cum - nt) DIV 512").as("first_seq"),
@@ -936,9 +870,9 @@ object TextQueries {
     // of exact longs.
     QueryDef(
       "mix4_shard_snake",
-      Some("""WITH t AS (
+      Some(s"""WITH t AS (
              |  SELECT doc_id, source,
-             |    CAST(len(string_split(text, ' ')) AS BIGINT) AS nt
+             |    ${oNTokens("text")} AS nt
              |  FROM documents),
              |r AS (
              |  SELECT doc_id, source, nt,
@@ -960,15 +894,12 @@ object TextQueries {
              |    / CAST(min(total_tokens) OVER () AS DOUBLE) AS imbalance
              |FROM sh""".stripMargin),
       (s, d) => {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("source").orderBy(col("nt").desc, col("doc_id"))
-        val g = org.apache.spark.sql.expressions.Window
-          .partitionBy().rowsBetween(
-            org.apache.spark.sql.expressions.Window.unboundedPreceding,
-            org.apache.spark.sql.expressions.Window.unboundedFollowing)
+        val w = Window.partitionBy("source")
+          .orderBy(col("nt").desc, col("doc_id"))
+        val g = Window.partitionBy()
+          .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
         Tables.fanOut(Tables.documents(s, d))
-          .select(col("doc_id"), col("source"),
-            size(tokens(col("text"))).cast("long").as("nt"))
+          .select(col("doc_id"), col("source"), nTokens(col("text")).as("nt"))
           .withColumn("rn", (row_number().over(w) - 1).cast("long"))
           .withColumn("shard",
             when(col("rn") % 16 < 8, col("rn") % 16)
@@ -998,8 +929,8 @@ object TextQueries {
       "mix5_weighted_sample",
       Some(s"""WITH t AS (
               |  SELECT doc_id, source,
-              |    CAST(len(string_split(text, ' ')) AS BIGINT) AS nt,
-              |    ${oHash32("'ws:' || CAST(doc_id AS VARCHAR)")} AS h
+              |    ${oNTokens("text")} AS nt,
+              |    ${oKeyHash("ws", "doc_id")} AS h
               |  FROM documents),
               |k AS (
               |  SELECT doc_id, source, nt,
@@ -1015,13 +946,11 @@ object TextQueries {
               |  CAST(rnk AS BIGINT) AS rnk
               |FROM r WHERE rnk <= 5""".stripMargin),
       (s, d) => {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("source").orderBy("es_key", "doc_id")
+        val w = Window.partitionBy("source").orderBy("es_key", "doc_id")
         Tables.fanOut(Tables.documents(s, d))
           .select(col("doc_id"), col("source"),
-            size(tokens(col("text"))).cast("long").as("nt"),
-            hash32(concat(lit("ws:"), col("doc_id").cast("string")))
-              .as("h"))
+            nTokens(col("text")).as("nt"),
+            keyHash("ws", col("doc_id")).as("h"))
           .filter(col("nt") > 0)
           .withColumn("es_key",
             round(-log((col("h").cast("double") + 1.0) / 4294967296.0), 9)
@@ -1060,7 +989,7 @@ object TextQueries {
               |    ${oHash32("'ds:' || w")} % $DsirB AS b
               |  FROM (
               |    SELECT doc_id, source,
-              |      unnest(string_split(text, ' ')) AS w
+              |      unnest(${oTokens("text")}) AS w
               |    FROM documents)),
               |tcnt AS (
               |  SELECT b, count(*) AS ct FROM tok
@@ -1130,10 +1059,10 @@ object TextQueries {
     // a single unbounded partition at corpus scale).
     QueryDef(
       "tx14_vocab_growth",
-      Some("""WITH b AS (
+      Some(s"""WITH b AS (
              |  SELECT CAST(max(doc_id) + 1 AS BIGINT) AS n FROM documents),
              |toks AS (
-             |  SELECT doc_id, unnest(string_split(text, ' ')) AS term
+             |  SELECT doc_id, unnest(${oTokens("text")}) AS term
              |  FROM documents),
              |firsts AS (
              |  SELECT term, min(doc_id) AS first_doc FROM toks GROUP BY 1),
@@ -1144,7 +1073,7 @@ object TextQueries {
              |tok AS (
              |  SELECT CAST(least(doc_id * 20 // n, 19) AS BIGINT)
              |    AS bucket,
-             |    CAST(sum(len(string_split(text, ' '))) AS BIGINT)
+             |    CAST(sum(len(${oTokens("text")})) AS BIGINT)
              |      AS n_tokens,
              |    count(*) AS n_docs
              |  FROM documents, b GROUP BY 1)
@@ -1179,8 +1108,8 @@ object TextQueries {
           .groupBy(least(expr("doc_id * 20 DIV n"), lit(19L)).as("bucket"))
           .agg(sum("nt").as("n_tokens"),
             count(lit(1)).as("n_docs"))
-        val w = org.apache.spark.sql.expressions.Window.orderBy("bucket")
-          .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
+        val w = Window.orderBy("bucket")
+          .rowsBetween(Window.unboundedPreceding, 0)
         tok.join(vnew, Seq("bucket"), "left")
           .select(col("bucket"),
             sum("n_docs").over(w).as("cum_docs"),
@@ -1203,9 +1132,9 @@ object TextQueries {
     // no-pairwise-cost rule as dd9's passages: cost ∝ tokens).
     QueryDef(
       "tx15_chunk_windows",
-      Some("""WITH t AS (
-             |  SELECT doc_id, string_split(text, ' ') AS lst,
-             |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n
+      Some(s"""WITH t AS (
+             |  SELECT doc_id, ${oTokens("text")} AS lst,
+             |    ${oNTokens("text")} AS n
              |  FROM documents),
              |s AS (
              |  SELECT doc_id, lst, n,
@@ -1253,8 +1182,8 @@ object TextQueries {
     // and no window ever sees more than `Head` rows.
     QueryDef(
       "tx16_zipf_head",
-      Some("""WITH tok AS (
-             |  SELECT unnest(string_split(text, ' ')) AS term
+      Some(s"""WITH tok AS (
+             |  SELECT unnest(${oTokens("text")}) AS term
              |  FROM documents),
              |tot AS (SELECT count(*) AS t FROM tok),
              |c AS (SELECT term, count(*) AS n FROM tok GROUP BY term),
@@ -1277,10 +1206,8 @@ object TextQueries {
         val tot = tok.agg(count(lit(1)).as("t"))
         val top = tok.groupBy("term").agg(count(lit(1)).as("n"))
           .orderBy(col("n").desc, col("term")).limit(50)
-        val w = org.apache.spark.sql.expressions.Window
-          .orderBy(col("n").desc, col("term"))
-        val cumW = w.rowsBetween(
-          org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
+        val w = Window.orderBy(col("n").desc, col("term"))
+        val cumW = w.rowsBetween(Window.unboundedPreceding, 0)
         top.crossJoin(broadcast(tot))
           .select(
             row_number().over(w).cast("long").as("rank"),
@@ -1307,13 +1234,10 @@ object TextQueries {
     QueryDef(
       "tx17_novelty",
       Some(s"""WITH toks AS (
-              |  SELECT doc_id, string_split(text, ' ') AS ts
+              |  SELECT doc_id, ${oTokens("text")} AS ts
               |  FROM documents),
               |sh AS (
-              |  SELECT doc_id,
-              |    unnest(list_distinct(list_transform(
-              |      ${oShinglesFromList("ts")},
-              |      g -> ${oHash32("g")}))) AS g
+              |  SELECT doc_id, unnest(${oShingleHashSet("ts")}) AS g
               |  FROM toks),
               |first AS (
               |  SELECT g, min(doc_id) AS first_doc FROM sh GROUP BY g)
@@ -1327,8 +1251,7 @@ object TextQueries {
       (s, d) => {
         val dg = Tables.fanOut(Tables.documents(s, d))
           .select(col("doc_id"),
-            explode(array_distinct(
-              graft.operators.TextOps.shingleHashes(col("text")))).as("g"))
+            explode(array_distinct(shingleHashes(col("text")))).as("g"))
           .persist() // feeds the first-occurrence dim AND the join back
         val first = dg.groupBy("g").agg(min("doc_id").as("first_doc"))
         dg.join(first, "g")
